@@ -73,7 +73,7 @@ object FoldStallProbe {
         var folded = false
         val w = time {
           DedupOps.writeDedupIndex(batch, "doc_id", "text", 3,
-            s"$ddDir/segments/batch=$b", 256, sharded = false)
+            s"$ddDir/segments/batch=$b", 256)
           val plan = DedupOps.maintenancePlan(spark, ddDir, t)
           if (plan.recommends("fold") || plan.recommends("compact")) {
             folded = true

@@ -115,10 +115,14 @@ object Bm25 {
     * partition pruning bounds retrieval I/O by the query vocabulary, not
     * the corpus (the same layout property `IvfIndex.writeIndex` gives
     * vector search).
+    *
+    * The target path decides the layout: a streaming-segment target
+    * (`$root/segments/batch=<id>`, [[IndexLayout.isSegmentPath]]) is
+    * written UNPARTITIONED, `shard` riding along as a data column — the
+    * shape the one segment read ([[IndexLayout.readLive]]) requires.
     */
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
-                 path: String, nShards: Int = 64,
-                 sharded: Boolean = true): Unit = {
+                 path: String, nShards: Int = 64): Unit = {
     // a fresh build replaces everything — a stale tombstone sidecar OR
     // stale streaming segments from a previous index at this path must
     // not filter into / union into the new one (readers unconditionally
@@ -127,38 +131,31 @@ object Bm25 {
     // layout, which a stale manifest would shadow — a crash mid-rebuild
     // is a broken BUILD, acceptable; the availability-critical swap is
     // compaction, which stays versioned). A streaming-SEGMENT write
-    // (target $path/segments/batch=<id>, always `sharded = false`) skips
-    // the clears: a segment is an immutable mini-index that carries no
-    // lifecycle state of its own, so they would be guaranteed no-ops —
-    // and on an object store, 4+ wasted API calls per micro-batch.
-    // gate the clears on the TARGET being a segment path, not on the
-    // `sharded` flag: a non-segment `sharded = false` rebuild at a base
-    // path (a first-class mode — hasRows treats the resulting non-empty
-    // unpartitioned layout as a real, non-appendable index) must still
-    // replace stale lifecycle state, or a _CURRENT manifest left by a
-    // previous index's compaction silently shadows the fresh plain build.
-    // The clears are destructive swap-class mutations, so a non-segment
-    // rebuild takes the single-maintainer LEASE: unleased, a rebuild
+    // skips the clears: a segment is an immutable mini-index that
+    // carries no lifecycle state of its own, so they would be guaranteed
+    // no-ops — and on an object store, 4+ wasted API calls per
+    // micro-batch. The clears are destructive swap-class mutations, so a
+    // base rebuild takes the single-maintainer LEASE: unleased, a rebuild
     // racing a leased compaction deletes _CURRENT/_VERSIONED out from
     // under it, and the compactor's flip then re-creates a manifest
     // pointing at pre-rebuild data — exactly the stale-manifest
     // shadowing the clears exist to prevent. Segment writes stay
     // lease-free (the concurrent-safe path).
-    if (!isSegmentPath(path))
+    if (!IndexLayout.isSegmentPath(path))
       IndexLayout.withLease(docs.sparkSession, path, "Bm25.writeIndex") {
         IndexLayout.clearTombstones(docs.sparkSession, s"$path/tombstones")
         IndexLayout.clearSegments(docs.sparkSession, path)
         IndexLayout.clearVersions(docs.sparkSession, s"$path/postings")
         IndexLayout.clearVersions(docs.sparkSession, s"$path/docs")
         IndexLayout.clearVersions(docs.sparkSession, s"$path/stats")
-        writeIndexBody(docs, idCol, textCol, path, nShards, sharded)
+        writeIndexBody(docs, idCol, textCol, path, nShards, segment = false)
       }
     else {
       // a replayed micro-batch may be rewriting a dir an offline fold
       // already marked _FOLDED — the rewrite must come back LIVE or its
       // rows beyond the fold's partial capture are silently lost
       IndexLayout.clearFoldedMarker(docs.sparkSession, path)
-      writeIndexBody(docs, idCol, textCol, path, nShards, sharded)
+      writeIndexBody(docs, idCol, textCol, path, nShards, segment = true)
     }
   }
 
@@ -168,7 +165,7 @@ object Bm25 {
     */
   private def writeIndexBody(docs: DataFrame, idCol: String,
                              textCol: String, path: String,
-                             nShards: Int, sharded: Boolean): Unit = {
+                             nShards: Int, segment: Boolean): Unit = {
     // codegen'd shard assignment (graft.functions.JavaHashModExpr):
     // same JVM hash as the driver-side shardOf, inlined into the build's
     // whole-stage-codegen pipeline instead of crossing the UDF bridge
@@ -195,40 +192,36 @@ object Bm25 {
         .groupBy(col(idCol), col("doc_len"), col("term"))
         .agg(count(lit(1)).cast("double").as("tf"))
         .withColumn("shard", shardCol)
-      // cluster by shard so the partitioned write below emits O(nShards)
-      // files instead of tasks × nShards (skipped for unpartitioned small
-      // segments, which need no clustering). The partition count is
-      // EXPLICIT: a bare repartition(col) is AQE-coalescible, and the
-      // measured effect at bench scale was the whole nShards-directory
-      // write collapsing into ONE task (job-level profile: a single task
-      // reading the entire clustering exchange) — serial file creation.
-      // An explicit count is exempt from AQE coalescing, so ~nShards
-      // tasks write ~one directory each, in parallel.
-      val postings =
-        if (sharded) unclustered.repartition(nShards, col("shard"))
-        else unclustered
-      val w = postings.write.mode("overwrite")
-      // a zero-row partitioned write leaves no schema-bearing files and the
-      // index would be unreadable — an empty corpus writes unpartitioned
-      // (shard stays as a data column; the query-side filter still applies).
-      // `sharded = false` (streaming SEGMENTS) also writes unpartitioned —
-      // Lucene's small-segment shape: a micro-batch's postings are cheap to
-      // scan in full, while a nShards-directory partitioned write is ~all
-      // fixed cost at micro-batch size; compaction folds segments into the
-      // base's pruned partitioned form.
-      // segment path (sharded = false, streaming micro-batches): AQE is
-      // disabled inside foreachBatch, so the post-aggregate stage stays
-      // at shuffle.partitions width and the write emitted 32 tiny files
-      // per micro-batch table. coalesce(1) collapses only the final
-      // write stage (the tokenize map side keeps its parallelism) and
-      // gives the Lucene-segment shape literally: one file per segment
-      // table — segments are micro-batch-bounded by design and
-      // compaction folds them into the clustered base.
-      if (!sharded)
+      if (segment)
+        // a streaming SEGMENT writes unpartitioned — Lucene's small-segment
+        // shape: a micro-batch's postings are cheap to scan in full, while
+        // a nShards-directory partitioned write is ~all fixed cost at
+        // micro-batch size; compaction folds segments into the base's
+        // pruned partitioned form. AQE is disabled inside foreachBatch, so
+        // the post-aggregate stage stays at shuffle.partitions width and
+        // the write emitted 32 tiny files per micro-batch table.
+        // coalesce(1) collapses only the final write stage (the tokenize
+        // map side keeps its parallelism): one file per segment table.
         unclustered.coalesce(1).write.mode("overwrite")
           .parquet(s"$path/postings")
-      else if (noTokens) w.parquet(s"$path/postings")
-      else w.partitionBy("shard").parquet(s"$path/postings")
+      else {
+        // cluster by shard so the partitioned write emits O(nShards) files
+        // instead of tasks × nShards. The partition count is EXPLICIT: a
+        // bare repartition(col) is AQE-coalescible, and the measured
+        // effect at bench scale was the whole nShards-directory write
+        // collapsing into ONE task (job-level profile: a single task
+        // reading the entire clustering exchange) — serial file creation.
+        // An explicit count is exempt from AQE coalescing, so ~nShards
+        // tasks write ~one directory each, in parallel.
+        val w = unclustered.repartition(nShards, col("shard"))
+          .write.mode("overwrite")
+        // a zero-row partitioned write leaves no schema-bearing files and
+        // the index would be unreadable — an empty corpus writes
+        // unpartitioned (shard stays as a data column; the query-side
+        // filter still applies)
+        if (noTokens) w.parquet(s"$path/postings")
+        else w.partitionBy("shard").parquet(s"$path/postings")
+      }
       // the stats table aggregates the CACHED dl with the same operands
       // the raw-text aggregate used: n counts all docs, avg/sum/count of
       // doc_len skip null-text docs exactly as avg(size(words)) did —
@@ -246,16 +239,10 @@ object Bm25 {
       // must never pay that read). doc_len is null for null text, mirroring
       // the avg's skip-nulls semantics. Segment sidecars coalesce like
       // segment postings (micro-batch-bounded, one file).
-      (if (sharded) dl else dl.coalesce(1))
+      (if (segment) dl.coalesce(1) else dl)
         .write.mode("overwrite").parquet(s"$path/docs")
     } finally dl.unpersist()
   }
-
-  /** Whether a write target is a streaming-segment mini-index path
-    * (shared layout convention — see [[IndexLayout.isSegmentPath]]).
-    */
-  private def isSegmentPath(path: String): Boolean =
-    IndexLayout.isSegmentPath(path)
 
   /** Stats row: (n, avgdl, sum_len, n_len, tomb_dirs). Readers take
     * (n, avgdl) positionally; the EXACT token total and non-null-doc
@@ -453,13 +440,14 @@ object Bm25 {
           "append"
         else {
           // readable-empty base: replace, don't mix layouts. A NON-empty
-          // unpartitioned layout is a segment-style (sharded = false)
-          // build — overwriting would silently drop its postings while
-          // the stats below still merge additively; refuse instead.
+          // unpartitioned base (a segment's shape, which older on-disk
+          // indexes can have) — overwriting would silently drop its
+          // postings while the stats below still merge additively;
+          // refuse instead.
           require(!IndexLayout.hasRows(spark, s"$path/postings"),
             s"$path/postings is a non-empty UNPARTITIONED layout (a " +
               "segment-style build) — not an append target; rebuild with " +
-              "writeIndex(sharded = true) or compact first")
+              "writeIndex or compact first")
           "overwrite"
         }
       // append into the RESOLVED directory: after a versioned compaction
@@ -599,8 +587,7 @@ object Bm25 {
   private[graft] def stageRemoval(spark: org.apache.spark.sql.SparkSession,
                                   ids: DataFrame, idCol: String,
                                   path: String): Option[DataFrame] = {
-    val sidecars = existingParts(spark, path, "docs")
-    require(sidecars.nonEmpty, s"no index doc sidecar under $path")
+    val (docsBase, docsSegs) = IndexLayout.liveParts(spark, path, "docs")
     val old = readStatsRow(spark, IndexLayout.resolve(spark, s"$path/stats"))
     // a pre-sum_len (2-field) stats row cannot shift exactly — its token
     // total is unrecoverable (n·avgdl is already-rounded); loud, never a
@@ -615,12 +602,8 @@ object Bm25 {
     val listed = old.map(tombDirsOf).getOrElse(Seq.empty) ++
       (if (old.exists(isLegacyStats)) legacyTombFiles(spark, path)
        else Seq.empty)
-    // every sidecar (base and segments) is the same-writer unpartitioned
-    // (id, doc_len) table — ONE multi-path read, not one per layout
-    val removed = dropIds(
-      if (sidecars.length == 1) spark.read.parquet(sidecars.head)
-      else spark.read.option("recursiveFileLookup", "true")
-        .parquet(sidecars: _*), // no partition-dir columns in sidecars
+    val (b, segs) = IndexLayout.readLive(spark, docsBase, docsSegs)
+    val removed = dropIds((b ++ segs).reduce(_.unionByName(_)),
       idCol, readTombIds(spark, listed))
       .join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
       .distinct() // a crashed compaction can duplicate sidecar rows
@@ -725,8 +708,8 @@ object Bm25 {
       else Seq.empty
     val tombDirs = statsRow.map(tombDirsOf).getOrElse(Seq.empty) ++
       legacyFiles
-    val tombIds = readTombIds(spark, tombDirs)
     if (segs.isEmpty) {
+      val tombIds = readTombIds(spark, tombDirs)
       val sharded =
         IndexLayout.partitionedLayout(spark, s"$path/postings", "shard")
       IndexLayout.rewriteInPlace(spark, s"$path/postings",
@@ -741,15 +724,13 @@ object Bm25 {
       if (tombDirs.nonEmpty || statsRow.exists(isLegacyStats))
         swapStatsFromDocs(spark, path)
     } else {
-      val postingsAll = IndexLayout.existingPartsOf(spark, path, segs, "postings")
-        .map(spark.read.parquet(_)).reduce(_.unionByName(_)).distinct()
+      def folded(sub: String): DataFrame = {
+        val (base, segParts) = IndexLayout.liveParts(spark, path, sub, Some(segs))
+        IndexLayout.foldLive(spark, base, segParts, idCol, tombDirs)
+      }
       IndexLayout.writeSwap(spark, s"$path/postings",
-        reshard(dropIds(postingsAll, idCol, tombIds), reshardTo),
-        Some("shard"))
-      val docsAll = IndexLayout.existingPartsOf(spark, path, segs, "docs")
-        .map(spark.read.parquet(_)).reduce(_.unionByName(_)).distinct()
-      IndexLayout.writeSwap(spark, s"$path/docs",
-        dropIds(docsAll, idCol, tombIds), None)
+        reshard(folded("postings"), reshardTo), Some("shard"))
+      IndexLayout.writeSwap(spark, s"$path/docs", folded("docs"), None)
       // recompute the BASE stats row from the folded sidecar: the same
       // exact integral operands a from-scratch build aggregates, and
       // derived-from-folded state is what makes a crashed re-run
@@ -829,42 +810,29 @@ object Bm25 {
     }
   }
 
-  private def existingParts(spark: org.apache.spark.sql.SparkSession,
-                            path: String, sub: String): Seq[String] =
-    IndexLayout.existingParts(spark, path, sub)
-
   private def readStatsRow(spark: org.apache.spark.sql.SparkSession,
                            dir: String): Option[org.apache.spark.sql.Row] =
     try Some(spark.read.parquet(dir).head())
     catch { case _: Throwable => None }
 
-  /** All per-layout stats rows in ONE read (one Spark job) instead of a
-    * head() job per layout — a streamed index holds base + one stats
-    * row per live segment, and the per-layout heads were the measured
-    * fixed cost of every indexed retrieval (guide §1: fewer actions).
-    * `mergeSchema` keeps mixed legacy (2-field) and list-format rows
-    * readable with the canonical column order — legacy first merges as
-    * (n, avgdl) + appended (sum_len, n_len, tomb_dirs), new-format
-    * first is already canonical, so the positional reads in
-    * [[summedStats]]/[[tombDirsOf]] hold under both. Any failure falls
-    * back to the per-dir reads (unreadable dirs skip individually).
+  /** All per-layout stats rows in ONE job instead of a head() job per
+    * layout — a streamed index holds base + one stats row per live
+    * segment, and the per-layout heads were the measured fixed cost of
+    * every indexed retrieval (guide §1: fewer actions). The
+    * [[IndexLayout.readLive]] base and segment reads union by name with
+    * missing columns null, so a legacy (pre-list) base row next to
+    * list-format segment rows comes back in the canonical column order
+    * — legacy columns first, then (sum_len, n_len, tomb_dirs) — and the
+    * positional reads in [[summedStats]]/[[tombDirsOf]] hold. Segment
+    * rows all come from the current writer, so one schema covers them.
     */
   private def readStatsRows(spark: org.apache.spark.sql.SparkSession,
-                            dirs: Seq[String]): Seq[org.apache.spark.sql.Row] =
-    dirs match {
-      case Seq()  => Seq.empty
-      case Seq(d) => readStatsRow(spark, d).toSeq
-      case ds =>
-        // recursiveFileLookup: without it a multi-root read over
-        // `segments/batch=N/stats` dirs attempts partition discovery on
-        // the batch= ancestors and throws CONFLICTING_DIRECTORY_
-        // STRUCTURES into the fallback — the "one read" silently
-        // degraded to per-dir reads whenever 2+ segments were live
-        try spark.read.option("mergeSchema", "true")
-          .option("recursiveFileLookup", "true").parquet(ds: _*)
-          .collect().toSeq
-        catch { case _: Throwable => ds.flatMap(readStatsRow(spark, _)) }
-    }
+                            base: Option[String],
+                            segs: Seq[String]): Seq[org.apache.spark.sql.Row] = {
+    val (b, s) = IndexLayout.readLive(spark, base, segs)
+    (b ++ s).reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .fold(Seq.empty[org.apache.spark.sql.Row])(_.collect().toSeq)
+  }
 
   /** Exact (n, avgdl) across per-layout stats rows: the integral n /
     * sum_len / n_len components ADD exactly in doubles, and the summed
@@ -897,8 +865,8 @@ object Bm25 {
     * its shard). Row-identical to the scan path.
     *
     * Spans the base layout plus any streaming segments
-    * ([[graft.streaming.StreamingOps.streamBm25Index]]): each layout is
-    * read with its own partition filter (pruning applies per segment),
+    * ([[graft.streaming.StreamingOps.streamBm25Index]]): the base scan is
+    * partition-pruned, the one segment scan filters `shard` as data,
     * stats sum exactly across the per-layout rows, and df/idf derive from
     * the unioned postings at query time — so a streamed index retrieves
     * row-identically to one rebuilt from scratch over everything.
@@ -907,18 +875,15 @@ object Bm25 {
                   idCol: String, queries: Seq[(String, String)], k: Int,
                   k1: Double = 1.2, b: Double = 0.75,
                   nShards: Int = 64): DataFrame = {
-    val statsRows =
-      readStatsRows(spark, existingParts(spark, path, "stats"))
-    val layouts = existingParts(spark, path, "postings") match {
-      case Seq() => Seq(s"$path/postings") // raise the standard read error
-      case ls    => ls
-    }
+    val (statsBase, statsSegs) = IndexLayout.liveParts(spark, path, "stats")
+    val statsRows = readStatsRows(spark, statsBase, statsSegs)
+    val (base, segs) = IndexLayout.liveParts(spark, path, "postings")
     // a pre-list-format stats row additionally pulls the legacy loose
     // tombstone files (one listing, only for unmigrated indexes)
     val legacy =
       if (statsRows.exists(isLegacyStats)) legacyTombFiles(spark, path)
       else Seq.empty
-    topKOverLayouts(spark, layouts, statsRows,
+    topKOverLayouts(spark, base, segs, statsRows,
       statsRows.flatMap(tombDirsOf).distinct ++ legacy, idCol, queries, k,
       k1, b, nShards, None)
   }
@@ -937,17 +902,17 @@ object Bm25 {
                           k1: Double = 1.2, b: Double = 0.75,
                           nShards: Int = 64,
                           extraExclude: Option[DataFrame] = None): DataFrame =
-    topKOverLayouts(spark, snap.base +: snap.segPostings,
-      readStatsRows(spark, snap.statsPaths), snap.tombSources,
+    topKOverLayouts(spark, Some(snap.base), snap.segPostings,
+      readStatsRows(spark, snap.statsBase, snap.statsSegs), snap.tombSources,
       idCol, queries, k, k1, b, nShards, extraExclude)
 
   /** The shard-pruned scoring core shared by [[topKIndexed]] (fresh
-    * resolve) and [[topKIndexedSnapshot]] (pinned snapshot): the layout
-    * list, stats rows and delete-set sources are explicit, so the two
-    * entries differ ONLY in how the snapshot was acquired.
+    * resolve) and [[topKIndexedSnapshot]] (pinned snapshot): the base and
+    * segment postings, stats rows and delete-set sources are explicit, so
+    * the two entries differ ONLY in how the snapshot was acquired.
     */
   private def topKOverLayouts(spark: org.apache.spark.sql.SparkSession,
-                              layouts: Seq[String],
+                              base: Option[String], segs: Seq[String],
                               statsRows: Seq[org.apache.spark.sql.Row],
                               tombSources: Seq[String], idCol: String,
                               queries: Seq[(String, String)], k: Int,
@@ -959,23 +924,8 @@ object Bm25 {
     val termSet = queries.flatMap { case (_, q) => queryTerms(q) }.distinct
     val shards = termSet.map(shardOf(_, nShards)).distinct
     val (nDocs, avgdl) = summedStats(statsRows)
-    // base read + ONE multi-path read over all segments (the
-    // readStatsRows pattern): every segment is an unpartitioned table
-    // from the same writer, so N segments cost one listing/footer/scan
-    // setup instead of N — the per-segment fixed cost was the measured
-    // LSM read-amplification slope (SegProbe). The base stays its own
-    // read (partition-column layout ≠ the segments' data-column one).
-    // recursiveFileLookup: a multi-root read would otherwise attempt
-    // partition discovery over the shared `segments/batch=N` ancestors
-    // and fail with CONFLICTING_DIRECTORY_STRUCTURES; segment tables
-    // carry no partition-dir columns, so plain file listing is exact
-    val segReads = layouts.tail match {
-      case Seq()  => Seq.empty
-      case Seq(s) => Seq(spark.read.parquet(s))
-      case ss     => Seq(spark.read.option("recursiveFileLookup", "true")
-        .parquet(ss: _*))
-    }
-    val unioned = (spark.read.parquet(layouts.head) +: segReads).map { df =>
+    val (baseRead, segRead) = IndexLayout.readLive(spark, base, segs)
+    val unioned = (baseRead ++ segRead).map { df =>
       df.filter(col("shard").isin(shards.map(Integer.valueOf): _*))
         .filter(col("term").isInCollection(termSet))
         .drop("shard")
@@ -984,7 +934,8 @@ object Bm25 {
     // distinct over the query-restricted (matching docs × terms, never
     // corpus-sized) union keeps scores exact in that window and is a
     // no-op cost otherwise. Single-layout reads skip it entirely.
-    val deduped = if (layouts.length > 1) unioned.distinct() else unioned
+    val deduped =
+      if (base.size + segs.size > 1) unioned.distinct() else unioned
     // tombstoned docs (see [[removeFromIndex]]) drop BEFORE scoring, so
     // df re-derives over live docs only; no-op when nothing was removed.
     // The delete set comes from the SAME stats rows that supplied
@@ -1039,10 +990,11 @@ object Bm25 {
                          outDir: String): Unit = {
     val snap = acquireSnapshot(spark, path)
     try {
-      val layouts = snap.base +: snap.segPostings
-      val unioned = layouts.map(spark.read.parquet(_))
-        .reduce(_.unionByName(_))
-      val deduped = if (layouts.length > 1) unioned.distinct() else unioned
+      val (b, segs) =
+        IndexLayout.readLive(spark, Some(snap.base), snap.segPostings)
+      val unioned = (b ++ segs).reduce(_.unionByName(_))
+      val deduped =
+        if (snap.segPostings.nonEmpty) unioned.distinct() else unioned
       dropIds(deduped, idCol, readTombIds(spark, snap.tombSources))
         // explicit count: exempt from AQE coalescing (see writeIndexBody)
         .repartition(spark.sessionState.conf.numShufflePartitions,
@@ -1074,12 +1026,14 @@ object Bm25 {
     * the resolved+pinned postings base, the pinned base stats layout
     * (whose pin keeps the listed tombstone batch dirs on disk —
     * `sweepTombstoneBatches` retains every batch a still-existing stats
-    * layout lists), live segment postings/stats paths, and the delete-set
-    * sources captured from the SAME stats read as the (n, avgdl) inputs.
-    * Release with [[releaseSnapshot]] on every exit.
+    * layout lists; None when no base stats row exists yet), live segment
+    * postings/stats paths, and the delete-set sources captured from the
+    * SAME stats read as the (n, avgdl) inputs. Release with
+    * [[releaseSnapshot]] on every exit.
     */
   final case class Snapshot(base: String, baseTok: String, statsTok: String,
-                            statsPaths: Seq[String],
+                            statsBase: Option[String],
+                            statsSegs: Seq[String],
                             segPostings: Seq[String],
                             tombSources: Seq[String])
 
@@ -1110,9 +1064,9 @@ object Bm25 {
             hp.getFileSystem(conf).exists(hp)
           }
           val segRoots = IndexLayout.segmentDirs(spark, path)
-          val statsPaths =
-            pinnedStats +: segRoots.map(d => s"$d/stats").filter(lives)
-          val statsRows = readStatsRows(spark, statsPaths)
+          val statsBase = Some(pinnedStats).filter(lives)
+          val statsSegs = segRoots.map(d => s"$d/stats").filter(lives)
+          val statsRows = readStatsRows(spark, statsBase, statsSegs)
           val legacy =
             if (statsRows.exists(isLegacyStats)) legacyTombFiles(spark, path)
             else Seq.empty
@@ -1122,7 +1076,7 @@ object Bm25 {
             IndexLayout.unpin(spark, s"$path/postings", baseTok)
             None
           } else
-            Some(Snapshot(base, baseTok, statsTok, statsPaths, segs,
+            Some(Snapshot(base, baseTok, statsTok, statsBase, statsSegs, segs,
               statsRows.flatMap(tombDirsOf).distinct ++ legacy))
         } catch {
           case e: Throwable =>

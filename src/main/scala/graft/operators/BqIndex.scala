@@ -154,15 +154,10 @@ object BqIndex {
       val segs = IndexLayout.segmentDirs(spark, path)
       val tombFiles =
         IndexLayout.liveTombstoneFiles(spark, s"$path/tombstones")
-      val parts = IndexLayout.existingPartsOf(spark, path, segs, "codes") match {
-        case Seq() => Seq(s"$path/codes") // raise the standard read error
-        case ps    => ps
-      }
-      val unioned = parts.map(spark.read.parquet(_))
-        .reduce(_.unionByName(_))
-      val merged = if (parts.length > 1) unioned.distinct() else unioned
+      val (base, segParts) =
+        IndexLayout.liveParts(spark, path, "codes", Some(segs))
       IndexLayout.writeSwap(spark, s"$path/codes",
-        IndexLayout.dropTombstonedFiles(merged, idCol, tombFiles), None)
+        IndexLayout.foldLive(spark, base, segParts, idCol, tombFiles), None)
       IndexLayout.retireSegmentDirs(spark, s"$path/segments", segs)
       IndexLayout.retireTombstoneFiles(spark, s"$path/tombstones", tombFiles)
     }
@@ -190,7 +185,7 @@ object BqIndex {
     * micro-batch-sized, is `distinct()`ed when ≥2 segments are live (a
     * single segment is distinct by per-batch overwrite); the bounded
     * segment-side aggregate, never the base. (2) the base is resolved
-    * exactly once via `existingPartsSplit` — re-resolving to classify
+    * exactly once via `IndexLayout.liveParts` — re-resolving to classify
     * raced a concurrent compaction's version flip into the no-dedup
     * branch. The broadcast is capped (`SegGuardBroadcastMaxBytes` of
     * segment bytes, a driver-side FS metadata read) with a shuffle
@@ -199,10 +194,9 @@ object BqIndex {
     */
   def readCodes(spark: SparkSession, path: String,
                 idCol: String): DataFrame = {
-    val (baseOpt, segParts) =
-      IndexLayout.existingPartsSplit(spark, path, "codes")
+    val (baseOpt, segParts) = IndexLayout.liveParts(spark, path, "codes")
     IndexLayout.dropTombstoned(
-      mergedCodes(spark, path, baseOpt, segParts, idCol),
+      mergedCodes(spark, baseOpt, segParts, idCol),
       idCol, s"$path/tombstones")
   }
 
@@ -210,31 +204,17 @@ object BqIndex {
     * shared with the [[Snapshot]] read path, which supplies pinned
     * paths instead of a fresh resolve.
     */
-  private def mergedCodes(spark: SparkSession, path: String,
-                          baseOpt: Option[String], segParts: Seq[String],
-                          idCol: String): DataFrame =
-    (baseOpt, segParts) match {
-      case (None, Seq()) =>
-        spark.read.parquet(s"$path/codes") // raise the standard read error
-      case (Some(bp), Seq()) => spark.read.parquet(bp)
-      case (bo, sps) =>
-        // ONE multi-path read over all segments (same-writer schema):
-        // N segments cost one listing/footer/scan setup, not N
-        val seg0 =
-          if (sps.length > 1)
-            // recursiveFileLookup: no partition discovery over the
-            // shared segments/batch=N ancestors
-            spark.read.option("recursiveFileLookup", "true")
-              .parquet(sps: _*)
-          else spark.read.parquet(sps.head)
-        val segments = if (sps.length > 1) seg0.distinct() else seg0
-        bo match {
-          case None => segments
-          case Some(bp) =>
-            IndexLayout.segGuardedUnion(spark.read.parquet(bp), segments,
-              idCol, IndexLayout.dirBytes(spark, sps))
-        }
+  private def mergedCodes(spark: SparkSession, baseOpt: Option[String],
+                          segParts: Seq[String], idCol: String): DataFrame = {
+    val (base, segs) = IndexLayout.readLive(spark, baseOpt, segParts)
+    val segments = segs.map(s => if (segParts.length > 1) s.distinct() else s)
+    (base, segments) match {
+      case (Some(b), Some(s)) =>
+        IndexLayout.segGuardedUnion(b, s, idCol,
+          IndexLayout.dirBytes(spark, segParts))
+      case (b, s) => b.orElse(s).get
     }
+  }
 
   /** One pinned, internally-validated read snapshot of a BQ layout —
     * the `Bm25.Snapshot` shape for the fifth index family: the
@@ -372,7 +352,7 @@ object BqIndex {
       : DataFrame =
     searchBatchOn(readModelAt(spark, snap.model),
       IndexLayout.dropTombstoned(
-        mergedCodes(spark, path, Some(snap.codes), snap.segCodes, idCol),
+        mergedCodes(spark, Some(snap.codes), snap.segCodes, idCol),
         idCol, snap.tombDir),
       corpus, queries, idCol, qvCol, shortlist, topK, excludeSelf,
       extraExclude)
@@ -515,7 +495,8 @@ object BqIndex {
   /** Byte sizes (code table, one segment-inclusive sweep) — the scale
     * probe's evidence that the pre-rank reads ≪ vector bytes.
     */
-  def codeTableBytes(spark: SparkSession, path: String): Long =
-    IndexLayout.existingParts(spark, path, "codes")
-      .map(IndexLayout.parquetBytes(spark, _)).sum
+  def codeTableBytes(spark: SparkSession, path: String): Long = {
+    val (base, segs) = IndexLayout.liveParts(spark, path, "codes")
+    (base ++ segs).map(IndexLayout.parquetBytes(spark, _)).sum
+  }
 }

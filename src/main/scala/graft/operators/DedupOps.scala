@@ -502,25 +502,24 @@ object DedupOps {
       .getOrElse(2000000L)
 
   def writeDedupIndex(corpusDf: DataFrame, idCol: String, textCol: String,
-                      n: Int, path: String, nShards: Int = DefaultShingleShards,
-                      sharded: Boolean = true): Unit = {
+                      n: Int, path: String,
+                      nShards: Int = DefaultShingleShards): Unit = {
     // a fresh build replaces everything — a stale tombstone sidecar OR
     // stale streaming segments from a previous index at this path must
     // not filter into / union into the new one (readers unconditionally
-    // span $path/segments/batch=*), and any version manifests from a
+    // span $path/segments/batch=*), any version manifests from a
     // previous index's compactions (the rebuild writes the plain layout,
-    // which a stale manifest would shadow). Gated on the TARGET being a
-    // segment path, not on `sharded`: a non-segment sharded = false
-    // rebuild at a base path must still replace stale lifecycle state
-    // (the Bm25.writeIndex twin). A streaming-SEGMENT write (target
-    // $path/segments/batch=<id>) skips the clears — a segment carries no
-    // lifecycle state of its own, so the four clears would be guaranteed
-    // no-ops, and on an object store 4+ wasted API calls per micro-batch.
-    // Non-segment rebuilds take the single-maintainer LEASE for the same
-    // reason as Bm25.writeIndex: the clears are destructive swap-class
-    // mutations that would corrupt a leased compaction running
-    // concurrently (its flip re-creates a stale manifest over the fresh
-    // plain build).
+    // which a stale manifest would shadow), and the previous shard-count
+    // marker (a rebuild crashing before it writes its own must not leave
+    // readers pruning with the old modulus). A streaming-SEGMENT write
+    // (target $path/segments/batch=<id>, written unpartitioned — see
+    // Bm25.writeIndex) skips the clears — a segment carries no lifecycle
+    // state of its own, so they would be guaranteed no-ops, and on an
+    // object store 5+ wasted API calls per micro-batch. Base rebuilds
+    // take the single-maintainer LEASE for the same reason as
+    // Bm25.writeIndex: the clears are destructive swap-class mutations
+    // that would corrupt a leased compaction running concurrently (its
+    // flip re-creates a stale manifest over the fresh plain build).
     if (!IndexLayout.isSegmentPath(path))
       IndexLayout.withLease(corpusDf.sparkSession, path,
         "DedupOps.writeDedupIndex") {
@@ -528,8 +527,9 @@ object DedupOps {
         IndexLayout.clearSegments(corpusDf.sparkSession, path)
         IndexLayout.clearVersions(corpusDf.sparkSession, s"$path/shingles")
         IndexLayout.clearVersions(corpusDf.sparkSession, s"$path/fingerprints")
+        IndexLayout.clearShardCountMarker(corpusDf.sparkSession, path)
         writeDedupIndexBody(corpusDf, idCol, textCol, n, path, nShards,
-          sharded)
+          segment = false)
         // persist the build's shard modulus so readers/appenders derive
         // it from the LAYOUT, not from a defaulted parameter — an index
         // written under one DefaultShingleShards must stay correctly
@@ -547,7 +547,7 @@ object DedupOps {
       val root = path.stripSuffix("/")
         .replaceFirst("/segments/batch=[^/]+$", "")
       writeDedupIndexBody(corpusDf, idCol, textCol, n, path,
-        effectiveShards(corpusDf.sparkSession, root, nShards), sharded)
+        effectiveShards(corpusDf.sparkSession, root, nShards), segment = true)
     }
   }
 
@@ -566,26 +566,26 @@ object DedupOps {
     */
   private def writeDedupIndexBody(corpusDf: DataFrame, idCol: String,
                                   textCol: String, n: Int, path: String,
-                                  nShards: Int, sharded: Boolean): Unit = {
+                                  nShards: Int, segment: Boolean): Unit = {
     val postings =
-      dedupIndexPostings(corpusDf, idCol, textCol, n, nShards, sharded)
+      dedupIndexPostings(corpusDf, idCol, textCol, n, nShards, !segment)
     val w = postings.write.mode("overwrite")
     // empty corpus: a zero-row partitioned write leaves no schema-bearing
     // files (unreadable index) — write unpartitioned, shard as data column.
     // The probe is the map-only shingle scan's first row (postings are a
     // per-row reshape of it), NOT postings.isEmpty, which would run the
     // whole pipeline a second time just to answer the question.
-    // `sharded = false` (streaming SEGMENTS) also writes unpartitioned —
-    // Lucene's small-segment shape: a micro-batch's postings are cheap to
-    // scan in full, while a nShards-directory partitioned write is ~all
-    // fixed cost at micro-batch size (measured ~4 s per 1.7k-doc segment
-    // vs ~1 s unpartitioned); the shard column still rides along as data,
+    // A streaming SEGMENT also writes unpartitioned — Lucene's
+    // small-segment shape: a micro-batch's postings are cheap to scan in
+    // full, while a nShards-directory partitioned write is ~all fixed
+    // cost at micro-batch size (measured ~4 s per 1.7k-doc segment vs
+    // ~1 s unpartitioned); the shard column still rides along as data,
     // so multi-layout reads filter it identically, and compaction folds
     // segments into the base's PRUNED partitioned form.
-    if (!sharded)
-      // segment path: AQE is off inside foreachBatch, so the write
-      // emitted shuffle.partitions tiny files per micro-batch; one file
-      // per segment table is the Lucene-segment shape (batch-bounded,
+    if (segment)
+      // AQE is off inside foreachBatch, so the write emitted
+      // shuffle.partitions tiny files per micro-batch; one file per
+      // segment table is the Lucene-segment shape (batch-bounded,
       // folded by compaction) — see Bm25.writeIndexBody. repartition(1),
       // NOT coalesce(1): the segment posting pipeline is narrow (no
       // exchange), so a coalesce would collapse the shingle UDF itself
@@ -616,7 +616,7 @@ object DedupOps {
       .select(col(idCol),
         graft.functions.TextFns.fingerprint(col(textCol)).as("__fp"))
       .distinct()
-    (if (sharded) fps else fps.coalesce(1))
+    (if (segment) fps.coalesce(1) else fps)
       .write.mode("overwrite").parquet(s"$path/fingerprints")
   }
 
@@ -667,13 +667,13 @@ object DedupOps {
             s"$path/shingles", "shard"))
           "append"
         else {
-          // readable-empty base only — a NON-empty unpartitioned layout
-          // is a segment-style (sharded = false) build whose postings an
-          // overwrite would silently drop; refuse instead
+          // readable-empty base only — a NON-empty unpartitioned base (a
+          // segment's shape, which older on-disk indexes can have) holds
+          // postings an overwrite would silently drop; refuse instead
           require(!IndexLayout.hasRows(batch.sparkSession, s"$path/shingles"),
             s"$path/shingles is a non-empty UNPARTITIONED layout (a " +
               "segment-style build) — not an append target; rebuild with " +
-              "writeDedupIndex(sharded = true) or compact first")
+              "writeDedupIndex or compact first")
           "overwrite"
         }
       // append into the RESOLVED directory: after a versioned compaction
@@ -771,7 +771,9 @@ object DedupOps {
     * `reshardTo` is empty) — the re-bucketing move for a corpus that
     * outgrew its build-time nShards, applied inside the compaction
     * rewrite (no extra I/O — compaction rewrites every shard anyway).
-    * Queries after it must pass the NEW nShards to [[dedupAgainstIndex]].
+    * The compaction records the new modulus in the `_NSHARDS_` marker and
+    * readers and appenders derive it from there, so callers keep their
+    * `nShards` argument (it only matters for pre-marker layouts).
     */
   private def reshardShingles(df: DataFrame,
                               reshardTo: Option[Int]): DataFrame =
@@ -811,18 +813,19 @@ object DedupOps {
         df => IndexLayout.dropTombstonedFiles(df, idCol, tombFiles)
           .select(col(idCol), col("__fp")))
     } else {
-      val shAll = IndexLayout.existingPartsOf(spark, path, segs, "shingles")
-        .map(spark.read.parquet(_)).reduce(_.unionByName(_)).distinct()
+      val (shBase, shSegs) =
+        IndexLayout.liveParts(spark, path, "shingles", Some(segs))
       IndexLayout.writeSwap(spark, s"$path/shingles",
-        reshardShingles(IndexLayout.dropTombstonedFiles(shAll, idCol, tombFiles),
+        reshardShingles(
+          IndexLayout.foldLive(spark, shBase, shSegs, idCol, tombFiles),
           reshardTo), Some("shard"))
       // per-part projection BEFORE the union: ragged schemas (an interim
-      // fpshard column in some parts) would fail unionByName
-      val fpAll = IndexLayout.existingPartsOf(spark, path, segs, "fingerprints")
-        .map(spark.read.parquet(_).select(col(idCol), col("__fp")))
-        .reduce(_.unionByName(_)).distinct()
+      // fpshard column in the base) would fail unionByName
+      val (fpBase, fpSegs) =
+        IndexLayout.liveParts(spark, path, "fingerprints", Some(segs))
       IndexLayout.writeSwap(spark, s"$path/fingerprints",
-        IndexLayout.dropTombstonedFiles(fpAll, idCol, tombFiles), None)
+        IndexLayout.foldLive(spark, fpBase, fpSegs, idCol, tombFiles,
+          _.select(col(idCol), col("__fp"))), None)
     }
     // retire on BOTH branches: delete what the previous fold marked,
     // mark this fold's snapshot (empty on the segment-less branch when
@@ -838,10 +841,11 @@ object DedupOps {
     * spec can pin its `PartitionFilters` shape (the operator's output is
     * checkpointed by `materializeAndRelease`, which hides the scan).
     * Spans the base layout plus any streaming segments
-    * ([[graft.streaming.StreamingOps.streamDedupIndex]]), each read with
-    * its own partition filter. The union is NOT distinct-ed: segments
-    * are disjoint by the maintenance contract (new ids per batch,
-    * replays overwrite their own segment), and a probe batch's shard
+    * ([[graft.streaming.StreamingOps.streamDedupIndex]]): the base scan is
+    * partition-pruned, the one segment scan filters `shard` as data. The
+    * union is NOT distinct-ed: segments are disjoint by the maintenance
+    * contract (new ids per batch, replays overwrite their own segment),
+    * and a probe batch's shard
     * filter does not restrict CONTENT — a corpus-wide distinct here
     * would put a full-width shuffle on every read (measured 22 s vs
     * 5 s on q232's profile). The one state that could duplicate rows —
@@ -855,24 +859,10 @@ object DedupOps {
     val shards = shNew.select(graft.functions.ShardExpr
         .javaHashMod(col("shingle"), nShards).as("shard"))
       .distinct().collect().map(_.getInt(0))
-    // base read + ONE multi-path read over all segments (the
-    // readStatsRows pattern): segments are same-writer unpartitioned
-    // tables, so N of them cost one listing/footer/scan setup, not N
-    val (baseOpt, segParts) =
-      IndexLayout.existingPartsSplit(spark, path, "shingles")
-    val reads = (baseOpt match {
-      case None if segParts.isEmpty =>
-        Seq(spark.read.parquet(s"$path/shingles")) // standard read error
-      case bo => bo.map(spark.read.parquet(_)).toSeq
-    }) ++ (segParts match {
-      case Seq()  => Seq.empty
-      case Seq(s) => Seq(spark.read.parquet(s))
-      // recursiveFileLookup: no partition discovery over the shared
-      // segments/batch=N ancestors (CONFLICTING_DIRECTORY_STRUCTURES)
-      case ss     => Seq(spark.read.option("recursiveFileLookup", "true")
-        .parquet(ss: _*))
-    })
-    reads.map(_.filter(col("shard").isin(shards.map(Integer.valueOf): _*)))
+    val (base, segParts) = IndexLayout.liveParts(spark, path, "shingles")
+    val (b, segs) = IndexLayout.readLive(spark, base, segParts)
+    (b ++ segs)
+      .map(_.filter(col("shard").isin(shards.map(Integer.valueOf): _*)))
       .reduce(_.unionByName(_))
   }
 
@@ -910,24 +900,13 @@ object DedupOps {
     val newCached = newDf.cache()
     val newFps = newCached.select(col(idCol),
       graft.functions.TextFns.fingerprint(col(textCol)).as("__fp"))
-    // base fingerprints + ONE multi-path read over all segment
-    // fingerprint tables (same-writer (id, __fp) schema); the base keeps
-    // its own read AND per-part projection — an interim round-11 base
+    // per-part projection before the union — an interim round-11 base
     // may still carry the retired fpshard column
-    val (fpBase, fpSegs) =
-      IndexLayout.existingPartsSplit(spark, path, "fingerprints")
-    val fpReads = (fpBase match {
-      case None if fpSegs.isEmpty =>
-        Seq(spark.read.parquet(s"$path/fingerprints")) // standard error
-      case bo => bo.map(spark.read.parquet(_)).toSeq
-    }) ++ (fpSegs match {
-      case Seq()  => Seq.empty
-      case Seq(s) => Seq(spark.read.parquet(s))
-      case ss     => Seq(spark.read.option("recursiveFileLookup", "true")
-        .parquet(ss: _*))
-    })
+    val (fpBase, fpSegParts) =
+      IndexLayout.liveParts(spark, path, "fingerprints")
+    val (fpB, fpSegs) = IndexLayout.readLive(spark, fpBase, fpSegParts)
     val corpusFps = IndexLayout.dropTombstoned(
-      fpReads.map(_.select(col(idCol), col("__fp")))
+      (fpB ++ fpSegs).map(_.select(col(idCol), col("__fp")))
         .reduce(_.unionByName(_)), idCol, s"$path/tombstones")
     // both regimes emit DISTINCT matched increment ids — without the
     // fallback's distinct, an increment containing duplicate ids would

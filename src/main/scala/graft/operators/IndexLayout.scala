@@ -636,9 +636,10 @@ object IndexLayout {
   /** Whether `dir` exists and holds at least one row (limit-1 probe) —
     * distinguishes the readable-empty unpartitioned base the index
     * writers emit on an empty corpus (replaceable by an append) from a
-    * NON-empty unpartitioned layout (a segment-style `sharded = false`
-    * build), which is NOT a valid append target: overwriting it would
-    * silently drop its rows while the stats still merge additively.
+    * NON-empty unpartitioned layout (a segment's shape, which older
+    * on-disk indexes can have at a base path), which is NOT a valid
+    * append target: overwriting it would silently drop its rows while
+    * the stats still merge additively.
     * A directory holding no parquet data files at all (e.g. only a
     * `_SUCCESS` left by a cleaned write) counts as no rows — probing it
     * through the reader would throw `unable to infer schema` instead.
@@ -684,14 +685,26 @@ object IndexLayout {
     */
   def writeShardCountMarker(spark: SparkSession, root: String,
                             n: Int): Unit = {
+    clearShardCountMarker(spark, root)
+    val rp = new org.apache.hadoop.fs.Path(root)
+    rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(new org.apache.hadoop.fs.Path(rp, ShardCountPrefix + n),
+        true).close()
+  }
+
+  /** Delete an index root's `_NSHARDS_<n>` marker(s). A rebuild clears
+    * the marker with the rest of the lifecycle state BEFORE it writes:
+    * a rebuild that crashes after its postings write and before its new
+    * marker must leave readers on the caller's modulus, never on the
+    * previous index's stale one.
+    */
+  def clearShardCountMarker(spark: SparkSession, root: String): Unit = {
     val rp = new org.apache.hadoop.fs.Path(root)
     val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(rp))
       fs.listStatus(rp).filter(st =>
           st.isFile && st.getPath.getName.startsWith(ShardCountPrefix))
         .foreach(st => fs.delete(st.getPath, false))
-    fs.create(new org.apache.hadoop.fs.Path(rp, ShardCountPrefix + n),
-      true).close()
   }
 
   /** The persisted shard count of an index root, if the layout recorded
@@ -808,9 +821,11 @@ object IndexLayout {
   /** Whether a write target is a streaming-segment mini-index path —
     * `<root>/segments/batch=<id>` (BM25/dedup) or the IVF family's
     * sibling `<root>.segments/batch=<id>`. Owned here with the rest of
-    * the layout convention: segment writers skip lifecycle clears (a
-    * segment carries no lifecycle state of its own) and never take the
-    * maintenance lease (they are the concurrent-safe write path).
+    * the layout convention: a segment target is written unpartitioned
+    * (the layout [[readLive]] relies on), and segment writers skip
+    * lifecycle clears (a segment carries no lifecycle state of its own)
+    * and never take the maintenance lease (they are the concurrent-safe
+    * write path).
     * ANCHORED to the path tail: a segment target ends in its batch
     * directory, so a BASE index that merely lives under some other
     * dataset's `segments/batch=N/` directory is not misclassified into
@@ -1026,51 +1041,76 @@ object IndexLayout {
     }
   }
 
-  /** The existing per-layout `<sub>` directories a multi-layout read
-    * spans: the base `$path/<sub>` (when present) plus each streaming
-    * segment's `$path/segments/batch=<id>/<sub>`, each version-resolved.
+  /** The `<sub>` table of a multi-table layout, split by origin: the
+    * version-resolved base `$path/<sub>` and each streaming segment's
+    * `<seg>/<sub>` that exists. `segs` is an explicit segment snapshot —
+    * what the compactors pass, so the set they fold is exactly the set
+    * they later clear (a segment arriving mid-compaction is neither);
+    * by default the live segments are listed now.
+    *
+    * Only the base is version-resolved, and EXACTLY ONCE. Segments are
+    * immutable plain per-batch overwrites that no compaction versions,
+    * so a manifest probe per segment was O(segments) filesystem calls
+    * per read — on an object store, API calls per query (the q231
+    * regression). And classification IS the listing: a second resolve
+    * to tell base from segment could race a compaction flip into
+    * classifying the stale base as a segment, skipping the
+    * crash-duplicate guards. A missing base is None, unless no segment
+    * part exists either: then the base path stays, so reading an absent
+    * index fails with Spark's standard missing-path error.
     */
-  def existingParts(spark: SparkSession, path: String,
-                    sub: String): Seq[String] =
-    existingPartsOf(spark, path, segmentDirs(spark, path), sub)
-
-  /** [[existingParts]] over an EXPLICIT segment snapshot — what the
-    * compactors use, so the set they fold is exactly the set they later
-    * clear (a segment arriving mid-compaction is neither). Only the BASE
-    * sub-table is version-resolved: segments are immutable mini-layouts
-    * written by plain per-batch overwrites and are never the target of a
-    * versioned compaction, so probing a manifest per segment was
-    * O(segments) pure driver FS chatter per read — on an object store,
-    * O(segments) API calls per query (the q231 regression).
-    */
-  def existingPartsOf(spark: SparkSession, path: String,
-                      segs: Seq[String], sub: String): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    (resolve(spark, s"$path/$sub") +: segs.map(p => s"$p/$sub"))
-      .filter { d =>
-        val hp = new org.apache.hadoop.fs.Path(d)
-        hp.getFileSystem(conf).exists(hp)
-      }
-  }
-
-  /** [[existingParts]] split by layout class, with the base resolved
-    * EXACTLY ONCE. Readers that must classify base-vs-segment (the
-    * crash-duplicate anti-join guards) cannot call [[resolve]] a second
-    * time to classify the listing: a concurrent compaction flipping the
-    * version between the two calls would make them classify the stale
-    * base path as a segment and fall into the no-dedup union branch —
-    * strictly worse than the corpus `distinct()` the guard replaced.
-    * Here classification IS the listing: one resolve, split by origin.
-    */
-  def existingPartsSplit(spark: SparkSession, path: String,
-                         sub: String): (Option[String], Seq[String]) = {
+  def liveParts(spark: SparkSession, path: String, sub: String,
+                segs: Option[Seq[String]] = None): (Option[String], Seq[String]) = {
     val conf = spark.sparkContext.hadoopConfiguration
     def lives(d: String): Boolean = {
       val hp = new org.apache.hadoop.fs.Path(d)
       hp.getFileSystem(conf).exists(hp)
     }
-    (Some(resolve(spark, s"$path/$sub")).filter(lives),
-     segmentDirs(spark, path).map(p => s"$p/$sub").filter(lives))
+    val base = resolve(spark, s"$path/$sub")
+    val segParts = segs.getOrElse(segmentDirs(spark, path))
+      .map(p => s"$p/$sub").filter(lives)
+    (Some(base).filter(b => segParts.isEmpty || lives(b)), segParts)
+  }
+
+  /** The one live read of a base+segments layout: (the base read, ONE
+    * read over all segment parts). No other code reads segments.
+    *
+    *   - The base is read with partition discovery, so its `<key>=`
+    *     directories come back as the key column.
+    *   - All segments are one scan: N segments cost one listing, footer
+    *     and scan setup instead of N (the per-segment fixed cost was the
+    *     measured LSM read-amplification slope, SegProbe). Two or more
+    *     parts read with `recursiveFileLookup`: a multi-root read would
+    *     otherwise attempt partition discovery over the shared
+    *     `segments/batch=N` ancestors and fail with
+    *     CONFLICTING_DIRECTORY_STRUCTURES.
+    *
+    * Plain file listing is exact because a segment is unpartitioned by
+    * construction: the writers choose the layout from the target path
+    * ([[isSegmentPath]]), so a segment carries its key as a data column.
+    */
+  def readLive(spark: SparkSession, base: Option[String],
+               segParts: Seq[String]): (Option[DataFrame], Option[DataFrame]) =
+    (base.map(spark.read.parquet(_)), segParts match {
+      case Seq()  => None
+      case Seq(s) => Some(spark.read.parquet(s))
+      case ss     =>
+        Some(spark.read.option("recursiveFileLookup", "true").parquet(ss: _*))
+    })
+
+  /** The offline fold input shared by the compactions, retrains and
+    * audits: the [[readLive]] base ∪ segments (each read shaped by
+    * `project` first, for ragged legacy schemas), DISTINCT, minus the ids
+    * of an explicit tombstone snapshot ([[dropTombstonedFiles]]). The
+    * distinct is what makes a crashed fold converge: a segment left both
+    * folded and present collapses into the identical base rows.
+    */
+  def foldLive(spark: SparkSession, base: Option[String],
+               segParts: Seq[String], idCol: String, tombs: Seq[String],
+               project: DataFrame => DataFrame = identity): DataFrame = {
+    val (b, s) = readLive(spark, base, segParts)
+    dropTombstonedFiles(
+      (b ++ s).map(project).reduce(_.unionByName(_)).distinct(), idCol, tombs)
   }
 
   /** Total on-disk bytes under `dirs` — a driver-side FS metadata read

@@ -287,11 +287,9 @@ object IvfIndex {
         else None,
         IndexLayout.dropTombstonedFiles(_, idCol, tombFiles))
     } else {
-      val all = (IndexLayout.resolve(spark, path) +: segs)
-        .map(spark.read.parquet(_))
-        .reduce(_.unionByName(_)).distinct()
       IndexLayout.writeSwap(spark, path,
-        IndexLayout.dropTombstonedFiles(all, idCol, tombFiles),
+        IndexLayout.foldLive(spark, Some(IndexLayout.resolve(spark, path)),
+          segs, idCol, tombFiles),
         Some("cell"))
     }
     // retire on BOTH branches: delete what the previous fold marked,
@@ -336,9 +334,8 @@ object IvfIndex {
                                    k: Int, iters: Int): Model = {
     val segs = IndexLayout.segmentDirsAt(spark, s"$path.segments")
     val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path.tombstones")
-    val all = (IndexLayout.resolve(spark, path) +: segs)
-      .map(spark.read.parquet(_)).reduce(_.unionByName(_)).distinct()
-    val live = IndexLayout.dropTombstonedFiles(all, idCol, tombFiles)
+    val live = IndexLayout.foldLive(spark,
+        Some(IndexLayout.resolve(spark, path)), segs, idCol, tombFiles)
       .drop("cell")
     val model = train(live, idCol, embCol, k, iters)
     IndexLayout.writeSwap(spark, path,
@@ -383,9 +380,8 @@ object IvfIndex {
                        model: Model, iters: Int = 2): (Long, Long) = {
     val segs = IndexLayout.segmentDirsAt(spark, s"$path.segments")
     val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path.tombstones")
-    val all = (IndexLayout.resolve(spark, path) +: segs)
-      .map(spark.read.parquet(_)).reduce(_.unionByName(_)).distinct()
-    val live = IndexLayout.dropTombstonedFiles(all, idCol, tombFiles)
+    val live = IndexLayout.foldLive(spark,
+        Some(IndexLayout.resolve(spark, path)), segs, idCol, tombFiles)
       .select(col(idCol), col(embCol))
     live.cache()
     try {
@@ -495,9 +491,10 @@ object IvfIndex {
   }
 
   /** The probed-cell read across the base layout (partition-pruned) plus
-    * any streaming segments ([[writeSegment]] — `cell` is a data column
-    * there, so the same filter applies without pruning; segments are
-    * micro-batch-sized, so scanning them is the cheap case by design).
+    * the one scan over any streaming segments ([[writeSegment]] — `cell`
+    * is a data column there, so the same filter applies without pruning;
+    * segments are micro-batch-sized, so scanning them is the cheap case
+    * by design).
     * Shared by [[searchPruned]] and `IvfPq.searchPruned`.
     *
     * Crash-duplicate guard (the BqIndex.readCodes discipline): a crashed
@@ -521,14 +518,12 @@ object IvfIndex {
                                    idCol: String): DataFrame = {
     val cellList = cells.map(Integer.valueOf)
     val segs = IndexLayout.segmentDirsAt(spark, s"$indexPath.segments")
-    val base = spark.read.parquet(IndexLayout.resolve(spark, indexPath))
-      .filter(col("cell").isin(cellList: _*))
-    if (segs.isEmpty) base
-    else {
-      val seg0 = segs
-        .map(p => spark.read.parquet(p).filter(col("cell").isin(cellList: _*))
-          .select(base.columns.map(col).toIndexedSeq: _*))
-        .reduce(_.unionByName(_))
+    val (baseRead, segRead) = IndexLayout.readLive(spark,
+      Some(IndexLayout.resolve(spark, indexPath)), segs)
+    val base = baseRead.get.filter(col("cell").isin(cellList: _*))
+    segRead.fold(base) { s =>
+      val seg0 = s.filter(col("cell").isin(cellList: _*))
+        .select(base.columns.map(col).toIndexedSeq: _*)
       val segDf = if (segs.length > 1) seg0.distinct() else seg0
       IndexLayout.segGuardedUnion(base, segDf, idCol,
         IndexLayout.dirBytes(spark, segs))

@@ -217,9 +217,8 @@ object IvfPq {
                                    m: Int, k: Int, pqIters: Int): Model = {
     val segs = IndexLayout.segmentDirsAt(spark, s"$path.segments")
     val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path.tombstones")
-    val all = (IndexLayout.resolve(spark, path) +: segs)
-      .map(spark.read.parquet(_)).reduce(_.unionByName(_)).distinct()
-    val live = IndexLayout.dropTombstonedFiles(all, idCol, tombFiles)
+    val live = IndexLayout.foldLive(spark,
+        Some(IndexLayout.resolve(spark, path)), segs, idCol, tombFiles)
       .select(col(idCol), col(embCol))
     val model = train(live, idCol, embCol, nlist, coarseIters, m, k, pqIters)
     IndexLayout.writeSwap(spark, path,
@@ -250,9 +249,8 @@ object IvfPq {
                        pqIters: Int = 2): (Long, Long) = {
     val segs = IndexLayout.segmentDirsAt(spark, s"$path.segments")
     val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path.tombstones")
-    val all = (IndexLayout.resolve(spark, path) +: segs)
-      .map(spark.read.parquet(_)).reduce(_.unionByName(_)).distinct()
-    val live = IndexLayout.dropTombstonedFiles(all, idCol, tombFiles)
+    val live = IndexLayout.foldLive(spark,
+        Some(IndexLayout.resolve(spark, path)), segs, idCol, tombFiles)
       .select(col(idCol), col(embCol))
     live.cache()
     try {

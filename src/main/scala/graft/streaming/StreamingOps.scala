@@ -834,14 +834,13 @@ object StreamingOps {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // spread the (often single-file) micro-batch so the tokenize/
         // explode pipeline runs at full parallelism — batch-bounded cost.
-        // sharded=false: segments write UNPARTITIONED (Lucene's small
-        // segments — scanned, not pruned; an nShards-directory write per
-        // micro-batch is ~all fixed cost). Compaction folds them into the
-        // base's pruned partitioned layout.
+        // the segments/batch=N target writes UNPARTITIONED (Lucene's
+        // small segments — scanned, not pruned; an nShards-directory write
+        // per micro-batch is ~all fixed cost). Compaction folds them into
+        // the base's pruned partitioned layout.
         graft.operators.Bm25.writeIndex(
           batch.repartition(batch.sparkSession.sparkContext.defaultParallelism),
-          idCol, textCol, s"$indexDir/segments/batch=$batchId", nShards,
-          sharded = false)
+          idCol, textCol, s"$indexDir/segments/batch=$batchId", nShards)
         ()
       }
       .start()
@@ -867,8 +866,7 @@ object StreamingOps {
         // rationale as [[streamBm25Index]]
         graft.operators.DedupOps.writeDedupIndex(
           batch.repartition(batch.sparkSession.sparkContext.defaultParallelism),
-          idCol, textCol, n, s"$indexDir/segments/batch=$batchId", nShards,
-          sharded = false)
+          idCol, textCol, n, s"$indexDir/segments/batch=$batchId", nShards)
         ()
       }
       .start()
@@ -969,8 +967,7 @@ object StreamingOps {
         val spark = batch.sparkSession
         graft.operators.DedupOps.writeDedupIndex(
           batch.repartition(spark.sparkContext.defaultParallelism),
-          idCol, textCol, n, s"$indexDir/segments/batch=$batchId", nShards,
-          sharded = false)
+          idCol, textCol, n, s"$indexDir/segments/batch=$batchId", nShards)
         val plan = graft.operators.DedupOps.maintenancePlan(
           spark, indexDir, thresholds)
         if (plan.recommends("fold") || plan.recommends("compact"))
@@ -1023,8 +1020,7 @@ object StreamingOps {
         val spark = batch.sparkSession
         graft.operators.Bm25.writeIndex(
           batch.repartition(spark.sparkContext.defaultParallelism),
-          idCol, textCol, s"$indexDir/segments/batch=$batchId", nShards,
-          sharded = false)
+          idCol, textCol, s"$indexDir/segments/batch=$batchId", nShards)
         val plan = graft.operators.Bm25.maintenancePlan(
           spark, indexDir, thresholds)
         if (plan.recommends("fold") || plan.recommends("compact"))

@@ -249,15 +249,20 @@ class Bm25Spec extends SparkSpec {
       "doc_id", "text", fullDir, nShards = 64)
     val streamed = rows(dir)
     assert(streamed === rows(fullDir))
-    // plan pin: the multi-layout read keeps the BASE scan partition-pruned
-    // (shard IN (...) as a PartitionFilter) while the unpartitioned
-    // segments contribute plain pushed-filter scans — one scan per layout
+    // plan pin: each use of the postings (scoring and df) is exactly two
+    // scans — the BASE partition-pruned (shard IN (...) as a
+    // PartitionFilter) and ONE scan over both unpartitioned segments
+    // (2 paths, shard a plain data filter)
     val plan = Bm25.topKIndexed(spark, dir, "doc_id", queries, k = 10)
       .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[shard#\\d+ IN \\(".r.findFirstIn(plan).isDefined,
-      plan.take(3000))
-    assert("Location: InMemoryFileIndex".r.findAllIn(plan).size >= 3,
-      s"expected base + segment scans in:\n${plan.take(3000)}")
+    val scanPaths = "Location: InMemoryFileIndex\\((\\d+) paths\\)".r
+      .findAllMatchIn(plan).map(_.group(1).toInt).toSeq
+    assert(scanPaths.sorted == Seq(1, 1, 2, 2),
+      s"expected base + one segment scan per postings use in:\n${plan.take(3000)}")
+    val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r
+      .findAllMatchIn(plan).map(_.group(1)).toSeq
+    assert(partFilters.count(_.matches("shard#\\d+ IN \\(.*")) == 2 &&
+      partFilters.count(_.isEmpty) == 2, plan.take(3000))
     // a replayed batch overwrites its own segment — results converge
     Bm25.writeIndex(parts(1).toSeq.toDF("doc_id", "text"),
       "doc_id", "text", s"$dir/segments/batch=0", nShards = 64)
@@ -291,13 +296,11 @@ class Bm25Spec extends SparkSpec {
     val parts = (0 to 3).map(r => docs.filter(col("doc_id") % 4 === r))
     val dir = java.nio.file.Files.createTempDirectory("bm25_race").toString
     Bm25.writeIndex(parts(0), "doc_id", "text", dir, nShards = 64)
-    Bm25.writeIndex(parts(1), "doc_id", "text", s"$dir/segments/batch=0",
-      sharded = false)
+    Bm25.writeIndex(parts(1), "doc_id", "text", s"$dir/segments/batch=0")
     // compaction snapshots the segment list = [batch=0]; batch=1 lands
     // AFTER the snapshot (the race the fold must survive)
     val snapshot = IndexLayout.segmentDirs(spark, dir)
-    Bm25.writeIndex(parts(2), "doc_id", "text", s"$dir/segments/batch=1",
-      sharded = false)
+    Bm25.writeIndex(parts(2), "doc_id", "text", s"$dir/segments/batch=1")
     Bm25.compactIndexFolding(spark, dir, "doc_id", snapshot)
     // the late segment was neither folded nor deleted — still readable
     val left = IndexLayout.segmentDirs(spark, dir)
@@ -388,7 +391,7 @@ class Bm25Spec extends SparkSpec {
     // tombstone — all state a rebuild must replace
     Bm25.writeIndex(embDocs.filter(col("doc_id") === 1L), "doc_id", "text", dir)
     Bm25.writeIndex(embDocs.filter(col("doc_id") === 3L), "doc_id", "text",
-      s"$dir/segments/batch=0", sharded = false)
+      s"$dir/segments/batch=0")
     Bm25.removeFromIndex(Seq(1L).toDF("doc_id"), "doc_id", dir)
     assert(IndexLayout.segmentDirs(spark, dir).nonEmpty)
     // the rebuild: docs 1 and 2 only — doc 3 must NOT leak back in from
@@ -405,8 +408,12 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("appendToIndex refuses a non-empty unpartitioned (segment-style) base") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_seg_base").toString
-    Bm25.writeIndex(embDocs, "doc_id", "text", dir, sharded = false)
+    // older on-disk indexes can hold a segment's unpartitioned tables at
+    // a base path: write a segment, then move its tables to a base path
+    val root = java.nio.file.Files.createTempDirectory("bm25_seg_base")
+    val seg = root.resolve("src/segments/batch=0")
+    Bm25.writeIndex(embDocs, "doc_id", "text", seg.toString)
+    val dir = java.nio.file.Files.move(seg, root.resolve("index")).toString
     val err = intercept[IllegalArgumentException] {
       Bm25.appendToIndex(Seq((9L, "apple pie")).toDF("doc_id", "text"),
         "doc_id", "text", dir)
@@ -459,7 +466,7 @@ class Bm25Spec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("bm25_export").toString
     Bm25.writeIndex(embDocs.filter(col("doc_id") =!= 3L), "doc_id", "text", dir)
     Bm25.writeIndex(embDocs.filter(col("doc_id") === 3L), "doc_id", "text",
-      s"$dir/segments/batch=0", sharded = false)
+      s"$dir/segments/batch=0")
     Bm25.removeFromIndex(Seq(2L).toDF("doc_id"), "doc_id", dir)
     val out = java.nio.file.Files.createTempDirectory("bm25_export_out").toString + "/postings"
     Bm25.exportLivePostings(spark, dir, "doc_id", out)
@@ -485,9 +492,9 @@ class Bm25Spec extends SparkSpec {
     // second removal must shift the row the first one created
     val dir = java.nio.file.Files.createTempDirectory("bm25_segonly").toString
     Bm25.writeIndex(embDocs.filter(col("doc_id") <= 2L), "doc_id", "text",
-      s"$dir/segments/batch=0", sharded = false)
+      s"$dir/segments/batch=0")
     Bm25.writeIndex(embDocs.filter(col("doc_id") === 3L), "doc_id", "text",
-      s"$dir/segments/batch=1", sharded = false)
+      s"$dir/segments/batch=1")
     def rows(d: String) =
       Bm25.topKIndexed(spark, d, "doc_id",
         Seq("qa" -> "apple", "qb" -> "banana"), k = 3)
@@ -503,19 +510,19 @@ class Bm25Spec extends SparkSpec {
     assert(rows(dir) === fresh(embDocs.filter(col("doc_id") === 2L)))
   }
 
-  test("a sharded=false rebuild at a BASE path still clears stale version manifests") {
+  test("a rebuild at a BASE path clears stale version manifests") {
     import graft.operators.IndexLayout
     // build + compact => versioned postings with a _CURRENT manifest;
-    // a later sharded=false REBUILD at the same base path must clear it,
-    // or the stale manifest shadows the fresh plain layout
-    val dir = java.nio.file.Files.createTempDirectory("bm25_unsharded_rebuild").toString
+    // a later REBUILD at the same base path must clear it, or the stale
+    // manifest shadows the fresh plain layout
+    val dir = java.nio.file.Files.createTempDirectory("bm25_rebuild").toString
     Bm25.writeIndex(embDocs, "doc_id", "text", dir)
     Bm25.appendToIndex(Seq((9L, "apple pie")).toDF("doc_id", "text"),
       "doc_id", "text", dir)
     Bm25.compactIndex(spark, dir)
     assert(IndexLayout.currentVersion(spark, s"$dir/postings").isDefined)
     val rebuilt = embDocs.filter(col("doc_id") =!= 3L)
-    Bm25.writeIndex(rebuilt, "doc_id", "text", dir, sharded = false)
+    Bm25.writeIndex(rebuilt, "doc_id", "text", dir)
     assert(IndexLayout.currentVersion(spark, s"$dir/postings").isEmpty,
       "stale manifest cleared")
     val out = Bm25.topKIndexed(spark, dir, "doc_id",
@@ -624,7 +631,7 @@ class Bm25Spec extends SparkSpec {
     // now the multi-dir mergeSchema path
     val segDocs = Seq((4L, "epsilon alpha")).toDF("doc_id", "text")
     Bm25.writeIndex(segDocs, "doc_id", "text",
-      s"$dir/segments/batch=0", nShards = 8, sharded = false)
+      s"$dir/segments/batch=0", nShards = 8)
     val queries = Seq("q" -> "alpha beta gamma delta epsilon")
     val got = Bm25.topKIndexed(spark, dir, "doc_id", queries, k = 10,
       nShards = 8).collect().map(_.toSeq).toSet
@@ -670,10 +677,11 @@ class Bm25Spec extends SparkSpec {
     Bm25.writeIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"))
       .toDF("doc_id", "text"), "doc_id", "text", dir, nShards = 8)
     Bm25.writeIndex(Seq((3L, "alpha gamma")).toDF("doc_id", "text"),
-      "doc_id", "text", s"$dir/segments/batch=0", nShards = 8,
-      sharded = false)
+      "doc_id", "text", s"$dir/segments/batch=0", nShards = 8)
     // a slow reader lists the layout parts just before the fold lands
-    val preFoldParts = IndexLayout.existingParts(spark, dir, "postings")
+    val (preFoldBase, preFoldSegs) =
+      IndexLayout.liveParts(spark, dir, "postings")
+    val preFoldParts = preFoldBase.toSeq ++ preFoldSegs
     assert(preFoldParts.size == 2)
     Bm25.compactIndex(spark, dir)
     // the folded segment's files are STILL readable for that reader
@@ -693,8 +701,7 @@ class Bm25Spec extends SparkSpec {
     // the next fold (new segment arrives, compaction runs) deletes what
     // the first fold marked
     Bm25.writeIndex(Seq((4L, "delta")).toDF("doc_id", "text"),
-      "doc_id", "text", s"$dir/segments/batch=1", nShards = 8,
-      sharded = false)
+      "doc_id", "text", s"$dir/segments/batch=1", nShards = 8)
     Bm25.compactIndex(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -713,14 +720,13 @@ class Bm25Spec extends SparkSpec {
       .toDF("doc_id", "text"), "doc_id", "text", dir, nShards = 8)
     // the partial write the crash left
     Bm25.writeIndex(Seq((3L, "alpha gamma")).toDF("doc_id", "text"),
-      "doc_id", "text", s"$dir/segments/batch=0", nShards = 8,
-      sharded = false)
+      "doc_id", "text", s"$dir/segments/batch=0", nShards = 8)
     Bm25.compactIndex(spark, dir) // folds the partial, marks batch=0
     assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
     // full replay of batch 0: doc 3 AND the doc the partial missed
     Bm25.writeIndex(Seq((3L, "alpha gamma"), (4L, "delta alpha"))
       .toDF("doc_id", "text"), "doc_id", "text",
-      s"$dir/segments/batch=0", nShards = 8, sharded = false)
+      s"$dir/segments/batch=0", nShards = 8)
     // live again — and doc 4 is retrievable
     assert(IndexLayout.segmentDirs(spark, dir).size == 1)
     val queries = Seq("q" -> "delta")

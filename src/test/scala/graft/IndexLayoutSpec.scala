@@ -3,6 +3,8 @@ package graft
 import graft.operators.IndexLayout
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Version-pointer swap semantics (the object-store-safe compaction
   * primitive): a swap writes the FULL new layout to a sibling version
   * directory first and flips a tiny manifest last, so a reader resolving
@@ -263,7 +265,7 @@ class IndexLayoutSpec extends SparkSpec {
       Bm25.writeIndex(docs, "doc_id", "text", dir)
       (0 until nSegs).foreach { b =>
         Bm25.writeIndex(docs.withColumn("doc_id", col("doc_id") + lit(100L * (b + 1))),
-          "doc_id", "text", s"$dir/segments/batch=$b", sharded = false)
+          "doc_id", "text", s"$dir/segments/batch=$b")
       }
       val before = IndexLayout.manifestProbes.get()
       Bm25.topKIndexed(spark, dir, "doc_id", Seq("q" -> "alpha gamma"), k = 3)
@@ -477,5 +479,119 @@ class IndexLayoutSpec extends SparkSpec {
     assert(IndexLayout.resolve(spark, dir) == s"$dir.v2")
     assert(spark.read.parquet(IndexLayout.resolve(spark, dir))
       .head().getLong(0) == 3L)
+  }
+
+  test("all five layouts: default-argument segment writes are unpartitioned; live read equals a rebuild") {
+    import graft.operators.{Bm25, BqIndex, DedupOps, IvfIndex, IvfPq, PortableAnn}
+    import org.apache.spark.sql.DataFrame
+    // One row per persisted layout: build a base and stream segments
+    // through the PUBLIC writers with default arguments, then read the
+    // live index (base + segments, through the one segment reader) and
+    // compare it with a from-scratch build over the same rows. The
+    // segment layout is fixed by the segment's path, so no default can
+    // write a `<key>=` partition dir inside a segment.
+    final case class Layout(
+        name: String, corpus: DataFrame, idCol: String,
+        segRoot: String => String,
+        build: (DataFrame, String) => Unit,
+        segment: (DataFrame, String, Long) => Unit,
+        live: String => Set[Seq[Any]],
+        rebuilt: (DataFrame, String) => Set[Seq[Any]])
+    val docs = Tables(spark, sf, "documents").select("doc_id", "text")
+    val embs = Tables(spark, sf, "embeddings").select("vec_id", "embedding")
+    val qvs = embs.select(col("vec_id"),
+      PortableAnn.quant(col("embedding")).as("qv"))
+    val qvec = embs.orderBy(col("vec_id")).limit(1)
+      .select(col("embedding").cast("array<double>")).head()
+      .getSeq[Double](0).toArray
+    val textQs = Seq("s1" -> "fast hash join", "s2" -> "stream filter vector")
+    val probe = docs.filter(col("doc_id") < 30)
+      .select(col("doc_id") + 500000L as "doc_id", col("text"))
+    val ivf = IvfIndex.train(embs, "vec_id", "embedding", k = 6, iters = 2)
+    val pq = IvfPq.train(embs, "vec_id", "embedding", nlist = 6,
+      coarseIters = 2, m = 8, k = 12, pqIters = 2)
+    def collected(df: DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    def fresh(tag: String): String =
+      s"${java.nio.file.Files.createTempDirectory(tag)}/index"
+    def rebuiltBy(build: (DataFrame, String) => Unit,
+                  live: String => Set[Seq[Any]])(all: DataFrame,
+                                                 streamed: String) = {
+      val d = fresh("ixl_rebuild")
+      build(all, d)
+      live(d)
+    }
+    val bm25Build = (df: DataFrame, p: String) =>
+      Bm25.writeIndex(df, "doc_id", "text", p)
+    val bm25Live = (p: String) =>
+      collected(Bm25.topKIndexed(spark, p, "doc_id", textQs, k = 10))
+    val dedupBuild = (df: DataFrame, p: String) =>
+      DedupOps.writeDedupIndex(df, "doc_id", "text", 3, p)
+    val dedupLive = (p: String) => collected(
+      DedupOps.dedupAgainstIndex(spark, p, probe, "doc_id", "text", 3, 0.5))
+    val ivfBuild = (df: DataFrame, p: String) =>
+      IvfIndex.writeIndex(df, "vec_id", "embedding", ivf, p)
+    val ivfLive = (p: String) => collected(
+      IvfIndex.searchPruned(spark, p, embs.filter(col("vec_id") < 5),
+          "vec_id", "embedding", ivf, nprobe = 6, topK = 5)
+        .select(col("query_id"), col("vec_id"), round(col("sim"), 9),
+          col("rank")))
+    val pqBuild = (df: DataFrame, p: String) =>
+      IvfPq.writeIndex(df, "vec_id", "embedding", pq, p)
+    val pqLive = (p: String) => collected(
+      IvfPq.searchPruned(spark, p, qvec, "vec_id", "embedding", pq,
+          nprobe = 6, shortlist = 40, topK = 5)
+        .select(col("vec_id"), round(col("dist"), 9)))
+    val bqLive = (p: String) => collected(BqIndex.readCodes(spark, p, "vec_id"))
+    val layouts = Seq(
+      Layout("bm25", docs, "doc_id", p => s"$p/segments", bm25Build,
+        (df, p, b) => Bm25.writeIndex(df, "doc_id", "text",
+          s"$p/segments/batch=$b"),
+        bm25Live, rebuiltBy(bm25Build, bm25Live)),
+      Layout("dedup", docs, "doc_id", p => s"$p/segments", dedupBuild,
+        (df, p, b) => DedupOps.writeDedupIndex(df, "doc_id", "text", 3,
+          s"$p/segments/batch=$b"),
+        dedupLive, rebuiltBy(dedupBuild, dedupLive)),
+      Layout("ivf", embs, "vec_id", p => s"$p.segments", ivfBuild,
+        (df, p, b) => IvfIndex.writeSegment(df, "vec_id", "embedding", ivf,
+          p, b),
+        ivfLive, rebuiltBy(ivfBuild, ivfLive)),
+      Layout("ivfpq", embs, "vec_id", p => s"$p.segments", pqBuild,
+        (df, p, b) => IvfPq.writeSegment(df, "vec_id", "embedding", pq,
+          p, b),
+        pqLive, rebuiltBy(pqBuild, pqLive)),
+      // BQ's build trains its threshold model on the rows it is given;
+      // the rebuild is every live vector encoded with the index's model
+      Layout("bq", qvs, "vec_id", p => s"$p/segments",
+        (df, p) => { BqIndex.writeIndex(df, "vec_id", "qv", p); () },
+        (df, p, b) => BqIndex.writeSegment(df, "vec_id", "qv", p, b),
+        bqLive,
+        (all, streamed) => collected(BqIndex.encode(all, "vec_id", "qv",
+          BqIndex.readModel(spark, streamed)))))
+    layouts.foreach { l =>
+      val slice = (i: Int) => l.corpus.filter(col(l.idCol) % 4 === i)
+      val dir = fresh(s"ixl_five_${l.name}")
+      l.build(slice(0), dir)
+      // batch 0 lands partially, batch 1 lands, then batch 0 is REPLAYED
+      // in full over its own segment
+      l.segment(slice(1).filter(col(l.idCol) % 8 === 1), dir, 0L)
+      l.segment(slice(2), dir, 1L)
+      l.segment(slice(1), dir, 0L)
+      val segs = IndexLayout.segmentDirsAt(spark, l.segRoot(dir))
+      assert(segs.size == 2, s"${l.name}: $segs")
+      segs.foreach { seg =>
+        val root = java.nio.file.Paths.get(new java.net.URI(seg))
+        val walk = java.nio.file.Files.walk(root)
+        val partitionDirs =
+          try walk.iterator().asScala.filter(f => f != root &&
+              java.nio.file.Files.isDirectory(f) &&
+              f.getFileName.toString.contains("=")).toList
+          finally walk.close()
+        assert(partitionDirs.isEmpty,
+          s"${l.name}: partition dirs inside segment $seg: $partitionDirs")
+      }
+      val all = slice(0).unionByName(slice(1)).unionByName(slice(2))
+      assert(l.live(dir) === l.rebuilt(all, dir), l.name)
+    }
   }
 }

@@ -821,7 +821,7 @@ class LifecycleSoakSpec extends SparkSpec {
       "vec_id", "qv", bqDir)
     // live segments, so the compactions below genuinely flip both layouts
     Bm25.writeIndex(allDocs.filter(col("doc_id") % 2 === 1), "doc_id",
-      "text", s"$bmDir/segments/batch=1", 64, sharded = false)
+      "text", s"$bmDir/segments/batch=1", 64)
     BqIndex.writeSegment(corp.filter(col("vec_id") % 2 === 1),
       "vec_id", "qv", bqDir, batchId = 1L)
     val n = corp.count().toInt

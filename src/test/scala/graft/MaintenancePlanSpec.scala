@@ -255,7 +255,7 @@ class MaintenancePlanSpec extends SparkSpec {
       "doc_id", "text", bmDir)
     (1 to 3).foreach { b =>
       Bm25.writeIndex(docs.filter(col("doc_id") % 4 === b),
-        "doc_id", "text", s"$bmDir/segments/batch=$b", 64, sharded = false)
+        "doc_id", "text", s"$bmDir/segments/batch=$b", 64)
     }
     IndexLayout.acquireLease(spark, bmDir, "someone-else")
     val bmHeld = try Bm25.maintain(spark, bmDir, "doc_id", t)
@@ -280,8 +280,7 @@ class MaintenancePlanSpec extends SparkSpec {
     (1 to 3).foreach { b =>
       DedupOps.writeDedupIndex(docs.filter(col("doc_id") % 4 === b),
         "doc_id", "text", 3, s"$ddDir/segments/batch=$b",
-        DedupOps.DefaultShingleShards,
-        sharded = false)
+        DedupOps.DefaultShingleShards)
     }
     IndexLayout.acquireLease(spark, ddDir, "someone-else")
     val ddHeld = try DedupOps.maintain(spark, ddDir, "doc_id", t)

@@ -158,6 +158,39 @@ class SimilaritySpec extends SparkSpec {
       "doc_id", "text", 3, 0.5)) === wantAfter)
   }
 
+  test("a rebuild crashing before its shard-count marker leaves readers on the caller's modulus") {
+    // the crash window: a rebuild at a new modulus writes its postings
+    // and fingerprints, then dies before stamping its _NSHARDS_ marker.
+    // The rebuild clears the previous index's marker with the other
+    // lifecycle state before it writes, so readers fall back to the
+    // caller's modulus instead of pruning the new postings with the
+    // stale one (missed pairs)
+    import graft.operators.IndexLayout
+    val corpus = docs.select(col("doc_id"), col("text"))
+    val probe = corpus.filter(col("doc_id") < 30)
+      .select(col("doc_id") + 500000L as "doc_id", col("text"))
+    val dir = java.nio.file.Files.createTempDirectory("dedup_marker_crash").toString
+    DedupOps.writeDedupIndex(corpus, "doc_id", "text", n = 3, dir,
+      nShards = 7)
+    assert(IndexLayout.readShardCountMarker(spark, dir) === Some(7))
+    // inject the crash: the committer fails right after the rebuild's
+    // last table write lands, before the marker step begins
+    val key = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(key, classOf[CrashAfterFingerprintsCommitter].getName)
+    try intercept[Exception] {
+      DedupOps.writeDedupIndex(corpus, "doc_id", "text", n = 3, dir,
+        nShards = 16)
+    } finally spark.conf.unset(key)
+    assert(IndexLayout.readShardCountMarker(spark, dir).isEmpty,
+      "the stale marker must not survive the crashed rebuild")
+    assert(IndexLayout.leaseHolder(spark, dir).isEmpty, "lease released")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    assert(rows(DedupOps.dedupAgainstIndex(spark, dir, probe,
+        "doc_id", "text", 3, 0.5, nShards = 16))
+      === rows(DedupOps.dedupAgainst(probe, corpus, "doc_id", "text", 3, 0.5)))
+  }
+
   test("exact-dup check: broadcast and shuffle regimes agree and match the non-indexed oracle") {
     val corpus = docs
     val probe = corpus.filter(col("doc_id") < 25)
@@ -355,7 +388,7 @@ class SimilaritySpec extends SparkSpec {
     // a stale segment, rebuild over a half-corpus, and the check must
     // equal a clean half-corpus index
     DedupOps.writeDedupIndex(parts(2).toSeq.toDF("doc_id", "text"),
-      "doc_id", "text", 3, s"$dir/segments/batch=9", sharded = false)
+      "doc_id", "text", 3, s"$dir/segments/batch=9")
     assert(IndexLayout.segmentDirs(spark, dir).nonEmpty)
     val half = docs.filter(col("doc_id") % 2 === 0)
     DedupOps.writeDedupIndex(half, "doc_id", "text", 3, dir)
@@ -375,11 +408,11 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("dedup_race").toString
     DedupOps.writeDedupIndex(parts(0), "doc_id", "text", 3, dir)
     DedupOps.writeDedupIndex(parts(1), "doc_id", "text", 3,
-      s"$dir/segments/batch=0", sharded = false)
+      s"$dir/segments/batch=0")
     // snapshot, then a late segment lands — the race the fold must survive
     val snapshot = IndexLayout.segmentDirs(spark, dir)
     DedupOps.writeDedupIndex(parts(2), "doc_id", "text", 3,
-      s"$dir/segments/batch=1", sharded = false)
+      s"$dir/segments/batch=1")
     DedupOps.compactDedupIndexFolding(spark, dir, "doc_id", snapshot)
     val left = IndexLayout.segmentDirs(spark, dir)
     assert(left.size == 1 && left.head.endsWith("batch=1"))
@@ -1159,5 +1192,22 @@ class SimilaritySpec extends SparkSpec {
       } else assert(!got.contains((i, j)), s"pair ($i,$j) below threshold")
     }
     assert(expectedPairs == 15 && got.size == 15) // one pair per group
+  }
+}
+
+/** Commits a job's output, then throws if the output is a
+  * `dedup_marker_crash` index's `fingerprints` table — the last table a
+  * dedup rebuild writes before its shard-count marker, so the index is
+  * left exactly as a rebuild that crashed before the marker leaves it.
+  */
+class CrashAfterFingerprintsCommitter(
+    out: org.apache.hadoop.fs.Path,
+    ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+    extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    super.commitJob(job)
+    if (out.getName == "fingerprints" &&
+        out.toString.contains("dedup_marker_crash"))
+      throw new java.io.IOException("injected crash before the marker write")
   }
 }
