@@ -73,12 +73,10 @@ object FoldStallProbe {
         var folded = false
         val w = time {
           DedupOps.writeDedupIndex(batch, "doc_id", "text", 3,
-            s"$ddDir/segments/batch=$b", 256)
-          val plan = DedupOps.maintenancePlan(spark, ddDir, t)
-          if (plan.recommends("fold") || plan.recommends("compact")) {
-            folded = true
-            DedupOps.compactDedupIndex(spark, ddDir, "doc_id")
-          }
+            DedupOps.paths(ddDir).segment(b), 256)
+          folded = IndexLayout.cycle(DedupOps.maintenancePlan(spark, ddDir, t),
+            (), () => DedupOps.compactDedupIndex(spark, ddDir, "doc_id"))
+            ._1.acted.nonEmpty
         }
         (w, folded)
       }
@@ -97,11 +95,9 @@ object FoldStallProbe {
         var folded = false
         val w = time {
           BqIndex.writeSegment(batch, "vec_id", "qv", bqDir, batchId = b)
-          val plan = BqIndex.maintenancePlan(spark, bqDir, t)
-          if (plan.recommends("fold") || plan.recommends("compact")) {
-            folded = true
-            BqIndex.compactIndex(spark, bqDir, "vec_id")
-          }
+          folded = IndexLayout.cycle(BqIndex.maintenancePlan(spark, bqDir, t),
+            (), () => BqIndex.compactIndex(spark, bqDir, "vec_id"))
+            ._1.acted.nonEmpty
         }
         (w, folded)
       }

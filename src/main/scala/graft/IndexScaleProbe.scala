@@ -155,9 +155,10 @@ object IndexScaleProbe {
           "vec_id", "qv", qvec, shortlist = 50, topK = 10,
           excludeId = Some(0L)).count()
       }
-      graft.operators.IndexLayout.segmentDirsAt(spark, s"$bqDir/segments")
+      graft.operators.IndexLayout.liveParts(spark,
+          graft.operators.IndexLayout.Paths.nested(bqDir), "codes")._2
         .drop(1).foreach { p => // back to the single-segment steady state
-          val hp = new org.apache.hadoop.fs.Path(p)
+          val hp = new org.apache.hadoop.fs.Path(p).getParent
           hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .delete(hp, true)
         }

@@ -47,11 +47,13 @@ object SegProbe {
     }
     t("segment build UNPARTITIONED (segment path)") {
       graft.operators.DedupOps.writeDedupIndex(
-        one.repartition(32), "doc_id", "text", 3, s"$base/warm/segments/batch=0")
+        one.repartition(32), "doc_id", "text", 3,
+        graft.operators.DedupOps.paths(s"$base/warm").segment(0))
     }
     t("segment build UNPARTITIONED x2") {
       graft.operators.DedupOps.writeDedupIndex(
-        one.repartition(32), "doc_id", "text", 3, s"$base/warm/segments/batch=1")
+        one.repartition(32), "doc_id", "text", 3,
+        graft.operators.DedupOps.paths(s"$base/warm").segment(1))
     }
     val probeBatch = docs.filter(col("doc_id") % 10 === 0)
     t("check vs base only (warm2)") {
@@ -84,7 +86,7 @@ object SegProbe {
       (done until target).foreach { i =>
         graft.operators.DedupOps.writeDedupIndex(
           segDocs.filter(pmod(col("doc_id"), lit(32)) === i), "doc_id",
-          "text", 3, s"$sweep/segments/batch=$i")
+          "text", 3, graft.operators.DedupOps.paths(sweep).segment(i))
       }
       done = target
       checkMin(s"$target segments")

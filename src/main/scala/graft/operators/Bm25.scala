@@ -122,42 +122,17 @@ object Bm25 {
     * shape the one segment read ([[IndexLayout.readLive]]) requires.
     */
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
-                 path: String, nShards: Int = 64): Unit = {
-    // a fresh build replaces everything — a stale tombstone sidecar OR
-    // stale streaming segments from a previous index at this path must
-    // not filter into / union into the new one (readers unconditionally
-    // span $path/segments/batch=*); likewise any version manifests from
-    // a previous index's compactions (the rebuild writes the plain
-    // layout, which a stale manifest would shadow — a crash mid-rebuild
-    // is a broken BUILD, acceptable; the availability-critical swap is
-    // compaction, which stays versioned). A streaming-SEGMENT write
-    // skips the clears: a segment is an immutable mini-index that
-    // carries no lifecycle state of its own, so they would be guaranteed
-    // no-ops — and on an object store, 4+ wasted API calls per
-    // micro-batch. The clears are destructive swap-class mutations, so a
-    // base rebuild takes the single-maintainer LEASE: unleased, a rebuild
-    // racing a leased compaction deletes _CURRENT/_VERSIONED out from
-    // under it, and the compactor's flip then re-creates a manifest
-    // pointing at pre-rebuild data — exactly the stale-manifest
-    // shadowing the clears exist to prevent. Segment writes stay
-    // lease-free (the concurrent-safe path).
-    if (!IndexLayout.isSegmentPath(path))
-      IndexLayout.withLease(docs.sparkSession, path, "Bm25.writeIndex") {
-        IndexLayout.clearTombstones(docs.sparkSession, s"$path/tombstones")
-        IndexLayout.clearSegments(docs.sparkSession, path)
-        IndexLayout.clearVersions(docs.sparkSession, s"$path/postings")
-        IndexLayout.clearVersions(docs.sparkSession, s"$path/docs")
-        IndexLayout.clearVersions(docs.sparkSession, s"$path/stats")
-        writeIndexBody(docs, idCol, textCol, path, nShards, segment = false)
-      }
-    else {
-      // a replayed micro-batch may be rewriting a dir an offline fold
-      // already marked _FOLDED — the rewrite must come back LIVE or its
-      // rows beyond the fold's partial capture are silently lost
-      IndexLayout.clearFoldedMarker(docs.sparkSession, path)
-      writeIndexBody(docs, idCol, textCol, path, nShards, segment = true)
-    }
-  }
+                 path: String, nShards: Int = 64): Unit =
+    if (IndexLayout.isSegmentPath(path))
+      IndexLayout.writeSegment(docs.sparkSession, path)(
+        writeIndexBody(docs, idCol, textCol, _, nShards, segment = true))
+    else
+      IndexLayout.rebuild(docs.sparkSession, paths(path), "Bm25.writeIndex")(
+        writeIndexBody(docs, idCol, textCol, path, nShards, segment = false))
+
+  /** The lifecycle paths of a [[writeIndex]] layout rooted at `path`. */
+  private[graft] def paths(path: String): IndexLayout.Paths =
+    IndexLayout.Paths.nested(path, "postings", "docs", "stats")
 
   /** The build itself — everything in [[writeIndex]] after the lifecycle
     * clears; runs under the rebuild lease for base paths, bare for
@@ -277,33 +252,22 @@ object Bm25 {
                       t: IndexLayout.MaintenanceThresholds =
                         IndexLayout.MaintenanceThresholds())
       : IndexLayout.MaintenancePlan =
-    IndexLayout.maintenancePlan(spark, s"$path/postings", s"$path/segments",
-      s"$path/tombstones", path, t,
+    IndexLayout.maintenancePlan(spark, paths(path), t,
       tombstoneBatches = Some(tombstoneDirs(spark, path).size))
 
-  /** One cron-able maintenance cycle for a BM25 layout — the
-    * `IvfIndex.maintain` shape for a family with NO trained model (BM25
-    * has no drift rail: df/idf re-derive from the postings at query
-    * time), so the cycle is PLAN (segment/tombstone pressure,
-    * [[maintenancePlan]]) → leased ACT ([[compactIndex]] — one pass
-    * folds segments AND materializes tombstones). Acting skips
-    * (reported) under a live lease. With the vector families'
-    * `maintain`, every one of the five persisted layouts is a single
-    * scheduled call.
+  /** One cron-able maintenance cycle for a BM25 layout: PLAN
+    * ([[maintenancePlan]]) → [[IndexLayout.cycle]] → [[compactIndex]],
+    * which folds segments AND materializes tombstones in one pass. BM25
+    * has no trained model, so there is no audit and no retrain (df/idf
+    * re-derive from the postings at query time).
     */
   def maintain(spark: org.apache.spark.sql.SparkSession, path: String,
                idCol: String = "doc_id",
                t: IndexLayout.MaintenanceThresholds =
                  IndexLayout.MaintenanceThresholds())
-      : IndexLayout.MaintenanceOutcome = {
-    val plan = maintenancePlan(spark, path, t)
-    if (plan.actions.isEmpty || plan.lease.isDefined)
-      IndexLayout.MaintenanceOutcome(plan, Seq.empty)
-    else {
-      compactIndex(spark, path, idCol)
-      IndexLayout.MaintenanceOutcome(plan, Seq("compact"))
-    }
-  }
+      : IndexLayout.MaintenanceOutcome =
+    IndexLayout.cycle(maintenancePlan(spark, path, t), (),
+      () => compactIndex(spark, path, idCol))._1
 
   /** The tombstone batch directories the CURRENT stats row lists — the
     * reader-visible delete set (staged-but-uncommitted and
@@ -363,21 +327,19 @@ object Bm25 {
     */
   private def legacyTombFiles(spark: org.apache.spark.sql.SparkSession,
                               path: String): Seq[String] =
-    IndexLayout.tombstoneFiles(spark, s"$path/tombstones")
+    IndexLayout.tombstoneFiles(spark, paths(path).tombDir)
 
   /** Anti-join `df` against a tombstone id set (no-op for None). */
   private def dropIds(df: DataFrame, idCol: String,
                       ids: Option[DataFrame]): DataFrame =
     ids.fold(df)(t => df.join(t.toDF(idCol), Seq(idCol), "left_anti"))
 
-  /** Fold a new document batch INTO a [[writeIndex]] layout — the
-    * incremental lifecycle the IVF and dedup indexes already have
-    * (`IvfIndex.appendToIndex` / `DedupOps.appendToDedupIndex`): postings
+  /** Fold a new document batch INTO a [[writeIndex]] layout: postings
     * append under the SAME term-sharding, stats merge exactly. df/idf
     * need no maintenance — they are derived from the postings at query
     * time, so retrieval after an append is row-identical to an index
     * rebuilt from scratch over the union (pinned in Bm25Spec). Caller
-    * contract (as for the sibling appends): batch ids are new.
+    * contract: batch ids are new.
     *
     * The stats merge is EXACT, not approximate: n adds, sum_len adds
     * (both integral-valued doubles, exact ≤ 2^53), and the merged
@@ -389,8 +351,8 @@ object Bm25 {
     * directories next to it would be a mixed layout Spark can't read, so
     * that case overwrites the empty file with a fresh partitioned build.
     *
-    * Unlike the sibling appends (pure file adds), a BM25 append ends in
-    * a STATS VERSION SWAP — and the merged row carries the current
+    * Unlike the other layouts' appends (pure file adds), a BM25 append
+    * ends in a STATS VERSION SWAP — and the merged row carries the current
     * `tomb_dirs` forward, so an unleased append racing a removal's
     * commit would read the pre-removal row and swap back a stats version
     * with the removal's batch UNLISTED: the removed docs silently
@@ -450,18 +412,11 @@ object Bm25 {
               "writeIndex or compact first")
           "overwrite"
         }
-      // append into the RESOLVED directory: after a versioned compaction
-      // the live layout is $path/postings.v<n>, not the plain dir — and
-      // a compaction FLIP racing this append must fail loudly, not
-      // strand the rows in a retired version (IndexLayout's guard;
-      // segments are the concurrent-safe write path)
-      val target = IndexLayout.resolve(spark, s"$path/postings")
-      postings.write.mode(mode).partitionBy("shard").parquet(target)
-      IndexLayout.assertAppendVisible(spark, s"$path/postings", target)
+      IndexLayout.appendTo(spark, s"$path/postings")(
+        postings.write.mode(mode).partitionBy("shard").parquet(_))
     }
-    val docsTarget = IndexLayout.resolve(spark, s"$path/docs")
-    dl.write.mode("append").parquet(docsTarget)
-    IndexLayout.assertAppendVisible(spark, s"$path/docs", docsTarget)
+    IndexLayout.appendTo(spark, s"$path/docs")(
+      dl.write.mode("append").parquet(_))
     writeMergedStats(spark, path, delta, sign = 1.0)
     } finally dl.unpersist()
   }
@@ -587,7 +542,7 @@ object Bm25 {
   private[graft] def stageRemoval(spark: org.apache.spark.sql.SparkSession,
                                   ids: DataFrame, idCol: String,
                                   path: String): Option[DataFrame] = {
-    val (docsBase, docsSegs) = IndexLayout.liveParts(spark, path, "docs")
+    val (docsBase, docsSegs) = IndexLayout.liveParts(spark, paths(path), "docs")
     val old = readStatsRow(spark, IndexLayout.resolve(spark, s"$path/stats"))
     // a pre-sum_len (2-field) stats row cannot shift exactly — its token
     // total is unrecoverable (n·avgdl is already-rounded); loud, never a
@@ -615,7 +570,7 @@ object Bm25 {
       if (delta.getDouble(0) == 0.0) None
       else {
         val batchDir =
-          s"$path/tombstones/rm_${java.util.UUID.randomUUID()}"
+          s"${paths(path).tombDir}/rm_${java.util.UUID.randomUUID()}"
         removed.select(col(idCol)).write.mode("overwrite").parquet(batchDir)
         Some(mergedStatsDf(spark, old, delta, sign = -1.0,
           listed :+ batchDir))
@@ -665,9 +620,9 @@ object Bm25 {
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String, idCol: String = "doc_id",
                    reshardTo: Option[Int] = None): Unit =
-    IndexLayout.withLease(spark, path, "Bm25.compactIndex") {
-      compactIndexFolding(spark, path, idCol,
-        IndexLayout.segmentDirs(spark, path), reshardTo)
+    IndexLayout.leasedFold(spark, paths(path), "Bm25.compactIndex",
+        tombstones = false) {
+      (segs, _) => foldStatsListed(spark, path, idCol, segs, reshardTo)
     }
 
   /** Recompute the shard column at a new shard count (identity when
@@ -681,14 +636,23 @@ object Bm25 {
       case None => df
     }
 
-  /** [[compactIndex]] over an explicit segment snapshot — split out so
-    * the spec can replay the race where a segment arrives between the
-    * snapshot and the cleanup.
+  /** [[compactIndex]] over an explicit segment snapshot, unleased —
+    * split out so the spec can replay the race where a segment arrives
+    * between the snapshot and the retire. The delete set is not the
+    * shared tombstone snapshot but the stats-listed batches, swept by
+    * [[sweepTombstoneBatches]].
     */
   private[graft] def compactIndexFolding(
       spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, segs: Seq[String],
-      reshardTo: Option[Int] = None): Unit = {
+      reshardTo: Option[Int] = None): Unit =
+    IndexLayout.foldSnapshot(spark, paths(path), segs, tombstones = false) {
+      (segs, _) => foldStatsListed(spark, path, idCol, segs, reshardTo)
+    }
+
+  private def foldStatsListed(spark: org.apache.spark.sql.SparkSession,
+                              path: String, idCol: String, segs: Seq[String],
+                              reshardTo: Option[Int]): Unit = {
     // the tombstone snapshot is the CURRENT stats row's batch list (the
     // reader-visible delete set); under the maintenance lease no removal
     // can extend it mid-fold. The fold drops exactly these ids, the
@@ -724,10 +688,8 @@ object Bm25 {
       if (tombDirs.nonEmpty || statsRow.exists(isLegacyStats))
         swapStatsFromDocs(spark, path)
     } else {
-      def folded(sub: String): DataFrame = {
-        val (base, segParts) = IndexLayout.liveParts(spark, path, sub, Some(segs))
-        IndexLayout.foldLive(spark, base, segParts, idCol, tombDirs)
-      }
+      def folded(sub: String): DataFrame =
+        IndexLayout.foldLive(spark, paths(path), sub, segs, idCol, tombDirs)
       IndexLayout.writeSwap(spark, s"$path/postings",
         reshard(folded("postings"), reshardTo), Some("shard"))
       IndexLayout.writeSwap(spark, s"$path/docs", folded("docs"), None)
@@ -740,10 +702,6 @@ object Bm25 {
       // against a SERVING index.
       swapStatsFromDocs(spark, path)
     }
-    // retire on BOTH branches: delete what the previous fold marked
-    // (their one cycle of reader grace is up) and mark this fold's
-    // snapshot (empty on the segment-less branch)
-    IndexLayout.retireSegmentDirs(spark, s"$path/segments", segs)
     sweepTombstoneBatches(spark, path)
   }
 
@@ -794,7 +752,7 @@ object Bm25 {
     // unlisted, never-read orphan, bounded by the pre-migration delete
     // volume; any later removal or fold retires it.)
     val keepAllLoose = rows.exists(isLegacyStats)
-    val root = new org.apache.hadoop.fs.Path(s"$path/tombstones")
+    val root = new org.apache.hadoop.fs.Path(paths(path).tombDir)
     if (fs.exists(root)) {
       val entries = fs.listStatus(root).toSeq // one listing serves both
       entries
@@ -875,9 +833,10 @@ object Bm25 {
                   idCol: String, queries: Seq[(String, String)], k: Int,
                   k1: Double = 1.2, b: Double = 0.75,
                   nShards: Int = 64): DataFrame = {
-    val (statsBase, statsSegs) = IndexLayout.liveParts(spark, path, "stats")
+    val (statsBase, statsSegs) =
+      IndexLayout.liveParts(spark, paths(path), "stats")
     val statsRows = readStatsRows(spark, statsBase, statsSegs)
-    val (base, segs) = IndexLayout.liveParts(spark, path, "postings")
+    val (base, segs) = IndexLayout.liveParts(spark, paths(path), "postings")
     // a pre-list-format stats row additionally pulls the legacy loose
     // tombstone files (one listing, only for unmigrated indexes)
     val legacy =
@@ -1037,74 +996,38 @@ object Bm25 {
                             segPostings: Seq[String],
                             tombSources: Seq[String])
 
-  /** Acquire a [[Snapshot]] optimistically (a read must neither fail
-    * because an hours-long maintenance window holds the lease, nor make
-    * maintenance fail). ONE acquisition attempt per loop turn: pins
-    * taken by an attempt are released on every failure path INSIDE it,
-    * and the flip-detected retry releases both and returns None through
-    * plain control flow — the retry happens in the loop OUTSIDE the
-    * handlers, so a stale (already-released) token can never reach an
-    * outer catch. Consistency is validated, not locked: the base's
-    * effective version is re-read after everything else is pinned/listed
-    * — any fold/re-shard/retrain landing mid-snapshot flips the postings
-    * manifest (versions only grow — no ABA), both pins release and the
-    * attempt retries, bounded.
+  /** Acquire a [[Snapshot]] through [[IndexLayout.acquirePinned]]: pin
+    * postings, pin stats, list the live segments and the delete set from
+    * the pinned stats, then validate that the postings did not flip
+    * (retried, bounded).
     */
   def acquireSnapshot(spark: org.apache.spark.sql.SparkSession,
                       path: String): Snapshot = {
-    def attemptOnce(): Option[Snapshot] = {
-      val (base, baseTok) = IndexLayout.pinResolved(spark, s"$path/postings")
-      try {
-        val (pinnedStats, statsTok) =
-          IndexLayout.pinResolved(spark, s"$path/stats")
-        try {
-          val conf = spark.sparkContext.hadoopConfiguration
-          def lives(d: String): Boolean = {
-            val hp = new org.apache.hadoop.fs.Path(d)
-            hp.getFileSystem(conf).exists(hp)
-          }
-          val segRoots = IndexLayout.segmentDirs(spark, path)
-          val statsBase = Some(pinnedStats).filter(lives)
-          val statsSegs = segRoots.map(d => s"$d/stats").filter(lives)
-          val statsRows = readStatsRows(spark, statsBase, statsSegs)
-          val legacy =
-            if (statsRows.exists(isLegacyStats)) legacyTombFiles(spark, path)
-            else Seq.empty
-          val segs = segRoots.map(d => s"$d/postings").filter(lives)
-          if (IndexLayout.resolve(spark, s"$path/postings") != base) {
-            IndexLayout.unpin(spark, s"$path/stats", statsTok)
-            IndexLayout.unpin(spark, s"$path/postings", baseTok)
-            None
-          } else
-            Some(Snapshot(base, baseTok, statsTok, statsBase, statsSegs, segs,
-              statsRows.flatMap(tombDirsOf).distinct ++ legacy))
-        } catch {
-          case e: Throwable =>
-            IndexLayout.unpin(spark, s"$path/stats", statsTok); throw e
-        }
-      } catch {
-        case e: Throwable =>
-          IndexLayout.unpin(spark, s"$path/postings", baseTok); throw e
+    val p = paths(path)
+    val (pins, (statsBase, statsSegs, segs, tombSources)) =
+      IndexLayout.acquirePinned(spark, p, PinnedTables) { (pinned, segRoots) =>
+        val statsBase = Some(pinned(1)).filter(IndexLayout.exists(spark, _))
+        val statsSegs = IndexLayout.segmentParts(spark, p, "stats", segRoots)
+        val statsRows = readStatsRows(spark, statsBase, statsSegs)
+        val legacy =
+          if (statsRows.exists(isLegacyStats)) legacyTombFiles(spark, path)
+          else Seq.empty
+        (statsBase, statsSegs,
+          IndexLayout.segmentParts(spark, p, "postings", segRoots),
+          statsRows.flatMap(tombDirsOf).distinct ++ legacy)
       }
-    }
-    var snap: Option[Snapshot] = None
-    var attempt = 0
-    while (snap.isEmpty) {
-      require(attempt < 5,
-        s"$path/postings version keeps flipping mid-snapshot — " +
-          "pause the compaction schedule and retry")
-      snap = attemptOnce()
-      attempt += 1
-    }
-    snap.get
+    Snapshot(pins(0)._1, pins(0)._2, pins(1)._2, statsBase, statsSegs, segs,
+      tombSources)
   }
+
+  /** The tables a [[Snapshot]] pins: postings (the validated one), stats. */
+  private val PinnedTables = Seq("postings", "stats")
 
   /** Release a [[Snapshot]]'s pins (idempotent, token-scoped). */
   def releaseSnapshot(spark: org.apache.spark.sql.SparkSession,
-                      path: String, snap: Snapshot): Unit = {
-    IndexLayout.unpin(spark, s"$path/stats", snap.statsTok)
-    IndexLayout.unpin(spark, s"$path/postings", snap.baseTok)
-  }
+                      path: String, snap: Snapshot): Unit =
+    IndexLayout.releasePins(spark, paths(path), PinnedTables,
+      Seq(snap.baseTok, snap.statsTok))
 
   /** Exact retrieval-evaluation metrics for [[topK]]: per query, MRR,
     * recall@k and nDCG@k (binary gains) against deterministic boolean-AND

@@ -55,24 +55,16 @@ object BqIndex {
       .select(col(idCol),
         PortableAnn.bqCode(col(qvCol), model.n, model.sums).as("code"))
 
-  /** Fresh build: train the threshold model on `corpus`, write the code
-    * table and the model rows, clear any stale lifecycle state from a
-    * previous index at this path (the IvfIndex.writeIndex contract —
-    * readers unconditionally union segments, so leftovers would mix an
-    * old corpus into every search). Leased: the clears are destructive
-    * swap-class mutations.
+  /** Fresh build ([[IndexLayout.rebuild]]): train the threshold model on
+    * `corpus`, write the code table and the model rows.
     */
   def writeIndex(corpus: DataFrame, idCol: String, qvCol: String,
                  path: String): Model = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    IndexLayout.withLease(spark, path, "BqIndex.writeIndex") {
+    IndexLayout.rebuild(spark, paths(path), "BqIndex.writeIndex") {
       val (n, sums) = PortableAnn.bqTrain(corpus, qvCol)
       val model = Model(n, sums)
-      IndexLayout.clearTombstones(spark, s"$path/tombstones")
-      IndexLayout.clearSegments(spark, path)
-      IndexLayout.clearVersions(spark, s"$path/codes")
-      IndexLayout.clearVersions(spark, s"$path/model")
       encode(corpus, idCol, qvCol, model)
         .write.mode("overwrite").parquet(s"$path/codes")
       sums.indices.map(j => (j, sums(j), n))
@@ -82,6 +74,10 @@ object BqIndex {
       model
     }
   }
+
+  /** The lifecycle paths of a BQ layout rooted at `path`. */
+  private def paths(path: String): IndexLayout.Paths =
+    IndexLayout.Paths.nested(path, "codes", "model")
 
   /** The persisted threshold model (version-resolved). */
   def readModel(spark: SparkSession, path: String): Model =
@@ -116,17 +112,15 @@ object BqIndex {
                     path: String): Unit = {
     val spark = batch.sparkSession
     val model = readModel(spark, path)
-    val target = IndexLayout.resolve(spark, s"$path/codes")
-    encode(batch, idCol, qvCol, model)
-      .write.mode("append").parquet(target)
-    IndexLayout.assertAppendVisible(spark, s"$path/codes", target)
+    IndexLayout.appendTo(spark, s"$path/codes")(
+      encode(batch, idCol, qvCol, model).write.mode("append").parquet(_))
   }
 
   /** Tombstone vectors out of the index — O(batch) appended rows;
     * [[searchWithRerank]] anti-joins them, [[compactIndex]] materializes.
     */
   def removeFromIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    IndexLayout.appendTombstones(ids, idCol, s"$path/tombstones")
+    IndexLayout.appendTombstones(ids, idCol, paths(path).tombDir)
 
   /** Write a micro-batch as an immutable streaming segment
     * (`$path/segments/batch=<id>/codes`), encoded against the persisted
@@ -137,10 +131,9 @@ object BqIndex {
                    path: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val model = readModel(spark, path)
-    val seg = s"$path/segments/batch=$batchId"
-    IndexLayout.clearFoldedMarker(spark, seg)
-    encode(batch, idCol, qvCol, model)
-      .write.mode("overwrite").parquet(s"$seg/codes")
+    IndexLayout.writeSegment(spark, paths(path).segment(batchId))(seg =>
+      encode(batch, idCol, qvCol, model)
+        .write.mode("overwrite").parquet(s"$seg/codes"))
   }
 
   /** Segment-merge: fold streaming segments into the base code table
@@ -150,16 +143,11 @@ object BqIndex {
     */
   def compactIndex(spark: SparkSession, path: String,
                    idCol: String = "vec_id"): Unit =
-    IndexLayout.withLease(spark, path, "BqIndex.compactIndex") {
-      val segs = IndexLayout.segmentDirs(spark, path)
-      val tombFiles =
-        IndexLayout.liveTombstoneFiles(spark, s"$path/tombstones")
-      val (base, segParts) =
-        IndexLayout.liveParts(spark, path, "codes", Some(segs))
-      IndexLayout.writeSwap(spark, s"$path/codes",
-        IndexLayout.foldLive(spark, base, segParts, idCol, tombFiles), None)
-      IndexLayout.retireSegmentDirs(spark, s"$path/segments", segs)
-      IndexLayout.retireTombstoneFiles(spark, s"$path/tombstones", tombFiles)
+    IndexLayout.leasedFold(spark, paths(path), "BqIndex.compactIndex") {
+      (segs, tombFiles) =>
+        IndexLayout.writeSwap(spark, s"$path/codes",
+          IndexLayout.foldLive(spark, paths(path), "codes", segs, idCol,
+            tombFiles), None)
     }
 
   /** The live code table: version-resolved base + live streaming
@@ -194,10 +182,11 @@ object BqIndex {
     */
   def readCodes(spark: SparkSession, path: String,
                 idCol: String): DataFrame = {
-    val (baseOpt, segParts) = IndexLayout.liveParts(spark, path, "codes")
+    val (baseOpt, segParts) =
+      IndexLayout.liveParts(spark, paths(path), "codes")
     IndexLayout.dropTombstoned(
       mergedCodes(spark, baseOpt, segParts, idCol),
-      idCol, s"$path/tombstones")
+      idCol, paths(path).tombDir)
   }
 
   /** [[readCodes]]'s guarded merge over an EXPLICIT base/segment split —
@@ -216,8 +205,7 @@ object BqIndex {
     }
   }
 
-  /** One pinned, internally-validated read snapshot of a BQ layout —
-    * the `Bm25.Snapshot` shape for the fifth index family: the
+  /** One pinned, internally-validated read snapshot of a BQ layout: the
     * resolved+pinned code-table base, the pinned MODEL layout (a rebuild
     * swaps both; pinning them as a validated pair means a search can
     * never score pre-rebuild codes against a post-rebuild model), the
@@ -228,59 +216,27 @@ object BqIndex {
                             model: String, modelTok: String,
                             segCodes: Seq[String], tombDir: String)
 
-  /** Acquire a [[Snapshot]] optimistically — pin codes, pin model, list
-    * segments, then re-read the codes' effective version: a rebuild
-    * landing mid-snapshot flips it (versions only grow — no ABA), both
-    * pins release and the attempt retries, bounded. Same discipline as
-    * `Bm25.acquireSnapshot`; reads never take the maintenance lease.
+  /** Acquire a [[Snapshot]] through [[IndexLayout.acquirePinned]]: pin
+    * codes, pin model, list segments, then validate that the codes did
+    * not flip (retried, bounded). Reads never take the maintenance
+    * lease.
     */
   def acquireSnapshot(spark: SparkSession, path: String): Snapshot = {
-    def attemptOnce(): Option[Snapshot] = {
-      val (codes, codesTok) = IndexLayout.pinResolved(spark, s"$path/codes")
-      try {
-        val (model, modelTok) = IndexLayout.pinResolved(spark, s"$path/model")
-        try {
-          val conf = spark.sparkContext.hadoopConfiguration
-          val segs = IndexLayout.segmentDirs(spark, path)
-            .map(d => s"$d/codes")
-            .filter { d =>
-              val hp = new org.apache.hadoop.fs.Path(d)
-              hp.getFileSystem(conf).exists(hp)
-            }
-          if (IndexLayout.resolve(spark, s"$path/codes") != codes) {
-            IndexLayout.unpin(spark, s"$path/model", modelTok)
-            IndexLayout.unpin(spark, s"$path/codes", codesTok)
-            None
-          } else
-            Some(Snapshot(codes, codesTok, model, modelTok, segs,
-              s"$path/tombstones"))
-        } catch {
-          case e: Throwable =>
-            IndexLayout.unpin(spark, s"$path/model", modelTok); throw e
-        }
-      } catch {
-        case e: Throwable =>
-          IndexLayout.unpin(spark, s"$path/codes", codesTok); throw e
-      }
+    val p = paths(path)
+    val (pins, segs) = IndexLayout.acquirePinned(spark, p, PinnedTables) {
+      (_, segDirs) => IndexLayout.segmentParts(spark, p, "codes", segDirs)
     }
-    var snap: Option[Snapshot] = None
-    var attempt = 0
-    while (snap.isEmpty) {
-      require(attempt < 5,
-        s"$path/codes version keeps flipping mid-snapshot — " +
-          "pause the compaction schedule and retry")
-      snap = attemptOnce()
-      attempt += 1
-    }
-    snap.get
+    Snapshot(pins(0)._1, pins(0)._2, pins(1)._1, pins(1)._2, segs, p.tombDir)
   }
+
+  /** The tables a [[Snapshot]] pins: codes (the validated one), model. */
+  private val PinnedTables = Seq("codes", "model")
 
   /** Release a [[Snapshot]]'s pins (idempotent, token-scoped). */
   def releaseSnapshot(spark: SparkSession, path: String,
-                      snap: Snapshot): Unit = {
-    IndexLayout.unpin(spark, s"$path/model", snap.modelTok)
-    IndexLayout.unpin(spark, s"$path/codes", snap.codesTok)
-  }
+                      snap: Snapshot): Unit =
+    IndexLayout.releasePins(spark, paths(path), PinnedTables,
+      Seq(snap.codesTok, snap.modelTok))
 
   /** Hamming-shortlist + exact-rerank over the PERSISTED code table:
     * the pre-rank scans (id, code) rows only — one xor+popcount per
@@ -432,8 +388,8 @@ object BqIndex {
                         IndexLayout.MaintenanceThresholds(),
                       bitFlipBps: Option[Long] = None)
       : IndexLayout.MaintenancePlan =
-    IndexLayout.maintenancePlan(spark, s"$path/codes", s"$path/segments",
-      s"$path/tombstones", path, t, bitFlipBps = bitFlipBps)
+    IndexLayout.maintenancePlan(spark, paths(path), t,
+      bitFlipBps = bitFlipBps)
 
   /** The q241 threshold-drift measurement packaged RUNNABLE: the
     * fraction of code bits (basis points) that would flip if the
@@ -464,15 +420,13 @@ object BqIndex {
     if (n == 0L) 0L else r.getLong(0) * 10000L / (n * persisted.dim)
   }
 
-  /** One cron-able maintenance cycle for a BQ layout — AUDIT (the q241
+  /** One cron-able maintenance cycle for a BQ layout: AUDIT (the q241
     * bit-flip measurement, [[maintenanceAudit]]) → PLAN
-    * ([[maintenancePlan]]'s `bitFlipBps` gate) → ACT: a fired retrain
-    * is a REBUILD ([[writeIndex]] over `corpus`, the caller's live
-    * vector table — the rerank's source of truth; it clears segments,
-    * tombstones and versions in its leased swap), fold/compact is
-    * [[compactIndex]]. Acting skips (reported) under a live lease.
-    * The persisted model changes on rebuild — searchers re-read it via
-    * [[readModel]], so nothing is returned beyond the outcome.
+    * ([[maintenancePlan]]'s `bitFlipBps` gate) → [[IndexLayout.cycle]],
+    * where a fired retrain is a REBUILD ([[writeIndex]] over `corpus`,
+    * the caller's live vector table — the rerank's source of truth) and
+    * fold/compact is [[compactIndex]]. Searchers re-read the rebuilt
+    * model via [[readModel]], so nothing is returned beyond the outcome.
     */
   def maintain(spark: SparkSession, path: String, corpus: DataFrame,
                idCol: String, qvCol: String,
@@ -480,23 +434,16 @@ object BqIndex {
                  IndexLayout.MaintenanceThresholds())
       : IndexLayout.MaintenanceOutcome = {
     val bps = maintenanceAudit(spark, path, corpus, qvCol)
-    val plan = maintenancePlan(spark, path, t, bitFlipBps = Some(bps))
-    if (plan.actions.isEmpty || plan.lease.isDefined)
-      IndexLayout.MaintenanceOutcome(plan, Seq.empty)
-    else if (plan.recommends("retrain")) {
-      writeIndex(corpus, idCol, qvCol, path)
-      IndexLayout.MaintenanceOutcome(plan, Seq("retrain"))
-    } else {
-      compactIndex(spark, path, idCol)
-      IndexLayout.MaintenanceOutcome(plan, Seq("compact"))
-    }
+    IndexLayout.cycle(maintenancePlan(spark, path, t, bitFlipBps = Some(bps)),
+      (), () => compactIndex(spark, path, idCol),
+      Some(() => { writeIndex(corpus, idCol, qvCol, path); () }))._1
   }
 
   /** Byte sizes (code table, one segment-inclusive sweep) — the scale
     * probe's evidence that the pre-rank reads ≪ vector bytes.
     */
   def codeTableBytes(spark: SparkSession, path: String): Long = {
-    val (base, segs) = IndexLayout.liveParts(spark, path, "codes")
+    val (base, segs) = IndexLayout.liveParts(spark, paths(path), "codes")
     (base ++ segs).map(IndexLayout.parquetBytes(spark, _)).sum
   }
 }

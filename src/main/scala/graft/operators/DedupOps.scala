@@ -504,52 +504,35 @@ object DedupOps {
   def writeDedupIndex(corpusDf: DataFrame, idCol: String, textCol: String,
                       n: Int, path: String,
                       nShards: Int = DefaultShingleShards): Unit = {
-    // a fresh build replaces everything — a stale tombstone sidecar OR
-    // stale streaming segments from a previous index at this path must
-    // not filter into / union into the new one (readers unconditionally
-    // span $path/segments/batch=*), any version manifests from a
-    // previous index's compactions (the rebuild writes the plain layout,
-    // which a stale manifest would shadow), and the previous shard-count
-    // marker (a rebuild crashing before it writes its own must not leave
-    // readers pruning with the old modulus). A streaming-SEGMENT write
-    // (target $path/segments/batch=<id>, written unpartitioned — see
-    // Bm25.writeIndex) skips the clears — a segment carries no lifecycle
-    // state of its own, so they would be guaranteed no-ops, and on an
-    // object store 5+ wasted API calls per micro-batch. Base rebuilds
-    // take the single-maintainer LEASE for the same reason as
-    // Bm25.writeIndex: the clears are destructive swap-class mutations
-    // that would corrupt a leased compaction running concurrently (its
-    // flip re-creates a stale manifest over the fresh plain build).
-    if (!IndexLayout.isSegmentPath(path))
-      IndexLayout.withLease(corpusDf.sparkSession, path,
-        "DedupOps.writeDedupIndex") {
-        IndexLayout.clearTombstones(corpusDf.sparkSession, s"$path/tombstones")
-        IndexLayout.clearSegments(corpusDf.sparkSession, path)
-        IndexLayout.clearVersions(corpusDf.sparkSession, s"$path/shingles")
-        IndexLayout.clearVersions(corpusDf.sparkSession, s"$path/fingerprints")
-        IndexLayout.clearShardCountMarker(corpusDf.sparkSession, path)
+    val spark = corpusDf.sparkSession
+    if (IndexLayout.isSegmentPath(path))
+      // a segment's shard column must share the BASE's modulus — derive
+      // it from the base marker (the passed count is just the fallback
+      // for pre-marker layouts)
+      IndexLayout.writeSegment(spark, path)(writeDedupIndexBody(corpusDf,
+        idCol, textCol, n, _, effectiveShards(spark,
+          IndexLayout.Paths.rootOf(path), nShards), segment = true))
+    else
+      IndexLayout.rebuild(spark, paths(path), "DedupOps.writeDedupIndex") {
+        // the previous shard-count marker goes with the other lifecycle
+        // state: a rebuild crashing before it writes its own must not
+        // leave readers pruning with the old modulus
+        IndexLayout.clearShardCountMarker(spark, path)
         writeDedupIndexBody(corpusDf, idCol, textCol, n, path, nShards,
           segment = false)
         // persist the build's shard modulus so readers/appenders derive
         // it from the LAYOUT, not from a defaulted parameter — an index
         // written under one DefaultShingleShards must stay correctly
         // pruned when the default changes across versions
-        IndexLayout.writeShardCountMarker(corpusDf.sparkSession, path,
-          nShards)
+        IndexLayout.writeShardCountMarker(spark, path, nShards)
       }
-    else {
-      // replay over a dir an offline fold marked _FOLDED must come back
-      // LIVE (see Bm25.writeIndex / IndexLayout.clearFoldedMarker)
-      IndexLayout.clearFoldedMarker(corpusDf.sparkSession, path)
-      // a segment's shard column must share the BASE's modulus — derive
-      // it from the base marker (the passed count is just the fallback
-      // for pre-marker layouts)
-      val root = path.stripSuffix("/")
-        .replaceFirst("/segments/batch=[^/]+$", "")
-      writeDedupIndexBody(corpusDf, idCol, textCol, n, path,
-        effectiveShards(corpusDf.sparkSession, root, nShards), segment = true)
-    }
   }
+
+  /** The lifecycle paths of a [[writeDedupIndex]] layout rooted at
+    * `path`.
+    */
+  private[graft] def paths(path: String): IndexLayout.Paths =
+    IndexLayout.Paths.nested(path, "shingles", "fingerprints")
 
   /** The layout's persisted shard count when the index recorded one
     * (every [[writeDedupIndex]] since the marker shipped), else the
@@ -676,28 +659,16 @@ object DedupOps {
               "writeDedupIndex or compact first")
           "overwrite"
         }
-      // append into the RESOLVED directory: after a versioned compaction
-      // the live layout is $path/shingles.v<n>, not the plain dir — and
-      // a compaction flip racing this append fails loudly instead of
-      // stranding rows in a retired version (segments are the
-      // concurrent-safe write path)
-      val target = IndexLayout.resolve(batch.sparkSession, s"$path/shingles")
-      dedupIndexPostings(batch, idCol, textCol, n, effShards)
-        .write.mode(mode).partitionBy("shard")
-        .parquet(target)
-      IndexLayout.assertAppendVisible(batch.sparkSession,
-        s"$path/shingles", target)
+      IndexLayout.appendTo(batch.sparkSession, s"$path/shingles")(
+        dedupIndexPostings(batch, idCol, textCol, n, effShards)
+          .write.mode(mode).partitionBy("shard").parquet(_))
     }
-    val fpTarget =
-      IndexLayout.resolve(batch.sparkSession, s"$path/fingerprints")
-    batch
-      .select(col(idCol),
-        graft.functions.TextFns.fingerprint(col(textCol)).as("__fp"))
-      .distinct()
-      .write.mode("append")
-      .parquet(fpTarget)
-    IndexLayout.assertAppendVisible(batch.sparkSession,
-      s"$path/fingerprints", fpTarget)
+    IndexLayout.appendTo(batch.sparkSession, s"$path/fingerprints")(
+      batch
+        .select(col(idCol),
+          graft.functions.TextFns.fingerprint(col(textCol)).as("__fp"))
+        .distinct()
+        .write.mode("append").parquet(_))
   }
 
   /** Tombstone documents OUT of the dedup index — O(batch) appended
@@ -709,7 +680,7 @@ object DedupOps {
     */
   def removeFromDedupIndex(ids: DataFrame, idCol: String,
                            path: String): Unit =
-    IndexLayout.appendTombstones(ids, idCol, s"$path/tombstones")
+    IndexLayout.appendTombstones(ids, idCol, paths(path).tombDir)
 
   /** Threshold-gated maintenance recommendations for a
     * [[writeDedupIndex]] layout ([[IndexLayout.maintenancePlan]]) —
@@ -719,29 +690,19 @@ object DedupOps {
                       t: IndexLayout.MaintenanceThresholds =
                         IndexLayout.MaintenanceThresholds())
       : IndexLayout.MaintenancePlan =
-    IndexLayout.maintenancePlan(spark, s"$path/shingles", s"$path/segments",
-      s"$path/tombstones", path, t)
+    IndexLayout.maintenancePlan(spark, paths(path), t)
 
-  /** One cron-able maintenance cycle for a dedup layout — the
-    * `Bm25.maintain` shape (no trained model, no drift rail): PLAN
-    * (segment/tombstone pressure, [[maintenancePlan]]) → leased ACT
-    * ([[compactDedupIndex]]). Acting skips (reported) under a live
-    * lease. Completes the one-call `maintain` family across all five
-    * persisted layouts.
+  /** One cron-able maintenance cycle for a dedup layout: PLAN
+    * ([[maintenancePlan]]) → [[IndexLayout.cycle]] →
+    * [[compactDedupIndex]]. No trained model, so no audit and no retrain.
     */
   def maintain(spark: org.apache.spark.sql.SparkSession, path: String,
                idCol: String = "doc_id",
                t: IndexLayout.MaintenanceThresholds =
                  IndexLayout.MaintenanceThresholds())
-      : IndexLayout.MaintenanceOutcome = {
-    val plan = maintenancePlan(spark, path, t)
-    if (plan.actions.isEmpty || plan.lease.isDefined)
-      IndexLayout.MaintenanceOutcome(plan, Seq.empty)
-    else {
-      compactDedupIndex(spark, path, idCol)
-      IndexLayout.MaintenanceOutcome(plan, Seq("compact"))
-    }
-  }
+      : IndexLayout.MaintenanceOutcome =
+    IndexLayout.cycle(maintenancePlan(spark, path, t), (),
+      () => compactDedupIndex(spark, path, idCol))._1
 
   /** Segment-merge for the dedup index: rewrite the shingle postings
     * clustered by shard with tombstoned docs dropped (append small files
@@ -759,13 +720,8 @@ object DedupOps {
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, idCol: String = "doc_id",
                         reshardTo: Option[Int] = None): Unit =
-    // swap-class maintenance: two concurrent compactions double-flip
-    // versions and clear each other's segment/tombstone snapshots —
-    // serialized by the single-maintainer lease (loud, not silent)
-    IndexLayout.withLease(spark, path, "DedupOps.compactDedupIndex") {
-      compactDedupIndexFolding(spark, path, idCol,
-        IndexLayout.segmentDirs(spark, path), reshardTo)
-    }
+    IndexLayout.leasedFold(spark, paths(path), "DedupOps.compactDedupIndex")(
+      foldShingles(spark, path, idCol, reshardTo))
 
   /** Recompute the shard column at a new shard count (identity when
     * `reshardTo` is empty) — the re-bucketing move for a corpus that
@@ -784,20 +740,23 @@ object DedupOps {
       case None => df
     }
 
-  /** [[compactDedupIndex]] over an explicit segment snapshot — the fold
-    * reads exactly this set and the cleanup deletes exactly this set, so
-    * a segment landing mid-compaction survives readable (split out so
-    * the spec can replay that race).
+  /** [[compactDedupIndex]] over an explicit segment snapshot, unleased
+    * (split out so the spec can replay a segment landing mid-fold).
     */
   private[graft] def compactDedupIndexFolding(
       spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, segs: Seq[String],
-      reshardTo: Option[Int] = None): Unit = {
-    // tombstones snapshotted at FILE granularity (like the segment
-    // list): fold exactly this LIVE set (previously-folded marked files
-    // are already materialized) and retire it below, so a removal
-    // landing mid-compaction keeps filtering reads and folds next time
-    val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path/tombstones")
+      reshardTo: Option[Int] = None): Unit =
+    IndexLayout.foldSnapshot(spark, paths(path), segs)(
+      foldShingles(spark, path, idCol, reshardTo))
+
+  /** The dedup fold over a (segments, tombstone files) snapshot: both
+    * tables rewritten, tombstoned ids dropped, segments merged in.
+    */
+  private def foldShingles(spark: org.apache.spark.sql.SparkSession,
+                           path: String, idCol: String,
+                           reshardTo: Option[Int])
+                          (segs: Seq[String], tombFiles: Seq[String]): Unit = {
     if (segs.isEmpty) {
       val sharded =
         IndexLayout.partitionedLayout(spark, s"$path/shingles", "shard")
@@ -813,25 +772,15 @@ object DedupOps {
         df => IndexLayout.dropTombstonedFiles(df, idCol, tombFiles)
           .select(col(idCol), col("__fp")))
     } else {
-      val (shBase, shSegs) =
-        IndexLayout.liveParts(spark, path, "shingles", Some(segs))
       IndexLayout.writeSwap(spark, s"$path/shingles",
-        reshardShingles(
-          IndexLayout.foldLive(spark, shBase, shSegs, idCol, tombFiles),
-          reshardTo), Some("shard"))
+        reshardShingles(IndexLayout.foldLive(spark, paths(path),
+          "shingles", segs, idCol, tombFiles), reshardTo), Some("shard"))
       // per-part projection BEFORE the union: ragged schemas (an interim
       // fpshard column in the base) would fail unionByName
-      val (fpBase, fpSegs) =
-        IndexLayout.liveParts(spark, path, "fingerprints", Some(segs))
       IndexLayout.writeSwap(spark, s"$path/fingerprints",
-        IndexLayout.foldLive(spark, fpBase, fpSegs, idCol, tombFiles,
-          _.select(col(idCol), col("__fp"))), None)
+        IndexLayout.foldLive(spark, paths(path), "fingerprints", segs,
+          idCol, tombFiles, _.select(col(idCol), col("__fp"))), None)
     }
-    // retire on BOTH branches: delete what the previous fold marked,
-    // mark this fold's snapshot (empty on the segment-less branch when
-    // nothing was removed)
-    IndexLayout.retireTombstoneFiles(spark, s"$path/tombstones", tombFiles)
-    IndexLayout.retireSegmentDirs(spark, s"$path/segments", segs)
     // a re-sharding compaction changes the layout's modulus — record it
     reshardTo.foreach(n =>
       IndexLayout.writeShardCountMarker(spark, path, n))
@@ -859,7 +808,8 @@ object DedupOps {
     val shards = shNew.select(graft.functions.ShardExpr
         .javaHashMod(col("shingle"), nShards).as("shard"))
       .distinct().collect().map(_.getInt(0))
-    val (base, segParts) = IndexLayout.liveParts(spark, path, "shingles")
+    val (base, segParts) =
+      IndexLayout.liveParts(spark, paths(path), "shingles")
     val (b, segs) = IndexLayout.readLive(spark, base, segParts)
     (b ++ segs)
       .map(_.filter(col("shard").isin(shards.map(Integer.valueOf): _*)))
@@ -903,11 +853,11 @@ object DedupOps {
     // per-part projection before the union — an interim round-11 base
     // may still carry the retired fpshard column
     val (fpBase, fpSegParts) =
-      IndexLayout.liveParts(spark, path, "fingerprints")
+      IndexLayout.liveParts(spark, paths(path), "fingerprints")
     val (fpB, fpSegs) = IndexLayout.readLive(spark, fpBase, fpSegParts)
     val corpusFps = IndexLayout.dropTombstoned(
       (fpB ++ fpSegs).map(_.select(col(idCol), col("__fp")))
-        .reduce(_.unionByName(_)), idCol, s"$path/tombstones")
+        .reduce(_.unionByName(_)), idCol, paths(path).tombDir)
     // both regimes emit DISTINCT matched increment ids — without the
     // fallback's distinct, an increment containing duplicate ids would
     // multiply rows differently across regimes in the downstream
@@ -930,7 +880,7 @@ object DedupOps {
     val idx = IndexLayout.dropTombstoned(
       prunedShingleIndex(spark, path, shNew,
         effectiveShards(spark, path, nShards)), idCol,
-      s"$path/tombstones")
+      paths(path).tombDir)
     val sizesNew = shNew.groupBy(col(idCol)).agg(count(lit(1)).as("sz_a"))
     val near = shNew.select(col(idCol).as("id_a"), col("shingle"))
       .hint("shuffle_hash")

@@ -3,28 +3,33 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared maintenance plumbing for the persisted index layouts (BM25
-  * term-sharded postings, dedup shingle-sharded postings, IVF/IVF-PQ
-  * cell-partitioned vectors). The lifecycle is Lucene's segment model
-  * re-expressed on parquet partitions:
+/** The segment lifecycle shared by the five persisted index layouts:
+  * BM25 term-sharded postings, dedup shingle-sharded postings, IVF and
+  * IVF-PQ cell-partitioned vectors, and binary-quantized (BQ) codes. It
+  * is Lucene's segment model on parquet directories:
   *
-  *   - WRITE:   one clustered partitioned layout, O(shards) files;
-  *   - APPEND:  new files into the same partition dirs (no rewrite) —
-  *              each append adds ≥1 file per touched shard;
-  *   - REMOVE:  O(batch) tombstone rows — no shard is rewritten; reads
-  *              anti-join them. Dedup/IVF append loose sidecar files
-  *              (single-step, nothing else to keep consistent); BM25
-  *              stages a batch DIRECTORY listed by its versioned stats
-  *              row, so the delete set and the stats shift flip in one
-  *              swap (see Bm25.removeFromIndex);
-  *   - COMPACT: rewrite each partition clustered (small files from
-  *              appends merged) with tombstoned rows dropped, then clear
-  *              the tombstones — the segment merge that reclaims space.
+  *   - WRITE:   a leased [[rebuild]] clears every lifecycle state, then
+  *              writes one clustered layout, O(partitions) files;
+  *   - APPEND:  new files into the resolved table ([[appendTo]]);
+  *   - SEGMENT: each micro-batch is an immutable unpartitioned
+  *              `batch=<id>` directory ([[writeSegment]]), replayed by
+  *              per-batch overwrite; readers union base and segments
+  *              ([[readLive]]);
+  *   - REMOVE:  O(batch) tombstone ids, no partition rewritten; readers
+  *              anti-join them. BM25 lists its delete batches in its
+  *              versioned stats row instead of a loose sidecar, so the
+  *              delete set and the stats shift flip in one swap;
+  *   - FOLD:    a leased fold ([[leasedFold]]) snapshots the live
+  *              segments and tombstones, version-swaps the merged base
+  *              and retires exactly that snapshot with one fold of grace;
+  *   - MAINTAIN: [[cycle]] acts on a threshold-gated [[maintenancePlan]].
   *
-  * At 100 TB this is the only viable shape: deletes cannot rewrite a
-  * shingle-sharded corpus (a doc's postings touch ~every shard), and
-  * appends must not pay a read-modify-write of the accumulated index.
-  * Compaction is the offline operation that bounds read amplification.
+  * Every path comes from one [[Paths]] value, in one of two conventions:
+  * `nested` (`$root/<table>`, `$root/segments`, `$root/tombstones`;
+  * BM25, dedup, BQ) and `sibling` (the table is `$root` itself, with
+  * `$root.segments` and `$root.tombstones` beside it, because a subdir
+  * inside a cell-partitioned table would break partition discovery;
+  * IVF, IVF-PQ).
   */
 object IndexLayout {
 
@@ -657,12 +662,8 @@ object IndexLayout {
     anyData && !spark.read.parquet(r).isEmpty
   }
 
-  /** Append a distinct id batch to the layout's tombstone sidecar.
-    * `tombDir` is the sidecar directory itself: `$path/tombstones` for
-    * the multi-table layouts (BM25, dedup), the SIBLING
-    * `$path.tombstones` for IVF/IVF-PQ whose index path is itself the
-    * cell-partitioned directory (a subdir there would break partition
-    * discovery).
+  /** Append a distinct id batch to an index's tombstone sidecar
+    * ([[Paths.tombDir]]).
     */
   def appendTombstones(ids: DataFrame, idCol: String,
                        tombDir: String): Unit =
@@ -834,15 +835,6 @@ object IndexLayout {
   def isSegmentPath(path: String): Boolean =
     path.stripSuffix("/").matches(".*[/.]segments/batch=[^/]+")
 
-  /** The streaming-segment directories of a layout, sorted by batch id:
-    * `$path/segments/batch=<id>`, each an immutable mini-index written by
-    * a `foreachBatch` fold with per-batch overwrite (a retried batch
-    * replaces its OWN segment — exactly-once for replayable sources,
-    * the same convergence argument as the incremental-dedup sinks).
-    */
-  def segmentDirs(spark: SparkSession, path: String): Seq[String] =
-    segmentDirsAt(spark, s"$path/segments")
-
   /** Sibling marker-file suffix stamped next to a segment directory a
     * compaction has FOLDED into the base: `batch=<id>._FOLDED` under the
     * segment root. A sibling FILE, not a marker inside the dir, so one
@@ -877,29 +869,15 @@ object IndexLayout {
     }
   }
 
-  /** [[segmentDirs]] for an explicit segment root — the IVF family keeps
-    * segments in the SIBLING `$path.segments` (the index path is itself
-    * the cell-partitioned directory; a subdir inside it would break
-    * partition discovery — the `$path.tombstones` convention). Lists the
-    * LIVE segments only: a dir a previous fold marked `_FOLDED` is
-    * already in the base (reading it would double-count its stats row)
-    * and is awaiting retirement by the next fold.
+  /** The LIVE streaming-segment directories of an index, sorted by batch
+    * id: each an immutable mini-index written by a `foreachBatch` fold
+    * with per-batch overwrite (a retried batch replaces its OWN segment —
+    * exactly-once for replayable sources). A dir a previous fold marked
+    * `_FOLDED` is already in the base (reading it would double-count its
+    * stats row) and is awaiting retirement by the next fold.
     */
-  def segmentDirsAt(spark: SparkSession, segRoot: String): Seq[String] =
-    segmentListing(spark, segRoot)._1
-
-  /** Delete a layout's segment directories (after compaction folded them
-    * into the base).
-    */
-  def clearSegments(spark: SparkSession, path: String): Unit =
-    clearSegmentsAt(spark, s"$path/segments")
-
-  /** [[clearSegments]] for an explicit segment root. */
-  def clearSegmentsAt(spark: SparkSession, segRoot: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(segRoot)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-  }
+  def segmentDirs(spark: SparkSession, p: Paths): Seq[String] =
+    segmentListing(spark, p.segRoot)._1
 
   /** Delete EXACTLY the given segment directories — what a compaction
     * clears: the snapshot it folded, never the whole segment root. A
@@ -922,7 +900,7 @@ object IndexLayout {
     * (routine at 100 TB) would lose files under a running query. With
     * the marker, that reader's files survive until the NEXT fold, while
     * new readers skip the marked dirs (their rows — and their stats
-    * rows — are in the swapped base; [[segmentDirsAt]] lists live only).
+    * rows — are in the swapped base; [[segmentDirs]] lists live only).
     *
     * Crash semantics: a crash between the delete and the mark leaves
     * this fold's segments LIVE next to a base that already contains
@@ -968,19 +946,10 @@ object IndexLayout {
     }
   }
 
-  /** Drop a stale `_FOLDED` marker for one segment dir — called by every
-    * segment WRITER before its per-batch overwrite. Without it, a
-    * replayed micro-batch that rewrites a segment dir an offline fold
-    * already marked (the fold captured the crashed write's PARTIAL rows)
-    * would stay invisible and be deleted by the next fold — the rows
-    * beyond the partial capture silently lost. Clearing the marker makes
-    * the rewritten segment live again: reads double-scan vs the folded
-    * base (row-exact under the multi-layout distinct guard; stats
-    * over-count transiently, the documented crash window) and the next
-    * fold re-folds it — the same convergence the immediate-delete scheme
-    * had. One blind idempotent delete per micro-batch.
+  /** Drop a stale `_FOLDED` marker for one segment dir (see
+    * [[writeSegment]]). One blind idempotent delete per micro-batch.
     */
-  def clearFoldedMarker(spark: SparkSession, segDir: String): Unit = {
+  private def clearFoldedMarker(spark: SparkSession, segDir: String): Unit = {
     val dp = new org.apache.hadoop.fs.Path(segDir.stripSuffix("/"))
     val marker = new org.apache.hadoop.fs.Path(
       dp.getParent, dp.getName + FoldedSuffix)
@@ -1041,12 +1010,177 @@ object IndexLayout {
     }
   }
 
-  /** The `<sub>` table of a multi-table layout, split by origin: the
-    * version-resolved base `$path/<sub>` and each streaming segment's
-    * `<seg>/<sub>` that exists. `segs` is an explicit segment snapshot —
-    * what the compactors pass, so the set they fold is exactly the set
-    * they later clear (a segment arriving mid-compaction is neither);
-    * by default the live segments are listed now.
+  // ---------------------------------------------------------------------
+  // Segment lifecycle core. Each layout supplies its Paths, its encoder
+  // and its merge rule; the lease, clears, segment targets, append
+  // visibility, fold snapshot/retire, maintenance cycle and pinned
+  // snapshots are written once, here.
+  // ---------------------------------------------------------------------
+
+  /** Where one index's lifecycle state lives: the lease root, the
+    * segment root, the tombstone dir and the table dirs (`tables` are
+    * sub-table names, the first one the data table the maintenance plan
+    * counts files in). Two conventions, see the object scaladoc.
+    */
+  final case class Paths(root: String, segRoot: String, tombDir: String,
+                         nested: Boolean, tables: Seq[String]) {
+    /** The base dir of table `sub`: `$root/<sub>`, or `$root` itself in a
+      * sibling layout.
+      */
+    def table(sub: String): String = if (nested) s"$root/$sub" else root
+    def dataTable: String = tables.headOption.getOrElse("")
+    def tableDirs: Seq[String] = if (nested) tables.map(table) else Seq(root)
+    /** The `batch=<id>` target of one streaming segment. */
+    def segment(batchId: Long): String = s"$segRoot/batch=$batchId"
+  }
+
+  object Paths {
+    def nested(root: String, tables: String*): Paths =
+      Paths(root, s"$root/segments", s"$root/tombstones", nested = true,
+        tables)
+    def sibling(root: String): Paths =
+      Paths(root, s"$root.segments", s"$root.tombstones", nested = false,
+        Nil)
+    /** The index root a segment target ([[isSegmentPath]]) belongs to. */
+    def rootOf(segment: String): String =
+      segment.stripSuffix("/").replaceFirst("[/.]segments/batch=[^/]+$", "")
+  }
+
+  /** A fresh build: under the single-maintainer lease, clear the
+    * tombstones, the segments and every table's versions, then run
+    * `body`. A rebuild replaces the index wholesale: a stale tombstone
+    * sidecar or stale segments from a previous index at this path would
+    * filter into or union into the new one (readers always span the
+    * segment root), and a stale version manifest would shadow the plain
+    * layout the rebuild writes (a crash mid-rebuild is a broken BUILD;
+    * the availability-critical swap is compaction, which stays
+    * versioned). Leased because the clears are destructive swap-class
+    * mutations: a rebuild racing a compaction would delete `_CURRENT`
+    * under it, and the compactor's flip would re-create a manifest
+    * pointing at pre-rebuild data.
+    */
+  def rebuild[T](spark: SparkSession, p: Paths, op: String)(body: => T): T =
+    withLease(spark, p.root, op) {
+      clearTombstones(spark, p.tombDir)
+      clearSegmentDirs(spark, Seq(p.segRoot))
+      p.tableDirs.foreach(clearVersions(spark, _))
+      body
+    }
+
+  /** A streaming-segment write: drop the target's stale `_FOLDED` marker,
+    * then run `body` on the `batch=<id>` target. Without the clear, a
+    * replayed micro-batch rewriting a dir an offline fold already marked
+    * (the fold captured the crashed write's PARTIAL rows) would stay
+    * invisible and be deleted by the next fold, losing the rows beyond
+    * the partial capture. Segment writes take no lease and clear nothing
+    * else: a segment carries no lifecycle state of its own (they are the
+    * concurrent-safe write path).
+    */
+  def writeSegment[T](spark: SparkSession, target: String)
+                     (body: String => T): T = {
+    clearFoldedMarker(spark, target)
+    body(target)
+  }
+
+  /** A direct append into table dir `dir`: resolve the live version,
+    * let `write` append into it, then [[assertAppendVisible]] — a
+    * compaction flip in between fails loudly instead of stranding the
+    * rows in a retired version.
+    */
+  def appendTo(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
+    val target = resolve(spark, dir)
+    write(target)
+    assertAppendVisible(spark, dir, target)
+  }
+
+  /** The fold skeleton over an explicit segment snapshot `segs`: snapshot
+    * the live tombstone files, run `fold(segs, tombFiles)`, then retire
+    * exactly that snapshot ([[retireSegmentDirs]],
+    * [[retireTombstoneFiles]] — one fold of grace). A segment or a
+    * tombstone file landing mid-fold is outside the snapshot: neither
+    * folded nor retired, it keeps serving and the next fold takes it.
+    * `tombstones = false` for BM25, whose delete set is listed in its
+    * stats row and swept by its own fold.
+    */
+  def foldSnapshot[T](spark: SparkSession, p: Paths, segs: Seq[String],
+                      tombstones: Boolean = true)
+                     (fold: (Seq[String], Seq[String]) => T): T = {
+    val tombs =
+      if (tombstones) liveTombstoneFiles(spark, p.tombDir) else Seq.empty
+    val out = fold(segs, tombs)
+    retireSegmentDirs(spark, p.segRoot, segs)
+    if (tombstones) retireTombstoneFiles(spark, p.tombDir, tombs)
+    out
+  }
+
+  /** [[foldSnapshot]] under the maintenance lease over the segments live
+    * now — every compaction and retrain.
+    */
+  def leasedFold[T](spark: SparkSession, p: Paths, op: String,
+                    tombstones: Boolean = true)
+                   (fold: (Seq[String], Seq[String]) => T): T =
+    withLease(spark, p.root, op) {
+      foldSnapshot(spark, p, segmentDirs(spark, p), tombstones)(fold)
+    }
+
+  /** Acquire a pinned read snapshot over several tables of an index at
+    * once, optimistically (a read must neither fail because an hours-long
+    * maintenance window holds the lease, nor make maintenance fail): pin
+    * each of `tables`, list the live segments, run `list(pinned data
+    * dirs, segments)`, then re-read the FIRST table's effective version.
+    * A fold, re-shard or rebuild
+    * landing mid-snapshot flips it (versions only grow — no ABA): every
+    * pin is released and the attempt retries, at most five times.
+    * Consistency is validated, not locked. Pins taken by an attempt are
+    * released on every failure path inside it; the retry runs outside
+    * the handlers, so a released token never reaches an outer catch.
+    * Returns the (data dir, token) pins and the listing; release with
+    * [[releasePins]].
+    */
+  def acquirePinned[T](spark: SparkSession, p: Paths, tables: Seq[String])
+                      (list: (Seq[String], Seq[String]) => T)
+      : (Seq[(String, String)], T) = {
+    val dirs = tables.map(p.table)
+    def attemptOnce(): Option[(Seq[(String, String)], T)] = {
+      val pins = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      try {
+        dirs.foreach(d => pins += pinResolved(spark, d))
+        val listed = list(pins.map(_._1).toSeq, segmentDirs(spark, p))
+        if (resolve(spark, dirs.head) == pins.head._1) Some((pins.toSeq, listed))
+        else { releasePins(spark, p, tables, pins.map(_._2).toSeq); None }
+      } catch {
+        case e: Throwable =>
+          releasePins(spark, p, tables, pins.map(_._2).toSeq); throw e
+      }
+    }
+    var snap: Option[(Seq[(String, String)], T)] = None
+    var attempt = 0
+    while (snap.isEmpty) {
+      require(attempt < 5,
+        s"${dirs.head} version keeps flipping mid-snapshot — " +
+          "pause the compaction schedule and retry")
+      snap = attemptOnce()
+      attempt += 1
+    }
+    snap.get
+  }
+
+  /** Release [[acquirePinned]]'s pins, last pinned first (idempotent,
+    * token-scoped). `tokens` may be shorter than `tables` (a failed
+    * acquisition).
+    */
+  def releasePins(spark: SparkSession, p: Paths, tables: Seq[String],
+                  tokens: Seq[String]): Unit =
+    tables.zip(tokens).reverse.foreach { case (t, tok) =>
+      unpin(spark, p.table(t), tok)
+    }
+
+  /** Table `sub` of an index, split by origin: the version-resolved
+    * base [[Paths.table]] and each streaming segment's part
+    * ([[segmentParts]]). `segs` is an explicit segment snapshot — what
+    * the folds pass, so the set they fold is exactly the set they later
+    * retire (a segment arriving mid-fold is neither); by default the
+    * live segments are listed now.
     *
     * Only the base is version-resolved, and EXACTLY ONCE. Segments are
     * immutable plain per-batch overwrites that no compaction versions,
@@ -1055,21 +1189,33 @@ object IndexLayout {
     * regression). And classification IS the listing: a second resolve
     * to tell base from segment could race a compaction flip into
     * classifying the stale base as a segment, skipping the
-    * crash-duplicate guards. A missing base is None, unless no segment
-    * part exists either: then the base path stays, so reading an absent
-    * index fails with Spark's standard missing-path error.
+    * crash-duplicate guards. In a nested layout a missing base is None,
+    * unless no segment part exists either: then the base path stays, so
+    * reading an absent index fails with Spark's standard missing-path
+    * error. A sibling layout's base is its root, which its build always
+    * writes.
     */
-  def liveParts(spark: SparkSession, path: String, sub: String,
+  def liveParts(spark: SparkSession, p: Paths, sub: String,
                 segs: Option[Seq[String]] = None): (Option[String], Seq[String]) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def lives(d: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(d)
-      hp.getFileSystem(conf).exists(hp)
-    }
-    val base = resolve(spark, s"$path/$sub")
-    val segParts = segs.getOrElse(segmentDirs(spark, path))
-      .map(p => s"$p/$sub").filter(lives)
-    (Some(base).filter(b => segParts.isEmpty || lives(b)), segParts)
+    val base = resolve(spark, p.table(sub))
+    val parts = segmentParts(spark, p, sub, segs.getOrElse(segmentDirs(spark, p)))
+    if (!p.nested) (Some(base), parts)
+    else (Some(base).filter(b => parts.isEmpty || exists(spark, b)), parts)
+  }
+
+  /** Table `sub`'s part in each of the segment dirs `segs`: the segment
+    * dir itself in a sibling layout, its existing `<seg>/<sub>` in a
+    * nested one (a crashed segment write can leave a table missing).
+    */
+  def segmentParts(spark: SparkSession, p: Paths, sub: String,
+                   segs: Seq[String]): Seq[String] =
+    if (!p.nested) segs
+    else segs.map(d => s"$d/$sub").filter(exists(spark, _))
+
+  /** Whether `dir` exists (one filesystem probe). */
+  def exists(spark: SparkSession, dir: String): Boolean = {
+    val hp = new org.apache.hadoop.fs.Path(dir)
+    fsOf(spark, hp).exists(hp)
   }
 
   /** The one live read of a base+segments layout: (the base read, ONE
@@ -1099,19 +1245,29 @@ object IndexLayout {
     })
 
   /** The offline fold input shared by the compactions, retrains and
-    * audits: the [[readLive]] base ∪ segments (each read shaped by
-    * `project` first, for ragged legacy schemas), DISTINCT, minus the ids
-    * of an explicit tombstone snapshot ([[dropTombstonedFiles]]). The
-    * distinct is what makes a crashed fold converge: a segment left both
-    * folded and present collapses into the identical base rows.
+    * audits: table `sub`'s [[liveParts]] over the segment snapshot
+    * `segs`, read by [[readLive]] (each read shaped by `project` first,
+    * for ragged legacy schemas), DISTINCT, minus the ids of an explicit
+    * tombstone snapshot ([[dropTombstonedFiles]]). The distinct is what
+    * makes a crashed fold converge: a segment left both folded and
+    * present collapses into the identical base rows.
     */
-  def foldLive(spark: SparkSession, base: Option[String],
-               segParts: Seq[String], idCol: String, tombs: Seq[String],
+  def foldLive(spark: SparkSession, p: Paths, sub: String,
+               segs: Seq[String], idCol: String, tombs: Seq[String],
                project: DataFrame => DataFrame = identity): DataFrame = {
-    val (b, s) = readLive(spark, base, segParts)
+    val (base, parts) = liveParts(spark, p, sub, Some(segs))
+    val (b, s) = readLive(spark, base, parts)
     dropTombstonedFiles(
       (b ++ s).map(project).reduce(_.unionByName(_)).distinct(), idCol, tombs)
   }
+
+  /** The live rows of an index's data table — base ∪ live segments
+    * minus live tombstones, through [[foldLive]] — for the offline
+    * audits. Lease-free: a read, not a fold.
+    */
+  def liveRows(spark: SparkSession, p: Paths, idCol: String): DataFrame =
+    foldLive(spark, p, p.dataTable, segmentDirs(spark, p), idCol,
+      liveTombstoneFiles(spark, p.tombDir))
 
   /** Total on-disk bytes under `dirs` — a driver-side FS metadata read
     * (no Spark job), the cheap proxy the segment-id guards use to pick
@@ -1227,8 +1383,8 @@ object IndexLayout {
     def recommends(action: String): Boolean = actions.exists(_._1 == action)
   }
 
-  /** What one packaged audit→plan→act cycle (`IvfIndex.maintain`,
-    * `IvfPq.maintain`, `BqIndex.maintain`) measured, recommended, and
+  /** What one maintenance [[cycle]] — every layout's `maintain`, and the
+    * maintained streams' per-batch fold — measured, recommended, and
     * actually DID. `acted` ⊆ {"compact", "retrain"} — empty when the
     * plan recommended nothing, or when a live maintainer held the lease
     * (the cycle then reports instead of queuing behind it; a crashed
@@ -1241,32 +1397,26 @@ object IndexLayout {
       plan.actions.nonEmpty
   }
 
-  /** Threshold-gated maintenance recommendations for one index layout —
-    * generic over the four path conventions via explicit directories
-    * (each family wraps it: `Bm25.maintenancePlan`, `BqIndex.…`, etc.):
-    *
-    *   - `dataDir`   — the swappable data table (version-resolved for
-    *                   the file count);
-    *   - `segRoot`   — the streaming-segment root (live vs `_FOLDED`);
-    *   - `tombDir`   — the tombstone sidecar (live data files), OR pass
-    *                   `tombstoneBatches` for the BM25 convention whose
-    *                   delete batches are stats-listed directories;
-    *   - `leaseRoot` — where the family's `_LEASE` marker sits.
+  /** Threshold-gated maintenance recommendations for one index, from
+    * its [[Paths]]: the data table (version-resolved for the file count),
+    * the segment root (live vs `_FOLDED`), the tombstone dir (live data
+    * files — or pass `tombstoneBatches` for BM25, whose delete batches
+    * are stats-listed directories) and the lease root.
     *
     * `drift` is the q236 audit's (currentMeanD2, retrainedMeanD2) for
     * the vector layouts — the planner cannot (and should not) run the
     * audit itself from FS metadata, so retrain is recommended only when
     * the caller supplies a measurement.
     */
-  def maintenancePlan(spark: SparkSession, dataDir: String, segRoot: String,
-                      tombDir: String, leaseRoot: String,
-                      t: MaintenanceThresholds = MaintenanceThresholds(),
+  def maintenancePlan(spark: SparkSession, p: Paths,
+                      t: MaintenanceThresholds,
                       tombstoneBatches: Option[Int] = None,
                       drift: Option[(Long, Long)] = None,
                       bitFlipBps: Option[Long] = None): MaintenancePlan = {
-    val (liveSegs, folded) = segmentListing(spark, segRoot)
+    val (liveSegs, folded) = segmentListing(spark, p.segRoot)
     val tombs = tombstoneBatches
-      .getOrElse(liveTombstoneFiles(spark, tombDir).size)
+      .getOrElse(liveTombstoneFiles(spark, p.tombDir).size)
+    val dataDir = p.table(p.dataTable)
     val files = dataFileCount(spark, dataDir)
     val actions = Seq.newBuilder[(String, String)]
     if (liveSegs.size >= t.maxLiveSegments)
@@ -1297,9 +1447,26 @@ object IndexLayout {
             "drifted off the corpus geometry — rebuild (writeIndex)"))
     }
     MaintenancePlan(liveSegs.size, folded.size, tombs, files,
-      listLease(spark, leaseRoot), listPins(spark, dataDir).size,
+      listLease(spark, p.root), listPins(spark, dataDir).size,
       actions.result())
   }
+
+  /** One maintenance cycle over a computed plan: nothing to do, or a live
+    * maintainer holds the lease → report and skip (never queue behind
+    * it, never throw); `retrain` recommended and the layout supplies one
+    * → retrain (it folds segments and tombstones in the same pass, so a
+    * co-recommended compact is subsumed); otherwise → compact. Returns
+    * the outcome and the model to search with from here on — `retrain`'s
+    * result iff it acted, else `model`.
+    */
+  def cycle[M](plan: MaintenancePlan, model: M, compact: () => Unit,
+               retrain: Option[() => M] = None): (MaintenanceOutcome, M) =
+    if (plan.actions.isEmpty || plan.lease.isDefined)
+      (MaintenanceOutcome(plan, Seq.empty), model)
+    else retrain.filter(_ => plan.recommends("retrain")) match {
+      case Some(r) => (MaintenanceOutcome(plan, Seq("retrain")), r())
+      case None    => compact(); (MaintenanceOutcome(plan, Seq("compact")), model)
+    }
 
   /** Total parquet data-file bytes under `dir` (recursive; 0 when the
     * directory does not exist) — the probes' byte-accounting primitive.

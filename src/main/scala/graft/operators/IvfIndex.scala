@@ -181,18 +181,9 @@ object IvfIndex {
     * the layout, not just the join.
     */
   def writeIndex(corpus: DataFrame, idCol: String, embCol: String,
-                 model: Model, path: String): Unit = {
-    // fresh build: drop any stale tombstone sidecar AND stale streaming
-    // segments (sibling dirs — the index path itself is the
-    // cell-partitioned layout); readers unconditionally union
-    // $path.segments, so leftovers from a previous index would silently
-    // mix the old corpus into every search. Leased: the clears are
-    // destructive swap-class mutations that would corrupt a concurrent
-    // compaction (see Bm25.writeIndex)
-    IndexLayout.withLease(corpus.sparkSession, path, "IvfIndex.writeIndex") {
-      IndexLayout.clearTombstones(corpus.sparkSession, s"$path.tombstones")
-      IndexLayout.clearSegmentsAt(corpus.sparkSession, s"$path.segments")
-      IndexLayout.clearVersions(corpus.sparkSession, path)
+                 model: Model, path: String): Unit =
+    IndexLayout.rebuild(corpus.sparkSession, paths(path),
+        "IvfIndex.writeIndex") {
       assign(corpus, embCol, model)
         // cluster by cell: each write task owns whole cells, so the layout
         // is O(nlist) files instead of tasks x nlist. Explicit count:
@@ -200,7 +191,13 @@ object IvfIndex {
         .repartition(model.centroids.length, col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(path)
     }
-  }
+
+  /** The lifecycle paths of a [[writeIndex]] layout (also IvfPq's): the
+    * index path is the cell-partitioned table itself, so segments and
+    * tombstones sit beside it.
+    */
+  private[operators] def paths(path: String): IndexLayout.Paths =
+    IndexLayout.Paths.sibling(path)
 
   /** Append new vectors to a [[writeIndex]] layout: assigned to the
     * EXISTING centroids (the standard IVF maintenance move — cells drift
@@ -208,19 +205,12 @@ object IvfIndex {
     * without rewriting existing files.
     */
   def appendToIndex(batch: DataFrame, idCol: String, embCol: String,
-                    model: Model, path: String): Unit = {
-    // resolved: after a versioned compaction the live layout is
-    // $path.v<n>, not the plain dir — and a compaction flip racing this
-    // append fails loudly instead of stranding rows in a retired
-    // version (segments are the concurrent-safe write path)
-    val target = IndexLayout.resolve(batch.sparkSession, path)
-    assign(batch, embCol, model)
-      // explicit count: exempt from AQE coalescing (see Bm25.writeIndexBody)
-      .repartition(model.centroids.length, col("cell"))
-      .write.mode("append").partitionBy("cell")
-      .parquet(target)
-    IndexLayout.assertAppendVisible(batch.sparkSession, path, target)
-  }
+                    model: Model, path: String): Unit =
+    IndexLayout.appendTo(batch.sparkSession, path)(
+      assign(batch, embCol, model)
+        // explicit count: exempt from AQE coalescing (see Bm25.writeIndexBody)
+        .repartition(model.centroids.length, col("cell"))
+        .write.mode("append").partitionBy("cell").parquet(_))
 
   /** Tombstone vectors OUT of a [[writeIndex]] layout — O(batch)
     * appended rows in the SIBLING `$path.tombstones` sidecar (the index
@@ -230,7 +220,7 @@ object IvfIndex {
     * are never rewritten inline, centroids drift only at retrain.
     */
   def removeFromIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    IndexLayout.appendTombstones(ids, idCol, s"$path.tombstones")
+    IndexLayout.appendTombstones(ids, idCol, paths(path).tombDir)
 
   /** Write a micro-batch as an immutable streaming SEGMENT of a
     * [[writeIndex]] layout: assigned to the EXISTING centroids, written
@@ -243,14 +233,9 @@ object IvfIndex {
     * cell-pruned partitioned form.
     */
   def writeSegment(batch: DataFrame, idCol: String, embCol: String,
-                   model: Model, path: String, batchId: Long): Unit = {
-    val seg = s"$path.segments/batch=$batchId"
-    // replay over a dir an offline fold marked _FOLDED must come back
-    // LIVE (see IndexLayout.clearFoldedMarker)
-    IndexLayout.clearFoldedMarker(batch.sparkSession, seg)
-    assign(batch, embCol, model)
-      .write.mode("overwrite").parquet(seg)
-  }
+                   model: Model, path: String, batchId: Long): Unit =
+    IndexLayout.writeSegment(batch.sparkSession, paths(path).segment(batchId))(
+      assign(batch, embCol, model).write.mode("overwrite").parquet(_))
 
   /** Segment-merge for the IVF layout: rewrite each cell clustered
     * (append small files merged, streaming segments folded in) with
@@ -261,42 +246,31 @@ object IvfIndex {
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                    idCol: String = "vec_id"): Unit =
-    // swap-class maintenance: serialized by the single-maintainer lease
-    // (two concurrent compactions double-flip versions and clear each
-    // other's segment/tombstone snapshots)
-    IndexLayout.withLease(spark, path, "IvfIndex.compactIndex") {
-      compactIndexFolding(spark, path, idCol,
-        IndexLayout.segmentDirsAt(spark, s"$path.segments"))
-    }
+    IndexLayout.leasedFold(spark, paths(path), "IvfIndex.compactIndex")(
+      foldCells(spark, path, idCol))
 
-  /** [[compactIndex]] over an explicit segment snapshot — the fold reads
-    * exactly this set and the cleanup deletes exactly this set, so a
-    * segment landing mid-compaction survives readable (split out so the
-    * spec can replay that race).
+  /** [[compactIndex]] over an explicit segment snapshot, unleased (split
+    * out so the spec can replay a segment landing mid-fold).
     */
   private[graft] def compactIndexFolding(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, segs: Seq[String]): Unit = {
-    // tombstones snapshotted at FILE granularity (like the segment
-    // list): fold and clear exactly this set, so a removal landing
-    // mid-compaction keeps filtering reads and folds next time
-    val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path.tombstones")
-    if (segs.isEmpty) {
+      idCol: String, segs: Seq[String]): Unit =
+    IndexLayout.foldSnapshot(spark, paths(path), segs)(
+      foldCells(spark, path, idCol))
+
+  /** The IVF fold over a (segments, tombstone files) snapshot. */
+  private def foldCells(spark: org.apache.spark.sql.SparkSession,
+                        path: String, idCol: String)
+                       (segs: Seq[String], tombFiles: Seq[String]): Unit =
+    if (segs.isEmpty)
       IndexLayout.rewriteInPlace(spark, path,
         if (IndexLayout.partitionedLayout(spark, path, "cell")) Some("cell")
         else None,
         IndexLayout.dropTombstonedFiles(_, idCol, tombFiles))
-    } else {
+    else
       IndexLayout.writeSwap(spark, path,
-        IndexLayout.foldLive(spark, Some(IndexLayout.resolve(spark, path)),
-          segs, idCol, tombFiles),
+        IndexLayout.foldLive(spark, paths(path), "", segs, idCol, tombFiles),
         Some("cell"))
-    }
-    // retire on BOTH branches: delete what the previous fold marked,
-    // mark this fold's snapshot (empty on the segment-less branch)
-    IndexLayout.retireSegmentDirs(spark, s"$path.segments", segs)
-    IndexLayout.retireTombstoneFiles(spark, s"$path.tombstones", tombFiles)
-  }
 
   /** Retrain-and-compact — the lifecycle move for CENTROID DRIFT, which
     * plain [[compactIndex]] cannot fix: appends and streamed segments
@@ -309,9 +283,8 @@ object IvfIndex {
     * layout until the manifest flip. Returns the new model; the CALLER
     * must search with it from here on (probe lists are model-derived —
     * searching a retrained layout with the old model reads the wrong
-    * cells). Segments and tombstones are snapshot-bounded exactly as in
-    * [[compactIndexFolding]]. Completes the IVF lifecycle:
-    * build → append/stream → delete → compact → RETRAIN.
+    * cells). Segments and tombstones are snapshot-bounded by
+    * [[IndexLayout.leasedFold]].
     *
     * WHEN to retrain is measured, not guessed: the q236 drift audit
     * (fixed-point, hash-checked) reports mean/p90
@@ -324,27 +297,16 @@ object IvfIndex {
   def retrainCompact(spark: org.apache.spark.sql.SparkSession,
                      path: String, idCol: String, embCol: String,
                      k: Int, iters: Int): Model =
-    IndexLayout.withLease(spark, path, "IvfIndex.retrainCompact") {
-      retrainCompactLeased(spark, path, idCol, embCol, k, iters)
+    IndexLayout.leasedFold(spark, paths(path), "IvfIndex.retrainCompact") {
+      (segs, tombFiles) =>
+        val live = IndexLayout.foldLive(spark, paths(path), "", segs, idCol,
+          tombFiles).drop("cell")
+        val model = train(live, idCol, embCol, k, iters)
+        IndexLayout.writeSwap(spark, path,
+          assign(live, embCol, model)
+            .repartition(model.centroids.length, col("cell")), Some("cell"))
+        model
     }
-
-  private def retrainCompactLeased(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, idCol: String,
-                                   embCol: String,
-                                   k: Int, iters: Int): Model = {
-    val segs = IndexLayout.segmentDirsAt(spark, s"$path.segments")
-    val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path.tombstones")
-    val live = IndexLayout.foldLive(spark,
-        Some(IndexLayout.resolve(spark, path)), segs, idCol, tombFiles)
-      .drop("cell")
-    val model = train(live, idCol, embCol, k, iters)
-    IndexLayout.writeSwap(spark, path,
-      assign(live, embCol, model)
-        .repartition(model.centroids.length, col("cell")), Some("cell"))
-    IndexLayout.retireSegmentDirs(spark, s"$path.segments", segs)
-    IndexLayout.retireTombstoneFiles(spark, s"$path.tombstones", tombFiles)
-    model
-  }
 
   /** Threshold-gated maintenance recommendations for a [[writeIndex]]
     * layout ([[IndexLayout.maintenancePlan]]; also serves IvfPq — same
@@ -357,8 +319,7 @@ object IvfIndex {
                         IndexLayout.MaintenanceThresholds(),
                       drift: Option[(Long, Long)] = None)
       : IndexLayout.MaintenancePlan =
-    IndexLayout.maintenancePlan(spark, path, s"$path.segments",
-      s"$path.tombstones", path, t, drift = drift)
+    IndexLayout.maintenancePlan(spark, paths(path), t, drift = drift)
 
   /** The q236 drift measurement packaged RUNNABLE — the planner's
     * retrain gate correctly demands a measurement instead of guessing
@@ -378,10 +339,7 @@ object IvfIndex {
   def maintenanceAudit(spark: org.apache.spark.sql.SparkSession,
                        path: String, idCol: String, embCol: String,
                        model: Model, iters: Int = 2): (Long, Long) = {
-    val segs = IndexLayout.segmentDirsAt(spark, s"$path.segments")
-    val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path.tombstones")
-    val live = IndexLayout.foldLive(spark,
-        Some(IndexLayout.resolve(spark, path)), segs, idCol, tombFiles)
+    val live = IndexLayout.liveRows(spark, paths(path), idCol)
       .select(col(idCol), col(embCol))
     live.cache()
     try {
@@ -391,14 +349,10 @@ object IvfIndex {
     } finally live.unpersist()
   }
 
-  /** One cron-able maintenance cycle for a trained IVF layout —
-    * AUDIT (the q236 drift measurement, [[maintenanceAudit]]) → PLAN
-    * (threshold-gated, [[maintenancePlan]]) → ACT (the leased
-    * fold/compact or retrain). The soak tests hand-composed this
-    * chain; an operator's scheduler should not have to — one call per
-    * family is the whole cron job. Acting is skipped (reported in the
-    * outcome) when a live maintainer holds the lease: leases are never
-    * auto-broken, a crashed holder is a manual `releaseLease` decision.
+  /** One cron-able maintenance cycle for a trained IVF layout: AUDIT
+    * (the q236 drift measurement, [[maintenanceAudit]]) → PLAN
+    * ([[maintenancePlan]]) → [[IndexLayout.cycle]] with
+    * [[retrainCompact]] as the retrain and [[compactIndex]] as the fold.
     * `iters` drives BOTH the audit's fresh train and a fired retrain,
     * so the post-retrain audit degenerates to equality (the quiet
     * state the soak loop asserts). Returns the outcome and the model
@@ -410,19 +364,10 @@ object IvfIndex {
                  IndexLayout.MaintenanceThresholds(),
                iters: Int = 2): (IndexLayout.MaintenanceOutcome, Model) = {
     val drift = maintenanceAudit(spark, path, idCol, embCol, model, iters)
-    val plan = maintenancePlan(spark, path, t, drift = Some(drift))
-    if (plan.actions.isEmpty || plan.lease.isDefined)
-      (IndexLayout.MaintenanceOutcome(plan, Seq.empty), model)
-    else if (plan.recommends("retrain")) {
-      // retrainCompact folds segments and materializes tombstones in the
-      // same pass, so a co-recommended compact is subsumed
-      val m2 = retrainCompact(spark, path, idCol, embCol,
-        k = model.centroids.length, iters = iters)
-      (IndexLayout.MaintenanceOutcome(plan, Seq("retrain")), m2)
-    } else {
-      compactIndex(spark, path, idCol)
-      (IndexLayout.MaintenanceOutcome(plan, Seq("compact")), model)
-    }
+    IndexLayout.cycle(maintenancePlan(spark, path, t, drift = Some(drift)),
+      model, () => compactIndex(spark, path, idCol),
+      Some(() => retrainCompact(spark, path, idCol, embCol,
+        k = model.centroids.length, iters = iters)))
   }
 
   /** Mean L2²-to-nearest-centroid over `df`, ×1e6 as a long (0 for an
@@ -486,7 +431,7 @@ object IvfIndex {
       }.distinct.sorted
     val indexed = IndexLayout.dropTombstoned(
       readCells(spark, indexPath, probed, idCol), idCol,
-      s"$indexPath.tombstones")
+      paths(indexPath).tombDir)
     searchIndexed(queries, indexed, idCol, embCol, model, nprobe, topK)
   }
 
@@ -517,9 +462,8 @@ object IvfIndex {
                                    indexPath: String, cells: Seq[Int],
                                    idCol: String): DataFrame = {
     val cellList = cells.map(Integer.valueOf)
-    val segs = IndexLayout.segmentDirsAt(spark, s"$indexPath.segments")
-    val (baseRead, segRead) = IndexLayout.readLive(spark,
-      Some(IndexLayout.resolve(spark, indexPath)), segs)
+    val (base0, segs) = IndexLayout.liveParts(spark, paths(indexPath), "")
+    val (baseRead, segRead) = IndexLayout.readLive(spark, base0, segs)
     val base = baseRead.get.filter(col("cell").isin(cellList: _*))
     segRead.fold(base) { s =>
       val seg0 = s.filter(col("cell").isin(cellList: _*))

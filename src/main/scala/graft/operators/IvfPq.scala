@@ -35,45 +35,33 @@ object IvfPq {
     * along for the rerank so no second source is consulted.
     */
   def writeIndex(corpus: DataFrame, idCol: String, embCol: String,
-                 model: Model, path: String): Unit = {
-    // fresh build replaces everything: stale tombstones AND stale
-    // streaming segments (readers unconditionally union $path.segments).
-    // Leased: the clears are destructive swap-class mutations that would
-    // corrupt a concurrent compaction (see Bm25.writeIndex)
-    IndexLayout.withLease(corpus.sparkSession, path, "IvfPq.writeIndex") {
-      IndexLayout.clearTombstones(corpus.sparkSession, s"$path.tombstones")
-      IndexLayout.clearSegmentsAt(corpus.sparkSession, s"$path.segments")
-      IndexLayout.clearVersions(corpus.sparkSession, path)
-      PqIndex.encode(IvfIndex.assign(corpus, embCol, model.coarse),
-          embCol, model.pq)
+                 model: Model, path: String): Unit =
+    IndexLayout.rebuild(corpus.sparkSession, IvfIndex.paths(path),
+        "IvfPq.writeIndex") {
+      encode(corpus, embCol, model)
         // same clustering as IvfIndex.writeIndex: O(nlist) files;
         // explicit count — exempt from AQE coalescing (Bm25.writeIndexBody)
         .repartition(model.coarse.centroids.length, col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(path)
     }
-  }
+
+  /** Cell-assign with the coarse quantizer, then PQ-encode. */
+  private def encode(df: DataFrame, embCol: String, model: Model): DataFrame =
+    PqIndex.encode(IvfIndex.assign(df, embCol, model.coarse), embCol, model.pq)
 
   /** Append new vectors to a [[writeIndex]] layout: assigned to the
     * EXISTING coarse centroids and encoded with the EXISTING codebooks
     * (the standard IVF-PQ maintenance move — quantizers drift only at
     * retrain), clustered so each touched cell gains one file, appended
-    * without rewriting any cell. Completes the incremental lifecycle the
-    * IVF / dedup / BM25 layouts already have; [[IvfIndex.compactIndex]]
-    * works unchanged on this layout (same (cell, id, …) shape).
+    * without rewriting any cell. [[IvfIndex.compactIndex]] works
+    * unchanged on this layout (same (cell, id, …) shape).
     */
   def appendToIndex(batch: DataFrame, idCol: String, embCol: String,
-                    model: Model, path: String): Unit = {
-    // resolved target captured first; a compaction flip racing this
-    // append fails loudly instead of stranding rows in a retired
-    // version (segments are the concurrent-safe write path)
-    val target = IndexLayout.resolve(batch.sparkSession, path)
-    PqIndex.encode(IvfIndex.assign(batch, embCol, model.coarse),
-        embCol, model.pq)
-      .repartition(model.coarse.centroids.length, col("cell"))
-      .write.mode("append").partitionBy("cell")
-      .parquet(target)
-    IndexLayout.assertAppendVisible(batch.sparkSession, path, target)
-  }
+                    model: Model, path: String): Unit =
+    IndexLayout.appendTo(batch.sparkSession, path)(
+      encode(batch, embCol, model)
+        .repartition(model.coarse.centroids.length, col("cell"))
+        .write.mode("append").partitionBy("cell").parquet(_))
 
   /** Write a micro-batch as an immutable streaming SEGMENT of a
     * [[writeIndex]] layout: assigned to the existing coarse centroids,
@@ -85,15 +73,10 @@ object IvfPq {
     * shape-identical).
     */
   def writeSegment(batch: DataFrame, idCol: String, embCol: String,
-                   model: Model, path: String, batchId: Long): Unit = {
-    val seg = s"$path.segments/batch=$batchId"
-    // replay over a dir an offline fold marked _FOLDED must come back
-    // LIVE (see IndexLayout.clearFoldedMarker)
-    IndexLayout.clearFoldedMarker(batch.sparkSession, seg)
-    PqIndex.encode(IvfIndex.assign(batch, embCol, model.coarse),
-        embCol, model.pq)
-      .write.mode("overwrite").parquet(seg)
-  }
+                   model: Model, path: String, batchId: Long): Unit =
+    IndexLayout.writeSegment(batch.sparkSession,
+        IvfIndex.paths(path).segment(batchId))(
+      encode(batch, embCol, model).write.mode("overwrite").parquet(_))
 
   /** Batch [[searchPruned]]: N queries cost ONE pruned read of the
     * union of all probe cells plus two query-bounded shuffles, instead
@@ -132,7 +115,7 @@ object IvfPq {
     val allCells = cellsPer.values.flatten.toSeq.distinct.sorted
     val idx = IndexLayout.dropTombstoned(
       IvfIndex.readCells(spark, indexPath, allCells, idCol), idCol,
-      s"$indexPath.tombstones")
+      IvfIndex.paths(indexPath).tombDir)
     val luts: Map[Long, Array[Array[Double]]] = qs.map { case (qid, v) =>
       qid -> Array.tabulate(model.pq.m) { s =>
         val sub = v.slice(s * model.pq.subDim, (s + 1) * model.pq.subDim)
@@ -205,31 +188,17 @@ object IvfPq {
   def retrainCompact(spark: SparkSession, path: String, idCol: String,
                      embCol: String, nlist: Int, coarseIters: Int,
                      m: Int, k: Int, pqIters: Int): Model =
-    // swap-class maintenance — single-maintainer lease, like the parents
-    IndexLayout.withLease(spark, path, "IvfPq.retrainCompact") {
-      retrainCompactLeased(spark, path, idCol, embCol, nlist, coarseIters,
-        m, k, pqIters)
+    IndexLayout.leasedFold(spark, IvfIndex.paths(path), "IvfPq.retrainCompact") {
+      (segs, tombFiles) =>
+        val live = IndexLayout.foldLive(spark, IvfIndex.paths(path), "", segs,
+          idCol, tombFiles).select(col(idCol), col(embCol))
+        val model = train(live, idCol, embCol, nlist, coarseIters, m, k, pqIters)
+        IndexLayout.writeSwap(spark, path,
+          encode(live, embCol, model)
+            .repartition(model.coarse.centroids.length, col("cell")),
+          Some("cell"))
+        model
     }
-
-  private def retrainCompactLeased(spark: SparkSession, path: String,
-                                   idCol: String, embCol: String,
-                                   nlist: Int, coarseIters: Int,
-                                   m: Int, k: Int, pqIters: Int): Model = {
-    val segs = IndexLayout.segmentDirsAt(spark, s"$path.segments")
-    val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path.tombstones")
-    val live = IndexLayout.foldLive(spark,
-        Some(IndexLayout.resolve(spark, path)), segs, idCol, tombFiles)
-      .select(col(idCol), col(embCol))
-    val model = train(live, idCol, embCol, nlist, coarseIters, m, k, pqIters)
-    IndexLayout.writeSwap(spark, path,
-      PqIndex.encode(IvfIndex.assign(live, embCol, model.coarse),
-          embCol, model.pq)
-        .repartition(model.coarse.centroids.length, col("cell")),
-      Some("cell"))
-    IndexLayout.retireSegmentDirs(spark, s"$path.segments", segs)
-    IndexLayout.retireTombstoneFiles(spark, s"$path.tombstones", tombFiles)
-    model
-  }
 
   /** PQ-side drift measurement for the composite index, completing the
     * audit family (coarse-quantizer drift is
@@ -247,10 +216,7 @@ object IvfPq {
   def maintenanceAudit(spark: SparkSession, path: String, idCol: String,
                        embCol: String, model: Model,
                        pqIters: Int = 2): (Long, Long) = {
-    val segs = IndexLayout.segmentDirsAt(spark, s"$path.segments")
-    val tombFiles = IndexLayout.liveTombstoneFiles(spark, s"$path.tombstones")
-    val live = IndexLayout.foldLive(spark,
-        Some(IndexLayout.resolve(spark, path)), segs, idCol, tombFiles)
+    val live = IndexLayout.liveRows(spark, IvfIndex.paths(path), idCol)
       .select(col(idCol), col(embCol))
     live.cache()
     try {
@@ -262,15 +228,16 @@ object IvfPq {
     } finally live.unpersist()
   }
 
-  /** One cron-able maintenance cycle for a trained IVF-PQ layout — the
-    * `IvfIndex.maintain` shape over BOTH drift rails: the coarse
-    * quantizer's cell-assignment error (`IvfIndex.maintenanceAudit`
-    * with `model.coarse` — same layout conventions) and the PQ
+  /** One cron-able maintenance cycle for a trained IVF-PQ layout, over
+    * BOTH drift rails: the coarse quantizer's cell-assignment error
+    * (`IvfIndex.maintenanceAudit` with `model.coarse`) and the PQ
     * reconstruction error ([[maintenanceAudit]]). The planner's
     * ratio-based gate consumes ONE pair, so the worse-relative-drift
     * rail is passed — either decaying rail must be able to fire the
-    * retrain. Acting skips (reported) under a live lease. Returns the
-    * outcome and the model to search with — NEW iff "retrain" acted.
+    * retrain. Then [[IndexLayout.cycle]] with [[retrainCompact]] and
+    * `IvfIndex.compactIndex` (the layouts share the (cell, id, …)
+    * shape). Returns the outcome and the model to search with — NEW iff
+    * "retrain" acted.
     */
   def maintain(spark: SparkSession, path: String,
                idCol: String, embCol: String, model: Model,
@@ -283,20 +250,14 @@ object IvfPq {
     def rel(p: (Long, Long)): Double =
       if (p._2 <= 0L) 0.0 else (p._1 - p._2).toDouble / p._2
     val drift = if (rel(coarse) >= rel(recon)) coarse else recon
-    val plan = IvfIndex.maintenancePlan(spark, path, t, drift = Some(drift))
-    if (plan.actions.isEmpty || plan.lease.isDefined)
-      (IndexLayout.MaintenanceOutcome(plan, Seq.empty), model)
-    else if (plan.recommends("retrain")) {
-      val m2 = retrainCompact(spark, path, idCol, embCol,
+    IndexLayout.cycle(
+      IvfIndex.maintenancePlan(spark, path, t, drift = Some(drift)), model,
+      () => IvfIndex.compactIndex(spark, path, idCol),
+      Some(() => retrainCompact(spark, path, idCol, embCol,
         nlist = model.coarse.centroids.length, coarseIters = iters,
         m = model.pq.m,
         k = model.pq.codebooks.headOption.map(_.length).getOrElse(0),
-        pqIters = iters)
-      (IndexLayout.MaintenanceOutcome(plan, Seq("retrain")), m2)
-    } else {
-      IvfIndex.compactIndex(spark, path, idCol) // shared (cell,id,…) shape
-      (IndexLayout.MaintenanceOutcome(plan, Seq("compact")), model)
-    }
+        pqIters = iters)))
   }
 
   /** Mean PQ reconstruction error over `df`, ×1e6 as a long (0 for an
@@ -351,7 +312,7 @@ object IvfPq {
     val cells = IvfIndex.probeCellsLocal(query, model.coarse, nprobe)
     val idx = IndexLayout.dropTombstoned(
       IvfIndex.readCells(spark, indexPath, cells, idCol),
-      idCol, s"$indexPath.tombstones")
+      idCol, IvfIndex.paths(indexPath).tombDir)
     val cand = PqIndex.adcTopK(idx, idCol, model.pq, query, shortlist)
     val exact = udf { v: Seq[Float] =>
       var d = 0.0

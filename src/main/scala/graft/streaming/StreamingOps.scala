@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.Partition
+import graft.operators.{Bm25, BqIndex, DedupOps, IndexLayout, IvfIndex, IvfPq}
 
 /** Structured Streaming re-expression of the reference's incremental
   * semantics (SURVEY.md §2.10):
@@ -813,276 +814,174 @@ object StreamingOps {
       .start()
 
   /** Continuous maintenance of a persisted BM25 index
-    * (`graft.operators.Bm25.writeIndex` layout): each micro-batch becomes
-    * an immutable SEGMENT — its own mini-index under
-    * `indexDir/segments/batch=<id>`, written with per-batch OVERWRITE, so
-    * a replayed batch replaces its own prior (possibly partial) segment
-    * and the index converges — exactly-once for replayable sources, the
-    * same argument as [[incrementalDedup]]. `Bm25.topKIndexed` reads
+    * (`Bm25.writeIndex` layout) through [[segmentSink]]: each micro-batch
+    * becomes an immutable mini-index segment. `Bm25.topKIndexed` reads
     * base + segments (summing the exact per-layout stats rows, so
     * retrieval is row-identical to a from-scratch rebuild over
-    * everything); `Bm25.compactIndex` folds segments into the base
-    * offline. No history is ever read or rewritten on the hot path: a
-    * batch's cost is O(batch), independent of accumulated index size —
-    * the Lucene ingestion model on parquet partitions.
+    * everything); `Bm25.compactIndex` folds segments into the base.
     */
   def streamBm25Index(docs: DataFrame, idCol: String, textCol: String,
                       indexDir: String, checkpointDir: String,
                       nShards: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // spread the (often single-file) micro-batch so the tokenize/
-        // explode pipeline runs at full parallelism — batch-bounded cost.
-        // the segments/batch=N target writes UNPARTITIONED (Lucene's
-        // small segments — scanned, not pruned; an nShards-directory write
-        // per micro-batch is ~all fixed cost). Compaction folds them into
-        // the base's pruned partitioned layout.
-        graft.operators.Bm25.writeIndex(
-          batch.repartition(batch.sparkSession.sparkContext.defaultParallelism),
-          idCol, textCol, s"$indexDir/segments/batch=$batchId", nShards)
-        ()
-      }
-      .start()
+    segmentSink(docs, checkpointDir, (b, id) => Bm25.writeIndex(b, idCol,
+      textCol, Bm25.paths(indexDir).segment(id), nShards))
 
   /** Continuous maintenance of a persisted dedup index
-    * (`graft.operators.DedupOps.writeDedupIndex` layout): the same
-    * segment model as [[streamBm25Index]] — each micro-batch becomes an
-    * immutable mini-index under `indexDir/segments/batch=<id>`
-    * (per-batch overwrite ⇒ exactly-once on replay), and
-    * `DedupOps.dedupAgainstIndex` spans base + segments with per-segment
-    * partition pruning, so an increment checked against the streamed
-    * index gets the identical exact answer a from-scratch build gives.
-    * `DedupOps.compactDedupIndex` folds segments into the base offline.
+    * (`DedupOps.writeDedupIndex` layout) through [[segmentSink]].
+    * `DedupOps.dedupAgainstIndex` spans base + segments with the base
+    * partition-pruned, so an increment checked against the streamed index
+    * gets the identical exact answer a from-scratch build gives.
     */
   def streamDedupIndex(docs: DataFrame, idCol: String, textCol: String,
                        n: Int, indexDir: String, checkpointDir: String,
-                       nShards: Int = graft.operators.DedupOps.DefaultShingleShards): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // spread the (often single-file) micro-batch before the heavy
-        // shingle pipeline, and write the segment UNPARTITIONED — same
-        // rationale as [[streamBm25Index]]
-        graft.operators.DedupOps.writeDedupIndex(
-          batch.repartition(batch.sparkSession.sparkContext.defaultParallelism),
-          idCol, textCol, n, s"$indexDir/segments/batch=$batchId", nShards)
-        ()
-      }
-      .start()
+                       nShards: Int = DedupOps.DefaultShingleShards): StreamingQuery =
+    segmentSink(docs, checkpointDir, (b, id) => DedupOps.writeDedupIndex(b,
+      idCol, textCol, n, DedupOps.paths(indexDir).segment(id), nShards))
 
   /** Continuous maintenance of a persisted IVF index
-    * (`graft.operators.IvfIndex.writeIndex` layout, which must exist —
-    * the centroid model is trained offline): each micro-batch is
-    * assigned to the EXISTING centroids and written as an immutable
-    * segment via `IvfIndex.writeSegment` (per-batch overwrite ⇒
-    * exactly-once on replay — the standard IVF maintenance move,
-    * centroids drift only at retrain). `IvfIndex.searchPruned` spans
-    * base + segments; `IvfIndex.compactIndex` folds segments into the
-    * cell-pruned base offline. Completes the streaming lifecycle across
-    * the persisted layouts (BM25, dedup, IVF).
+    * (`IvfIndex.writeIndex` layout, which must exist — the centroid model
+    * is trained offline) through [[segmentSink]]: each micro-batch is
+    * assigned to the EXISTING centroids (`IvfIndex.writeSegment`);
+    * centroids drift only at retrain.
     */
   def streamIvfIndex(rows: DataFrame, idCol: String, embCol: String,
-                     model: graft.operators.IvfIndex.Model,
+                     model: IvfIndex.Model,
                      indexDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.IvfIndex.writeSegment(
-          batch.repartition(batch.sparkSession.sparkContext.defaultParallelism),
-          idCol, embCol, model, indexDir, batchId)
-        ()
-      }
-      .start()
+    segmentSink(rows, checkpointDir, (b, id) =>
+      IvfIndex.writeSegment(b, idCol, embCol, model, indexDir, id))
 
   /** Continuous maintenance of a persisted IVF-PQ index
-    * (`graft.operators.IvfPq.writeIndex` layout, which must exist —
-    * both quantizers are trained offline): each micro-batch is assigned
-    * to the EXISTING coarse centroids, encoded with the EXISTING
-    * codebooks, and written as an immutable segment via
-    * `IvfPq.writeSegment` (per-batch overwrite ⇒ exactly-once on
-    * replay; quantizers drift only at retrain). `IvfPq.searchPruned`
-    * spans base + segments; `IvfIndex.compactIndex` folds them — the
-    * layouts are shape-identical, so the IVF lifecycle machinery serves
-    * the composite unchanged.
+    * (`IvfPq.writeIndex` layout, which must exist — both quantizers are
+    * trained offline) through [[segmentSink]]: each micro-batch is
+    * assigned and encoded with the EXISTING quantizers
+    * (`IvfPq.writeSegment`).
     */
   def streamIvfPqIndex(rows: DataFrame, idCol: String, embCol: String,
-                       model: graft.operators.IvfPq.Model,
+                       model: IvfPq.Model,
                        indexDir: String,
                        checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.IvfPq.writeSegment(
-          batch.repartition(batch.sparkSession.sparkContext.defaultParallelism),
-          idCol, embCol, model, indexDir, batchId)
-        ()
-      }
-      .start()
+    segmentSink(rows, checkpointDir, (b, id) =>
+      IvfPq.writeSegment(b, idCol, embCol, model, indexDir, id))
 
   /** Continuous maintenance of a persisted binary-quantization index
-    * (`graft.operators.BqIndex.writeIndex` layout, which must exist —
-    * the threshold model is trained at build time): each micro-batch is
-    * encoded against the PERSISTED model and written as an immutable
-    * code segment via `BqIndex.writeSegment` (per-batch overwrite ⇒
-    * exactly-once on replay; thresholds drift only at rebuild — the IVF
-    * centroid contract). `BqIndex.searchWithRerank` spans base +
-    * segments; `BqIndex.compactIndex` folds. Completes the streaming
-    * lifecycle across all five persisted layouts.
+    * (`BqIndex.writeIndex` layout, which must exist — the threshold
+    * model is trained at build time) through [[segmentSink]]: each
+    * micro-batch is encoded against the PERSISTED model
+    * (`BqIndex.writeSegment`); thresholds drift only at rebuild.
     */
   def streamBqIndex(rows: DataFrame, idCol: String, qvCol: String,
                     indexDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.BqIndex.writeSegment(
-          batch.repartition(batch.sparkSession.sparkContext.defaultParallelism),
-          idCol, qvCol, indexDir, batchId)
-        ()
-      }
-      .start()
+    segmentSink(rows, checkpointDir, (b, id) =>
+      BqIndex.writeSegment(b, idCol, qvCol, indexDir, id))
 
-  /** SELF-MAINTAINING streaming dedup index: each micro-batch lands as a
-    * segment ([[streamDedupIndex]]), then the maintenance PLANNER is
-    * consulted and a fold/compact recommendation is acted on IN the
-    * micro-batch thread. This placement is what makes the composition
-    * safe: foreachBatch serializes batches (replays included), so a fold
-    * here can never run concurrently with a replay of a segment it
-    * retires — the exact exclusion [[graft.operators.IndexLayout
-    * .retireSegmentDirs]] documents. The fold blocks the stream for its
-    * duration (the standard LSM ingestion trade — bounded by the
-    * thresholds: tighter thresholds = smaller, more frequent folds).
-    * Read amplification is therefore BOUNDED BY POLICY, not by an
-    * operator remembering to compact.
+  /** SELF-MAINTAINING [[streamDedupIndex]]: after each segment, a
+    * planner-gated fold ([[segmentSink]]'s maintenance cycle), so read
+    * amplification is BOUNDED BY POLICY, not by an operator remembering
+    * to compact.
     */
   def streamDedupIndexMaintained(
       docs: DataFrame, idCol: String, textCol: String, n: Int,
       indexDir: String, checkpointDir: String,
-      nShards: Int = graft.operators.DedupOps.DefaultShingleShards,
-      thresholds: graft.operators.IndexLayout.MaintenanceThresholds =
-        graft.operators.IndexLayout.MaintenanceThresholds()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.DedupOps.writeDedupIndex(
-          batch.repartition(spark.sparkContext.defaultParallelism),
-          idCol, textCol, n, s"$indexDir/segments/batch=$batchId", nShards)
-        val plan = graft.operators.DedupOps.maintenancePlan(
-          spark, indexDir, thresholds)
-        if (plan.recommends("fold") || plan.recommends("compact"))
-          graft.operators.DedupOps.compactDedupIndex(spark, indexDir, idCol)
-        ()
-      }
-      .start()
+      nShards: Int = DedupOps.DefaultShingleShards,
+      thresholds: IndexLayout.MaintenanceThresholds =
+        IndexLayout.MaintenanceThresholds()): StreamingQuery =
+    segmentSink(docs, checkpointDir, (b, id) => DedupOps.writeDedupIndex(b,
+        idCol, textCol, n, DedupOps.paths(indexDir).segment(id), nShards),
+      Some((DedupOps.maintenancePlan(_, indexDir, thresholds),
+        DedupOps.compactDedupIndex(_, indexDir, idCol))))
 
-  /** [[streamDedupIndexMaintained]]'s BQ twin: segment write encoded
-    * against the persisted threshold model, then planner-gated
-    * compaction in the batch thread.
-    */
+  /** SELF-MAINTAINING [[streamBqIndex]]. */
   def streamBqIndexMaintained(
       rows: DataFrame, idCol: String, qvCol: String,
       indexDir: String, checkpointDir: String,
-      thresholds: graft.operators.IndexLayout.MaintenanceThresholds =
-        graft.operators.IndexLayout.MaintenanceThresholds()): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.BqIndex.writeSegment(
-          batch.repartition(spark.sparkContext.defaultParallelism),
-          idCol, qvCol, indexDir, batchId)
-        val plan = graft.operators.BqIndex.maintenancePlan(
-          spark, indexDir, thresholds)
-        if (plan.recommends("fold") || plan.recommends("compact"))
-          graft.operators.BqIndex.compactIndex(spark, indexDir, idCol)
-        ()
-      }
-      .start()
+      thresholds: IndexLayout.MaintenanceThresholds =
+        IndexLayout.MaintenanceThresholds()): StreamingQuery =
+    segmentSink(rows, checkpointDir, (b, id) =>
+        BqIndex.writeSegment(b, idCol, qvCol, indexDir, id),
+      Some((BqIndex.maintenancePlan(_, indexDir, thresholds),
+        BqIndex.compactIndex(_, indexDir, idCol))))
 
-  /** [[streamDedupIndexMaintained]]'s BM25 twin: segment write, then
-    * planner-gated fold in the micro-batch thread. The fold runs through
-    * `Bm25.compactIndex`, which takes the single-maintainer lease and
-    * snapshots the CURRENT stats row's delete-batch list inside it —
-    * BM25's stats-coupled invariant (the summed (n, avgdl) and the
-    * tombstone set come from one resolved snapshot) holds exactly as in
-    * the offline path, and foreachBatch's serialization keeps the fold
-    * from racing a replay of a segment it retires.
+  /** SELF-MAINTAINING [[streamBm25Index]]. The fold is `Bm25.compactIndex`,
+    * which snapshots the CURRENT stats row's delete-batch list under the
+    * lease, so BM25's stats-coupled invariant (the summed (n, avgdl) and
+    * the tombstone set come from one resolved snapshot) holds exactly as
+    * offline.
     */
   def streamBm25IndexMaintained(
       docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, checkpointDir: String, nShards: Int = 64,
-      thresholds: graft.operators.IndexLayout.MaintenanceThresholds =
-        graft.operators.IndexLayout.MaintenanceThresholds()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.Bm25.writeIndex(
-          batch.repartition(spark.sparkContext.defaultParallelism),
-          idCol, textCol, s"$indexDir/segments/batch=$batchId", nShards)
-        val plan = graft.operators.Bm25.maintenancePlan(
-          spark, indexDir, thresholds)
-        if (plan.recommends("fold") || plan.recommends("compact"))
-          graft.operators.Bm25.compactIndex(spark, indexDir, idCol)
-        ()
-      }
-      .start()
+      thresholds: IndexLayout.MaintenanceThresholds =
+        IndexLayout.MaintenanceThresholds()): StreamingQuery =
+    segmentSink(docs, checkpointDir, (b, id) => Bm25.writeIndex(b, idCol,
+        textCol, Bm25.paths(indexDir).segment(id), nShards),
+      Some((Bm25.maintenancePlan(_, indexDir, thresholds),
+        Bm25.compactIndex(_, indexDir, idCol))))
 
-  /** [[streamDedupIndexMaintained]]'s IVF twin: micro-batches assign to
-    * the EXISTING centroids and land as segments, then a planner-gated
-    * fold runs in the batch thread (`IvfIndex.compactIndex` — leased,
-    * model-preserving, so the caller's search model stays valid across
-    * folds; RETRAIN stays a measured offline decision via
-    * [[graft.operators.IvfIndex.maintenanceAudit]], never fired blind
-    * from a stream). Completes the `*Maintained` family across dedup,
-    * BQ, BM25 and IVF.
+  /** SELF-MAINTAINING [[streamIvfIndex]]. The fold
+    * (`IvfIndex.compactIndex`) is model-preserving, so the caller's
+    * search model stays valid; RETRAIN stays a measured offline decision
+    * (`IvfIndex.maintain`).
     */
   def streamIvfIndexMaintained(
       rows: DataFrame, idCol: String, embCol: String,
-      model: graft.operators.IvfIndex.Model,
+      model: IvfIndex.Model,
       indexDir: String, checkpointDir: String,
-      thresholds: graft.operators.IndexLayout.MaintenanceThresholds =
-        graft.operators.IndexLayout.MaintenanceThresholds()): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.IvfIndex.writeSegment(
-          batch.repartition(spark.sparkContext.defaultParallelism),
-          idCol, embCol, model, indexDir, batchId)
-        val plan = graft.operators.IvfIndex.maintenancePlan(
-          spark, indexDir, thresholds)
-        if (plan.recommends("fold") || plan.recommends("compact"))
-          graft.operators.IvfIndex.compactIndex(spark, indexDir, idCol)
-        ()
-      }
-      .start()
+      thresholds: IndexLayout.MaintenanceThresholds =
+        IndexLayout.MaintenanceThresholds()): StreamingQuery =
+    segmentSink(rows, checkpointDir, (b, id) =>
+        IvfIndex.writeSegment(b, idCol, embCol, model, indexDir, id),
+      Some((IvfIndex.maintenancePlan(_, indexDir, thresholds),
+        IvfIndex.compactIndex(_, indexDir, idCol))))
 
-  /** [[streamIvfIndexMaintained]]'s IVF-PQ twin: segments assigned to
-    * the existing coarse centroids and encoded with the existing
-    * codebooks, planner-gated folds in the batch thread (the planner and
-    * the fold are IvfIndex's — the layouts share path conventions and
-    * the (cell, id, …) shape). Completes the `*Maintained` family across
-    * all five streaming-fed layouts.
+  /** SELF-MAINTAINING [[streamIvfPqIndex]] (IvfIndex's planner and fold:
+    * the layouts share path conventions and the (cell, id, …) shape).
     */
   def streamIvfPqIndexMaintained(
       rows: DataFrame, idCol: String, embCol: String,
-      model: graft.operators.IvfPq.Model,
+      model: IvfPq.Model,
       indexDir: String, checkpointDir: String,
-      thresholds: graft.operators.IndexLayout.MaintenanceThresholds =
-        graft.operators.IndexLayout.MaintenanceThresholds()): StreamingQuery =
+      thresholds: IndexLayout.MaintenanceThresholds =
+        IndexLayout.MaintenanceThresholds()): StreamingQuery =
+    segmentSink(rows, checkpointDir, (b, id) =>
+        IvfPq.writeSegment(b, idCol, embCol, model, indexDir, id),
+      Some((IvfIndex.maintenancePlan(_, indexDir, thresholds),
+        IvfIndex.compactIndex(_, indexDir, idCol))))
+
+  /** The one index sink behind the `stream*Index` functions. Each
+    * micro-batch is spread to full parallelism (the often single-file
+    * batch would otherwise run the encoder in one task) and handed to
+    * the layout's segment `write` with its batch id: an immutable,
+    * unpartitioned `batch=<id>` segment written with per-batch
+    * OVERWRITE, so a replayed batch replaces its own prior (possibly
+    * partial) segment and the index converges — exactly-once for
+    * replayable sources. No history is read or rewritten: a batch costs
+    * O(batch), independent of the accumulated index (the Lucene
+    * ingestion model).
+    *
+    * With `fold` = (plan, compact), each batch then runs one
+    * [[IndexLayout.cycle]] on a plan computed WITHOUT an audit, so a
+    * stream never retrains, and folds when the plan asks — unless
+    * another maintainer holds the lease: then the batch skips the fold
+    * and a later batch folds, instead of failing the query. Folding in
+    * the batch thread makes the composition safe: foreachBatch
+    * serializes batches, replays included, so a fold never runs
+    * concurrently with a replay of a segment it retires. The fold blocks
+    * the stream for its duration (the LSM ingestion trade, bounded by
+    * the thresholds).
+    */
+  private def segmentSink(
+      rows: DataFrame, checkpointDir: String,
+      write: (DataFrame, Long) => Unit,
+      fold: Option[(SparkSession => IndexLayout.MaintenancePlan,
+                    SparkSession => Unit)] = None): StreamingQuery =
     rows.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        graft.operators.IvfPq.writeSegment(
-          batch.repartition(spark.sparkContext.defaultParallelism),
-          idCol, embCol, model, indexDir, batchId)
-        val plan = graft.operators.IvfIndex.maintenancePlan(
-          spark, indexDir, thresholds)
-        if (plan.recommends("fold") || plan.recommends("compact"))
-          graft.operators.IvfIndex.compactIndex(spark, indexDir, idCol)
+        write(batch.repartition(spark.sparkContext.defaultParallelism), batchId)
+        fold.foreach { case (plan, compact) =>
+          IndexLayout.cycle(plan(spark), (), () => compact(spark))
+        }
         ()
       }
       .start()

@@ -94,7 +94,7 @@ class AlertPlotSinkSpec extends SparkSpec {
   }
 
   test("writeHeatmap pivots distributed (q31/q37's aggregate) and writes through Hadoop FS") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-heat").toString
+    val dir = Scratch.dir("graft-heat")
     val df = Tables(spark, sf, "documents")
       .select(col("source"), col("lang"), col("n_chars"))
     PlotSink.writeHeatmap(df, "source", "lang", "n_chars",
@@ -112,7 +112,7 @@ class AlertPlotSinkSpec extends SparkSpec {
     // indices and threw ArrayIndexOutOfBounds inside reportFailure,
     // silently dropping the alert email (reference
     // visualization_generator.py:392-401 pivots the full frame).
-    val dir = java.nio.file.Files.createTempDirectory("graft-heatgap").toString
+    val dir = Scratch.dir("graft-heatgap")
     val df = Seq(
       ("a", "x", 10.0), ("a", "y", 20.0),
       ("b", "x", 30.0), ("b", "y", 40.0),
@@ -126,7 +126,7 @@ class AlertPlotSinkSpec extends SparkSpec {
   }
 
   test("writeLineChart renders run-history-shaped series through Hadoop FS") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-line").toString
+    val dir = Scratch.dir("graft-line")
     val df = Seq(("validity", 1.0, 98.0), ("validity", 2.0, 97.5),
       ("completeness", 1.0, 92.0), ("completeness", 2.0, 95.0))
       .toDF("metric", "run_idx", "value")
@@ -155,7 +155,7 @@ class AlertPlotSinkSpec extends SparkSpec {
     assert(a > b && b > c, s"$a,$b,$c")
     assert(math.abs(a.toDouble / b - 2.0) < 0.2, s"a/b = ${a.toDouble / b}")
     // histogram wrapper writes through FS and decodes
-    val dir = java.nio.file.Files.createTempDirectory("graft-hist").toString
+    val dir = Scratch.dir("graft-hist")
     PlotSink.writeHistogram(Tables(spark, sf, "documents"), "n_chars",
       s"file:$dir/hist.png", "n_chars distribution", nBins = 10)
     assert(javax.imageio.ImageIO.read(new java.io.File(s"$dir/hist.png")) != null)
@@ -180,7 +180,7 @@ class AlertPlotSinkSpec extends SparkSpec {
     val whisker = img.getRGB(cx1, toY(90.0)) & 0xFFFFFF
     assert(whisker != 0xFFFFFF)
     // FS wrapper over the q48-shaped distributed aggregate
-    val dir = java.nio.file.Files.createTempDirectory("graft-box").toString
+    val dir = Scratch.dir("graft-box")
     PlotSink.writeBoxPlot(Tables(spark, sf, "documents"), "source", "n_chars",
       s"file:$dir/box.png", "n_chars by source")
     assert(javax.imageio.ImageIO.read(new java.io.File(s"$dir/box.png")) != null)
@@ -208,7 +208,7 @@ class AlertPlotSinkSpec extends SparkSpec {
     val y1 = baseY - binH - binH / 2
     assert((img.getRGB(cx - halfMax + 1, y1) & 0xFFFFFF) != 0xFFFFFF)
     assert((img.getRGB(cx + halfMax - 1, y1) & 0xFFFFFF) != 0xFFFFFF)
-    val dir = java.nio.file.Files.createTempDirectory("graft-violin").toString
+    val dir = Scratch.dir("graft-violin")
     PlotSink.writeViolin(Tables(spark, sf, "documents"), "source", "n_chars",
       s"file:$dir/violin.png", "n_chars density by source")
     assert(javax.imageio.ImageIO.read(new java.io.File(s"$dir/violin.png")) != null)
@@ -225,7 +225,7 @@ class AlertPlotSinkSpec extends SparkSpec {
   }
 
   test("writeBarChart aggregates distributed and writes through Hadoop FS") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-plot").toString
+    val dir = Scratch.dir("graft-plot")
     val counts = Tables(spark, sf, "documents")
       .groupBy(col("source")).agg(count(lit(1)).as("n"))
     PlotSink.writeBarChart(counts, "source", "n",

@@ -56,7 +56,7 @@ class Bm25Spec extends SparkSpec {
   test("term-sharded index: topKIndexed is row-identical to topK and prunes shards") {
     val docs = Tables(spark, sf, "documents")
     val queries = Seq("s1" -> "fast hash join", "s2" -> "stream filter vector")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_index").toString
+    val dir = Scratch.dir("bm25_index")
     Bm25.writeIndex(docs, "doc_id", "text", dir, nShards = 64)
     val indexed = Bm25.topKIndexed(spark, dir, "doc_id", queries, k = 10)
     val direct = Bm25.topK(docs, "doc_id", "text", queries, k = 10)
@@ -75,8 +75,8 @@ class Bm25Spec extends SparkSpec {
     val queries = Seq("s1" -> "fast hash join", "s2" -> "stream filter vector")
     val base = docs.filter(col("doc_id") % 10 =!= 0)
     val batch = docs.filter(col("doc_id") % 10 === 0)
-    val incDir = java.nio.file.Files.createTempDirectory("bm25_inc").toString
-    val fullDir = java.nio.file.Files.createTempDirectory("bm25_full").toString
+    val incDir = Scratch.dir("bm25_inc")
+    val fullDir = Scratch.dir("bm25_full")
     Bm25.writeIndex(base, "doc_id", "text", incDir, nShards = 64)
     Bm25.appendToIndex(batch, "doc_id", "text", incDir, nShards = 64)
     Bm25.writeIndex(docs, "doc_id", "text", fullDir, nShards = 64)
@@ -91,7 +91,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("appendToIndex onto an empty-corpus base replaces the readable-empty layout") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_empty_base").toString
+    val dir = Scratch.dir("bm25_empty_base")
     Bm25.writeIndex(embDocs.filter(lit(false)), "doc_id", "text", dir)
     Bm25.appendToIndex(embDocs, "doc_id", "text", dir)
     val out = Bm25.topKIndexed(spark, dir, "doc_id", Seq("q" -> "apple"), k = 3)
@@ -100,7 +100,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("appendToIndex with a tokenless batch updates stats only") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_tokless").toString
+    val dir = Scratch.dir("bm25_tokless")
     Bm25.writeIndex(embDocs, "doc_id", "text", dir)
     val before = Bm25.topKIndexed(spark, dir, "doc_id", Seq("q" -> "apple"), k = 3)
       .collect().map(_.toSeq).toSet
@@ -125,8 +125,8 @@ class Bm25Spec extends SparkSpec {
       .toDF("doc_id", "text")
     val batch = Seq((3L, "banana cherry"), (4L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
-    val incDir = java.nio.file.Files.createTempDirectory("bm25_null_inc").toString
-    val fullDir = java.nio.file.Files.createTempDirectory("bm25_null_full").toString
+    val incDir = Scratch.dir("bm25_null_inc")
+    val fullDir = Scratch.dir("bm25_null_full")
     Bm25.writeIndex(base, "doc_id", "text", incDir)
     Bm25.appendToIndex(batch, "doc_id", "text", incDir)
     Bm25.writeIndex(base.unionAll(batch), "doc_id", "text", fullDir)
@@ -138,8 +138,8 @@ class Bm25Spec extends SparkSpec {
     val docs = Tables(spark, sf, "documents")
     val queries = Seq("s1" -> "fast hash join", "s2" -> "stream filter vector")
     val live = docs.filter(col("doc_id") % 10 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("bm25_del").toString
-    val liveDir = java.nio.file.Files.createTempDirectory("bm25_live").toString
+    val dir = Scratch.dir("bm25_del")
+    val liveDir = Scratch.dir("bm25_live")
     Bm25.writeIndex(docs, "doc_id", "text", dir, nShards = 64)
     Bm25.removeFromIndex(docs.filter(col("doc_id") % 10 === 0)
       .select("doc_id"), "doc_id", dir)
@@ -192,7 +192,7 @@ class Bm25Spec extends SparkSpec {
     assert(!after.contains(firstBatch.head),
       "unreferenced first batch swept once its stats version is GC'd")
     assert(rows(dir) === Bm25.topKIndexed(spark,
-      { val d2 = java.nio.file.Files.createTempDirectory("bm25_live2").toString
+      { val d2 = Scratch.dir("bm25_live2")
         Bm25.writeIndex(docs.filter(col("doc_id") % 10 =!= 0
           && col("doc_id") % 10 =!= 1), "doc_id", "text", d2, nShards = 64)
         d2 }, "doc_id", queries, k = 10).collect().map(_.toSeq).toSet)
@@ -202,7 +202,7 @@ class Bm25Spec extends SparkSpec {
     import graft.operators.IndexLayout
     val docs = Tables(spark, sf, "documents")
     val queries = Seq("s1" -> "fast hash join")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_compact").toString
+    val dir = Scratch.dir("bm25_compact")
     Bm25.writeIndex(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", dir)
     (1 to 3).foreach { r =>
       Bm25.appendToIndex(docs.filter(col("doc_id") % 4 === r),
@@ -227,7 +227,7 @@ class Bm25Spec extends SparkSpec {
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val queries = Seq("s1" -> "fast hash join", "s2" -> "stream filter vector")
-    val base = java.nio.file.Files.createTempDirectory("bm25_stream").toString
+    val base = Scratch.dir("bm25_stream")
     val (dir, ckpt) = (s"$base/index", s"$base/ckpt")
     // base layout from the first third; two micro-batches stream the rest
     val parts = docs.groupBy { case (id, _) => (id % 3).toInt }
@@ -244,7 +244,7 @@ class Bm25Spec extends SparkSpec {
     def rows(d: String) =
       Bm25.topKIndexed(spark, d, "doc_id", queries, k = 10)
         .collect().map(_.toSeq).toSet
-    val fullDir = java.nio.file.Files.createTempDirectory("bm25_stream_full").toString
+    val fullDir = Scratch.dir("bm25_stream_full")
     Bm25.writeIndex(docs.toSeq.toDF("doc_id", "text"),
       "doc_id", "text", fullDir, nShards = 64)
     val streamed = rows(dir)
@@ -271,7 +271,7 @@ class Bm25Spec extends SparkSpec {
     // tombstones span layouts and the stats shift reads all sidecars
     val victim = parts(1).map(_._1).min
     Bm25.removeFromIndex(Seq(victim).toDF("doc_id"), "doc_id", dir)
-    val liveDir = java.nio.file.Files.createTempDirectory("bm25_stream_live").toString
+    val liveDir = Scratch.dir("bm25_stream_live")
     Bm25.writeIndex(docs.filter(_._1 != victim).toSeq.toDF("doc_id", "text"),
       "doc_id", "text", liveDir, nShards = 64)
     val afterDelete = rows(dir)
@@ -279,7 +279,7 @@ class Bm25Spec extends SparkSpec {
     // compaction folds segments into the base: segments gone, tombstones
     // gone, results identical, stats bit-equal to the live-only rebuild
     Bm25.compactIndex(spark, dir)
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     assert(Bm25.tombstoneDirs(spark, dir).isEmpty)
     assert(rows(dir) === afterDelete)
     assert(spark.read.parquet(IndexLayout.resolve(spark, s"$dir/stats")).collect().map(_.toSeq).toSeq
@@ -294,33 +294,33 @@ class Bm25Spec extends SparkSpec {
     val docs = Tables(spark, sf, "documents")
     val queries = Seq("s1" -> "fast hash join", "s2" -> "stream filter vector")
     val parts = (0 to 3).map(r => docs.filter(col("doc_id") % 4 === r))
-    val dir = java.nio.file.Files.createTempDirectory("bm25_race").toString
+    val dir = Scratch.dir("bm25_race")
     Bm25.writeIndex(parts(0), "doc_id", "text", dir, nShards = 64)
     Bm25.writeIndex(parts(1), "doc_id", "text", s"$dir/segments/batch=0")
     // compaction snapshots the segment list = [batch=0]; batch=1 lands
     // AFTER the snapshot (the race the fold must survive)
-    val snapshot = IndexLayout.segmentDirs(spark, dir)
+    val snapshot = IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir))
     Bm25.writeIndex(parts(2), "doc_id", "text", s"$dir/segments/batch=1")
     Bm25.compactIndexFolding(spark, dir, "doc_id", snapshot)
     // the late segment was neither folded nor deleted — still readable
-    val left = IndexLayout.segmentDirs(spark, dir)
+    val left = IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir))
     assert(left.size == 1 && left.head.endsWith("batch=1"))
     def rows(d: String) =
       Bm25.topKIndexed(spark, d, "doc_id", queries, k = 10)
         .collect().map(_.toSeq).toSet
-    val fullDir = java.nio.file.Files.createTempDirectory("bm25_race_full").toString
+    val fullDir = Scratch.dir("bm25_race_full")
     Bm25.writeIndex(parts(0).unionAll(parts(1)).unionAll(parts(2)),
       "doc_id", "text", fullDir, nShards = 64)
     assert(rows(dir) === rows(fullDir))
     // the next compaction folds the survivor; stats bit-equal to a rebuild
     Bm25.compactIndex(spark, dir)
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     assert(rows(dir) === rows(fullDir))
     // the compacted layout is versioned — appends must land in it, and
     // retrieval over append-after-compaction equals a full rebuild
     assert(IndexLayout.currentVersion(spark, s"$dir/postings").isDefined)
     Bm25.appendToIndex(parts(3), "doc_id", "text", dir, nShards = 64)
-    val allDir = java.nio.file.Files.createTempDirectory("bm25_race_all").toString
+    val allDir = Scratch.dir("bm25_race_all")
     Bm25.writeIndex(docs, "doc_id", "text", allDir, nShards = 64)
     assert(rows(dir) === rows(allDir))
     assert(spark.read.parquet(IndexLayout.resolve(spark, s"$dir/stats")).collect().map(_.toSeq).toSeq
@@ -331,7 +331,7 @@ class Bm25Spec extends SparkSpec {
     import graft.operators.IndexLayout
     val docs = Tables(spark, sf, "documents")
     val queries = Seq("s1" -> "fast hash join", "s2" -> "stream filter vector")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_reshard").toString
+    val dir = Scratch.dir("bm25_reshard")
     // a corpus that outgrew its build-time shard count: built at 4,
     // appended, some docs removed, then re-bucketed to 64 in one
     // compaction pass
@@ -342,7 +342,7 @@ class Bm25Spec extends SparkSpec {
     Bm25.removeFromIndex(docs.filter(col("doc_id") % 10 === 0)
       .select("doc_id"), "doc_id", dir)
     Bm25.compactIndex(spark, dir, "doc_id", reshardTo = Some(64))
-    val freshDir = java.nio.file.Files.createTempDirectory("bm25_reshard_f").toString
+    val freshDir = Scratch.dir("bm25_reshard_f")
     val live = docs.filter(col("doc_id") % 10 =!= 0)
     Bm25.writeIndex(live, "doc_id", "text", freshDir, nShards = 64)
     // postings ROW-IDENTICAL to the fresh 64-shard build (shard included)
@@ -365,7 +365,7 @@ class Bm25Spec extends SparkSpec {
   test("kill the compactor between new-layout-complete and the flip: reads serve the old version") {
     import graft.operators.IndexLayout
     val queries = Seq("qa" -> "apple", "qc" -> "cherry")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_kill").toString
+    val dir = Scratch.dir("bm25_kill")
     Bm25.writeIndex(embDocs, "doc_id", "text", dir)
     def rows() = Bm25.topKIndexed(spark, dir, "doc_id", queries, k = 3)
       .collect().map(_.toSeq).toSet
@@ -386,19 +386,19 @@ class Bm25Spec extends SparkSpec {
 
   test("a fresh writeIndex clears stale streaming segments and tombstones") {
     import graft.operators.IndexLayout
-    val dir = java.nio.file.Files.createTempDirectory("bm25_stale_seg").toString
+    val dir = Scratch.dir("bm25_stale_seg")
     // old index + a streamed segment holding the only "cherry" doc + a
     // tombstone — all state a rebuild must replace
     Bm25.writeIndex(embDocs.filter(col("doc_id") === 1L), "doc_id", "text", dir)
     Bm25.writeIndex(embDocs.filter(col("doc_id") === 3L), "doc_id", "text",
       s"$dir/segments/batch=0")
     Bm25.removeFromIndex(Seq(1L).toDF("doc_id"), "doc_id", dir)
-    assert(IndexLayout.segmentDirs(spark, dir).nonEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).nonEmpty)
     // the rebuild: docs 1 and 2 only — doc 3 must NOT leak back in from
     // the stale segment, and doc 1 must not stay tombstoned
     val rebuilt = embDocs.filter(col("doc_id") =!= 3L)
     Bm25.writeIndex(rebuilt, "doc_id", "text", dir)
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     val out = Bm25.topKIndexed(spark, dir, "doc_id",
       Seq("qa" -> "apple", "qc" -> "cherry"), k = 3)
     val direct = Bm25.topK(rebuilt, "doc_id", "text",
@@ -410,7 +410,7 @@ class Bm25Spec extends SparkSpec {
   test("appendToIndex refuses a non-empty unpartitioned (segment-style) base") {
     // older on-disk indexes can hold a segment's unpartitioned tables at
     // a base path: write a segment, then move its tables to a base path
-    val root = java.nio.file.Files.createTempDirectory("bm25_seg_base")
+    val root = java.nio.file.Paths.get(Scratch.dir("bm25_seg_base"))
     val seg = root.resolve("src/segments/batch=0")
     Bm25.writeIndex(embDocs, "doc_id", "text", seg.toString)
     val dir = java.nio.file.Files.move(seg, root.resolve("index")).toString
@@ -424,7 +424,7 @@ class Bm25Spec extends SparkSpec {
   test("removal is ATOMIC: a reader between stage and commit sees fully-pre scores, after commit fully-post") {
     val docs = Tables(spark, sf, "documents")
     val queries = Seq("s1" -> "fast hash join", "s2" -> "stream filter vector")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_atomic").toString
+    val dir = Scratch.dir("bm25_atomic")
     Bm25.writeIndex(docs, "doc_id", "text", dir, nShards = 64)
     def rows(d: String) =
       Bm25.topKIndexed(spark, d, "doc_id", queries, k = 10)
@@ -445,7 +445,7 @@ class Bm25Spec extends SparkSpec {
     // the commit is one manifest flip: afterwards the reader scores the
     // fully-post state — identical to a live-only rebuild
     Bm25.commitRemoval(spark, dir, staged.get)
-    val liveDir = java.nio.file.Files.createTempDirectory("bm25_atomic_live").toString
+    val liveDir = Scratch.dir("bm25_atomic_live")
     Bm25.writeIndex(docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text",
       liveDir, nShards = 64)
     assert(rows(dir) === rows(liveDir),
@@ -463,18 +463,18 @@ class Bm25Spec extends SparkSpec {
 
   test("exportLivePostings: pinned export equals the live postings across base+segments; pin released") {
     import graft.operators.IndexLayout
-    val dir = java.nio.file.Files.createTempDirectory("bm25_export").toString
+    val dir = Scratch.dir("bm25_export")
     Bm25.writeIndex(embDocs.filter(col("doc_id") =!= 3L), "doc_id", "text", dir)
     Bm25.writeIndex(embDocs.filter(col("doc_id") === 3L), "doc_id", "text",
       s"$dir/segments/batch=0")
     Bm25.removeFromIndex(Seq(2L).toDF("doc_id"), "doc_id", dir)
-    val out = java.nio.file.Files.createTempDirectory("bm25_export_out").toString + "/postings"
+    val out = Scratch.dir("bm25_export_out") + "/postings"
     Bm25.exportLivePostings(spark, dir, "doc_id", out)
     // live = docs 1 and 3 (2 tombstoned); export carries their postings
     val exported = spark.read.parquet(out)
     assert(exported.select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSet == Set(1L, 3L))
-    val fresh = java.nio.file.Files.createTempDirectory("bm25_export_fresh").toString
+    val fresh = Scratch.dir("bm25_export_fresh")
     Bm25.writeIndex(embDocs.filter(col("doc_id") =!= 2L), "doc_id", "text", fresh)
     assert(exported.select("doc_id", "doc_len", "term", "tf")
       .collect().map(_.toSeq).toSet
@@ -490,7 +490,7 @@ class Bm25Spec extends SparkSpec {
     // stream-only index must materialize THROUGH the version swap (a
     // plain write could be shadowed by a stale stats manifest), and a
     // second removal must shift the row the first one created
-    val dir = java.nio.file.Files.createTempDirectory("bm25_segonly").toString
+    val dir = Scratch.dir("bm25_segonly")
     Bm25.writeIndex(embDocs.filter(col("doc_id") <= 2L), "doc_id", "text",
       s"$dir/segments/batch=0")
     Bm25.writeIndex(embDocs.filter(col("doc_id") === 3L), "doc_id", "text",
@@ -500,7 +500,7 @@ class Bm25Spec extends SparkSpec {
         Seq("qa" -> "apple", "qb" -> "banana"), k = 3)
         .collect().map(_.toSeq).toSet
     def fresh(live: org.apache.spark.sql.DataFrame) = {
-      val d = java.nio.file.Files.createTempDirectory("bm25_segonly_f").toString
+      val d = Scratch.dir("bm25_segonly_f")
       Bm25.writeIndex(live, "doc_id", "text", d)
       rows(d)
     }
@@ -515,7 +515,7 @@ class Bm25Spec extends SparkSpec {
     // build + compact => versioned postings with a _CURRENT manifest;
     // a later REBUILD at the same base path must clear it, or the stale
     // manifest shadows the fresh plain layout
-    val dir = java.nio.file.Files.createTempDirectory("bm25_rebuild").toString
+    val dir = Scratch.dir("bm25_rebuild")
     Bm25.writeIndex(embDocs, "doc_id", "text", dir)
     Bm25.appendToIndex(Seq((9L, "apple pie")).toDF("doc_id", "text"),
       "doc_id", "text", dir)
@@ -538,7 +538,7 @@ class Bm25Spec extends SparkSpec {
       (2L, "alpha delta"),
       (3L, "beta gamma delta"),
       (4L, "alpha beta")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_legacy").toString
+    val dir = Scratch.dir("bm25_legacy")
     Bm25.writeIndex(docs, "doc_id", "text", dir, nShards = 8)
     // simulate an index written by the PRE-list code after it removed
     // doc 1: a loose tombstone file (not an rm_* batch dir) and a stats
@@ -563,7 +563,7 @@ class Bm25Spec extends SparkSpec {
       Bm25.topKIndexed(spark, d, "doc_id", queries, k = 10, nShards = 8)
         .collect().map(_.toSeq).toSet
     def rebuild(ds: org.apache.spark.sql.DataFrame) = {
-      val d = java.nio.file.Files.createTempDirectory("bm25_lref").toString
+      val d = Scratch.dir("bm25_lref")
       Bm25.writeIndex(ds, "doc_id", "text", d, nShards = 8)
       d
     }
@@ -612,7 +612,7 @@ class Bm25Spec extends SparkSpec {
       (1L, "alpha beta gamma"),
       (2L, "alpha delta"),
       (3L, "beta gamma delta")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_legacy_seg").toString
+    val dir = Scratch.dir("bm25_legacy_seg")
     Bm25.writeIndex(docs, "doc_id", "text", dir, nShards = 8)
     // make the base pre-list-format: loose tombstone file for doc 1 and
     // a stats row with NO tomb_dirs column, totals already shifted
@@ -635,7 +635,7 @@ class Bm25Spec extends SparkSpec {
     val queries = Seq("q" -> "alpha beta gamma delta epsilon")
     val got = Bm25.topKIndexed(spark, dir, "doc_id", queries, k = 10,
       nShards = 8).collect().map(_.toSeq).toSet
-    val refDir = java.nio.file.Files.createTempDirectory("bm25_lsref").toString
+    val refDir = Scratch.dir("bm25_lsref")
     Bm25.writeIndex(live.unionByName(segDocs), "doc_id", "text", refDir,
       nShards = 8)
     val want = Bm25.topKIndexed(spark, refDir, "doc_id", queries, k = 10,
@@ -649,7 +649,7 @@ class Bm25Spec extends SparkSpec {
       (1L, "alpha beta"),
       (2L, "alpha gamma"),
       (3L, "beta gamma")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_apprm").toString
+    val dir = Scratch.dir("bm25_apprm")
     Bm25.writeIndex(docs, "doc_id", "text", dir, nShards = 8)
     Bm25.removeFromIndex(Seq(2L).toDF("doc_id"), "doc_id", dir)
     assert(Bm25.tombstoneDirs(spark, dir).size == 1)
@@ -661,7 +661,7 @@ class Bm25Spec extends SparkSpec {
       "doc_id", "text", dir, nShards = 8)
     assert(Bm25.tombstoneDirs(spark, dir).size == 1)
     val queries = Seq("q" -> "alpha beta gamma delta")
-    val refDir = java.nio.file.Files.createTempDirectory("bm25_apprmR").toString
+    val refDir = Scratch.dir("bm25_apprmR")
     Bm25.writeIndex(
       docs.filter(col("doc_id") =!= 2L)
         .unionByName(Seq((4L, "alpha delta")).toDF("doc_id", "text")),
@@ -673,14 +673,14 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("a fold retires segments with one cycle of grace: a pre-fold reader's files survive it") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_segret").toString
+    val dir = Scratch.dir("bm25_segret")
     Bm25.writeIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"))
       .toDF("doc_id", "text"), "doc_id", "text", dir, nShards = 8)
     Bm25.writeIndex(Seq((3L, "alpha gamma")).toDF("doc_id", "text"),
       "doc_id", "text", s"$dir/segments/batch=0", nShards = 8)
     // a slow reader lists the layout parts just before the fold lands
     val (preFoldBase, preFoldSegs) =
-      IndexLayout.liveParts(spark, dir, "postings")
+      IndexLayout.liveParts(spark, IndexLayout.Paths.nested(dir), "postings")
     val preFoldParts = preFoldBase.toSeq ++ preFoldSegs
     assert(preFoldParts.size == 2)
     Bm25.compactIndex(spark, dir)
@@ -688,9 +688,9 @@ class Bm25Spec extends SparkSpec {
     // (marked _FOLDED, deleted only by the next fold) ...
     assert(spark.read.parquet(preFoldParts.last).count() > 0)
     // ... while new readers span the folded base only — no double-count
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     val queries = Seq("q" -> "alpha beta gamma")
-    val refDir = java.nio.file.Files.createTempDirectory("bm25_segretR").toString
+    val refDir = Scratch.dir("bm25_segretR")
     Bm25.writeIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"),
         (3L, "alpha gamma")).toDF("doc_id", "text"),
       "doc_id", "text", refDir, nShards = 8)
@@ -715,20 +715,20 @@ class Bm25Spec extends SparkSpec {
     // restarted stream replays the batch IN FULL over the same dir. The
     // rewrite must clear the stale marker — hidden, the rows beyond the
     // partial capture would be invisible and deleted by the next fold.
-    val dir = java.nio.file.Files.createTempDirectory("bm25_replay").toString
+    val dir = Scratch.dir("bm25_replay")
     Bm25.writeIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"))
       .toDF("doc_id", "text"), "doc_id", "text", dir, nShards = 8)
     // the partial write the crash left
     Bm25.writeIndex(Seq((3L, "alpha gamma")).toDF("doc_id", "text"),
       "doc_id", "text", s"$dir/segments/batch=0", nShards = 8)
     Bm25.compactIndex(spark, dir) // folds the partial, marks batch=0
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     // full replay of batch 0: doc 3 AND the doc the partial missed
     Bm25.writeIndex(Seq((3L, "alpha gamma"), (4L, "delta alpha"))
       .toDF("doc_id", "text"), "doc_id", "text",
       s"$dir/segments/batch=0", nShards = 8)
     // live again — and doc 4 is retrievable
-    assert(IndexLayout.segmentDirs(spark, dir).size == 1)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).size == 1)
     val queries = Seq("q" -> "delta")
     def ids(d: String) =
       Bm25.topKIndexed(spark, d, "doc_id", queries, k = 10, nShards = 8)
@@ -737,7 +737,7 @@ class Bm25Spec extends SparkSpec {
     // re-folding converges to the clean rebuild (duplicated doc-3 rows
     // collapse in the distinct fold; stats recompute from the sidecar)
     Bm25.compactIndex(spark, dir)
-    val refDir = java.nio.file.Files.createTempDirectory("bm25_replayR").toString
+    val refDir = Scratch.dir("bm25_replayR")
     Bm25.writeIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"),
         (3L, "alpha gamma"), (4L, "delta alpha")).toDF("doc_id", "text"),
       "doc_id", "text", refDir, nShards = 8)
@@ -749,7 +749,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("appendToIndex refuses a pre-sum_len (2-field) stats row loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_2f").toString
+    val dir = Scratch.dir("bm25_2f")
     Bm25.writeIndex(Seq((1L, "alpha beta")).toDF("doc_id", "text"),
       "doc_id", "text", dir, nShards = 8)
     // simulate the oldest stats format: (n, avgdl) only — its token
@@ -766,7 +766,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("exportLivePostings is lease-free: it runs while maintenance holds the lease") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_exlease").toString
+    val dir = Scratch.dir("bm25_exlease")
     Bm25.writeIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"))
       .toDF("doc_id", "text"), "doc_id", "text", dir, nShards = 8)
     // an hours-long compaction holds the lease; the read-only export
@@ -774,7 +774,7 @@ class Bm25Spec extends SparkSpec {
     // pin, validate the base version, retry on a mid-snapshot flip)
     IndexLayout.acquireLease(spark, dir, "long-compaction")
     try {
-      val out = java.nio.file.Files.createTempDirectory("bm25_exout").toString
+      val out = Scratch.dir("bm25_exout")
       Bm25.exportLivePostings(spark, dir, "doc_id", s"$out/postings")
       assert(spark.read.parquet(s"$out/postings").count() > 0)
       assert(IndexLayout.leaseHolder(spark, dir)

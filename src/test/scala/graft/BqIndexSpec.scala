@@ -16,7 +16,7 @@ class BqIndexSpec extends SparkSpec {
       PortableAnn.quant(col("embedding")).as("qv"))
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"bq_index_$tag").toString
+    Scratch.dir(s"bq_index_$tag")
 
   private def qvecOf(df: DataFrame, id: Long): Array[Long] =
     df.filter(col("vec_id") === id).select(col("qv"))
@@ -126,7 +126,7 @@ class BqIndexSpec extends SparkSpec {
     BqIndex.writeIndex(base, "vec_id", "qv", dir)
     BqIndex.writeSegment(seg1, "vec_id", "qv", dir, batchId = 0L)
     BqIndex.writeSegment(seg2, "vec_id", "qv", dir, batchId = 1L)
-    assert(IndexLayout.segmentDirs(spark, dir).size == 2)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).size == 2)
     val q = qvecOf(c, 0L)
     def run() = rows(BqIndex.searchWithRerank(spark, dir, c, "vec_id", "qv",
       q, shortlist = 50, topK = 10, excludeId = Some(0L)))
@@ -134,7 +134,7 @@ class BqIndexSpec extends SparkSpec {
     BqIndex.compactIndex(spark, dir)
     // folded segments retired with N-1 grace: marked, gone after the
     // NEXT fold
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     assert(run() == before)
     BqIndex.compactIndex(spark, dir)
     val segRoot = new org.apache.hadoop.fs.Path(s"$dir/segments")
@@ -143,7 +143,7 @@ class BqIndexSpec extends SparkSpec {
       .forall(s => !s.getPath.getName.startsWith("batch=")))
     // a replayed batch replaces its own segment (overwrite), staying live
     BqIndex.writeSegment(seg1, "vec_id", "qv", dir, batchId = 0L)
-    assert(IndexLayout.segmentDirs(spark, dir).size == 1)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).size == 1)
     // double-listed rows (segment + folded base) stay row-exact under
     // the distinct guard
     assert(run() == before)
@@ -244,7 +244,7 @@ class BqIndexSpec extends SparkSpec {
     src.addData(b2.as[(Long, Array[Long])].collect().toSeq: _*)
     q.processAllAvailable()
     q.stop()
-    assert(IndexLayout.segmentDirs(spark, dir).size == 2)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).size == 2)
     val qv = qvecOf(c, 0L)
     def run(d: String) = rows(BqIndex.searchWithRerank(spark, d, c,
       "vec_id", "qv", qv, shortlist = 50, topK = 10, excludeId = Some(0L)))
@@ -277,7 +277,7 @@ class BqIndexSpec extends SparkSpec {
       val b = c.filter(col("vec_id") % 4 === m)
       src.addData(b.as[(Long, Array[Long])].collect().toSeq: _*)
       q.processAllAvailable()
-      assert(IndexLayout.segmentDirs(spark, dir).size <= 1,
+      assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).size <= 1,
         s"after batch $m: planner must fold at 1 live segment")
     }
     q.stop()
@@ -360,7 +360,7 @@ class BqIndexSpec extends SparkSpec {
     val c = corpus
     BqIndex.writeIndex(c, "vec_id", "qv", dir)
     val codeBytes = BqIndex.codeTableBytes(spark, dir)
-    val vecDir = java.nio.file.Files.createTempDirectory("bq_vectors").toString
+    val vecDir = Scratch.dir("bq_vectors")
     c.write.mode("overwrite").parquet(vecDir)
     val p = new org.apache.hadoop.fs.Path(vecDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -230,13 +230,13 @@ class EdgeCaseSpec extends SparkSpec {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(Bm25.topK(empty, "doc_id", "text",
       Seq("q" -> "anything here"), k = 5).count() == 0)
-    val dir = java.nio.file.Files.createTempDirectory("bm25_empty").toString
+    val dir = Scratch.dir("bm25_empty")
     Bm25.writeIndex(empty, "doc_id", "text", dir)
     assert(Bm25.topKIndexed(spark, dir, "doc_id",
       Seq("q" -> "anything here"), k = 5).count() == 0)
     // the sharded dedup index mirrors dedupAgainst's empty-corpus row:
     // nothing flagged, one row per new doc
-    val dDir = java.nio.file.Files.createTempDirectory("dedup_empty").toString
+    val dDir = Scratch.dir("dedup_empty")
     graft.operators.DedupOps.writeDedupIndex(empty, "doc_id", "text", 3, dDir)
     val newDf = Seq((1L, "some new document text here")).toDF("doc_id", "text")
     val r = graft.operators.DedupOps.dedupAgainstIndex(spark, dDir, newDf,
@@ -247,7 +247,7 @@ class EdgeCaseSpec extends SparkSpec {
   test("appending onto an empty-base dedup index replaces the readable-empty layout") {
     import graft.operators.DedupOps
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dedup_empty_base").toString
+    val dir = Scratch.dir("dedup_empty_base")
     DedupOps.writeDedupIndex(empty, "doc_id", "text", 3, dir)
     // the empty base wrote UNPARTITIONED (readable-empty); the append must
     // not leave shard=… dirs next to that bare file (unreadable mix) —

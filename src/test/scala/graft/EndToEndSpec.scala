@@ -112,7 +112,7 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("run history anomaly flags a volume spike") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-runs").toString
+    val dir = Scratch.dir("graft-runs")
     import spark.implicits._
     (1 to 12).foreach { i =>
       val n = if (i == 12) 500L else 100L + i // last run spikes
@@ -125,7 +125,7 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("quality-drop alert fires on a >5-point fall vs the previous run only") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-qd").toString
+    val dir = Scratch.dir("graft-qd")
     import spark.implicits._
     // run 1: 98/96; run 2: small dip (no alert); run 3: completeness -7.5
     Seq(("2026-01-01T00", 98.0, 96.0), ("2026-01-02T00", 95.0, 95.5),
@@ -147,7 +147,7 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("validateAndTrack fails the gate on a >5-point quality drop") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vt").toString
+    val dir = Scratch.dir("graft-vt")
     import spark.implicits._
     def papers(missing: Boolean) = (1 to 40).map { i =>
       (s"p$i", i % 2 == 0, i.toLong, 2000L + i % 20,
@@ -168,7 +168,7 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("validateAndTrack alert-only mode surfaces the drop without failing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vt2").toString
+    val dir = Scratch.dir("graft-vt2")
     import spark.implicits._
     def papers(missing: Boolean) = (1 to 40).map { i =>
       (s"p$i", i % 2 == 0, i.toLong, 2000L + i % 20,
@@ -198,8 +198,8 @@ class EndToEndSpec extends SparkSpec {
 
   test("critical anomaly renders the dashboard PNG and sends the alert mail") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-report").toString
-    val hist = java.nio.file.Files.createTempDirectory("graft-report-h").toString
+    val dir = Scratch.dir("graft-report")
+    val hist = Scratch.dir("graft-report-h")
     // 90% missing intros → extraction_failure_spike at CRITICAL severity
     val papers = (1 to 50).map { i =>
       (s"p$i", i <= 5, i.toLong % 7, 2000L + i % 20, s"d${i % 3}", s"t$i")
@@ -229,8 +229,8 @@ class EndToEndSpec extends SparkSpec {
 
   test("dashboard writes the subdomain heatmap with the anomaly panel and trends after 2 runs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-heatdash").toString
-    val hist = java.nio.file.Files.createTempDirectory("graft-heatdash-h").toString
+    val dir = Scratch.dir("graft-heatdash")
+    val hist = Scratch.dir("graft-heatdash-h")
     def papers(failing: Boolean) = (1 to 50).map { i =>
       (s"p$i", !failing || i <= 5, i.toLong % 7, 2000L + i % 20,
         s"d${i % 3}", s"s${i % 4}", s"t$i")
@@ -262,7 +262,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("quality drop sends the alert before failing; unconfigured SMTP skips") {
     import spark.implicits._
-    val hist = java.nio.file.Files.createTempDirectory("graft-report-q").toString
+    val hist = Scratch.dir("graft-report-q")
     def papers(missing: Boolean) = (1 to 40).map { i =>
       (s"p$i", i % 2 == 0, i.toLong, 2000L + i % 20,
         s"d${i % 3}", if (missing && i % 2 == 1) null else s"t$i")
@@ -288,7 +288,7 @@ class EndToEndSpec extends SparkSpec {
     val unconfigured = PaperPipeline.ReportConfig(
       smtp = AlertSink.SmtpConfig(user = None, password = None, to = None),
       transport = () => silent)
-    val hist2 = java.nio.file.Files.createTempDirectory("graft-report-q2").toString
+    val hist2 = Scratch.dir("graft-report-q2")
     PaperPipeline.validateAndTrack(papers(false), hist2, "r1",
       report = Some(unconfigured))
     intercept[QualityDropException] {

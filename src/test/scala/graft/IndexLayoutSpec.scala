@@ -17,7 +17,7 @@ class IndexLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(tag: String): String = {
-    val base = java.nio.file.Files.createTempDirectory(tag).toString
+    val base = Scratch.dir(tag)
     s"$base/table"
   }
 
@@ -222,7 +222,7 @@ class IndexLayoutSpec extends SparkSpec {
   }
 
   test("tombstone file snapshot: a removal landing mid-compaction survives and still filters") {
-    val base = java.nio.file.Files.createTempDirectory("ixl_tomb").toString
+    val base = Scratch.dir("ixl_tomb")
     val tomb = s"$base/tombstones"
     IndexLayout.appendTombstones(Seq(1L).toDF("id"), "id", tomb)
     // the compactor snapshots the sidecar's files...
@@ -261,7 +261,7 @@ class IndexLayoutSpec extends SparkSpec {
       (3L, "gamma epsilon zeta"), (4L, "alpha zeta"))
       .toDF("doc_id", "text")
     def probesWithSegments(nSegs: Int): Long = {
-      val dir = s"${java.nio.file.Files.createTempDirectory("ixl_probes")}/ix"
+      val dir = s"${Scratch.dir("ixl_probes")}/ix"
       Bm25.writeIndex(docs, "doc_id", "text", dir)
       (0 until nSegs).foreach { b =>
         Bm25.writeIndex(docs.withColumn("doc_id", col("doc_id") + lit(100L * (b + 1))),
@@ -355,7 +355,7 @@ class IndexLayoutSpec extends SparkSpec {
   }
 
   test("single-maintainer lease: second maintainer fails loudly naming the holder; release recovers; withLease releases on failure") {
-    val base = java.nio.file.Files.createTempDirectory("ixl_lease").toString
+    val base = Scratch.dir("ixl_lease")
     val path = s"$base/index"
     // build BEFORE taking the lease: rebuilds are themselves leased now
     import spark.implicits._
@@ -406,24 +406,25 @@ class IndexLayoutSpec extends SparkSpec {
   }
 
   test("clearSegmentDirs deletes exactly the snapshot, not the segment root") {
-    val base = java.nio.file.Files.createTempDirectory("ixl_segs").toString
+    val base = Scratch.dir("ixl_segs")
     Seq(1L).toDF("id").write.parquet(s"$base/segments/batch=0")
     Seq(2L).toDF("id").write.parquet(s"$base/segments/batch=1")
-    val snapshot = IndexLayout.segmentDirs(spark, base)
+    val snapshot = IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(base))
     assert(snapshot.size == 2)
     // a segment arrives after the snapshot was taken
     Seq(3L).toDF("id").write.parquet(s"$base/segments/batch=2")
     IndexLayout.clearSegmentDirs(spark, snapshot)
-    val left = IndexLayout.segmentDirs(spark, base)
+    val left = IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(base))
     assert(left.size == 1 && left.head.endsWith("batch=2"))
   }
 
   test("folded segments get N-1 retention: files survive one fold, the next fold retires them") {
-    val base = java.nio.file.Files.createTempDirectory("ixl_ret").toString
-    val segRoot = s"$base/segments"
+    val base = Scratch.dir("ixl_ret")
+    val paths = IndexLayout.Paths.nested(base)
+    val segRoot = paths.segRoot
     Seq(1L).toDF("id").write.parquet(s"$segRoot/batch=0")
     Seq(2L).toDF("id").write.parquet(s"$segRoot/batch=1")
-    val snap1 = IndexLayout.segmentDirsAt(spark, segRoot)
+    val snap1 = IndexLayout.segmentDirs(spark, paths)
     assert(snap1.size == 2)
     // fold 1 RETIRES (marks) its snapshot instead of deleting it: a
     // reader that listed segments just before the fold keeps its files
@@ -432,10 +433,10 @@ class IndexLayoutSpec extends SparkSpec {
     assert(spark.read.parquet(snap1: _*).count() == 2)
     // ...but new listings skip them (their rows are in the folded base —
     // reading them again would double-count)
-    assert(IndexLayout.segmentDirsAt(spark, segRoot).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, paths).isEmpty)
     // a new segment lands; only IT is live
     Seq(3L).toDF("id").write.parquet(s"$segRoot/batch=2")
-    val snap2 = IndexLayout.segmentDirsAt(spark, segRoot)
+    val snap2 = IndexLayout.segmentDirs(spark, paths)
     assert(snap2.size == 1 && snap2.head.endsWith("batch=2"))
     // fold 2 deletes what fold 1 marked and marks its own snapshot
     IndexLayout.retireSegmentDirs(spark, segRoot, snap2)
@@ -444,7 +445,7 @@ class IndexLayoutSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$segRoot/batch=0")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$segRoot/batch=1")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$segRoot/batch=2")))
-    assert(IndexLayout.segmentDirsAt(spark, segRoot).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, paths).isEmpty)
   }
 
   test("isSegmentPath anchors to the batch-dir tail") {
@@ -459,7 +460,7 @@ class IndexLayoutSpec extends SparkSpec {
   }
 
   test("adoptLegacyVersion restores manifest-loss fallback for pre-marker version dirs") {
-    val base = java.nio.file.Files.createTempDirectory("ixl_adopt").toString
+    val base = Scratch.dir("ixl_adopt")
     val dir = s"$base/t"
     Seq(1L).toDF("v").write.parquet(dir)
     IndexLayout.writeSwap(spark, dir, Seq(2L).toDF("v"), None) // v1
@@ -492,11 +493,15 @@ class IndexLayoutSpec extends SparkSpec {
     // write a `<key>=` partition dir inside a segment.
     final case class Layout(
         name: String, corpus: DataFrame, idCol: String,
-        segRoot: String => String,
+        paths: String => IndexLayout.Paths,
         build: (DataFrame, String) => Unit,
         segment: (DataFrame, String, Long) => Unit,
         live: String => Set[Seq[Any]],
-        rebuilt: (DataFrame, String) => Set[Seq[Any]])
+        rebuilt: (DataFrame, String) => Set[Seq[Any]],
+        remove: (DataFrame, String) => Unit,
+        compact: String => Unit,
+        maintain: (String, IndexLayout.MaintenanceThresholds) =>
+          IndexLayout.MaintenanceOutcome)
     val docs = Tables(spark, sf, "documents").select("doc_id", "text")
     val embs = Tables(spark, sf, "embeddings").select("vec_id", "embedding")
     val qvs = embs.select(col("vec_id"),
@@ -513,7 +518,7 @@ class IndexLayoutSpec extends SparkSpec {
     def collected(df: DataFrame): Set[Seq[Any]] =
       df.collect().map(_.toSeq).toSet
     def fresh(tag: String): String =
-      s"${java.nio.file.Files.createTempDirectory(tag)}/index"
+      s"${Scratch.dir(tag)}/index"
     def rebuiltBy(build: (DataFrame, String) => Unit,
                   live: String => Set[Seq[Any]])(all: DataFrame,
                                                  streamed: String) = {
@@ -543,31 +548,62 @@ class IndexLayoutSpec extends SparkSpec {
           nprobe = 6, shortlist = 40, topK = 5)
         .select(col("vec_id"), round(col("dist"), 9)))
     val bqLive = (p: String) => collected(BqIndex.readCodes(spark, p, "vec_id"))
+    val nested = IndexLayout.Paths.nested(_: String)
+    val sibling = IndexLayout.Paths.sibling(_: String)
     val layouts = Seq(
-      Layout("bm25", docs, "doc_id", p => s"$p/segments", bm25Build,
+      Layout("bm25", docs, "doc_id", nested, bm25Build,
         (df, p, b) => Bm25.writeIndex(df, "doc_id", "text",
           s"$p/segments/batch=$b"),
-        bm25Live, rebuiltBy(bm25Build, bm25Live)),
-      Layout("dedup", docs, "doc_id", p => s"$p/segments", dedupBuild,
+        bm25Live, rebuiltBy(bm25Build, bm25Live),
+        (ids, p) => Bm25.removeFromIndex(ids, "doc_id", p),
+        p => Bm25.compactIndex(spark, p),
+        (p, t) => Bm25.maintain(spark, p, "doc_id", t)),
+      Layout("dedup", docs, "doc_id", nested, dedupBuild,
         (df, p, b) => DedupOps.writeDedupIndex(df, "doc_id", "text", 3,
           s"$p/segments/batch=$b"),
-        dedupLive, rebuiltBy(dedupBuild, dedupLive)),
-      Layout("ivf", embs, "vec_id", p => s"$p.segments", ivfBuild,
+        dedupLive, rebuiltBy(dedupBuild, dedupLive),
+        (ids, p) => DedupOps.removeFromDedupIndex(ids, "doc_id", p),
+        p => DedupOps.compactDedupIndex(spark, p),
+        (p, t) => DedupOps.maintain(spark, p, "doc_id", t)),
+      Layout("ivf", embs, "vec_id", sibling, ivfBuild,
         (df, p, b) => IvfIndex.writeSegment(df, "vec_id", "embedding", ivf,
           p, b),
-        ivfLive, rebuiltBy(ivfBuild, ivfLive)),
-      Layout("ivfpq", embs, "vec_id", p => s"$p.segments", pqBuild,
+        ivfLive, rebuiltBy(ivfBuild, ivfLive),
+        (ids, p) => IvfIndex.removeFromIndex(ids, "vec_id", p),
+        p => IvfIndex.compactIndex(spark, p),
+        (p, t) => IvfIndex.maintain(spark, p, "vec_id", "embedding", ivf,
+          t)._1),
+      Layout("ivfpq", embs, "vec_id", sibling, pqBuild,
         (df, p, b) => IvfPq.writeSegment(df, "vec_id", "embedding", pq,
           p, b),
-        pqLive, rebuiltBy(pqBuild, pqLive)),
+        pqLive, rebuiltBy(pqBuild, pqLive),
+        (ids, p) => IvfIndex.removeFromIndex(ids, "vec_id", p),
+        p => IvfIndex.compactIndex(spark, p),
+        (p, t) => IvfPq.maintain(spark, p, "vec_id", "embedding", pq, t)._1),
       // BQ's build trains its threshold model on the rows it is given;
       // the rebuild is every live vector encoded with the index's model
-      Layout("bq", qvs, "vec_id", p => s"$p/segments",
+      Layout("bq", qvs, "vec_id", nested,
         (df, p) => { BqIndex.writeIndex(df, "vec_id", "qv", p); () },
         (df, p, b) => BqIndex.writeSegment(df, "vec_id", "qv", p, b),
         bqLive,
         (all, streamed) => collected(BqIndex.encode(all, "vec_id", "qv",
-          BqIndex.readModel(spark, streamed)))))
+          BqIndex.readModel(spark, streamed))),
+        (ids, p) => BqIndex.removeFromIndex(ids, "vec_id", p),
+        p => BqIndex.compactIndex(spark, p),
+        (p, t) => BqIndex.maintain(spark, p, qvs, "vec_id", "qv", t)))
+    val fs = new org.apache.hadoop.fs.Path("/")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(d: String) = fs.exists(new org.apache.hadoop.fs.Path(d))
+    // every (path, size) under the index's parent dir (the sibling
+    // layouts keep segments and tombstones beside the index path)
+    def files(dir: String): Set[(String, Long)] = {
+      val root = java.nio.file.Paths.get(dir).getParent
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(f => (root.relativize(f).toString, java.nio.file.Files.size(f)))
+          .toSet
+      finally walk.close()
+    }
     layouts.foreach { l =>
       val slice = (i: Int) => l.corpus.filter(col(l.idCol) % 4 === i)
       val dir = fresh(s"ixl_five_${l.name}")
@@ -577,7 +613,7 @@ class IndexLayoutSpec extends SparkSpec {
       l.segment(slice(1).filter(col(l.idCol) % 8 === 1), dir, 0L)
       l.segment(slice(2), dir, 1L)
       l.segment(slice(1), dir, 0L)
-      val segs = IndexLayout.segmentDirsAt(spark, l.segRoot(dir))
+      val segs = IndexLayout.segmentDirs(spark, l.paths(dir))
       assert(segs.size == 2, s"${l.name}: $segs")
       segs.foreach { seg =>
         val root = java.nio.file.Paths.get(new java.net.URI(seg))
@@ -592,6 +628,39 @@ class IndexLayoutSpec extends SparkSpec {
       }
       val all = slice(0).unionByName(slice(1)).unionByName(slice(2))
       assert(l.live(dir) === l.rebuilt(all, dir), l.name)
+
+      // lifecycle state of every kind: a compaction version and _FOLDED
+      // markers from a fold, then a live segment and live tombstones
+      val p = l.paths(dir)
+      val ids = (i: Int) => slice(i).select(l.idCol).limit(3)
+      l.remove(ids(1), dir)
+      l.compact(dir)
+      l.segment(slice(3), dir, 2L)
+      l.remove(ids(2), dir)
+      val before = files(dir)
+      assert(before.exists(_._1.endsWith("._CURRENT")), l.name)
+      assert(before.exists(_._1.endsWith("._FOLDED")), l.name)
+      assert(IndexLayout.segmentDirs(spark, p).size == 1, l.name)
+      assert(exists(p.tombDir), l.name)
+
+      // a held lease: maintain reports the skip and touches nothing
+      IndexLayout.acquireLease(spark, p.root, "spec-holder")
+      try {
+        val held = files(dir)
+        val out = l.maintain(dir,
+          IndexLayout.MaintenanceThresholds(maxLiveSegments = 1))
+        assert(out.skippedOnLease, s"${l.name}: $out")
+        assert(files(dir) === held, l.name)
+      } finally IndexLayout.releaseLease(spark, p.root)
+
+      // a rebuild clears every piece of it
+      l.build(slice(0), dir)
+      val after = files(dir).map(_._1)
+      assert(!exists(p.segRoot), l.name)
+      assert(!exists(p.tombDir), l.name)
+      assert(!after.exists(f => f.endsWith("._CURRENT") ||
+        f.endsWith("._VERSIONED") || f.endsWith("._FOLDED")),
+        s"${l.name}: $after")
     }
   }
 }

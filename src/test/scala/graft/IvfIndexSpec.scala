@@ -35,7 +35,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("partition-pruned search over a written index is row-identical and prunes the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index").toString
+    val dir = Scratch.dir("ivf_index")
     IvfIndex.writeIndex(embs, "vec_id", "embedding", model, dir)
     val queries = embs.filter(col("vec_id") < 5)
     val pruned = IvfIndex.searchPruned(spark, dir, queries, "vec_id",
@@ -62,10 +62,10 @@ class IvfIndexSpec extends SparkSpec {
     val half1 = embs.filter(col("vec_id") % 2 === 0)
     val half2 = embs.filter(col("vec_id") % 2 === 1)
     val queries = embs.filter(col("vec_id") < 5)
-    val dirInc = java.nio.file.Files.createTempDirectory("ivf_inc").toString
+    val dirInc = Scratch.dir("ivf_inc")
     IvfIndex.writeIndex(half1, "vec_id", "embedding", model, dirInc)
     IvfIndex.appendToIndex(half2, "vec_id", "embedding", model, dirInc)
-    val dirAll = java.nio.file.Files.createTempDirectory("ivf_all").toString
+    val dirAll = Scratch.dir("ivf_all")
     IvfIndex.writeIndex(embs, "vec_id", "embedding", model, dirAll)
     def res(dir: String) = IvfIndex.searchPruned(spark, dir, queries,
         "vec_id", "embedding", model, nprobe = 3, topK = 5)
@@ -78,8 +78,8 @@ class IvfIndexSpec extends SparkSpec {
     import graft.operators.IndexLayout
     val live = embs.filter(col("vec_id") % 5 =!= 0)
     val queries = embs.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_del").toString
-    val liveDir = java.nio.file.Files.createTempDirectory("ivf_live").toString
+    val dir = Scratch.dir("ivf_del")
+    val liveDir = Scratch.dir("ivf_live")
     IvfIndex.writeIndex(embs, "vec_id", "embedding", model, dir)
     IvfIndex.removeFromIndex(embs.filter(col("vec_id") % 5 === 0)
       .select("vec_id"), "vec_id", dir)
@@ -125,7 +125,7 @@ class IvfIndexSpec extends SparkSpec {
     val rows = embs.select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val parts = rows.groupBy { case (id, _) => (id % 3).toInt }
-    val base = java.nio.file.Files.createTempDirectory("ivf_stream").toString
+    val base = Scratch.dir("ivf_stream")
     val (dir, ckpt) = (s"$base/index", s"$base/ckpt")
     IvfIndex.writeIndex(parts(0).toSeq.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding")),
@@ -143,7 +143,7 @@ class IvfIndexSpec extends SparkSpec {
         "embedding", model, nprobe = 3, topK = 5)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 9), col("rank"))
       .collect().map(_.toSeq).toSet
-    val fullDir = java.nio.file.Files.createTempDirectory("ivf_stream_full").toString
+    val fullDir = Scratch.dir("ivf_stream_full")
     IvfIndex.writeIndex(embs, "vec_id", "embedding", model, fullDir)
     val streamed = res(dir)
     assert(streamed === res(fullDir))
@@ -155,7 +155,7 @@ class IvfIndexSpec extends SparkSpec {
     // delete a vector that only ever arrived through the stream
     val victim = parts(1).map(_._1).min
     IvfIndex.removeFromIndex(Seq(victim).toDF("vec_id"), "vec_id", dir)
-    val liveDir = java.nio.file.Files.createTempDirectory("ivf_stream_live").toString
+    val liveDir = Scratch.dir("ivf_stream_live")
     IvfIndex.writeIndex(embs.filter(col("vec_id") =!= victim),
       "vec_id", "embedding", model, liveDir)
     val afterDelete = res(dir)
@@ -163,7 +163,7 @@ class IvfIndexSpec extends SparkSpec {
     // compaction folds segments into the cell-pruned base; re-running it
     // (the crash-recovery path) is a no-op
     IvfIndex.compactIndex(spark, dir, "vec_id")
-    assert(IndexLayout.segmentDirsAt(spark, s"$dir.segments").isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).isEmpty)
     // folded tombstone files are RETAINED one fold for in-flight readers
     // (re-filtering them is a no-op against the materialized base); the
     // re-run below retires them
@@ -179,11 +179,11 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.writeSegment(parts(2).toSeq.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding")),
       "vec_id", "embedding", model, dir, batchId = 7L)
-    assert(IndexLayout.segmentDirsAt(spark, s"$dir.segments").nonEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).nonEmpty)
     val half = embs.filter(col("vec_id") % 2 === 0)
     IvfIndex.writeIndex(half, "vec_id", "embedding", model, dir)
-    assert(IndexLayout.segmentDirsAt(spark, s"$dir.segments").isEmpty)
-    val halfDir = java.nio.file.Files.createTempDirectory("ivf_half").toString
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).isEmpty)
+    val halfDir = Scratch.dir("ivf_half")
     IvfIndex.writeIndex(half, "vec_id", "embedding", model, halfDir)
     assert(res(dir) === res(halfDir))
   }
@@ -192,30 +192,30 @@ class IvfIndexSpec extends SparkSpec {
     import graft.operators.IndexLayout
     val queries = embs.filter(col("vec_id") < 5)
     val parts = (0 to 3).map(r => embs.filter(col("vec_id") % 4 === r))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_race").toString
+    val dir = Scratch.dir("ivf_race")
     IvfIndex.writeIndex(parts(0), "vec_id", "embedding", model, dir)
     IvfIndex.writeSegment(parts(1), "vec_id", "embedding", model, dir, 0L)
     // snapshot, then a late segment lands
-    val snapshot = IndexLayout.segmentDirsAt(spark, s"$dir.segments")
+    val snapshot = IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir))
     IvfIndex.writeSegment(parts(2), "vec_id", "embedding", model, dir, 1L)
     IvfIndex.compactIndexFolding(spark, dir, "vec_id", snapshot)
-    val left = IndexLayout.segmentDirsAt(spark, s"$dir.segments")
+    val left = IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir))
     assert(left.size == 1 && left.head.endsWith("batch=1"))
     def res(d: String) = IvfIndex.searchPruned(spark, d, queries, "vec_id",
         "embedding", model, nprobe = 3, topK = 5)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 9), col("rank"))
       .collect().map(_.toSeq).toSet
-    val fullDir = java.nio.file.Files.createTempDirectory("ivf_race_full").toString
+    val fullDir = Scratch.dir("ivf_race_full")
     IvfIndex.writeIndex(parts(0).unionAll(parts(1)).unionAll(parts(2)),
       "vec_id", "embedding", model, fullDir)
     assert(res(dir) === res(fullDir))
     // next compaction folds the survivor; layout now versioned — appends
     // must land in it
     IvfIndex.compactIndex(spark, dir, "vec_id")
-    assert(IndexLayout.segmentDirsAt(spark, s"$dir.segments").isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).isEmpty)
     assert(IndexLayout.currentVersion(spark, dir).isDefined)
     IvfIndex.appendToIndex(parts(3), "vec_id", "embedding", model, dir)
-    val allDir = java.nio.file.Files.createTempDirectory("ivf_race_all").toString
+    val allDir = Scratch.dir("ivf_race_all")
     IvfIndex.writeIndex(embs, "vec_id", "embedding", model, allDir)
     assert(res(dir) === res(allDir))
   }
@@ -228,7 +228,7 @@ class IvfIndexSpec extends SparkSpec {
     // and a slice deleted
     val seed = embs.filter(col("vec_id") % 8 === 0)
     val staleModel = IvfIndex.train(seed, "vec_id", "embedding", k = 8, iters = 3)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_retrain").toString
+    val dir = Scratch.dir("ivf_retrain")
     IvfIndex.writeIndex(seed, "vec_id", "embedding", staleModel, dir)
     IvfIndex.appendToIndex(embs.filter(col("vec_id") % 8 =!= 0),
       "vec_id", "embedding", staleModel, dir)
@@ -243,7 +243,7 @@ class IvfIndexSpec extends SparkSpec {
     // (their files retained one fold for in-flight readers — live
     // snapshot empty), removed ids physically absent, layout
     // cell-partitioned and pruned
-    assert(IndexLayout.segmentDirsAt(spark, s"$dir.segments").isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).isEmpty)
     assert(IndexLayout.liveTombstoneFiles(spark, s"$dir.tombstones").isEmpty)
     assert(spark.read.parquet(IndexLayout.resolve(spark, dir))
       .filter(col("vec_id") % 10 === 0).count() == 0)
@@ -307,18 +307,18 @@ class IvfIndexSpec extends SparkSpec {
     import graft.operators.IndexLayout
     val queries = embs.filter(col("vec_id") < 5)
     val parts = (0 to 1).map(r => embs.filter(col("vec_id") % 2 === r))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_redeliver").toString
+    val dir = Scratch.dir("ivf_redeliver")
     IvfIndex.writeIndex(parts(0), "vec_id", "embedding", model, dir)
     IvfIndex.writeSegment(parts(1), "vec_id", "embedding", model, dir, 0L)
     // at-least-once re-delivery of the same rows under a NEW batchId —
     // the segment-union distinct must absorb it
     IvfIndex.writeSegment(parts(1), "vec_id", "embedding", model, dir, 1L)
-    assert(IndexLayout.segmentDirsAt(spark, s"$dir.segments").size == 2)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).size == 2)
     def res(d: String) = IvfIndex.searchPruned(spark, d, queries, "vec_id",
         "embedding", model, nprobe = 3, topK = 5)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 9), col("rank"))
       .collect().map(_.toSeq).toSet
-    val fullDir = java.nio.file.Files.createTempDirectory("ivf_redeliver_full")
+    val fullDir = java.nio.file.Paths.get(Scratch.dir("ivf_redeliver_full"))
       .toString
     IvfIndex.writeIndex(embs, "vec_id", "embedding", model, fullDir)
     val want = res(fullDir)

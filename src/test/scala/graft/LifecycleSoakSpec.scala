@@ -21,7 +21,7 @@ class LifecycleSoakSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
+    Scratch.dir(tag)
 
   private def docs = Tables(spark, sf, "documents").select("doc_id", "text")
   private def embs = Tables(spark, sf, "embeddings")
@@ -87,7 +87,7 @@ class LifecycleSoakSpec extends SparkSpec {
     val pinnedSnapshot = IndexLayout.resolve(spark, s"$dir/postings")
     val pinnedRows = spark.read.parquet(pinnedSnapshot).count()
     Bm25.compactIndex(spark, dir, "doc_id", reshardTo = Some(16))
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty, "segments folded")
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty, "segments folded")
     assert(retrieved(dir, 16) == oracle(live), "after re-shard compaction")
 
     // 6. direct append onto the versioned, re-sharded layout
@@ -182,7 +182,7 @@ class LifecycleSoakSpec extends SparkSpec {
     assert(checked(dir) == oracle(corpus), "after delete")
 
     DedupOps.compactDedupIndex(spark, dir, "doc_id")
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty, "segments folded")
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty, "segments folded")
     assert(checked(dir) == oracle(corpus), "after compaction")
 
     DedupOps.appendToDedupIndex(b2, "doc_id", "text", n = 3, path = dir)
@@ -323,7 +323,7 @@ class LifecycleSoakSpec extends SparkSpec {
       corpus = corpus.unionByName(batch)
       // the INVARIANT the policy buys: live segments never exceed the
       // threshold after a batch completes (the planner folds at 2)
-      val live = graft.operators.IndexLayout.segmentDirs(spark, dir).size
+      val live = graft.operators.IndexLayout.segmentDirs(spark, graft.operators.IndexLayout.Paths.nested(dir)).size
       assert(live < 2 + 1, s"after batch $m: $live live segments")
       assert(checked(dir) == oracle(corpus), s"after batch $m")
     }
@@ -382,7 +382,7 @@ class LifecycleSoakSpec extends SparkSpec {
     assert(pruned(dir, model) == oracle(live, model), "after delete")
 
     IvfIndex.compactIndex(spark, dir, "vec_id")
-    assert(IndexLayout.segmentDirsAt(spark, s"$dir.segments").isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).isEmpty)
     assert(pruned(dir, model) == oracle(live, model), "after compaction")
 
     IvfIndex.appendToIndex(b2, "vec_id", "embedding", model, dir)
@@ -483,7 +483,7 @@ class LifecycleSoakSpec extends SparkSpec {
       src.addData(batch.as[(Long, String)].collect().toSeq: _*)
       q.processAllAvailable()
       corpus = corpus.unionByName(batch)
-      val live = IndexLayout.segmentDirs(spark, dir).size
+      val live = IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).size
       assert(live <= 2, s"after batch $m: $live live segments")
       // the stats-coupled invariant: summed (n, avgdl) and retrieval
       // stay exact no matter when the in-stream fold fired
@@ -529,7 +529,7 @@ class LifecycleSoakSpec extends SparkSpec {
       src.addData(batch.as[(Long, Array[Float])].collect().toSeq: _*)
       q.processAllAvailable()
       corpus = corpus.unionByName(batch)
-      val live = IndexLayout.segmentDirsAt(spark, s"$dir.segments").size
+      val live = IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).size
       assert(live <= 2, s"after batch $m: $live live segments")
       assert(pruned(dir, model) == oracle(corpus, model), s"after batch $m")
     }
@@ -574,7 +574,7 @@ class LifecycleSoakSpec extends SparkSpec {
       src.addData(batch.as[(Long, Array[Float])].collect().toSeq: _*)
       q.processAllAvailable()
       corpus = corpus.unionByName(batch)
-      val live = IndexLayout.segmentDirsAt(spark, s"$dir.segments").size
+      val live = IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).size
       assert(live <= 2, s"after batch $m: $live live segments")
       assert(prunedTop(dir, model) == oracle(corpus, model),
         s"after batch $m")

@@ -13,7 +13,7 @@ class MaintenancePlanSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
+    Scratch.dir(tag)
 
   private def docs = Tables(spark, sf, "documents").select("doc_id", "text")
   private def qvecs: DataFrame =
@@ -261,10 +261,10 @@ class MaintenancePlanSpec extends SparkSpec {
     val bmHeld = try Bm25.maintain(spark, bmDir, "doc_id", t)
       finally IndexLayout.releaseLease(spark, bmDir)
     assert(bmHeld.skippedOnLease && bmHeld.plan.recommends("fold"))
-    assert(IndexLayout.segmentDirs(spark, bmDir).size == 3, "acted under lease")
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(bmDir)).size == 3, "acted under lease")
     val bmActed = Bm25.maintain(spark, bmDir, "doc_id", t)
     assert(bmActed.acted == Seq("compact"))
-    assert(IndexLayout.segmentDirs(spark, bmDir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(bmDir)).isEmpty)
     // the folded index retrieves identically to a from-scratch build
     val qs = Seq("s1" -> "fast hash join")
     val fresh = s"${tmp("maintain_bm25_fresh")}/index"
@@ -288,7 +288,7 @@ class MaintenancePlanSpec extends SparkSpec {
     assert(ddHeld.skippedOnLease && ddHeld.plan.recommends("fold"))
     val ddActed = DedupOps.maintain(spark, ddDir, "doc_id", t)
     assert(ddActed.acted == Seq("compact"))
-    assert(IndexLayout.segmentDirs(spark, ddDir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(ddDir)).isEmpty)
     assert(!DedupOps.maintain(spark, ddDir, "doc_id", t)
       .plan.recommends("fold"))
   }
@@ -315,13 +315,46 @@ class MaintenancePlanSpec extends SparkSpec {
       finally IndexLayout.releaseLease(spark, dir)
     assert(held.plan.recommends("fold") && held.acted.isEmpty)
     assert(held.skippedOnLease)
-    assert(IndexLayout.segmentDirs(spark, dir).size == 3, "acted under lease")
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).size == 3, "acted under lease")
     // lease released: the same cycle folds
     val acted = BqIndex.maintain(spark, dir,
       c.filter(col("vec_id") % 5 < 4), "vec_id", "qv", t)
     assert(acted.acted == Seq("compact"))
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     assert(!BqIndex.maintain(spark, dir, c.filter(col("vec_id") % 5 < 4),
       "vec_id", "qv", t).plan.recommends("fold"))
+  }
+
+  test("a maintained stream skips its fold while another maintainer holds the lease, then folds on a later batch") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val dir = s"${tmp("stream_lease")}/index"
+    val paths = IndexLayout.Paths.nested(dir)
+    DedupOps.writeDedupIndex(docs.filter(col("doc_id") % 4 === 0),
+      "doc_id", "text", 3, dir)
+    val src = MemoryStream[(Long, String)]
+    val q = graft.streaming.StreamingOps.streamDedupIndexMaintained(
+      src.toDF().toDF("doc_id", "text"), "doc_id", "text", 3, dir,
+      s"${tmp("stream_lease_ckpt")}/c1",
+      thresholds = IndexLayout.MaintenanceThresholds(maxLiveSegments = 1))
+    def batch(m: Int): Unit = {
+      src.addData(docs.filter(col("doc_id") % 4 === m)
+        .as[(Long, String)].collect().toSeq: _*)
+      q.processAllAvailable()
+    }
+    try {
+      IndexLayout.acquireLease(spark, dir, "someone-else")
+      try {
+        batch(1)
+        batch(2)
+        assert(q.isActive && q.exception.isEmpty, q.exception)
+        assert(IndexLayout.segmentDirs(spark, paths).size == 2)
+      } finally IndexLayout.releaseLease(spark, dir)
+      batch(3)
+      assert(q.isActive && q.exception.isEmpty, q.exception)
+      assert(IndexLayout.segmentDirs(spark, paths).isEmpty,
+        "the first batch after the release folds")
+    } finally q.stop()
+    assert(IndexLayout.listLease(spark, dir).isEmpty)
   }
 }

@@ -529,8 +529,8 @@ class PlanShapeSpec extends SparkSpec {
     val corp = embs.join(docs.select("doc_id"),
         col("vec_id") === col("doc_id"), "left_semi")
       .select(col("vec_id"), PortableAnn.quant(col("embedding")).as("qv"))
-    val bmDir = java.nio.file.Files.createTempDirectory("hybrid_bm").toString
-    val bqDir = java.nio.file.Files.createTempDirectory("hybrid_bq").toString
+    val bmDir = Scratch.dir("hybrid_bm")
+    val bqDir = Scratch.dir("hybrid_bq")
     Bm25.writeIndex(cand, "doc_id", "text", bmDir)
     BqIndex.writeIndex(corp, "vec_id", "qv", bqDir)
     val lexQs = Seq("s1" -> "fast hash join", "s2" -> "window sort merge")

@@ -65,7 +65,7 @@ class PqIndexSpec extends SparkSpec {
     val n = emb.count().toInt
     val composite = IvfPq.Model(
       IvfIndex.train(emb, "vec_id", "embedding", k = 4, iters = 2), model)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    val dir = Scratch.dir("ivfpq")
     IvfPq.writeIndex(emb, "vec_id", "embedding", composite, dir)
     val q = emb.orderBy(col("vec_id")).limit(1)
       .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray
@@ -103,12 +103,12 @@ class PqIndexSpec extends SparkSpec {
 
     // APPEND: base on %3!=0, fold in %3==0 — same quantizers, so the
     // incremental index is row-equal to a from-scratch build of the union
-    val incDir = java.nio.file.Files.createTempDirectory("ivfpq_inc").toString
+    val incDir = Scratch.dir("ivfpq_inc")
     IvfPq.writeIndex(emb.filter(col("vec_id") % 3 =!= 0),
       "vec_id", "embedding", composite, incDir)
     IvfPq.appendToIndex(emb.filter(col("vec_id") % 3 === 0),
       "vec_id", "embedding", composite, incDir)
-    val fullDir = java.nio.file.Files.createTempDirectory("ivfpq_full").toString
+    val fullDir = Scratch.dir("ivfpq_full")
     IvfPq.writeIndex(emb, "vec_id", "embedding", composite, fullDir)
     assert(search(incDir) === search(fullDir))
 
@@ -116,7 +116,7 @@ class PqIndexSpec extends SparkSpec {
     // set; compaction materializes, clears the sidecar, results unchanged
     IvfIndex.removeFromIndex(emb.filter(col("vec_id") % 5 === 0)
       .select("vec_id"), "vec_id", incDir)
-    val liveDir = java.nio.file.Files.createTempDirectory("ivfpq_live").toString
+    val liveDir = Scratch.dir("ivfpq_live")
     IvfPq.writeIndex(emb.filter(col("vec_id") % 5 =!= 0),
       "vec_id", "embedding", composite, liveDir)
     val tombstoned = search(incDir)
@@ -142,7 +142,7 @@ class PqIndexSpec extends SparkSpec {
       "vec_id", "embedding", composite, incDir, batchId = 0L) // replay
     assert(search(incDir) === segmented)
     IvfIndex.compactIndex(spark, incDir, "vec_id")
-    assert(IndexLayout.segmentDirsAt(spark, s"$incDir.segments").isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(incDir)).isEmpty)
     assert(search(incDir) === segmented)
   }
 
@@ -150,7 +150,7 @@ class PqIndexSpec extends SparkSpec {
     import graft.operators.{IvfIndex, IvfPq}
     val composite = IvfPq.Model(
       IvfIndex.train(emb, "vec_id", "embedding", k = 4, iters = 2), model)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_batch").toString
+    val dir = Scratch.dir("ivfpq_batch")
     IvfPq.writeIndex(emb, "vec_id", "embedding", composite, dir)
     val queries = emb.filter(col("vec_id") < 5)
     val batch = IvfPq.searchPrunedBatch(spark, dir, queries, "vec_id",
@@ -185,7 +185,7 @@ class PqIndexSpec extends SparkSpec {
     val seed = emb.filter(col("vec_id") % 4 === 0)
     val stale = IvfPq.train(seed, "vec_id", "embedding",
       nlist = 4, coarseIters = 2, m = 8, k = 16, pqIters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_retrain").toString
+    val dir = Scratch.dir("ivfpq_retrain")
     IvfPq.writeIndex(seed, "vec_id", "embedding", stale, dir)
     IvfPq.appendToIndex(emb.filter(col("vec_id") % 4 === 1 || col("vec_id") % 4 === 2),
       "vec_id", "embedding", stale, dir)
@@ -196,7 +196,7 @@ class PqIndexSpec extends SparkSpec {
     val fresh = IvfPq.retrainCompact(spark, dir, "vec_id", "embedding",
       nlist = 4, coarseIters = 2, m = 8, k = 16, pqIters = 2)
     // maintenance state folded; removed ids physically absent
-    assert(IndexLayout.segmentDirsAt(spark, s"$dir.segments").isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).isEmpty)
     // folded tombstone files are retained one fold for in-flight readers
     assert(IndexLayout.liveTombstoneFiles(spark, s"$dir.tombstones").isEmpty)
     assert(spark.read.parquet(IndexLayout.resolve(spark, dir))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Invariants for the statistical quality signals (q100 LM score, q101
@@ -35,7 +34,7 @@ class QualitySignalsSpec extends SparkSpec {
   }
 
   test("q101 PSI is exactly zero when both periods share a distribution") {
-    val dir = Files.createTempDirectory("psi0").toString
+    val dir = Scratch.dir("psi0")
     val rows = for {
       half <- Seq(5, 20) // Jan 5 → period 0, Jan 20 → period 1
       i <- 0 until 200
@@ -49,7 +48,7 @@ class QualitySignalsSpec extends SparkSpec {
   }
 
   test("q101 PSI alarms on a hard distribution shift") {
-    val dir = Files.createTempDirectory("psi1").toString
+    val dir = Scratch.dir("psi1")
     val rows =
       (0 until 200).map(i => (i.toLong,
         Timestamp.valueOf("2024-01-05 10:00:00"), 1L, "click", 10.0, "{}")) ++
@@ -63,7 +62,7 @@ class QualitySignalsSpec extends SparkSpec {
   }
 
   test("q100 LM score ranks fluent text above unique-bigram gibberish") {
-    val dir = Files.createTempDirectory("lm").toString
+    val dir = Scratch.dir("lm")
     val fluent = Array.fill(30)("the cat sat on the mat").mkString(" ")
     val gibberish = (0 until 180).map(i => s"zq$i xv$i").mkString(" ")
     Seq((0L, fluent, "en", "a", fluent.length.toLong),
@@ -76,7 +75,7 @@ class QualitySignalsSpec extends SparkSpec {
   }
 
   test("q209 Kneser-Ney matches the closed-form on a hand corpus") {
-    val dir = Files.createTempDirectory("kn").toString
+    val dir = Scratch.dir("kn")
     // corpus "a b a b": cb(a,b)=2 cb(b,a)=1 cu(a)=2 cu(b)=1,
     // n1r(a)=n1r(b)=1, n1l(a)=n1l(b)=1, T=2
     Seq((1L, "a b a b", "en", "s", 7L))
@@ -92,7 +91,7 @@ class QualitySignalsSpec extends SparkSpec {
   }
 
   test("q209 ranks fluent text above unique-bigram gibberish") {
-    val dir = Files.createTempDirectory("kn2").toString
+    val dir = Scratch.dir("kn2")
     val fluent = Array.fill(30)("the cat sat on the mat").mkString(" ")
     val gibberish = (0 until 180).map(i => s"zq$i xv$i").mkString(" ")
     Seq((0L, fluent, "en", "a", fluent.length.toLong),
@@ -105,7 +104,7 @@ class QualitySignalsSpec extends SparkSpec {
   }
 
   test("q214 JS divergence: identical sources 0, disjoint sources ln 2") {
-    val dir = Files.createTempDirectory("js").toString
+    val dir = Scratch.dir("js")
     Seq(
       (1L, "x y z", "en", "A", 5L), (2L, "x y z", "en", "B", 5L),
       (3L, "q r s t", "en", "C", 7L))
@@ -121,7 +120,7 @@ class QualitySignalsSpec extends SparkSpec {
     // misread as "not computed"
     assert(out(("A", "C")) == 6931L && out(("B", "C")) == 6931L)
     // a partially-overlapping pair lands strictly inside (0, ln 2)
-    val dir2 = Files.createTempDirectory("js2").toString
+    val dir2 = Scratch.dir("js2")
     Seq((1L, "x y", "en", "A", 3L), (2L, "x q", "en", "B", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
@@ -130,7 +129,7 @@ class QualitySignalsSpec extends SparkSpec {
   }
 
   test("q213 assortativity: a bipartite star is exactly -1") {
-    val dir = Files.createTempDirectory("assort").toString
+    val dir = Scratch.dir("assort")
     Seq((1L, 11L), (2L, 12L), (3L, 13L), (4L, 14L))
       .toDF("o_orderkey", "o_custkey")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")

@@ -98,7 +98,7 @@ class SimilaritySpec extends SparkSpec {
     val corpus = docs
     val newBatch = corpus.filter(col("doc_id") < 30)
       .select(col("doc_id") + 100000L as "doc_id", col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("dedup_index").toString
+    val dir = Scratch.dir("dedup_index")
     DedupOps.writeDedupIndex(corpus, "doc_id", "text", n = 3, dir)
     val indexed = DedupOps.dedupAgainstIndex(spark, dir, newBatch,
       "doc_id", "text", n = 3, threshold = 0.5)
@@ -131,7 +131,7 @@ class SimilaritySpec extends SparkSpec {
     val corpus = docs.select(col("doc_id"), col("text"))
     val probe = corpus.filter(col("doc_id") < 30)
       .select(col("doc_id") + 500000L as "doc_id", col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("dedup_nshards").toString
+    val dir = Scratch.dir("dedup_nshards")
     // build at 7 shards (≠ any default, coprime with nothing relevant)
     DedupOps.writeDedupIndex(corpus, "doc_id", "text", n = 3, dir,
       nShards = 7)
@@ -169,7 +169,7 @@ class SimilaritySpec extends SparkSpec {
     val corpus = docs.select(col("doc_id"), col("text"))
     val probe = corpus.filter(col("doc_id") < 30)
       .select(col("doc_id") + 500000L as "doc_id", col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("dedup_marker_crash").toString
+    val dir = Scratch.dir("dedup_marker_crash")
     DedupOps.writeDedupIndex(corpus, "doc_id", "text", n = 3, dir,
       nShards = 7)
     assert(IndexLayout.readShardCountMarker(spark, dir) === Some(7))
@@ -195,7 +195,7 @@ class SimilaritySpec extends SparkSpec {
     val corpus = docs
     val probe = corpus.filter(col("doc_id") < 25)
       .select(col("doc_id") + 300000L as "doc_id", col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("dedup_fpreg").toString
+    val dir = Scratch.dir("dedup_fpreg")
     DedupOps.writeDedupIndex(corpus, "doc_id", "text", n = 3, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
@@ -224,7 +224,7 @@ class SimilaritySpec extends SparkSpec {
     val once = corpus.filter(col("doc_id") < 15)
       .select(col("doc_id") + 400000L as "doc_id", col("text"))
     val probe = once.unionAll(once)
-    val dir = java.nio.file.Files.createTempDirectory("dedup_dupids").toString
+    val dir = Scratch.dir("dedup_dupids")
     DedupOps.writeDedupIndex(corpus, "doc_id", "text", n = 3, dir)
     def all(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
@@ -251,7 +251,7 @@ class SimilaritySpec extends SparkSpec {
     val corpus = docs
     val probe = corpus.filter(col("doc_id") < 25)
       .select(col("doc_id") + 400000L as "doc_id", col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("dedup_fpcol").toString
+    val dir = Scratch.dir("dedup_fpcol")
     DedupOps.writeDedupIndex(corpus, "doc_id", "text", n = 3, dir)
     val fpDir = s"$dir/fingerprints"
     val withExtra = spark.read.parquet(fpDir)
@@ -281,10 +281,10 @@ class SimilaritySpec extends SparkSpec {
     val half2 = docs.filter(col("doc_id") % 2 === 1)
     val probe = docs.filter(col("doc_id") < 20)
       .select(col("doc_id") + 200000L as "doc_id", col("text"))
-    val dirInc = java.nio.file.Files.createTempDirectory("dedup_inc").toString
+    val dirInc = Scratch.dir("dedup_inc")
     DedupOps.writeDedupIndex(half1, "doc_id", "text", 3, dirInc)
     DedupOps.appendToDedupIndex(half2, "doc_id", "text", 3, dirInc)
-    val dirAll = java.nio.file.Files.createTempDirectory("dedup_all").toString
+    val dirAll = Scratch.dir("dedup_all")
     DedupOps.writeDedupIndex(docs, "doc_id", "text", 3, dirAll)
     def check(dir: String) = DedupOps.dedupAgainstIndex(spark, dir, probe,
         "doc_id", "text", 3, 0.5)
@@ -297,8 +297,8 @@ class SimilaritySpec extends SparkSpec {
     val live = docs.filter(col("doc_id") % 7 =!= 3)
     val probe = docs.filter(col("doc_id") < 20)
       .select(col("doc_id") + 300000L as "doc_id", col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("dedup_del").toString
-    val liveDir = java.nio.file.Files.createTempDirectory("dedup_live").toString
+    val dir = Scratch.dir("dedup_del")
+    val liveDir = Scratch.dir("dedup_live")
     DedupOps.writeDedupIndex(docs, "doc_id", "text", 3, dir)
     DedupOps.removeFromDedupIndex(
       docs.filter(col("doc_id") % 7 === 3).select("doc_id"), "doc_id", dir)
@@ -342,7 +342,7 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1)))
     val probe = docs.filter(col("doc_id") < 30)
       .select(col("doc_id") + 500000L as "doc_id", col("text"))
-    val base = java.nio.file.Files.createTempDirectory("dedup_stream").toString
+    val base = Scratch.dir("dedup_stream")
     val (dir, ckpt) = (s"$base/index", s"$base/ckpt")
     val parts = rows.groupBy { case (id, _) => (id % 3).toInt }
     DedupOps.writeDedupIndex(parts(0).toSeq.toDF("doc_id", "text"),
@@ -358,7 +358,7 @@ class SimilaritySpec extends SparkSpec {
     def check(d: String, p: org.apache.spark.sql.DataFrame) =
       DedupOps.dedupAgainstIndex(spark, d, p, "doc_id", "text", 3, 0.5)
         .collect().map(_.toSeq).toSet
-    val fullDir = java.nio.file.Files.createTempDirectory("dedup_stream_full").toString
+    val fullDir = Scratch.dir("dedup_stream_full")
     DedupOps.writeDedupIndex(docs, "doc_id", "text", 3, fullDir)
     val streamed = check(dir, probe)
     assert(streamed === check(fullDir, probe))
@@ -369,7 +369,7 @@ class SimilaritySpec extends SparkSpec {
     // delete a doc that only ever arrived through the stream
     val victim = parts(1).map(_._1).min
     DedupOps.removeFromDedupIndex(Seq(victim).toDF("doc_id"), "doc_id", dir)
-    val liveDir = java.nio.file.Files.createTempDirectory("dedup_stream_live").toString
+    val liveDir = Scratch.dir("dedup_stream_live")
     DedupOps.writeDedupIndex(docs.filter(col("doc_id") =!= victim),
       "doc_id", "text", 3, liveDir)
     val afterDelete = check(dir, probe)
@@ -377,7 +377,7 @@ class SimilaritySpec extends SparkSpec {
     // compaction folds segments into the base; re-running it (the
     // crash-recovery path) is a no-op
     DedupOps.compactDedupIndex(spark, dir)
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     // folded tombstone files are retained one fold for in-flight readers
     assert(graft.operators.IndexLayout.liveTombstoneFiles(spark, s"$dir/tombstones").isEmpty)
     assert(check(dir, probe) === afterDelete)
@@ -389,11 +389,11 @@ class SimilaritySpec extends SparkSpec {
     // equal a clean half-corpus index
     DedupOps.writeDedupIndex(parts(2).toSeq.toDF("doc_id", "text"),
       "doc_id", "text", 3, s"$dir/segments/batch=9")
-    assert(IndexLayout.segmentDirs(spark, dir).nonEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).nonEmpty)
     val half = docs.filter(col("doc_id") % 2 === 0)
     DedupOps.writeDedupIndex(half, "doc_id", "text", 3, dir)
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
-    val halfDir = java.nio.file.Files.createTempDirectory("dedup_half").toString
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
+    val halfDir = Scratch.dir("dedup_half")
     DedupOps.writeDedupIndex(half, "doc_id", "text", 3, halfDir)
     assert(check(dir, probe) === check(halfDir, probe))
   }
@@ -405,16 +405,16 @@ class SimilaritySpec extends SparkSpec {
       .select(col("doc_id"), col("text")))
     val probe = docs.filter(col("doc_id") < 30)
       .select(col("doc_id") + 500000L as "doc_id", col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("dedup_race").toString
+    val dir = Scratch.dir("dedup_race")
     DedupOps.writeDedupIndex(parts(0), "doc_id", "text", 3, dir)
     DedupOps.writeDedupIndex(parts(1), "doc_id", "text", 3,
       s"$dir/segments/batch=0")
     // snapshot, then a late segment lands — the race the fold must survive
-    val snapshot = IndexLayout.segmentDirs(spark, dir)
+    val snapshot = IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir))
     DedupOps.writeDedupIndex(parts(2), "doc_id", "text", 3,
       s"$dir/segments/batch=1")
     DedupOps.compactDedupIndexFolding(spark, dir, "doc_id", snapshot)
-    val left = IndexLayout.segmentDirs(spark, dir)
+    val left = IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir))
     assert(left.size == 1 && left.head.endsWith("batch=1"))
     def check(d: String) = DedupOps.dedupAgainstIndex(spark, d, probe,
         "doc_id", "text", 3, 0.5).collect().map(_.toSeq).toSet
@@ -425,7 +425,7 @@ class SimilaritySpec extends SparkSpec {
     // next compaction folds the survivor; the layout is now versioned and
     // appends must land in it
     DedupOps.compactDedupIndex(spark, dir)
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     assert(IndexLayout.currentVersion(spark, s"$dir/shingles").isDefined)
     DedupOps.appendToDedupIndex(parts(3), "doc_id", "text", 3, dir)
     assert(check(dir) ===
@@ -444,7 +444,7 @@ class SimilaritySpec extends SparkSpec {
     val parts = rows.groupBy { case (id, _) => (id % 3).toInt }
     val probe = docs.filter(col("doc_id") < 30)
       .select(col("doc_id") + 500000L as "doc_id", col("text"))
-    val base = java.nio.file.Files.createTempDirectory("dedup_live_compact").toString
+    val base = Scratch.dir("dedup_live_compact")
     val (dir, ckpt) = (s"$base/index", s"$base/ckpt")
     DedupOps.writeDedupIndex(parts(0).toSeq.toDF("doc_id", "text"),
       "doc_id", "text", 3, dir)
@@ -457,20 +457,20 @@ class SimilaritySpec extends SparkSpec {
     // one landed segment — the snapshot discipline means the stream may
     // keep writing segments without pausing
     DedupOps.compactDedupIndex(spark, dir)
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     // the next micro-batch lands a NEW segment on the compacted base
     src.addData(parts(2).toSeq: _*)
     q.processAllAvailable()
     q.stop()
-    assert(IndexLayout.segmentDirs(spark, dir).nonEmpty)
-    val fullDir = java.nio.file.Files.createTempDirectory("dedup_live_full").toString
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).nonEmpty)
+    val fullDir = Scratch.dir("dedup_live_full")
     DedupOps.writeDedupIndex(docs, "doc_id", "text", 3, fullDir)
     def check(d: String) = DedupOps.dedupAgainstIndex(spark, d, probe,
         "doc_id", "text", 3, 0.5).collect().map(_.toSeq).toSet
     assert(check(dir) === check(fullDir))
     // a final compaction folds the post-compaction segment too
     DedupOps.compactDedupIndex(spark, dir)
-    assert(IndexLayout.segmentDirs(spark, dir).isEmpty)
+    assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.nested(dir)).isEmpty)
     assert(check(dir) === check(fullDir))
   }
 
@@ -479,13 +479,13 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     val probe = docs.filter(col("doc_id") < 30)
       .select(col("doc_id") + 500000L as "doc_id", col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("dedup_reshard").toString
+    val dir = Scratch.dir("dedup_reshard")
     DedupOps.writeDedupIndex(docs.filter(col("doc_id") % 2 === 0),
       "doc_id", "text", 3, dir, nShards = 8)
     DedupOps.appendToDedupIndex(docs.filter(col("doc_id") % 2 === 1),
       "doc_id", "text", 3, dir, nShards = 8)
     DedupOps.compactDedupIndex(spark, dir, "doc_id", reshardTo = Some(256))
-    val freshDir = java.nio.file.Files.createTempDirectory("dedup_reshard_f").toString
+    val freshDir = Scratch.dir("dedup_reshard_f")
     DedupOps.writeDedupIndex(docs, "doc_id", "text", 3, freshDir, nShards = 256)
     def postings(d: String) = spark.read.parquet(
         IndexLayout.resolve(spark, s"$d/shingles"))

@@ -129,7 +129,7 @@ class SinksSpec extends SparkSpec {
 
   test("stage write partitions and reads back with pruning") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stage").toString
+    val dir = Scratch.dir("graft-stage")
     val df = Seq(("p1", "ml", 1), ("p2", "ml", 2), ("p3", "ai", 3))
       .toDF("paper_id", "term", "v")
     val path = Sinks.writeStage(df, dir, "Raw V2", "20260101T000000",
@@ -146,6 +146,9 @@ class SinksSpec extends SparkSpec {
 
   test("readLatestRun scans ONLY the latest run's directory (path-level pruning)") {
     import spark.implicits._
+    // a plain temp dir, not Scratch: the plan string below truncates the
+    // scan location at spark.sql.maxMetadataStringLength (100), and the
+    // longer Scratch path would cut `run_ts=r2` off
     val dir = java.nio.file.Files.createTempDirectory("graft-latest").toString
     Seq("r0", "r1", "r2").zipWithIndex.foreach { case (ts, i) =>
       Sinks.writeStage((0 to i).map(v => (v.toLong, ts)).toDF("id", "from"),
@@ -259,7 +262,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("json report sink writes aggregated rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-report")
+    val dir = java.nio.file.Paths.get(Scratch.dir("graft-report"))
     val profile = graft.operators.Profiling.missingProfile(
       Tables(spark, sf, "documents"))
     val path = dir.resolve("reports/profile.json")
@@ -270,7 +273,7 @@ class SinksSpec extends SparkSpec {
 
   test("idempotentBatchAppend: retrying a batch replaces, appending a new one adds") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-idem").toString
+    val dir = Scratch.dir("graft-idem")
     Sinks.idempotentBatchAppend(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir, 0L)
     // retry of batch 0 (possibly after a partial write) — replaces, no dup
     Sinks.idempotentBatchAppend(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir, 0L)
@@ -297,7 +300,7 @@ class SinksSpec extends SparkSpec {
 
   test("z-ordered layout localizes BOTH dimensions per file") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val dir = Scratch.dir("graft-zorder")
     val ev = Tables(spark, sf, "events").select("event_id", "user_id", "value")
     Sinks.writeZOrdered(ev, "user_id", "value", dir, nFiles = 8)
     val perFile = spark.read.parquet(dir)
@@ -319,7 +322,7 @@ class SinksSpec extends SparkSpec {
 
   test("backfillPartitions replaces only the partitions it carries") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-backfill").toString + "/t"
+    val dir = Scratch.dir("graft-backfill") + "/t"
     Seq((1L, "d1", "old"), (2L, "d2", "old"), (3L, "d3", "old"))
       .toDF("id", "day", "v")
       .write.partitionBy("day").parquet(dir)
@@ -339,7 +342,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactParquet merges small files without losing rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val base = Scratch.dir("graft-compact")
     val ev = Tables(spark, sf, "events")
     ev.repartition(32).write.parquet(s"$base/in") // 32 tiny files
     val (before, after) = Sinks.compactParquet(spark, s"$base/in", s"$base/out",

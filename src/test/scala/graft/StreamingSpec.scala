@@ -18,7 +18,7 @@ class StreamingSpec extends SparkSpec {
       .add("value", org.apache.spark.sql.types.DoubleType)
       .add("props", org.apache.spark.sql.types.StringType)
     // the file-stream source needs a directory: stage the single file
-    val dir = java.nio.file.Files.createTempDirectory("graft-events")
+    val dir = java.nio.file.Paths.get(Scratch.dir("graft-events"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -41,7 +41,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("user_id"), col("ts"), col("value"))
     // stage: real events first, then one far-future sentinel per user so
     // every real session closes via the gap path in batch 2
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val dir = Scratch.dir("graft-sess")
     ev.coalesce(1).write.parquet(s"$dir/b1")
     val maxTs = ev.agg(max("ts")).collect()(0).getTimestamp(0)
     val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 86400000L)
@@ -50,7 +50,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("value", lit(0.0))
       .coalesce(1).write.parquet(s"$dir/b2")
     // flat dir with deterministic order: b1 then b2 (mod time)
-    val flat = java.nio.file.Files.createTempDirectory("graft-sess-flat")
+    val flat = java.nio.file.Paths.get(Scratch.dir("graft-sess-flat"))
     def copyPart(sub: String, name: String): Unit = {
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$sub"))
         .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
@@ -86,7 +86,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val ev = Tables(spark, sf, "events")
       .select(col("user_id"), col("ts"), col("value"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-swin").toString
+    val dir = Scratch.dir("graft-swin")
     ev.coalesce(1).write.parquet(s"$dir/b1")
     val maxTs = ev.agg(max("ts")).collect()(0).getTimestamp(0)
     val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 86400000L)
@@ -94,7 +94,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("ts", lit(sentinelTs))
       .withColumn("value", lit(0.0))
       .coalesce(1).write.parquet(s"$dir/b2")
-    val flat = java.nio.file.Files.createTempDirectory("graft-swin-flat")
+    val flat = java.nio.file.Paths.get(Scratch.dir("graft-swin-flat"))
     def copyPart(sub: String, name: String): Unit = {
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$sub"))
         .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
@@ -128,13 +128,13 @@ class StreamingSpec extends SparkSpec {
       .select(col("user_id"), col("ts"), col("event_type"))
     // stage: real events, then one far-future sentinel (a type that is
     // neither A nor B) to push the watermark past every pending window
-    val dir = java.nio.file.Files.createTempDirectory("graft-cep").toString
+    val dir = Scratch.dir("graft-cep")
     ev.coalesce(1).write.parquet(s"$dir/b1")
     val maxTs = ev.agg(max("ts")).collect()(0).getTimestamp(0)
     val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 86400000L)
     Seq((0L, sentinelTs, "view")).toDF("user_id", "ts", "event_type")
       .coalesce(1).write.parquet(s"$dir/b2")
-    val flat = java.nio.file.Files.createTempDirectory("graft-cep-flat")
+    val flat = java.nio.file.Paths.get(Scratch.dir("graft-cep-flat"))
     def copyPart(sub: String, name: String): Unit = {
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$sub"))
         .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
@@ -164,7 +164,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-static broadcast enrichment joins each micro-batch against the dim") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ss").toString + "/in"
+    val dir = Scratch.dir("graft-ss") + "/in"
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     Seq((1L, base, 10L), (2L, base, 20L), (3L, base, 99L))
       .toDF("event_id", "ts", "dim_key").write.parquet(dir)
@@ -183,7 +183,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup drops re-delivered events within the watermark") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = Scratch.dir("graft-stream")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     Seq((1L, base, "click", 1.0), (1L, base, "click", 1.0), (2L, base, "view", 2.0))
       .toDF("event_id", "ts", "event_type", "value")
@@ -198,8 +198,8 @@ class StreamingSpec extends SparkSpec {
   test("stream-stream interval join equals the batch twin") {
     val ev = Tables(spark, sf, "events")
       .filter(col("user_id") < 20) // keep the buffered-state volume small
-    val dirL = java.nio.file.Files.createTempDirectory("graft-ssj-l").toString
-    val dirR = java.nio.file.Files.createTempDirectory("graft-ssj-r").toString
+    val dirL = Scratch.dir("graft-ssj-l")
+    val dirR = Scratch.dir("graft-ssj-r")
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id"))
     val views = ev.filter(col("event_type") === "view")
@@ -229,7 +229,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-sexc").toString
+    val base = Scratch.dir("graft-sexc")
     val bench = Seq("the quick brown", "quick brown fox", "brown fox jumps")
       .toDF("shingle")
     val b1 = Seq(
@@ -266,7 +266,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-decon").toString
+    val base = Scratch.dir("graft-decon")
     val bench = Seq("the quick brown", "quick brown fox", "brown fox jumps")
       .toDF("shingle")
     val b1 = Seq(
@@ -302,7 +302,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-sdsir").toString
+    val base = Scratch.dir("graft-sdsir")
     // static model: learned once from a corpus with a target slice
     val corpus = Seq(
       (0L, "quantum physics entanglement spectrum"),
@@ -337,7 +337,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-skm").toString
+    val base = Scratch.dir("graft-skm")
     // static model: trained once on a seed corpus (two separated blobs)
     val seedPts = (Seq.tabulate(6)(i => (i.toLong, Array(i * 0.01, 0.0)))
       ++ Seq.tabulate(6)(i => (6L + i, Array(5.0 + i * 0.01, 5.0))))
@@ -372,7 +372,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-incdedup").toString
+    val base = Scratch.dir("graft-incdedup")
     val (idx, out, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
 
     val src = MemoryStream[(Long, String)]
@@ -396,7 +396,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-retry").toString
+    val base = Scratch.dir("graft-retry")
     val (idx, out, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     // simulate a committed batch-0 data write whose CHECKPOINT never
     // committed: both sinks hold batch=0, the source will replay it
@@ -421,7 +421,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-incnear").toString
+    val base = Scratch.dir("graft-incnear")
     val (idx, out, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
 
     val textA = "the quick brown fox jumps over the lazy dog while seven " +
@@ -458,7 +458,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-incwin").toString
+    val base = Scratch.dir("graft-incwin")
     val (idx, out, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
 
     val textA = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
@@ -495,7 +495,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-inccdc").toString
+    val base = Scratch.dir("graft-inccdc")
     val (idx, out, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
 
     val rnd = new scala.util.Random(11L)
@@ -529,7 +529,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-winretry").toString
+    val base = Scratch.dir("graft-winretry")
     val (idx, out, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
 
     val textA = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
@@ -575,7 +575,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-curation").toString
+    val base = Scratch.dir("graft-curation")
     val (idx, out, stats, ckpt) =
       (s"$base/index", s"$base/out", s"$base/stats", s"$base/ckpt")
 
@@ -628,7 +628,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-deconretry").toString
+    val base = Scratch.dir("graft-deconretry")
     val (out, ckpt) = (s"$base/out", s"$base/ckpt")
 
     val benchText = "the quick brown fox jumps over the lazy dog again and again"
@@ -681,7 +681,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-incpack").toString
+    val base = Scratch.dir("graft-incpack")
     val (st, out, ckpt) = (s"$base/state", s"$base/out", s"$base/ckpt")
     val b1 = Seq(1L -> 4, 2L -> 7, 3L -> 3, 4L -> 9, 5L -> 2, 6L -> 99)
     val b2 = Seq(11L -> 5, 12L -> 6, 13L -> 1, 14L -> 8)
@@ -704,7 +704,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-incpack2").toString
+    val base = Scratch.dir("graft-incpack2")
     val (st, out, ckpt) = (s"$base/state", s"$base/out", s"$base/ckpt")
     val b0 = Seq(1L -> 4, 2L -> 7, 3L -> 3)
     // simulate a crash mid-batch-0: a PARTIAL assignment write and a
