@@ -295,7 +295,7 @@ object Bm25 {
     */
   private def readTombIds(spark: org.apache.spark.sql.SparkSession,
                           dirs: Seq[String]): Option[DataFrame] =
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+    if (dirs.isEmpty) None else Some(IndexLayout.readParquet(spark, dirs))
 
   /** Whether a stats row PREDATES the `tomb_dirs` list — the pre-upgrade
     * format whose removals appended LOOSE files under `$path/tombstones`
@@ -711,7 +711,7 @@ object Bm25 {
   private def swapStatsFromDocs(spark: org.apache.spark.sql.SparkSession,
                                 path: String): Unit =
     IndexLayout.writeSwap(spark, s"$path/stats",
-      spark.read.parquet(IndexLayout.resolve(spark, s"$path/docs"))
+      IndexLayout.readParquet(spark, Seq(IndexLayout.resolve(spark, s"$path/docs")))
         .agg(count(lit(1)).cast("double").as("n"),
           avg(col("doc_len")).as("avgdl"),
           coalesce(sum(col("doc_len")).cast("double"), lit(0.0)).as("sum_len"),
@@ -768,10 +768,17 @@ object Bm25 {
     }
   }
 
+  /** The one stats row of a stats layout, or None when the layout is
+    * absent or holds no data file (an index that only ever saw streaming
+    * segments, an orphan version dir from a crashed swap). Any other
+    * failure propagates: a stats row read as missing would merge the
+    * next append or removal against zeros and drop the base's (n,
+    * avgdl) and its `tomb_dirs` delete set.
+    */
   private def readStatsRow(spark: org.apache.spark.sql.SparkSession,
                            dir: String): Option[org.apache.spark.sql.Row] =
-    try Some(spark.read.parquet(dir).head())
-    catch { case _: Throwable => None }
+    if (!IndexLayout.holdsData(spark, dir)) None
+    else Some(IndexLayout.readParquet(spark, Seq(dir)).head())
 
   /** All per-layout stats rows in ONE job instead of a head() job per
     * layout — a streamed index holds base + one stats row per live

@@ -87,7 +87,7 @@ object BqIndex {
     * model directory — the [[Snapshot]] read path.
     */
   private def readModelAt(spark: SparkSession, path: String): Model = {
-    val rows = spark.read.parquet(path)
+    val rows = IndexLayout.readParquet(spark, Seq(path))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)
     require(rows.nonEmpty, s"$path holds no model rows — corrupt index")

@@ -120,7 +120,7 @@ object Hybrid {
                                 nShards: Int): DataFrame = {
     val bmDel =
       if (bm.tombSources.isEmpty) None
-      else Some(spark.read.parquet(bm.tombSources: _*).toDF("__del"))
+      else Some(IndexLayout.readParquet(spark, bm.tombSources).toDF("__del"))
     val bqDel = IndexLayout.readTombstones(spark, bq.tombDir)
       .map(_.toDF("__del"))
     val del = (bmDel.toSeq ++ bqDel.toSeq)

@@ -274,14 +274,8 @@ object Sinks {
       val path = new org.apache.hadoop.fs.Path(dir)
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // recursive: partitioned layouts keep their files in subdirectories
-      val it = fs.listFiles(path, true)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) out += f
-      }
-      out.toSeq
+      graft.operators.IndexLayout.walkFiles(fs, path)
+        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
     }
     val files = listParquet(inDir)
     val totalBytes = files.map(_.getLen).sum

@@ -672,6 +672,34 @@ class Bm25Spec extends SparkSpec {
     assert(rows(dir) === rows(refDir))
   }
 
+  test("a corrupt stats file fails a removal loudly and leaves the stats manifest unchanged") {
+    val docs = Seq(
+      (1L, "alpha beta"),
+      (2L, "alpha gamma"),
+      (3L, "beta gamma")).toDF("doc_id", "text")
+    val dir = Scratch.dir("bm25_badstats")
+    Bm25.writeIndex(docs, "doc_id", "text", dir, nShards = 8)
+    Bm25.removeFromIndex(Seq(2L).toDF("doc_id"), "doc_id", dir)
+    val manifest = java.nio.file.Paths.get(s"$dir/stats._CURRENT")
+    val before = java.nio.file.Files.readAllBytes(manifest).toSeq
+    val statsDir = new java.io.File(IndexLayout.resolve(spark, s"$dir/stats"))
+    val parts = statsDir.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(parts.length == 1)
+    // garbage bytes where the footer was, and no checksum to catch it
+    // first: the parquet reader itself must be what fails
+    java.nio.file.Files.write(parts.head.toPath, Array.fill[Byte](64)(7))
+    new java.io.File(statsDir, s".${parts.head.getName}.crc").delete()
+    // read as "no stats row", the removal would merge against zeros and
+    // swap in a row without the base's n/avgdl or the first removal's
+    // tomb_dirs entry
+    intercept[Exception] {
+      Bm25.removeFromIndex(Seq(3L).toDF("doc_id"), "doc_id", dir)
+    }
+    assert(java.nio.file.Files.readAllBytes(manifest).toSeq == before)
+    assert(IndexLayout.listLease(spark, dir).isEmpty,
+      "the failed removal released its lease")
+  }
+
   test("a fold retires segments with one cycle of grace: a pre-fold reader's files survive it") {
     val dir = Scratch.dir("bm25_segret")
     Bm25.writeIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"))

@@ -362,14 +362,7 @@ class BqIndexSpec extends SparkSpec {
     val codeBytes = BqIndex.codeTableBytes(spark, dir)
     val vecDir = Scratch.dir("bq_vectors")
     c.write.mode("overwrite").parquet(vecDir)
-    val p = new org.apache.hadoop.fs.Path(vecDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var vecBytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) vecBytes += f.getLen
-    }
+    val vecBytes = IndexLayout.parquetBytes(spark, vecDir)
     assert(codeBytes > 0 && codeBytes * 5 < vecBytes,
       s"code table $codeBytes B should be far below vectors $vecBytes B")
   }

@@ -162,6 +162,210 @@ class IndexLayoutSpec extends SparkSpec {
     assert(IndexLayout.hasRows(spark, dir))
   }
 
+  /** A Spark-readable partitioned table at `dir` plus what a lifecycle
+    * table can carry beside its data: `_SUCCESS` and `.crc` files, an
+    * in-flight `_temporary/…` part, parquet files in hidden and
+    * `_`-prefixed dirs, hidden files and empty dirs.
+    */
+  private def litteredTable(dir: String): Unit = {
+    (0L until 40L).toDF("id").withColumn("k", col("id") % 3)
+      .repartition(2).write.partitionBy("k").parquet(dir)
+    val part = new java.io.File(s"$dir/k=0").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    def put(rel: String): Unit = {
+      val to = java.nio.file.Paths.get(s"$dir/$rel")
+      java.nio.file.Files.createDirectories(to.getParent)
+      java.nio.file.Files.copy(part, to)
+    }
+    put("_temporary/0/_temporary/attempt_0/k=1/part-00009.parquet")
+    put(".hidden/part-00007.parquet")
+    put("_hidden/part-00008.parquet")
+    put("k=1/.part-00006.parquet")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/k=2/.notes.txt"),
+      "not parquet".getBytes)
+    Seq("k=7", ".hidden/empty", "_temporary/1", "deep/er/est").foreach { d =>
+      assert(new java.io.File(s"$dir/$d").mkdirs())
+    }
+  }
+
+  /** (data-file count, data-file bytes) under `dir` by the recursive
+    * `LocatedFileStatus` listing — the reference the walk must equal.
+    */
+  private def listedParquet(dir: String): (Int, Long) = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    var n = 0
+    var bytes = 0L
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.getPath.getName.endsWith(".parquet")) { n += 1; bytes += f.getLen }
+    }
+    (n, bytes)
+  }
+
+  test("the listStatus walk counts exactly what a recursive listFiles counts") {
+    val dir = freshDir("ixl_walk")
+    litteredTable(dir)
+    // Spark reads the littered table (its listing skips every extra),
+    // so hasRows answers as before: data files exist and rows do
+    assert(spark.read.parquet(dir).count() == 40L)
+    assert(IndexLayout.hasRows(spark, dir))
+    val withData = listedParquet(dir)
+    assert(withData._1 == 2 * 3 + 4, withData) // 2 tasks x 3 keys + 4 littered
+    assert(IndexLayout.dataFileCount(spark, dir) == withData._1)
+    assert(IndexLayout.parquetBytes(spark, dir) == withData._2)
+    // files Spark could not read count alike: non-parquet files, a
+    // deeper partition level, parquet at the root
+    Seq("k=0/notes.txt", "notes.txt", "k=1/sub=2/x.parquet").foreach { f =>
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(s"$dir/$f").getParent)
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$f"),
+        "x".getBytes)
+    }
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/k=1/.part-00006.parquet"),
+      java.nio.file.Paths.get(s"$dir/root.parquet"))
+    val all = listedParquet(dir)
+    assert(all._1 == withData._1 + 2, all)
+    assert(IndexLayout.dataFileCount(spark, dir) == all._1)
+    assert(IndexLayout.parquetBytes(spark, dir) == all._2)
+    // a single file, an absent path
+    val one = s"$dir/root.parquet"
+    assert(IndexLayout.dataFileCount(spark, one) == 1)
+    assert(IndexLayout.parquetBytes(spark, one) == listedParquet(one)._2)
+    assert(IndexLayout.dataFileCount(spark, s"$dir/absent") == 0)
+    assert(IndexLayout.parquetBytes(spark, s"$dir/absent") == 0L)
+    assert(!IndexLayout.hasRows(spark, s"$dir/absent"))
+    // no data file anywhere: _SUCCESS, .crc, empty and hidden dirs only
+    val bare = freshDir("ixl_walk_bare")
+    Seq(1L).toDF("id").write.parquet(bare)
+    new java.io.File(bare).listFiles()
+      .filter(_.getName.endsWith(".parquet")).foreach(_.delete())
+    assert(new java.io.File(s"$bare/_temporary/0").mkdirs())
+    assert(new java.io.File(s"$bare/k=1").mkdirs())
+    assert(listedParquet(bare)._1 == 0)
+    assert(IndexLayout.dataFileCount(spark, bare) == 0)
+    assert(!IndexLayout.hasRows(spark, bare))
+  }
+
+  test("the walk never builds a LocatedFileStatus and lists only what it reaches") {
+    val dir = freshDir("ixl_walk_fs")
+    litteredTable(dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    // a directly constructed instance, not the FileSystem cache: every
+    // located listing throws, every plain one is counted
+    var listings = 0
+    val fs = new org.apache.hadoop.fs.LocalFileSystem {
+      override def listFiles(f: org.apache.hadoop.fs.Path, recursive: Boolean) =
+        throw new UnsupportedOperationException(s"listFiles $f")
+      override def listLocatedStatus(f: org.apache.hadoop.fs.Path) =
+        throw new UnsupportedOperationException(s"listLocatedStatus $f")
+      override def listStatus(f: org.apache.hadoop.fs.Path) = {
+        listings += 1
+        super.listStatus(f)
+      }
+    }
+    fs.initialize(java.net.URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    try {
+      val files = IndexLayout.walkFiles(fs, root)
+        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+      val ref = listedParquet(dir)
+      assert(files.size == ref._1)
+      assert(files.map(_.getLen).sum == ref._2)
+      // full-path string order, the order Spark's schema inference sorts by
+      val names = files.map(_.getPath.toString)
+      assert(names == names.sorted)
+      // one listing per directory: the root, k=0/1/2/7, .hidden and
+      // .hidden/empty, _hidden, the six under _temporary, deep/er/est
+      assert(listings == 1 + 4 + 2 + 1 + 6 + 3, listings)
+      // stopping at the first data file lists only the dirs on the way
+      // there: the root, `.hidden` (which sorts first) and its `empty/`,
+      // which sorts before its part file
+      listings = 0
+      assert(IndexLayout.walkFiles(fs, root)
+        .exists(_.getPath.getName.endsWith(".parquet")))
+      assert(listings == 3, listings)
+    } finally fs.close()
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran. A marker
+    * job afterwards flushes the listener queue, which delivers events in
+    * order, so every job `body` started has been counted by then.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val marker = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          flushed.countDown()
+        else if (flushed.getCount > 0) seen.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      spark.sparkContext.setJobGroup(marker, "flush", interruptOnCancel = false)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, seen.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("readParquet resolves the schema on the driver: the inferred frame, no job") {
+    val root = Scratch.dir("ixl_readpq")
+    val base = s"$root/base"
+    (0L until 30L).toDF("id").withColumn("v", col("id") * 2)
+      .withColumn("shard", (col("id") % 4).cast("int"))
+      .write.partitionBy("shard").parquet(base)
+    val segs = (0 until 3).map { b =>
+      val d = s"$root/segments/batch=$b/t"
+      Seq((100L + b, 7L, b)).toDF("id", "v", "shard").write.parquet(d)
+      d
+    }
+    val tomb = s"$root/tombstones"
+    Seq(1L, 2L).toDF("id").write.parquet(tomb)
+    Seq(3L).toDF("id").write.mode("append").parquet(tomb)
+    // one dir, two schemas: inference takes the first file in path
+    // order, and so must the driver
+    val ragged = s"$root/ragged"
+    Seq((1.0, 2.0)).toDF("n", "avgdl").write.parquet(ragged)
+    Seq((1.0, 2.0, 3.0)).toDF("n", "avgdl", "sum_len")
+      .write.mode("append").parquet(ragged)
+    def check(paths: Seq[String], recursive: Boolean = false): Unit = {
+      val (df, jobs) = jobsDuring(IndexLayout.readParquet(spark, paths, recursive))
+      assert(jobs == 0, s"$jobs jobs to resolve $paths")
+      val reader =
+        if (recursive) spark.read.option("recursiveFileLookup", "true")
+        else spark.read
+      val ref = reader.parquet(paths: _*)
+      assert(df.schema == ref.schema, paths)
+      assert(df.collect().map(_.toSeq).toSet == ref.collect().map(_.toSeq).toSet)
+    }
+    check(Seq(base))
+    assert(IndexLayout.readParquet(spark, Seq(base)).columns.toSeq ==
+      Seq("id", "v", "shard"), "partition discovery still appends the key")
+    check(Seq(segs.head))
+    check(segs, recursive = true)
+    check(IndexLayout.tombstoneFiles(spark, tomb))
+    check(Seq(ragged))
+    // what the driver cannot resolve is Spark's own error, unchanged
+    def sameError(path: String): Unit = {
+      val got = intercept[org.apache.spark.sql.AnalysisException](
+        IndexLayout.readParquet(spark, Seq(path)))
+      val want = intercept[org.apache.spark.sql.AnalysisException](
+        spark.read.parquet(path))
+      assert(got.getMessage == want.getMessage)
+    }
+    sameError(s"$root/absent")
+    val bare = s"$root/bare"
+    assert(new java.io.File(s"$bare/_temporary/0").mkdirs())
+    assert(new java.io.File(s"$bare/_SUCCESS").createNewFile())
+    sameError(bare)
+  }
+
   test("kill before the flip: readers still answer from the old version") {
     val dir = freshDir("ixl_kill")
     Seq(1L, 2L).toDF("id").write.parquet(dir)
