@@ -39,23 +39,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed to Int ONCE with a validated default: the value is
-    // interpolated unquoted into the detail JSON, so a non-numeric env
-    // string would emit malformed JSON
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .filter(_ > 0).getOrElse(4)
+    val cpus = SparkEntry.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/root/repo/BENCH_DETAIL.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
     // WindowExec's "No Partition Defined" warning fires for every
     // deliberate global-share/cumulative window (hundreds of lines per
     // sweep — enough to bury a real warning). Those sites are

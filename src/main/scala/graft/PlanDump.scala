@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (optimization rounds): dump `.explain("formatted")` for named
   * registered queries to text files — the committed plan evidence under
   * `plans/rNN/`. Usage:
@@ -20,16 +18,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     System.setProperty("graft.sf.dir", sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(SparkEntry.cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

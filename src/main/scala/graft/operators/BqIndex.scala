@@ -381,12 +381,13 @@ object BqIndex {
     * ([[IndexLayout.maintenancePlan]]) — pure read, no lease.
     * `bitFlipBps` is [[maintenanceAudit]]'s measurement: supply it and
     * the plan gates `retrain` (= rebuild via [[writeIndex]]) on the
-    * measured flip rate, the q241 "measure, then act" contract.
+    * measured flip rate, the q241 "measure, then act" contract. It is
+    * evaluated only while the lease is free.
     */
   def maintenancePlan(spark: SparkSession, path: String,
                       t: IndexLayout.MaintenanceThresholds =
                         IndexLayout.MaintenanceThresholds(),
-                      bitFlipBps: Option[Long] = None)
+                      bitFlipBps: => Option[Long] = None)
       : IndexLayout.MaintenancePlan =
     IndexLayout.maintenancePlan(spark, paths(path), t,
       bitFlipBps = bitFlipBps)
@@ -427,20 +428,20 @@ object BqIndex {
     * the caller's live vector table — the rerank's source of truth) and
     * fold/compact is [[compactIndex]]. Searchers re-read the rebuilt
     * model via [[readModel]], so nothing is returned beyond the outcome.
+    * Under a held lease the audit does not run.
     */
   def maintain(spark: SparkSession, path: String, corpus: DataFrame,
                idCol: String, qvCol: String,
                t: IndexLayout.MaintenanceThresholds =
                  IndexLayout.MaintenanceThresholds())
-      : IndexLayout.MaintenanceOutcome = {
-    val bps = maintenanceAudit(spark, path, corpus, qvCol)
-    IndexLayout.cycle(maintenancePlan(spark, path, t, bitFlipBps = Some(bps)),
+      : IndexLayout.MaintenanceOutcome =
+    IndexLayout.cycle(maintenancePlan(spark, path, t,
+        bitFlipBps = Some(maintenanceAudit(spark, path, corpus, qvCol))),
       (), () => compactIndex(spark, path, idCol),
       Some(() => { writeIndex(corpus, idCol, qvCol, path); () }))._1
-  }
 
-  /** Byte sizes (code table, one segment-inclusive sweep) — the scale
-    * probe's evidence that the pre-rank reads ≪ vector bytes.
+  /** Byte sizes (code table, one segment-inclusive sweep): the evidence
+    * that the pre-rank reads ≪ vector bytes.
     */
   def codeTableBytes(spark: SparkSession, path: String): Long = {
     val (base, segs) = IndexLayout.liveParts(spark, paths(path), "codes")

@@ -1196,11 +1196,12 @@ object DedupOps {
     * through its cached DISTINCT gram set. Only that gram set is persisted
     * (benchmark-sized, bounded); caching the corpus-sized gram table
     * instead measurably collapses under memory pressure at 10× corpus
-    * (ScaleProbe: 1.6 s → 10.5 s from cache spill). The gram set is
-    * broadcast only while provably small: past `maxBroadcastRows` it falls
-    * back to a shuffled hash join — a corpus-proportional broadcast OOMs
-    * the driver. The eager `bench.count()` that materializes the cache is
-    * also what decides the join strategy, so the size check is free.
+    * (PERF.md "Round-4 scale fixes": 1.6 s → 10.5 s from cache spill).
+    * The gram set is broadcast only while provably small: past
+    * `maxBroadcastRows` it falls back to a shuffled hash join — a
+    * corpus-proportional broadcast OOMs the driver. The eager
+    * `bench.count()` that materializes the cache is also what decides
+    * the join strategy, so the size check is free.
     */
   def decontaminate(df: DataFrame, idCol: String, textCol: String, n: Int,
                     benchPred: org.apache.spark.sql.Column,

@@ -94,7 +94,7 @@ object IndexLayout {
     */
   /** Driver-side manifest probes since JVM start — each is ≥1 filesystem
     * round-trip (an exists + maybe a read), i.e. ≥1 object-store API call
-    * in production. Counted so IndexScaleProbeSpec can assert the
+    * in production. Counted so IndexLayoutSpec can assert the
     * multi-layout read path stays O(1) manifest probes per sub-table as
     * the segment count grows (segments are never versioned, so resolving
     * each one was pure chatter).
@@ -1219,7 +1219,8 @@ object IndexLayout {
     *     directories come back as the key column.
     *   - All segments are one scan: N segments cost one listing, footer
     *     and scan setup instead of N (the per-segment fixed cost was the
-    *     measured LSM read-amplification slope, SegProbe). Two or more
+    *     measured LSM read-amplification slope, PERF.md "Round 6:
+    *     streaming index segments"). Two or more
     *     parts read with `recursiveFileLookup`: a multi-root read would
     *     otherwise attempt partition discovery over the shared
     *     `segments/batch=N` ancestors and fail with
@@ -1400,14 +1401,24 @@ object IndexLayout {
     * the vector layouts — the planner cannot (and should not) run the
     * audit itself from FS metadata, so retrain is recommended only when
     * the caller supplies a measurement.
+    *
+    * The measurements (`tombstoneBatches`, `drift`, `bitFlipBps`) are
+    * by-name and taken only while no maintainer holds the lease. Each is
+    * Spark work — BM25's stats read, a drift audit's fresh training pass
+    * over every live row — and under a held lease no cycle can act on
+    * it. Such a plan reports the lease and the metadata: no retrain is
+    * gated, and `tombstoneBatches` is the tombstone dir's file count
+    * (0 for BM25's batch directories).
     */
   def maintenancePlan(spark: SparkSession, p: Paths,
                       t: MaintenanceThresholds,
-                      tombstoneBatches: Option[Int] = None,
-                      drift: Option[(Long, Long)] = None,
-                      bitFlipBps: Option[Long] = None): MaintenancePlan = {
+                      tombstoneBatches: => Option[Int] = None,
+                      drift: => Option[(Long, Long)] = None,
+                      bitFlipBps: => Option[Long] = None): MaintenancePlan = {
+    val measured = listLease(spark, p.root).isEmpty
+    def measure[A](m: => Option[A]): Option[A] = if (measured) m else None
     val (liveSegs, folded) = segmentListing(spark, p.segRoot)
-    val tombs = tombstoneBatches
+    val tombs = measure(tombstoneBatches)
       .getOrElse(liveTombstoneFiles(spark, p.tombDir).size)
     val dataDir = p.table(p.dataTable)
     val files = dataFileCount(spark, dataDir)
@@ -1425,14 +1436,14 @@ object IndexLayout {
       actions += (("compact",
         s"$files data files >= ${t.maxDataFiles}: append-accumulated " +
           "small files inflate scan task count — compact to re-cluster"))
-    drift.foreach { case (cur, retrained) =>
+    measure(drift).foreach { case (cur, retrained) =>
       if (retrained > 0 && (cur - retrained) * 10000L > retrained * t.maxDriftBps)
         actions += (("retrain",
           s"mean quantization error $cur vs $retrained after retrain " +
             s"(> ${t.maxDriftBps} bps gap): the cell structure no longer " +
             "reflects the corpus — retrainCompact"))
     }
-    bitFlipBps.foreach { bps =>
+    measure(bitFlipBps).foreach { bps =>
       if (bps > t.maxBitFlipBps)
         actions += (("retrain",
           s"$bps bps of code bits flip under a freshly trained threshold " +
@@ -1462,8 +1473,7 @@ object IndexLayout {
     }
 
   /** Total parquet data-file bytes under `dir` (recursive, through
-    * [[walkFiles]]; 0 when the directory does not exist) — the probes'
-    * byte-accounting primitive.
+    * [[walkFiles]]; 0 when the directory does not exist).
     */
   def parquetBytes(spark: SparkSession, dir: String): Long = {
     val p = new org.apache.hadoop.fs.Path(dir)

@@ -24,12 +24,12 @@ object IvfIndex {
   }
 
   /** Past this nlist the literal-argmin expression's codegen tree cost
-    * dominates the build (measured in AnnScaleProbe: 19 s at nlist=80 vs
-    * 1.5 s at 16 — tree size, not data); a closure UDF holding the
-    * centroid matrix does the same arithmetic in a tight loop with O(1)
-    * plan size. The arithmetic is mirrored exactly — same ‖c‖²−2·x·c
-    * form, same left-to-right double accumulation as DotProductExpr,
-    * ties → lowest cell — so both regimes assign identically
+    * dominates the build (PERF.md "Round 6: ANN index layout": 19 s at
+    * nlist=80 vs 1.5 s at 16 — tree size, not data); a closure UDF
+    * holding the centroid matrix does the same arithmetic in a tight
+    * loop with O(1) plan size. The arithmetic is mirrored exactly —
+    * same ‖c‖²−2·x·c form, same left-to-right double accumulation as
+    * DotProductExpr, ties → lowest cell — so both regimes assign identically
     * (spec-verified against a driver-side recompute).
     */
   private val MaxLiteralCells = 32
@@ -312,12 +312,13 @@ object IvfIndex {
     * layout ([[IndexLayout.maintenancePlan]]; also serves IvfPq — same
     * sibling-path conventions). `drift` is the q236 audit's
     * (currentMeanD2, retrainedMeanD2): supply it and the plan gates
-    * `retrain` on the measured gap. Pure read, no lease.
+    * `retrain` on the measured gap; it is evaluated only while the lease
+    * is free. Pure read, no lease.
     */
   def maintenancePlan(spark: org.apache.spark.sql.SparkSession, path: String,
                       t: IndexLayout.MaintenanceThresholds =
                         IndexLayout.MaintenanceThresholds(),
-                      drift: Option[(Long, Long)] = None)
+                      drift: => Option[(Long, Long)] = None)
       : IndexLayout.MaintenancePlan =
     IndexLayout.maintenancePlan(spark, paths(path), t, drift = drift)
 
@@ -356,19 +357,19 @@ object IvfIndex {
     * `iters` drives BOTH the audit's fresh train and a fired retrain,
     * so the post-retrain audit degenerates to equality (the quiet
     * state the soak loop asserts). Returns the outcome and the model
-    * to search with from here on — NEW iff "retrain" acted.
+    * to search with from here on — NEW iff "retrain" acted. Under a
+    * held lease the audit does not run.
     */
   def maintain(spark: org.apache.spark.sql.SparkSession, path: String,
                idCol: String, embCol: String, model: Model,
                t: IndexLayout.MaintenanceThresholds =
                  IndexLayout.MaintenanceThresholds(),
-               iters: Int = 2): (IndexLayout.MaintenanceOutcome, Model) = {
-    val drift = maintenanceAudit(spark, path, idCol, embCol, model, iters)
-    IndexLayout.cycle(maintenancePlan(spark, path, t, drift = Some(drift)),
+               iters: Int = 2): (IndexLayout.MaintenanceOutcome, Model) =
+    IndexLayout.cycle(maintenancePlan(spark, path, t, drift =
+        Some(maintenanceAudit(spark, path, idCol, embCol, model, iters))),
       model, () => compactIndex(spark, path, idCol),
       Some(() => retrainCompact(spark, path, idCol, embCol,
         k = model.centroids.length, iters = iters)))
-  }
 
   /** Mean L2²-to-nearest-centroid over `df`, ×1e6 as a long (0 for an
     * empty table). Audit-only — see [[maintenanceAudit]].

@@ -237,19 +237,21 @@ object IvfPq {
     * retrain. Then [[IndexLayout.cycle]] with [[retrainCompact]] and
     * `IvfIndex.compactIndex` (the layouts share the (cell, id, …)
     * shape). Returns the outcome and the model to search with — NEW iff
-    * "retrain" acted.
+    * "retrain" acted. Under a held lease neither audit runs.
     */
   def maintain(spark: SparkSession, path: String,
                idCol: String, embCol: String, model: Model,
                t: IndexLayout.MaintenanceThresholds =
                  IndexLayout.MaintenanceThresholds(),
                iters: Int = 2): (IndexLayout.MaintenanceOutcome, Model) = {
-    val coarse = IvfIndex.maintenanceAudit(spark, path, idCol, embCol,
-      model.coarse, iters)
-    val recon = maintenanceAudit(spark, path, idCol, embCol, model, iters)
-    def rel(p: (Long, Long)): Double =
-      if (p._2 <= 0L) 0.0 else (p._1 - p._2).toDouble / p._2
-    val drift = if (rel(coarse) >= rel(recon)) coarse else recon
+    def drift: (Long, Long) = {
+      def rel(p: (Long, Long)): Double =
+        if (p._2 <= 0L) 0.0 else (p._1 - p._2).toDouble / p._2
+      val coarse = IvfIndex.maintenanceAudit(spark, path, idCol, embCol,
+        model.coarse, iters)
+      val recon = maintenanceAudit(spark, path, idCol, embCol, model, iters)
+      if (rel(coarse) >= rel(recon)) coarse else recon
+    }
     IndexLayout.cycle(
       IvfIndex.maintenancePlan(spark, path, t, drift = Some(drift)), model,
       () => IvfIndex.compactIndex(spark, path, idCol),

@@ -329,7 +329,7 @@ object Similarity {
     * - **Tiny vocab** (templated/synthetic corpora, ≤ [[DenseVocabMax]]
     *   terms): the vectors live in a |vocab|-dimensional DENSE space
     *   where every pair shares hot terms, so ANY index degenerates to
-    *   near-N² candidate ROWS through a shuffle (ScaleProbe measured
+    *   near-N² candidate ROWS through a shuffle (PERF.md "Round-4e" measured
     *   315M join rows for 5,000 docs on a 31-term corpus). Exact
     *   all-pairs is inherently Ω(N²·d) there — the cheapest place to pay
     *   it is flops, not shuffled rows: densify each doc to an

@@ -87,7 +87,9 @@ object SimilarityQueries {
     // before exact verification, making equality with the q24 pair set
     // STRUCTURAL under any reseeded corpus. SimilaritySpec pins this with a
     // planted J=0.50 pair and randomized corpora; pure-LSH recall is
-    // spec'd separately and ScaleProbe exercises the unguarded path.
+    // spec'd separately, and perfbench's `index_ingest` runs the unguarded
+    // `minhashLshPairs` (PERF.md "Round 5: regeneration-robustness audit"
+    // prices the unguarded miss rate).
     QDef("q23_minhash_lsh",
       (s, d) => DedupOps.minhashLshPairs(docs(s, d), "doc_id", "text",
           n = 3, threshold = 0.5, k = 32, bands = 16, exactRecallGuard = true)
@@ -1434,7 +1436,8 @@ object SimilarityQueries {
     // as q237 — the in-memory rung — and the SAME oracle: the persisted
     // path must be row-identical (the q226/q227 pattern applied to BQ).
     // Lifecycle (append / delete / segments / compaction) is pinned in
-    // BqIndexSpec; code-table-bytes ≪ vector-bytes in IndexScaleProbe.
+    // BqIndexSpec; code-table bytes ≪ vector bytes in PERF.md "Round 10:
+    // every gate row hash-checked; BQ persisted".
     QDef("q90_bq_indexed",
       (s, d) => {
         val corpus = embs(s, d).select(col("vec_id"),

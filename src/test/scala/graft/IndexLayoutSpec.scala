@@ -847,13 +847,15 @@ class IndexLayoutSpec extends SparkSpec {
       assert(IndexLayout.segmentDirs(spark, p).size == 1, l.name)
       assert(exists(p.tombDir), l.name)
 
-      // a held lease: maintain reports the skip and touches nothing
+      // a held lease: maintain reports the skip, touches nothing and
+      // runs no Spark job (no drift audit, no stats read)
       IndexLayout.acquireLease(spark, p.root, "spec-holder")
       try {
         val held = files(dir)
-        val out = l.maintain(dir,
-          IndexLayout.MaintenanceThresholds(maxLiveSegments = 1))
+        val (out, jobs) = jobsDuring(l.maintain(dir,
+          IndexLayout.MaintenanceThresholds(maxLiveSegments = 1)))
         assert(out.skippedOnLease, s"${l.name}: $out")
+        assert(jobs == 0, s"${l.name}: $jobs Spark jobs under a held lease")
         assert(files(dir) === held, l.name)
       } finally IndexLayout.releaseLease(spark, p.root)
 
