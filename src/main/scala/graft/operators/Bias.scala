@@ -15,13 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Bias {
 
-  /** A1/A2: mean of `valCol` by slice, ordered desc (MetricFrame shape). */
-  def groupMeans(df: DataFrame, sliceCol: String, valCol: String): DataFrame =
-    df.groupBy(col(sliceCol))
-      .agg(round(avg(col(valCol)), 6).as("avg_value"),
-        count(lit(1)).cast("long").as("n"))
-      .orderBy(col("avg_value").desc, col(sliceCol))
-
   /** A3: disparity stats over the group means: max, min, ratio (with the
     * reference's 1e-6 epsilon), difference, and the threshold flag.
     */

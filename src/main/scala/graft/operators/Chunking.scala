@@ -173,10 +173,6 @@ object Chunking {
         col("chunk.end_char").as("end_char"))
   }
 
-  /** Reference token estimate as a column (for budget accounting). */
-  def estTokensCol(c: Column): Column =
-    greatest(floor(length(c) / 4), lit(1)).cast("int")
-
   /** Catalyst Generator form of the chunker (SURVEY.md §4.3(b)): a true
     * UDTF — rows stream out of `eval` without materializing the
     * per-document chunk array the UDF+explode form builds. Same `chunk`

@@ -47,6 +47,26 @@ object DedupOps {
 
   private val tokenRe = java.util.regex.Pattern.compile("[a-z0-9]+")
 
+  /** The shingle tokenizer: lowercase alnum runs of `text`. */
+  private def tokenize(text: String): scala.collection.mutable.ArrayBuffer[String] = {
+    val m = tokenRe.matcher(text.toLowerCase(java.util.Locale.ROOT))
+    val toks = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (m.find()) toks += m.group()
+    toks
+  }
+
+  /** One document's distinct word `n`-gram shingles, in first-occurrence
+    * order; empty for null text or fewer than `n` tokens. The body of the
+    * shingle UDF and of the driver regimes, so both see the same sets.
+    */
+  private def shingleSet(text: String, n: Int): Array[String] =
+    if (text == null) Array.empty[String]
+    else {
+      val toks = tokenize(text)
+      if (toks.length < n) Array.empty[String]
+      else toks.sliding(n).map(_.mkString(" ")).toArray.distinct
+    }
+
   /** Distinct word n-gram shingles per document: (id, shingle) rows.
     *
     * Implemented as a linear-scan UDF rather than
@@ -66,16 +86,7 @@ object DedupOps {
     */
   def shingleArrays(df: DataFrame, idCol: String, textCol: String,
                     n: Int): DataFrame = {
-    val gen = udf { text: String =>
-      if (text == null) Array.empty[String]
-      else {
-        val m = tokenRe.matcher(text.toLowerCase(java.util.Locale.ROOT))
-        val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (m.find()) toks += m.group()
-        if (toks.length < n) Array.empty[String]
-        else toks.sliding(n).map(_.mkString(" ")).toArray.distinct
-      }
-    }
+    val gen = udf { text: String => shingleSet(text, n) }
     // NOTE (round 12): a conditional "spread to cores" repartition was
     // inserted here (the single-row-group bench files make every scan
     // stage one task, so this UDF ran single-threaded), MEASURED over
@@ -146,11 +157,9 @@ object DedupOps {
   def duplicatePassages(df: DataFrame, idCol: String, textCol: String,
                         winTokens: Int = 5): DataFrame = {
     val gen = udf { text: String =>
-      val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-      if (text != null) {
-        val m = tokenRe.matcher(text.toLowerCase(java.util.Locale.ROOT))
-        while (m.find()) toks += m.group()
-      }
+      val toks =
+        if (text == null) scala.collection.mutable.ArrayBuffer.empty[String]
+        else tokenize(text)
       if (toks.length < winTokens) Array.empty[String]
       else toks.sliding(winTokens).map(_.mkString(" ")).toArray
     }
@@ -447,7 +456,9 @@ object DedupOps {
       .join(corpusDf.select(
           graft.functions.TextFns.fingerprint(col(textCol)).as("__fp")).distinct(),
         Seq("__fp"), "left_semi")
-      .select(col(idCol)).withColumn("__exact", lit(1L))
+      // distinct: an increment repeating an id must not multiply its rows
+      // in the left join below (one row per new doc, as dedupAgainstIndex)
+      .select(col(idCol)).distinct().withColumn("__exact", lit(1L))
     val shNew = shingles(newDf, idCol, textCol, n).cache()
     val shOld = shingles(corpusDf, idCol, textCol, n).cache()
     val sizesNew = shNew.groupBy(col(idCol)).agg(count(lit(1)).as("sz_a"))
@@ -481,6 +492,15 @@ object DedupOps {
   private def shingleShard(s: String, nShards: Int): Int =
     math.floorMod(s.hashCode, nShards)
 
+  /** Increment-doc count at or under which [[dedupAgainstIndex]]'s
+    * distributed regime matches fingerprints in the broadcast regime
+    * (increment fingerprints broadcast over the pruned corpus scan — no
+    * corpus shuffle); beyond it, the shuffle semi-join fallback. ~50 MB
+    * of broadcast at the cap. [[Regimes]] carries it, so the
+    * regime-equality spec can force the fallback on a small corpus.
+    */
+  private[graft] val ExactFpBroadcastMaxRows: Long = 2000000L
+
   /** Persist a corpus's dedup index, SHINGLE-SHARDED: postings
     * (id, shingle, sz) partitioned by `hash(shingle) mod nShards`, with
     * each doc's TOTAL shingle count denormalized onto every posting row
@@ -490,17 +510,6 @@ object DedupOps {
     * `Bm25.writeIndex` / `IvfIndex.writeIndex`: a new-batch check reads
     * only the batch's shingles' shards, not the corpus.
     */
-  /** Increment-doc count at or under which [[dedupAgainstIndex]]'s
-    * exact-dup check runs in the broadcast regime (increment
-    * fingerprints broadcast over the pruned corpus scan — no corpus
-    * shuffle); beyond it, the shuffle semi-join fallback. ~50 MB of
-    * broadcast at the cap. System-property override so the
-    * regime-equality spec can force the fallback on a small corpus.
-    */
-  private[graft] def ExactFpBroadcastMaxRows: Long =
-    sys.props.get("graft.dedup.fpBroadcastMaxRows").map(_.toLong)
-      .getOrElse(2000000L)
-
   def writeDedupIndex(corpusDf: DataFrame, idCol: String, textCol: String,
                       n: Int, path: String,
                       nShards: Int = DefaultShingleShards): Unit = {
@@ -804,10 +813,14 @@ object DedupOps {
     */
   private[graft] def prunedShingleIndex(spark: org.apache.spark.sql.SparkSession,
                                         path: String, shNew: DataFrame,
-                                        nShards: Int): DataFrame = {
-    val shards = shNew.select(graft.functions.ShardExpr
+                                        nShards: Int): DataFrame =
+    shardPrunedIndex(spark, path, shNew.select(graft.functions.ShardExpr
         .javaHashMod(col("shingle"), nShards).as("shard"))
-      .distinct().collect().map(_.getInt(0))
+      .distinct().collect().map(_.getInt(0)).toSeq)
+
+  /** The live shingle postings (base + segments) of the given shards. */
+  private def shardPrunedIndex(spark: org.apache.spark.sql.SparkSession,
+                               path: String, shards: Seq[Int]): DataFrame = {
     val (base, segParts) =
       IndexLayout.liveParts(spark, paths(path), "shingles")
     val (b, segs) = IndexLayout.readLive(spark, base, segParts)
@@ -816,33 +829,209 @@ object DedupOps {
       .reduce(_.unionByName(_))
   }
 
-  /** [[dedupAgainst]] over a [[writeDedupIndex]] layout: the batch's
-    * distinct shingle SHARDS (≤ nShards values — the collect is bounded
-    * by the shard count, never the batch) are pushed as a partition
-    * filter, so the scan reads only directories the batch can intersect;
-    * every shared shingle lives in a read shard by construction, so
-    * `inter`, `max_jaccard`, and the output are row-identical to the
-    * two-sided scan (pinned in DedupOps' spec). A batch approaching
-    * corpus vocabulary degrades gracefully to reading all shards.
+  /** The live (id, __fp) fingerprint rows, tombstoned docs dropped. The
+    * fingerprint side spans base + streaming segments (duplicate rows are
+    * harmless — every regime tolerates them); the per-part projection
+    * before the union keeps ragged schemas unionable (an interim
+    * round-11 base may still carry the retired fpshard column).
+    */
+  private def liveFingerprints(spark: org.apache.spark.sql.SparkSession,
+                               path: String, idCol: String): DataFrame = {
+    val (fpBase, fpSegParts) =
+      IndexLayout.liveParts(spark, paths(path), "fingerprints")
+    val (fpB, fpSegs) = IndexLayout.readLive(spark, fpBase, fpSegParts)
+    IndexLayout.dropTombstoned(
+      (fpB ++ fpSegs).map(_.select(col(idCol), col("__fp")))
+        .reduce(_.unionByName(_)), idCol, paths(path).tombDir)
+  }
+
+  /** [[dedupAgainst]] over a [[writeDedupIndex]] layout, row-identical
+    * to the two-sided scan: only shards the batch's shingles hash to are
+    * read (every shared shingle lives in a read shard by construction),
+    * and tombstoned docs (see [[removeFromDedupIndex]]) drop from both
+    * index sides before any comparison. A batch approaching corpus
+    * vocabulary degrades gracefully to reading all shards. The batch
+    * selects one of two regimes (pinned row-identical to each other and
+    * to [[dedupAgainst]] in SimilaritySpec):
+    *
+    * - **Driver** (at most [[DriverMaxRows]] rows and
+    *   [[DriverMaxTextChars]] of text, found by one sample job): the
+    *   batch's shingles, per-doc sizes, fingerprints and shard set are
+    *   computed on the driver and broadcast as lookups; ONE index-side
+    *   query matches the shard-pruned live postings and the live
+    *   fingerprints against them and aggregates to at most one row per
+    *   batch doc; the output is assembled on the driver as a local
+    *   relation. A small ingest batch's dedup was
+    *   otherwise ~all per-stage fixed cost (PERF.md, "Small ingest
+    *   batches dedup on the driver").
+    * - **Distributed** (a batch over either cap): the batch's distinct
+    *   shingle shards (≤ nShards values — the collect is bounded by the
+    *   shard count, never the batch) are pushed as a partition filter,
+    *   and the near-dup join runs as a shuffle over the batch. Its
+    *   exact-dup match runs broadcast-side-out under
+    *   [[ExactFpBroadcastMaxRows]] increment rows (the increment's
+    *   fingerprints broadcast over ONE scan of the narrow (id, fp) table
+    *   — no corpus-fingerprint shuffle); past the cap, the shuffle
+    *   semi-join fallback. Scan PRUNING by fp-hash shards was built,
+    *   measured and rejected: a realistic increment's fingerprints hit
+    *   every shard, so it bought directory fan-out cost for no read
+    *   reduction (see writeDedupIndexBody).
+    *
+    * `rowCountHint`, an exact row count of `newDf` when the caller has
+    * one, skips the distributed regime's count action, and the driver
+    * regime's sample when it is over the row cap.
     */
   def dedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, newDf: DataFrame, idCol: String,
                         textCol: String, n: Int, threshold: Double,
                         nShards: Int = DefaultShingleShards,
-                        rowCountHint: Option[Long] = None): DataFrame = {
-    // tombstoned docs (see [[removeFromDedupIndex]]) drop from BOTH index
-    // sides before any comparison; no-op when nothing was removed. The
-    // fingerprint side spans base + streaming segments (duplicate rows
-    // are harmless — both regimes tolerate them; the per-part projection
-    // keeps ragged schemas unionable). The match runs broadcast-side-out
-    // under [[ExactFpBroadcastMaxRows]]: the increment's fingerprints
-    // broadcast over ONE scan of the narrow (id, fp) table — no
-    // corpus-fingerprint shuffle, which the old corpus-on-the-build-side
-    // semi-join paid on EVERY increment check; past the cap, the shuffle
-    // semi-join fallback (regime equality spec-pinned). Scan PRUNING by
-    // fp-hash shards was built, measured and rejected: a realistic
-    // increment's fingerprints hit every shard, so it bought directory
-    // fan-out cost for no read reduction (see writeDedupIndexBody).
+                        rowCountHint: Option[Long] = None): DataFrame =
+    dedupAgainstIndex(spark, path, newDf, idCol, textCol, n, threshold,
+      nShards, rowCountHint, Regimes())
+
+  /** [[dedupAgainstIndex]] under explicit regime caps. */
+  private[graft] def dedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
+                                       path: String, newDf: DataFrame,
+                                       idCol: String, textCol: String, n: Int,
+                                       threshold: Double, nShards: Int,
+                                       rowCountHint: Option[Long],
+                                       regimes: Regimes): DataFrame = {
+    // prune with the modulus the index was BUILT with (the marker), not
+    // the caller's defaulted parameter — a default drift would silently
+    // filter shard=hash%new against dirs partitioned by hash%old
+    val effShards = effectiveShards(spark, path, nShards)
+    val batch =
+      if (rowCountHint.exists(_ > regimes.driverMaxRows)) None
+      else driverBatch(newDf, idCol, textCol, regimes)
+    batch match {
+      case Some(rows) =>
+        dedupIndexOnDriver(spark, path, rows,
+          newDf.select(col(idCol), col(textCol)).schema, n, threshold,
+          effShards)
+      case None =>
+        dedupIndexDistributed(spark, path, newDf, idCol, textCol, n,
+          threshold, effShards, rowCountHint, regimes.fpBroadcastMaxRows)
+    }
+  }
+
+  /** The batch side of [[dedupAgainstIndex]]'s driver regime: each
+    * distinct batch shingle with the batch docs that hold it (one entry
+    * per row of the doc's id that holds it) and each doc's shingle-row
+    * count. Flat, so it broadcasts at array speed whatever the batch's
+    * shingle count (with a broadcast map of tuples instead, the regime
+    * took 4.2 s against this form's 1.6 s on a 1.09 M-character batch,
+    * PERF.md): the shingles travel as one newline-joined string (a
+    * shingle is `[a-z0-9]` tokens and spaces), and each JVM that reads
+    * the broadcast builds its lookup table once.
+    */
+  private final class BatchPostings(keys: String, starts: Array[Int],
+                                    docs: Array[Int], sz: Array[Long])
+      extends Serializable {
+    @transient private lazy val slot: java.util.HashMap[String, Integer] = {
+      val m = new java.util.HashMap[String, Integer]()
+      if (starts.length > 1)
+        keys.split("\n", -1).iterator.zipWithIndex
+          .foreach { case (k, i) => m.put(k, i) }
+      m
+    }
+
+    /** (doc, its shingle-row count) per batch posting of `s`. */
+    def docsOf(s: String): Seq[(Int, Long)] = {
+      val i = slot.get(s)
+      if (i == null) Nil
+      else (starts(i) until starts(i + 1)).map(j => (docs(j), sz(docs(j))))
+    }
+  }
+
+  private object BatchPostings {
+    def apply(shOf: Array[(Int, Array[String])], nDocs: Int): BatchPostings = {
+      val sz = new Array[Long](nDocs)
+      shOf.foreach { case (d, ss) => sz(d) += ss.length }
+      val byShingle = shOf.iterator.flatMap { case (d, ss) => ss.iterator.map(_ -> d) }
+        .toSeq.groupMap(_._1)(_._2).toArray
+      new BatchPostings(byShingle.iterator.map(_._1).mkString("\n"),
+        byShingle.scanLeft(0)(_ + _._2.length), byShingle.flatMap(_._2), sz)
+    }
+  }
+
+  /** [[dedupAgainstIndex]]'s driver regime over the collected (id, text)
+    * batch. The batch's shingle postings (shingle → the batch docs that
+    * hold it, with each doc's shingle count) and its fingerprints reach
+    * the index-side query as broadcast lookups, so the plan stays small
+    * whatever the batch size. Null-id rows match nothing (as in the
+    * distributed regime's id-keyed joins) and duplicate ids pool their
+    * shingle rows, so sizes and intersections count exactly what the
+    * distributed joins count. Fingerprints, Jaccard values and the
+    * output's rounding and threshold are the distributed regime's Spark
+    * expressions.
+    */
+  private def dedupIndexOnDriver(spark: org.apache.spark.sql.SparkSession,
+                                 path: String,
+                                 rows: Array[org.apache.spark.sql.Row],
+                                 batchSchema: org.apache.spark.sql.types.StructType,
+                                 n: Int, threshold: Double,
+                                 nShards: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val Array(idField, textField) = batchSchema.fields
+    val idCol = idField.name
+    val withId = rows.filterNot(_.isNullAt(0))
+    // batch docs are numbered by distinct id
+    val docOf = withId.map(_.get(0)).distinct.zipWithIndex.toMap
+    val shOf = withId.map(r => docOf(r.get(0)) -> shingleSet(r.getString(1), n))
+    val postings = BatchPostings(shOf, docOf.size)
+    val fps = localFrame(spark, batchSchema, withId)
+      .select(col(idCol), graft.functions.TextFns.fingerprint(col(textField.name)))
+      .collect().filterNot(_.isNullAt(1))
+      .groupMap(_.getString(1))(r => docOf(r.get(0))).map { case (f, ds) => f -> ds.toSeq }
+    val sc = spark.sparkContext
+    val (postingsBc, fpsBc) = (sc.broadcast(postings), sc.broadcast(fps))
+    try {
+      val docsOfShingle = udf { s: String => postingsBc.value.docsOf(s) }
+      val docsOfFp = udf { f: String => fpsBc.value.getOrElse(f, Nil) }
+      val shards = shOf.iterator.flatMap(_._2).map(shingleShard(_, nShards))
+        .toSeq.distinct
+      val near = IndexLayout.dropTombstoned(shardPrunedIndex(spark, path, shards),
+          idCol, paths(path).tombDir)
+        .select(col(idCol).as("id_b"), col("sz"),
+          explode(docsOfShingle(col("shingle"))).as("a"))
+        .groupBy(col("a._1").as("doc"), col("a._2").as("sz_a"), col("id_b"))
+        .agg(count(lit(1)).as("inter"), max(col("sz")).as("sz_b"))
+        .select(col("doc"), (col("inter").cast("double") /
+          (col("sz_a") + col("sz_b") - col("inter"))).as("j"), lit(0L).as("ex"))
+      val exact = liveFingerprints(spark, path, idCol)
+        .select(explode(docsOfFp(col("__fp"))).as("doc"))
+        .select(col("doc"), lit(null).cast("double").as("j"), lit(1L).as("ex"))
+      // at most one row per batch doc: its max Jaccard and exact flag
+      val hits = near.unionByName(exact).groupBy(col("doc"))
+        .agg(max(col("j")).as("__mj"), max(col("ex")).as("__exact"))
+        .collect().map(r => r.getInt(0) -> r).toMap
+      localFrame(spark, StructType(Seq(idField, StructField("__exact", LongType),
+          StructField("__mj", DoubleType))), rows.map { r =>
+          hits.get(if (r.isNullAt(0)) -1 else docOf(r.get(0))) match {
+            case Some(h) =>
+              Row(r.get(0), if (h.getLong(2) == 1L) 1L else null, h.get(1))
+            case None => Row(r.get(0), null, null)
+          }
+        })
+        .select(col(idCol),
+          coalesce(col("__exact"), lit(0L)).as("exact_dup"),
+          when(coalesce(col("__mj"), lit(0.0)) >= threshold, 1L).otherwise(0L)
+            .as("near_dup"),
+          round(coalesce(col("__mj"), lit(0.0)), 6).as("max_jaccard"))
+    } finally {
+      postingsBc.destroy()
+      fpsBc.destroy()
+    }
+  }
+
+  /** [[dedupAgainstIndex]]'s distributed regime. */
+  private def dedupIndexDistributed(spark: org.apache.spark.sql.SparkSession,
+                                    path: String, newDf: DataFrame,
+                                    idCol: String, textCol: String, n: Int,
+                                    threshold: Double, nShards: Int,
+                                    rowCountHint: Option[Long],
+                                    fpBroadcastMaxRows: Long): DataFrame = {
     // the increment is evaluated THREE times downstream (regime count,
     // fingerprints, shingles) — cache it once so a complex upstream
     // pipeline (q226's cleaner chain) is not re-run per consumer; the
@@ -850,21 +1039,14 @@ object DedupOps {
     val newCached = newDf.cache()
     val newFps = newCached.select(col(idCol),
       graft.functions.TextFns.fingerprint(col(textCol)).as("__fp"))
-    // per-part projection before the union — an interim round-11 base
-    // may still carry the retired fpshard column
-    val (fpBase, fpSegParts) =
-      IndexLayout.liveParts(spark, paths(path), "fingerprints")
-    val (fpB, fpSegs) = IndexLayout.readLive(spark, fpBase, fpSegParts)
-    val corpusFps = IndexLayout.dropTombstoned(
-      (fpB ++ fpSegs).map(_.select(col(idCol), col("__fp")))
-        .reduce(_.unionByName(_)), idCol, paths(path).tombDir)
+    val corpusFps = liveFingerprints(spark, path, idCol)
     // both regimes emit DISTINCT matched increment ids — without the
     // fallback's distinct, an increment containing duplicate ids would
     // multiply rows differently across regimes in the downstream
     // left-join (regime equality must hold by construction, not only
     // for unique-id increments)
     val exact =
-      if (rowCountHint.getOrElse(newCached.count()) <= ExactFpBroadcastMaxRows)
+      if (rowCountHint.getOrElse(newCached.count()) <= fpBroadcastMaxRows)
         corpusFps
           .join(broadcast(newFps.select(col(idCol).as("__nid"), col("__fp"))),
             Seq("__fp"))
@@ -874,12 +1056,8 @@ object DedupOps {
         newFps.join(corpusFps, Seq("__fp"), "left_semi")
           .select(col(idCol)).distinct().withColumn("__exact", lit(1L))
     val shNew = shingles(newCached, idCol, textCol, n).cache()
-    // prune with the modulus the index was BUILT with (the marker), not
-    // the caller's defaulted parameter — a default drift would silently
-    // filter shard=hash%new against dirs partitioned by hash%old
     val idx = IndexLayout.dropTombstoned(
-      prunedShingleIndex(spark, path, shNew,
-        effectiveShards(spark, path, nShards)), idCol,
+      prunedShingleIndex(spark, path, shNew, nShards), idCol,
       paths(path).tombDir)
     val sizesNew = shNew.groupBy(col(idCol)).agg(count(lit(1)).as("sz_a"))
     val near = shNew.select(col(idCol).as("id_a"), col("shingle"))
@@ -904,48 +1082,133 @@ object DedupOps {
     materializeAndRelease(out, shNew, newCached)
   }
 
-  /** Verify candidate pairs with exact Jaccard over the FULL shingle sets,
-    * restricted to candidate docs — O(candidate docs), not O(corpus).
-    * Shared by the prefix-filter, DF-cap and (structurally) LSH paths.
-    *
-    * Each candidate doc's full shingle set is packed into ONE array row
-    * (`sh` is already distinct per doc), so verification is two id-hashed
-    * joins of the pair list against doc-count-sized rows plus a per-pair
-    * in-memory `array_intersect` — no exploded pair×shingle rows, no
-    * pair-keyed re-aggregation, and sizes fall out of `size(set)` for
-    * free. Intersection is computed on the shingle STRINGS: exact, no
-    * hash-collision caveat. The candidate-doc id list is broadcast —
-    * it is bounded by 2×|candidate pairs|, which the prefix/DF-cap
-    * filters keep far below corpus size.
-    */
   /** Candidate-doc shingle volume (rows) below which verification runs
     * in the broadcast regime. ~100 MB of driver strings at the cap; the
-    * join regime takes over beyond it. System-property override exists so
-    * the regime-equality spec can force the join path on a small corpus.
+    * join regime takes over beyond it. [[Regimes]] carries it, so the
+    * regime-equality spec can force the join path on a small corpus.
     */
-  private[graft] def VerifyLocalMaxShingles: Long =
-    sys.props.get("graft.verify.localMaxShingles").map(_.toLong)
-      .getOrElse(4000000L)
+  private[graft] val VerifyLocalMaxShingles: Long = 4000000L
 
-  /** Exact-Jaccard verification of candidate pairs. Two regimes, same
-    * result (regime equality pinned in SimilaritySpec):
+  /** Row cap of the driver regime of [[minhashLshPairs]] and
+    * [[dedupAgainstIndex]]: a batch of at most this many rows (and at
+    * most [[DriverMaxTextChars]] of text) is deduplicated on the driver.
+    * Both operators' driver regimes were still faster at 5,000 sf0.1
+    * documents, the largest batch measured (PERF.md, "Small ingest
+    * batches dedup on the driver"); the cap stays at 1,000 because the
+    * driver's LSH candidate set grows with the square of the rows in the
+    * worst case (a batch of copies pairs every two rows): ~10^6 pairs here.
+    */
+  private[graft] val DriverMaxRows: Int = 1000
+
+  /** Text cap of the driver regime, in characters of collected text: the
+    * driver holds the batch's text and shingle sets, and ships the
+    * batch's shingle postings to the index query, whose cost grows with
+    * the batch's distinct shingles. Set below the measured crossover of
+    * [[dedupAgainstIndex]]'s regimes on long documents over a
+    * 2,000-word vocabulary: the driver regime won at 0.54 M characters
+    * and lost at 1.09 M (same PERF.md entry).
+    */
+  private[graft] val DriverMaxTextChars: Long = 500000L
+
+  /** The regime caps of the dedup operators, one field per switch. The
+    * public operators run under the defaults; a spec passes a zero to
+    * force the fallback and pins it row-identical to the regime it
+    * replaces (SimilaritySpec). A zero driver cap turns the driver regime
+    * off before its sample job.
+    */
+  private[graft] final case class Regimes(
+      driverMaxRows: Int = DriverMaxRows,
+      driverMaxTextChars: Long = DriverMaxTextChars,
+      verifyLocalMaxShingles: Long = VerifyLocalMaxShingles,
+      fpBroadcastMaxRows: Long = ExactFpBroadcastMaxRows)
+
+  /** Id types whose values keep their identity as driver-side keys (and
+    * as string casts): atomic types. BINARY does not (array identity on
+    * the driver; invalid-UTF8 bytes can collide after a string cast).
+    */
+  private def idIsAtomic(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case _: NumericType => true
+      case StringType | BooleanType | DateType | TimestampType |
+           TimestampNTZType => true
+      case _ => false
+    }
+  }
+
+  /** The driver regime's selection: the batch's (id, text) rows when it
+    * fits under both caps of `r`, else None. One job: `limit(cap + 1)`
+    * over the batch in one task, so the sample stops reading at the
+    * first row past the cap. A batch over either cap, or with a
+    * non-atomic id type, drops the sample and takes the distributed
+    * regime.
+    */
+  private def driverBatch(df: DataFrame, idCol: String, textCol: String,
+                          r: Regimes): Option[Array[org.apache.spark.sql.Row]] =
+    if (r.driverMaxRows <= 0 || r.driverMaxTextChars <= 0 ||
+        !idIsAtomic(df.schema(idCol).dataType)) None
+    else {
+      val rows = df.select(col(idCol), col(textCol)).coalesce(1)
+        .limit(r.driverMaxRows + 1).collect()
+      val chars = rows.iterator
+        .map(row => if (row.isNullAt(1)) 0L else row.getString(1).length.toLong).sum
+      if (rows.length <= r.driverMaxRows && chars <= r.driverMaxTextChars) Some(rows)
+      else None
+    }
+
+  /** A DataFrame over driver rows: a `LocalRelation`, so Catalyst folds
+    * the row-wise expressions above it (`ConvertToLocalRelation`) and a
+    * collect of it starts no job.
+    */
+  private def localFrame(spark: org.apache.spark.sql.SparkSession,
+                         schema: org.apache.spark.sql.types.StructType,
+                         rows: Iterable[org.apache.spark.sql.Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.toSeq.asJava, schema)
+  }
+
+  /** Size of the multiset intersection of two sorted shingle arrays: the
+    * merge-intersect of the broadcast verify regime and of the driver
+    * regime.
+    */
+  private def mergeIntersect(x: Array[String], y: Array[String]): Long = {
+    var i = 0; var j = 0; var c = 0L
+    while (i < x.length && j < y.length) {
+      val cmp = x(i).compareTo(y(j))
+      if (cmp == 0) { c += 1; i += 1; j += 1 }
+      else if (cmp < 0) i += 1
+      else j += 1
+    }
+    c
+  }
+
+  /** Exact-Jaccard verification of candidate pairs over the FULL shingle
+    * sets, restricted to candidate docs — O(candidate docs), not
+    * O(corpus). Shared by the prefix-filter, DF-cap and (structurally)
+    * LSH paths. Intersection is computed on the shingle STRINGS: exact,
+    * no hash-collision caveat. The candidate-doc id list is broadcast —
+    * it is bounded by 2×|candidate pairs|, which the prefix/DF-cap
+    * filters keep far below corpus size. Two regimes, same result
+    * (regime equality pinned in SimilaritySpec):
     *
     * - **Broadcast** (candidate docs' shingle volume ≤
-    *   [[VerifyLocalMaxShingles]]): collect the doc → sorted-shingle-set
-    *   map once, broadcast it, and verify each pair with a narrow
-    *   merge-intersect UDF. The dense-candidate join regime ships BOTH
-    *   ~|set|-element string arrays once per PAIR (measured ~600 MB of
-    *   shuffle for 125k candidates on the adversarial corpus — the
-    *   dominant verification cost); broadcasting ships each set once per
-    *   EXECUTOR. Candidate docs are dup-bounded, not corpus-bounded, so
-    *   the cap holds far past this SF — and the join regime remains the
-    *   unconditional fallback.
-    * - **Join**: group sets per doc, join them onto the pairs, exact
+    *   `localMaxShingles`, by default [[VerifyLocalMaxShingles]]): collect
+    *   the doc → sorted-shingle-set map once, broadcast it, and verify
+    *   each pair with a narrow merge-intersect UDF. The dense-candidate
+    *   join regime ships BOTH ~|set|-element string arrays once per PAIR
+    *   (measured ~600 MB of shuffle for 125k candidates on the
+    *   adversarial corpus — the dominant verification cost);
+    *   broadcasting ships each set once per EXECUTOR. Candidate docs are
+    *   dup-bounded, not corpus-bounded, so the cap holds far past this SF
+    *   — and the join regime remains the unconditional fallback.
+    * - **Join**: group sets per doc (one array row per doc — no exploded
+    *   pair×shingle rows), join them onto the pairs, exact
     *   `array_intersect`.
     */
   private def verifyCandidates(sh: DataFrame, cands: DataFrame,
                                idCol: String, threshold: Double,
-                               nShinglesHint: Option[Long] = None): DataFrame = {
+                               nShinglesHint: Option[Long] = None,
+                               localMaxShingles: Long = VerifyLocalMaxShingles): DataFrame = {
     val candDocs = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol))).distinct()
     val candSh = sh.join(broadcast(candDocs), Seq(idCol), "left_semi")
@@ -961,16 +1224,7 @@ object DedupOps {
     // engine representation mismatch. Distinct atomic values cast to
     // distinct strings; BINARY does not (invalid-UTF8 bytes can collide
     // after replacement), so binary ids take the join regime.
-    val idIsAtomic = {
-      import org.apache.spark.sql.types._
-      sh.schema(idCol).dataType match {
-        case _: NumericType => true
-        case StringType | BooleanType | DateType | TimestampType |
-             TimestampNTZType => true
-        case _ => false
-      }
-    }
-    if (idIsAtomic && nShingles <= VerifyLocalMaxShingles) {
+    if (idIsAtomic(sh.schema(idCol).dataType) && nShingles <= localMaxShingles) {
       val local = candSh
         .groupBy(col(idCol).cast("string").as(idCol))
         .agg(sort_array(collect_list(col("shingle"))).as("set"))
@@ -981,14 +1235,7 @@ object DedupOps {
       val stats = udf { (a: String, b: String) =>
         val x = bc.value(a)
         val y = bc.value(b)
-        var i = 0; var j = 0; var c = 0L
-        while (i < x.length && j < y.length) {
-          val cmp = x(i).compareTo(y(j))
-          if (cmp == 0) { c += 1; i += 1; j += 1 }
-          else if (cmp < 0) i += 1
-          else j += 1
-        }
-        (c, x.length.toLong, y.length.toLong)
+        (mergeIntersect(x, y), x.length.toLong, y.length.toLong)
       }
       cands
         .withColumn("__st",
@@ -1037,7 +1284,14 @@ object DedupOps {
     * string-set verification then discards.
     */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                         n: Int, threshold: Double): DataFrame = {
+                         n: Int, threshold: Double): DataFrame =
+    prefixJaccardPairs(df, idCol, textCol, n, threshold, Regimes())
+
+  /** [[prefixJaccardPairs]] under explicit regime caps. */
+  private[graft] def prefixJaccardPairs(df: DataFrame, idCol: String,
+                                        textCol: String, n: Int,
+                                        threshold: Double,
+                                        regimes: Regimes): DataFrame = {
     val sh = shingles(df, idCol, textCol, n).cache()
     // keep the per-doc set sizes the prefix filter already computed:
     // distinct over (pair, sz_a, sz_b) is the same pair set (sz is
@@ -1051,7 +1305,8 @@ object DedupOps {
       .union(candsSz.select(col("id_b").as("id"), col("sz_b").as("sz")))
       .distinct()
       .agg(coalesce(sum(col("sz")), lit(0L)).cast("long")).head().getLong(0)
-    val out = verifyCandidates(sh, cands, idCol, threshold, Some(nShingles))
+    val out = verifyCandidates(sh, cands, idCol, threshold, Some(nShingles),
+      regimes.verifyLocalMaxShingles)
     materializeAndRelease(out, sh, candsSz)
   }
 
@@ -1507,6 +1762,44 @@ object DedupOps {
       rnd.nextInt(Int.MaxValue).toLong)
   }
 
+  /** One document's MinHash signature: the k affine mins (mod 2^31-1)
+    * over its distinct `n`-gram shingles, each hashed with Spark's Murmur3
+    * (seed 42 — bit-identical to `hash(shingle)`). None for null text or
+    * fewer than `n` tokens. The body of [[minhashSignaturesOnePass]]'s UDF
+    * and of [[minhashLshPairs]]' driver regime.
+    */
+  private def minhashSignature(text: String, n: Int,
+                               coefs: Array[(Long, Long)]): Option[Array[Long]] =
+    if (text == null) None
+    else {
+      val p = 2147483647L
+      val k = coefs.length
+      val toks = tokenize(text)
+      if (toks.length < n) None
+      else {
+        val seen = scala.collection.mutable.HashSet.empty[String]
+        val mins = Array.fill(k)(Long.MaxValue)
+        var i = 0
+        while (i <= toks.length - n) {
+          val s = toks.slice(i, i + n).mkString(" ")
+          if (seen.add(s)) {
+            val h32 = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction.hash(
+              org.apache.spark.unsafe.types.UTF8String.fromString(s),
+              org.apache.spark.sql.types.StringType, 42L).toInt
+            val x = { val r = h32.toLong % p; if (r < 0) r + p else r }
+            var j = 0
+            while (j < k) {
+              val v = { val r = (x * coefs(j)._1 + coefs(j)._2) % p; if (r < 0) r + p else r }
+              if (v < mins(j)) mins(j) = v
+              j += 1
+            }
+          }
+          i += 1
+        }
+        Some(mins)
+      }
+    }
+
   /** One-pass MinHash signatures straight from the text column (narrow map,
     * no shuffle): tokenizes, forms distinct word n-gram shingles, hashes each
     * with Spark's Murmur3 (seed 42 — bit-identical to `hash(shingle)`), and
@@ -1516,38 +1809,9 @@ object DedupOps {
     */
   def minhashSignaturesOnePass(df: DataFrame, idCol: String, textCol: String,
                                n: Int, k: Int, seed: Long = 42L): DataFrame = {
-    val p = 2147483647L
     val coefs = minhashCoefs(k, seed)
     val sig = udf { text: String =>
-      if (text == null) None
-      else {
-        val m = tokenRe.matcher(text.toLowerCase(java.util.Locale.ROOT))
-        val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (m.find()) toks += m.group()
-        if (toks.length < n) None
-        else {
-          val seen = scala.collection.mutable.HashSet.empty[String]
-          val mins = Array.fill(k)(Long.MaxValue)
-          var i = 0
-          while (i <= toks.length - n) {
-            val s = toks.slice(i, i + n).mkString(" ")
-            if (seen.add(s)) {
-              val h32 = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction.hash(
-                org.apache.spark.unsafe.types.UTF8String.fromString(s),
-                org.apache.spark.sql.types.StringType, 42L).toInt
-              val x = { val r = h32.toLong % p; if (r < 0) r + p else r }
-              var j = 0
-              while (j < k) {
-                val v = { val r = (x * coefs(j)._1 + coefs(j)._2) % p; if (r < 0) r + p else r }
-                if (v < mins(j)) mins(j) = v
-                j += 1
-              }
-            }
-            i += 1
-          }
-          Some(mins.toSeq)
-        }
-      }
+      minhashSignature(text, n, coefs).map(_.toSeq)
     }
     val cols = (0 until k).map(i => col("__mh")(i).as(s"mh_$i"))
     df.select(col(idCol), sig(col(textCol)).as("__mh"))
@@ -1571,18 +1835,40 @@ object DedupOps {
     * operator under testdata regeneration; pass `false` for the pure
     * sublinear path when approximate recall is acceptable.
     *
-    * Caches three intermediates that are each referenced several times:
-    * banding keys and candidate pairs (int-only, tiny) plus the candidate
-    * docs' shingle strings (proportional to candidate-doc text — the
-    * dominant cached footprint when dup clusters are large; the guard path
-    * shingles the full corpus, which it needs anyway for prefix ranking).
-    * All are released before returning: the (tiny) pair result is
-    * materialized via eager localCheckpoint, then the caches unpersist.
+    * The unguarded path has two regimes, selected by the input and pinned
+    * row-identical to each other in SimilaritySpec:
+    *
+    * - **Driver** (at most [[DriverMaxRows]] rows and
+    *   [[DriverMaxTextChars]] of text, found by one sample job): the
+    *   batch is collected and signed, banded, paired and verified on the
+    *   driver with the distributed regime's own functions; the pairs come
+    *   back as a local relation, so the call starts no job after the
+    *   sample. A small ingest batch's near-dedup was otherwise ~all
+    *   per-stage fixed cost (PERF.md, "Small ingest batches dedup on the
+    *   driver").
+    * - **Distributed** (a batch over either cap, and the guarded path):
+    *   caches three intermediates that are each referenced several
+    *   times: banding keys and candidate pairs (int-only, tiny) plus the
+    *   candidate docs' shingle strings (proportional to candidate-doc
+    *   text — the dominant cached footprint when dup clusters are large;
+    *   the guard path shingles the full corpus, which it needs anyway for
+    *   prefix ranking). All are released before returning: the (tiny)
+    *   pair result is materialized via eager localCheckpoint, then the
+    *   caches unpersist.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int, threshold: Double,
                       k: Int = 32, bands: Int = 8,
-                      exactRecallGuard: Boolean = false): DataFrame = {
+                      exactRecallGuard: Boolean = false): DataFrame =
+    minhashLshPairs(df, idCol, textCol, n, threshold, k, bands,
+      exactRecallGuard, Regimes())
+
+  /** [[minhashLshPairs]] under explicit regime caps. */
+  private[graft] def minhashLshPairs(df: DataFrame, idCol: String,
+                                     textCol: String, n: Int,
+                                     threshold: Double, k: Int, bands: Int,
+                                     exactRecallGuard: Boolean,
+                                     regimes: Regimes): DataFrame = {
     val rowsPerBand = k / bands
     def bandedFrom(sigs: DataFrame): DataFrame = sigs.select(col(idCol),
       explode(array((0 until bands).map { b =>
@@ -1613,26 +1899,90 @@ object DedupOps {
       val banded = bandedFrom(minhashSignatures(sh, idCol, k))
       val cands = lshCandsFrom(banded).union(prefixCandidates(sh, idCol, threshold))
         .distinct().cache()
-      val out = verifyCandidates(sh, cands, idCol, threshold)
+      val out = verifyCandidates(sh, cands, idCol, threshold,
+        localMaxShingles = regimes.verifyLocalMaxShingles)
       materializeAndRelease(out, banded, cands, sh)
-    } else {
-      // signatures in one narrow pass — no exploded-shingle shuffle
-      val banded = bandedFrom(minhashSignaturesOnePass(df, idCol, textCol, n, k))
-      val lshCands = lshCandsFrom(banded)
-      // cached: the candidate set is referenced three times below (id list,
-      // pair semi-join) — uncached, the signature pass + banding self-join
-      // would re-execute per reference
-      val cands = lshCands.distinct().cache()
-      // verify candidates with exact Jaccard — shingle the CANDIDATE docs
-      // only (candidate count ≈ dup count << corpus, so this index is tiny;
-      // the full-corpus inverted index never materializes on this path)
-      val candIds = cands.select(col("id_a").as(idCol))
-        .union(cands.select(col("id_b").as(idCol))).distinct()
-      val sh = shingles(df.join(candIds, Seq(idCol), "left_semi"),
-        idCol, textCol, n).cache()
-      val out = verifyCandidates(sh, cands, idCol, threshold)
-      materializeAndRelease(out, banded, cands, sh)
+    } else driverBatch(df, idCol, textCol, regimes) match {
+      case Some(rows) =>
+        lshPairsOnDriver(df.sparkSession, rows, df.schema(idCol).dataType,
+          n, threshold, k, bands)
+      case None =>
+        // signatures in one narrow pass — no exploded-shingle shuffle
+        val banded = bandedFrom(minhashSignaturesOnePass(df, idCol, textCol, n, k))
+        val lshCands = lshCandsFrom(banded)
+        // cached: the candidate set is referenced three times below (id list,
+        // pair semi-join) — uncached, the signature pass + banding self-join
+        // would re-execute per reference
+        val cands = lshCands.distinct().cache()
+        // verify candidates with exact Jaccard — shingle the CANDIDATE docs
+        // only (candidate count ≈ dup count << corpus, so this index is tiny;
+        // the full-corpus inverted index never materializes on this path)
+        val candIds = cands.select(col("id_a").as(idCol))
+          .union(cands.select(col("id_b").as(idCol))).distinct()
+        val sh = shingles(df.join(candIds, Seq(idCol), "left_semi"),
+          idCol, textCol, n).cache()
+        val out = verifyCandidates(sh, cands, idCol, threshold,
+          localMaxShingles = regimes.verifyLocalMaxShingles)
+        materializeAndRelease(out, banded, cands, sh)
     }
+  }
+
+  /** The LSH band keys of one signature: per band, the Murmur3 chain that
+    * Spark's `hash(mh_i, …)` computes over the band's rows (seed 42, each
+    * row a `LongType`) — the distributed regime's join key, so a key
+    * collision adds the same candidate in both regimes.
+    */
+  private def bandKeys(sig: Array[Long], bands: Int,
+                       rowsPerBand: Int): Array[Int] =
+    Array.tabulate(bands) { b =>
+      (b * rowsPerBand until (b + 1) * rowsPerBand).foldLeft(42) { (h, i) =>
+        org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction.hash(
+          sig(i), org.apache.spark.sql.types.LongType, h).toInt
+      }
+    }
+
+  /** [[minhashLshPairs]]' driver regime over the collected (id, text)
+    * batch, row-identical to the distributed regime: the signatures and
+    * band keys of the same functions, candidates from shared (band, key)
+    * buckets, and the broadcast verify regime's merge-intersect over each
+    * candidate id's concatenated, sorted shingle sets. Each candidate pair
+    * goes to Spark in both orientations, and Spark's own `id_a < id_b`
+    * keeps one, so the pair order is Spark's for every id type. The
+    * result is a `LocalRelation`: no Spark job.
+    */
+  private def lshPairsOnDriver(spark: org.apache.spark.sql.SparkSession,
+                               rows: Array[org.apache.spark.sql.Row],
+                               idType: org.apache.spark.sql.types.DataType,
+                               n: Int, threshold: Double, k: Int,
+                               bands: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val coefs = minhashCoefs(k, 42L)
+    val buckets = scala.collection.mutable.HashMap
+      .empty[(Int, Int), scala.collection.mutable.ArrayBuffer[Any]]
+    for (row <- rows; sig <- minhashSignature(row.getString(1), n, coefs))
+      bandKeys(sig, bands, k / bands).zipWithIndex.foreach { case (key, b) =>
+        buckets.getOrElseUpdate((b, key),
+          scala.collection.mutable.ArrayBuffer.empty) += row.get(0)
+      }
+    val cands = scala.collection.mutable.LinkedHashSet.empty[(Any, Any)]
+    for (ids <- buckets.values; a <- ids; b <- ids
+         if a != null && b != null && a != b) cands += ((a, b))
+    val candIds = cands.iterator.map(_._1).toSet
+    val sets = rows.filter(r => candIds(r.get(0))).groupBy(_.get(0))
+      .map { case (id, rs) => id -> rs.flatMap(r => shingleSet(r.getString(1), n)).sorted }
+    val schema = StructType(Seq(StructField("id_a", idType),
+      StructField("id_b", idType), StructField("inter", LongType),
+      StructField("sz_a", LongType), StructField("sz_b", LongType)))
+    localFrame(spark, schema, cands.toSeq.map { case (a, b) =>
+        val (x, y) = (sets(a), sets(b))
+        Row(a, b, mergeIntersect(x, y), x.length.toLong, y.length.toLong)
+      })
+      .filter(col("id_a") < col("id_b"))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("sz_a") + col("sz_b") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
   /** MinHash estimator-accuracy audit: for every TRUE near-dup pair

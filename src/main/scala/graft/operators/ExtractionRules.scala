@@ -166,10 +166,6 @@ object ExtractionRules {
   private val teiUdf = udf((s: String) => teiIntroduction(s))
   private val pdfUdf = udf((s: String) => pdfIntroduction(s))
 
-  def htmlIntroductionCol(c: Column): Column = htmlUdf(c)
-  def teiIntroductionCol(c: Column): Column = teiUdf(c)
-  def pdfIntroductionCol(c: Column): Column = pdfUdf(c)
-
   /** Full dispatcher over RAW per-tier payloads: parse each tier with its
     * rule, then run the [[ContentExtraction]] gate chain on the parsed
     * candidates — the complete S11→S15 path with the transports factored

@@ -159,10 +159,6 @@ object Profiling {
     gates.reduce(_.unionAll(_)).orderBy(col("anomaly_type"))
   }
 
-  /** Convenience: all numeric columns of a DataFrame. */
-  def numericCols(df: DataFrame): Seq[String] =
-    df.schema.fields.toIndexedSeq.collect { case f if f.dataType.isInstanceOf[NumericType] => f.name }
-
   /** Ordered filter-cascade attrition report: for rule k (applied on top
     * of rules 1..k-1), one row (step, rule, n_in, n_drop, n_out) — the
     * "where did my corpus go" audit every multi-rule quality pipeline

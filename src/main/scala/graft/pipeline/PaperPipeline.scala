@@ -130,13 +130,6 @@ object PaperPipeline {
       catch { case scala.util.control.NonFatal(t) => gateEx.addSuppressed(t) }
     }
 
-  /** F9: reference lints search terms ≤3 chars (`main.py:474-477`) but
-    * proceeds anyway — returns (ok, suspicious) so callers can log the
-    * suspicious ones; nothing is dropped.
-    */
-  def validateTerms(terms: Seq[String]): (Seq[String], Seq[String]) =
-    terms.partition(t => t != null && t.trim.length > 3)
-
   /** Collect + project (reference steps 2a: search → flat records). */
   def collect(spark: SparkSession, cfg: Config,
               transport: HttpSource.HttpTransport): DataFrame = {

@@ -481,16 +481,6 @@ object PlotSink {
     writeBytes(df, barChartPng(rows, title), path)
   }
 
-  /** Share-per-category pie PNG at `path`. */
-  def writePieChart(df: DataFrame, labelCol: String, valueCol: String,
-                    path: String, title: String, topN: Int = 10): Unit = {
-    val rows = df.select(col(labelCol).cast("string"), col(valueCol).cast("double"))
-      .orderBy(col(valueCol).desc, col(labelCol))
-      .limit(topN)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    writeBytes(df, pieChartPng(rows, title), path)
-  }
-
   /** Pivoted matrix heatmap PNG: rows = `rowCol`, columns = `colCol`,
     * cell = mean of `valueCol`, top-N rows by total value (the
     * reference's top-15-subdomains restriction,
@@ -548,16 +538,6 @@ object PlotSink {
         name -> ps.map(p => (p._2, p._3)).toSeq.sortBy(_._1)
       }
     writeBytes(df, lineChartPng(series, title, xLabel, yLabel), path)
-  }
-
-  /** Top-N vertical column PNG (label order preserved by value desc). */
-  def writeColumnChart(df: DataFrame, labelCol: String, valueCol: String,
-                       path: String, title: String, topN: Int = 20): Unit = {
-    val rows = df.select(col(labelCol).cast("string"), col(valueCol).cast("double"))
-      .orderBy(col(valueCol).desc, col(labelCol))
-      .limit(topN)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    writeBytes(df, columnChartPng(rows, title), path)
   }
 
   /** Histogram PNG of `valueCol` over `nBins` equal-width bins — the

@@ -289,31 +289,6 @@ class IndexLayoutSpec extends SparkSpec {
     } finally fs.close()
   }
 
-  /** `body`'s result and the Spark jobs started while it ran. A marker
-    * job afterwards flushes the listener queue, which delivers events in
-    * order, so every job `body` started has been counted by then.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val marker = s"jobs-during-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.atomic.AtomicInteger()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          flushed.countDown()
-        else if (flushed.getCount > 0) seen.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      spark.sparkContext.setJobGroup(marker, "flush", interruptOnCancel = false)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, seen.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("readParquet resolves the schema on the driver: the inferred frame, no job") {
     val root = Scratch.dir("ixl_readpq")
     val base = s"$root/base"

@@ -191,6 +191,44 @@ class SimilaritySpec extends SparkSpec {
       === rows(DedupOps.dedupAgainst(probe, corpus, "doc_id", "text", 3, 0.5)))
   }
 
+  /** An ingest-shaped batch over the corpus: 40 copied docs, near
+    * copies of ten of them, exact copies of five more, a duplicated id
+    * (both of its texts exact copies), a null text, a null id and docs
+    * under 3 tokens.
+    */
+  private def dedupBatch: org.apache.spark.sql.DataFrame = {
+    def from(lo: Int, hi: Int, id: org.apache.spark.sql.Column,
+             text: org.apache.spark.sql.Column) =
+      docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+        .select(id.cast("long").as("doc_id"), text.as("text"))
+    import spark.implicits._
+    from(0, 40, col("doc_id") + 700000L, col("text"))
+      .unionByName(from(0, 10, col("doc_id") + 700200L,
+        concat(col("text"), lit(" with a fresh tail of words"))))
+      .unionByName(from(10, 15, col("doc_id") + 700300L, col("text")))
+      .unionByName(from(20, 21, lit(700005L), col("text")))
+      .unionByName(from(3, 4, lit(null), col("text")))
+      .unionByName(Seq((700400L, null: String), (700401L, "two words"),
+        (700402L, "")).toDF("doc_id", "text"))
+  }
+
+  private def stringIds(df: org.apache.spark.sql.DataFrame) =
+    df.select(concat(lit("d"), col("doc_id")).as("doc_id"), col("text"))
+
+  /** A frame's rows as a sorted multiset of strings. */
+  private def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+
+  /** Whether an operator answered from the driver: its result is a
+    * local relation, not a checkpointed Spark result.
+    */
+  private def onDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  private val distributed = DedupOps.Regimes(driverMaxRows = 0,
+    driverMaxTextChars = 0)
+
   test("exact-dup check: broadcast and shuffle regimes agree and match the non-indexed oracle") {
     val corpus = docs
     val probe = corpus.filter(col("doc_id") < 25)
@@ -199,16 +237,16 @@ class SimilaritySpec extends SparkSpec {
     DedupOps.writeDedupIndex(corpus, "doc_id", "text", n = 3, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    // default: increment fingerprints broadcast over one corpus scan
+    // the distributed regime's default: increment fingerprints broadcast
+    // over one corpus scan
     val broadcastRegime = rows(DedupOps.dedupAgainstIndex(spark, dir, probe,
-      "doc_id", "text", 3, 0.5))
+      "doc_id", "text", 3, 0.5, DedupOps.DefaultShingleShards, None,
+      distributed))
     // force the shuffle semi-join fallback and require identical rows
-    System.setProperty("graft.dedup.fpBroadcastMaxRows", "0")
-    try {
-      val shuffleRegime = rows(DedupOps.dedupAgainstIndex(spark, dir, probe,
-        "doc_id", "text", 3, 0.5))
-      assert(broadcastRegime == shuffleRegime)
-    } finally System.clearProperty("graft.dedup.fpBroadcastMaxRows")
+    val shuffleRegime = rows(DedupOps.dedupAgainstIndex(spark, dir, probe,
+      "doc_id", "text", 3, 0.5, DedupOps.DefaultShingleShards, None,
+      distributed.copy(fpBroadcastMaxRows = 0)))
+    assert(broadcastRegime == shuffleRegime)
     // and both equal the non-indexed oracle
     assert(broadcastRegime == rows(DedupOps.dedupAgainst(probe, corpus,
       "doc_id", "text", 3, 0.5)))
@@ -229,19 +267,103 @@ class SimilaritySpec extends SparkSpec {
     def all(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
     val broadcastRegime = all(DedupOps.dedupAgainstIndex(spark, dir, probe,
-      "doc_id", "text", 3, 0.5))
-    System.setProperty("graft.dedup.fpBroadcastMaxRows", "0")
-    try {
-      val shuffleRegime = all(DedupOps.dedupAgainstIndex(spark, dir, probe,
-        "doc_id", "text", 3, 0.5))
-      assert(broadcastRegime == shuffleRegime,
-        "regimes multiply duplicate-id rows differently")
-    } finally System.clearProperty("graft.dedup.fpBroadcastMaxRows")
+      "doc_id", "text", 3, 0.5, DedupOps.DefaultShingleShards, None,
+      distributed))
+    val shuffleRegime = all(DedupOps.dedupAgainstIndex(spark, dir, probe,
+      "doc_id", "text", 3, 0.5, DedupOps.DefaultShingleShards, None,
+      distributed.copy(fpBroadcastMaxRows = 0)))
+    assert(broadcastRegime == shuffleRegime,
+      "regimes multiply duplicate-id rows differently")
     // a caller-supplied row count picks the regime without the extra
     // count action and must not change the rows
     val hinted = all(DedupOps.dedupAgainstIndex(spark, dir, probe,
-      "doc_id", "text", 3, 0.5, rowCountHint = Some(probe.count())))
+      "doc_id", "text", 3, 0.5, DedupOps.DefaultShingleShards,
+      Some(probe.count()), distributed))
     assert(hinted == broadcastRegime)
+  }
+
+  test("minhashLshPairs: the driver regime is row-identical to the distributed regime") {
+    import spark.implicits._
+    def lsh(df: org.apache.spark.sql.DataFrame, r: DedupOps.Regimes,
+            t: Double = 0.5) =
+      DedupOps.minhashLshPairs(df, "doc_id", "text", 3, t, 32, 8, false, r)
+    val batch = dedupBatch.localCheckpoint()
+    val cases = Seq("empty" -> Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "long ids" -> batch, "string ids" -> stringIds(batch))
+    for ((name, b) <- cases; t <- Seq(0.5, 0.8)) {
+      val local = lsh(b, DedupOps.Regimes(), t)
+      val dist = lsh(b, distributed, t)
+      assert(onDriver(local) && !onDriver(dist), name)
+      assert(multiset(local) == multiset(dist), s"$name at $t")
+      assert(multiset(local).nonEmpty || name == "empty", s"$name at $t")
+    }
+    // string ids pair in Spark's string order ("d700010" < "d700300")
+    assert(lsh(stringIds(batch), DedupOps.Regimes()).collect()
+      .forall(r => r.getString(0) < r.getString(1)))
+    // a batch of exactly the row cap dedups on the driver, one more row
+    // falls back; the same for the text cap
+    val rows = batch.count().toInt
+    val chars = batch.agg(sum(coalesce(length(col("text")), lit(0)))).head().getLong(0)
+    val atRowCap = lsh(batch, DedupOps.Regimes(driverMaxRows = rows))
+    val overRowCap = lsh(batch, DedupOps.Regimes(driverMaxRows = rows - 1))
+    val atTextCap = lsh(batch, DedupOps.Regimes(driverMaxTextChars = chars))
+    val overTextCap = lsh(batch, DedupOps.Regimes(driverMaxTextChars = chars - 1))
+    assert(onDriver(atRowCap) && !onDriver(overRowCap))
+    assert(onDriver(atTextCap) && !onDriver(overTextCap))
+    assert(Set(atRowCap, overRowCap, atTextCap, overTextCap).map(multiset)
+      == Set(multiset(lsh(batch, distributed))))
+  }
+
+  test("minhashLshPairs' driver regime over a checkpointed batch starts exactly one job") {
+    val batch = dedupBatch.localCheckpoint()
+    val (pairs, jobs) = jobsDuring(
+      DedupOps.minhashLshPairs(batch, "doc_id", "text", 3, 0.5).collect())
+    assert(pairs.nonEmpty)
+    assert(jobs == 1, s"$jobs Spark jobs")
+  }
+
+  test("dedupAgainstIndex: the driver regime is row-identical to the distributed regime and to dedupAgainst") {
+    import spark.implicits._
+    // a base, two live segments and a tombstone batch
+    val corpus = docs.select(col("doc_id"), col("text"))
+    val dir = Scratch.dir("dedup_driver")
+    DedupOps.writeDedupIndex(corpus.filter(col("doc_id") % 3 =!= 0),
+      "doc_id", "text", 3, dir)
+    for (seg <- 0 to 1)
+      DedupOps.writeDedupIndex(corpus.filter(col("doc_id") % 6 === seg * 3),
+        "doc_id", "text", 3, s"$dir/segments/batch=$seg")
+    DedupOps.removeFromDedupIndex(corpus.filter(col("doc_id") % 7 === 1)
+      .select("doc_id"), "doc_id", dir)
+    val live = corpus.filter(col("doc_id") % 7 =!= 1)
+    def marks(df: org.apache.spark.sql.DataFrame, r: DedupOps.Regimes) =
+      DedupOps.dedupAgainstIndex(spark, dir, df, "doc_id", "text", 3, 0.5,
+        DedupOps.DefaultShingleShards, None, r)
+    val batch = dedupBatch.localCheckpoint()
+    val cases = Seq("empty" -> Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "long ids" -> batch, "string ids" -> stringIds(batch))
+    for ((name, b) <- cases) {
+      val local = marks(b, DedupOps.Regimes())
+      val dist = marks(b, distributed)
+      assert(onDriver(local) && !onDriver(dist), name)
+      assert(multiset(local) == multiset(dist), name)
+      assert(multiset(local) ==
+        multiset(DedupOps.dedupAgainst(b, live, "doc_id", "text", 3, 0.5)), name)
+    }
+    val got = marks(batch, DedupOps.Regimes()).collect()
+    assert(got.length == batch.count())
+    assert(got.exists(_.getLong(1) == 1L) && got.exists(_.getLong(2) == 1L) &&
+      got.exists(r => r.getLong(2) == 1L && r.getLong(1) == 0L))
+    // the caps, as for minhashLshPairs
+    val rows = batch.count().toInt
+    val chars = batch.agg(sum(coalesce(length(col("text")), lit(0)))).head().getLong(0)
+    val atRowCap = marks(batch, DedupOps.Regimes(driverMaxRows = rows))
+    val overRowCap = marks(batch, DedupOps.Regimes(driverMaxRows = rows - 1))
+    val atTextCap = marks(batch, DedupOps.Regimes(driverMaxTextChars = chars))
+    val overTextCap = marks(batch, DedupOps.Regimes(driverMaxTextChars = chars - 1))
+    assert(onDriver(atRowCap) && !onDriver(overRowCap))
+    assert(onDriver(atTextCap) && !onDriver(overTextCap))
+    assert(Set(atRowCap, overRowCap, atTextCap, overTextCap).map(multiset)
+      == Set(multiset(marks(batch, distributed))))
   }
 
   test("fingerprint tables with a stray extra column read and compact back to the canonical shape") {
@@ -609,17 +731,15 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("verification regimes agree: broadcast merge-intersect == join path") {
-    // same corpus, both verification regimes (the sys-prop forces the
+    // same corpus, both verification regimes (a zero cap forces the
     // array_intersect join path that big candidate volumes would take)
     val bcast = DedupOps.prefixJaccardPairs(docs, "doc_id", "text", 3, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    System.setProperty("graft.verify.localMaxShingles", "0")
-    try {
-      val joined = DedupOps.prefixJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(bcast === joined)
-      assert(bcast.nonEmpty)
-    } finally System.clearProperty("graft.verify.localMaxShingles")
+    val joined = DedupOps.prefixJaccardPairs(docs, "doc_id", "text", 3, 0.5,
+        DedupOps.Regimes(verifyLocalMaxShingles = 0))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(bcast === joined)
+    assert(bcast.nonEmpty)
   }
 
   test("verification is id-type-generic: string ids verify in both regimes") {
@@ -635,12 +755,10 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (Set(r.getString(0), r.getString(1)), r.getDouble(2))).toSet
     assert(bcast === longPairs)
     assert(bcast.nonEmpty)
-    System.setProperty("graft.verify.localMaxShingles", "0")
-    try {
-      val joined = DedupOps.prefixJaccardPairs(sdocs, "doc_id", "text", 3, 0.5)
-        .collect().map(r => (Set(r.getString(0), r.getString(1)), r.getDouble(2))).toSet
-      assert(joined === longPairs)
-    } finally System.clearProperty("graft.verify.localMaxShingles")
+    val joined = DedupOps.prefixJaccardPairs(sdocs, "doc_id", "text", 3, 0.5,
+        DedupOps.Regimes(verifyLocalMaxShingles = 0))
+      .collect().map(r => (Set(r.getString(0), r.getString(1)), r.getDouble(2))).toSet
+    assert(joined === longPairs)
   }
 
   test("one-pass simhash matches the explode+aggregate formulation") {

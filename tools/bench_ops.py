@@ -8,8 +8,11 @@ A trace is what `python3 perfbench/run.py --workload W --seed N --seconds 3
 --trace 1` leaves in `.bench_build/perfbench/traces/W-seedN.json`. Each op
 row shows its wall time, the Spark jobs and tasks that started while it ran
 (jobs are attributed by start time, so a streaming micro-batch counts under
-the op that waited for it) and its filesystem call deltas: opens (read),
-directory listings (list), status probes (stat) and mutations (write). With
+the op that waited for it), how much of its wall time those jobs covered
+(job_ms: the union of their start-to-end intervals, clipped to the op) and
+the rest (outside_ms: driver time between and around jobs), and its
+filesystem call deltas: opens (read), directory listings (list), status
+probes (stat) and mutations (write). With
 two traces, ops are paired by name and occurrence, and every cell reads
 `first / second`. The last row sums ms, jobs, tasks and fs calls over all
 ops. Output is a Markdown table.
@@ -25,20 +28,36 @@ def op_rows(path):
     op's ms, jobs, tasks and fs counts."""
     with open(path) as f:
         rec = json.load(f)
-    jobs = [(j["start_ms"] * 1_000_000, j["tasks"]) for j in rec["jobs"]]
+    jobs = [(j["start_ms"] * 1_000_000, j["end_ms"] * 1_000_000, j["tasks"])
+            for j in rec["jobs"]]
     seen, out = {}, []
     for o in rec["ops"]:
         name = f'{o["kind"]}:{o["name"]}' + (" (failed)" if o["error"] is not None else "")
         seen[name] = seen.get(name, 0) + 1
         s, e = o["start_ns"], o["start_ns"] + o["ms"] * 1e6
-        inside = [t for js, t in jobs if s <= js <= e]
-        row = {"ms": o["ms"], "jobs": len(inside), "tasks": sum(inside)}
+        inside = [(js, je, t) for js, je, t in jobs if s <= js <= e]
+        job_ms = covered([(js, min(max(je, js), e)) for js, je, _ in inside]) / 1e6
+        row = {"ms": o["ms"], "jobs": len(inside), "tasks": sum(t for _, _, t in inside),
+               "job_ms": job_ms, "outside_ms": o["ms"] - job_ms}
         row.update(zip(FS, o["fs"][:len(FS)]))
         out.append(((name, seen[name]), row))
     return out
 
 
-COLS = ("ms", "jobs", "tasks") + FS
+def covered(intervals):
+    """Length of the union of (start, end) intervals."""
+    total, reach = 0, None
+    for a, b in sorted(intervals):
+        if reach is None or a > reach:
+            total += b - a
+            reach = b
+        elif b > reach:
+            total += b - reach
+            reach = b
+    return total
+
+
+COLS = ("ms", "jobs", "tasks", "job_ms", "outside_ms") + FS
 
 
 def fmt(v):
