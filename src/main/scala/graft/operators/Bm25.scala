@@ -42,9 +42,6 @@ object Bm25 {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val terms = queries.flatMap { case (qid, q) => queryTerms(q).map(qid -> _) }
-      .toDF("query_id", "term")
-
     // Corpus stats: two scalars, one tiny job.
     val stats = docs.agg(
       count(lit(1)).cast("double").as("n"),
@@ -68,24 +65,39 @@ object Bm25 {
       .groupBy(col(idCol), col("doc_len"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
 
-    scoreAndRank(postings, idCol, terms, nDocs, avgdl, k, k1, b)
+    scoreAndRank(postings, idCol, termsFrame(spark, queries, nDocs, avgdl),
+      k, k1, b)
+  }
+
+  /** The broadcast query-terms frame: one (query_id, term) row per query
+    * term, with the corpus stats (n, avgdl) as columns. As columns, not
+    * literals, the stats stay out of the generated code, which then does
+    * not change as the index grows or shrinks; the arithmetic is the
+    * same, so the scores are bit for bit those of literal stats.
+    */
+  private def termsFrame(spark: org.apache.spark.sql.SparkSession,
+                         queries: Seq[(String, String)], nDocs: Double,
+                         avgdl: Double): DataFrame = {
+    import spark.implicits._
+    queries.flatMap { case (qid, q) => queryTerms(q).map(t => (qid, t, nDocs, avgdl)) }
+      .toDF("query_id", "term", "n", "avgdl")
   }
 
   /** Score + rank query-term-restricted postings (shared by [[topK]] and
     * [[topKIndexed]] — identical arithmetic, so the indexed path is
     * row-identical by construction). df per matching term is at most
-    * |query terms| rows — broadcast back.
+    * |query terms| rows — broadcast back. `terms` is a [[termsFrame]].
     */
   private def scoreAndRank(postings: DataFrame, idCol: String,
-                           terms: DataFrame, nDocs: Double, avgdl: Double,
-                           k: Int, k1: Double, b: Double): DataFrame = {
+                           terms: DataFrame, k: Int, k1: Double,
+                           b: Double): DataFrame = {
     val dfByTerm = postings.groupBy(col("term"))
       .agg(countDistinct(col(idCol)).cast("double").as("df"))
 
     val idf: Column = log(lit(1.0) +
-      (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+      (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val tfNorm: Column = col("tf") * (lit(k1) + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("doc_len") / lit(avgdl)))
+      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("doc_len") / col("avgdl")))
 
     val scored = postings
       .join(broadcast(dfByTerm), Seq("term"))
@@ -290,13 +302,6 @@ object Bm25 {
       case i                  => r.getSeq[String](i)
     }
 
-  /** The tombstoned ids across a batch-directory list (None = no
-    * removals — readers skip the anti-join entirely).
-    */
-  private def readTombIds(spark: org.apache.spark.sql.SparkSession,
-                          dirs: Seq[String]): Option[DataFrame] =
-    if (dirs.isEmpty) None else Some(IndexLayout.readParquet(spark, dirs))
-
   /** Whether a stats row PREDATES the `tomb_dirs` list — the pre-upgrade
     * format whose removals appended LOOSE files under `$path/tombstones`
     * instead of staged rm_* batch directories. Detected from the stats
@@ -329,7 +334,7 @@ object Bm25 {
                               path: String): Seq[String] =
     IndexLayout.tombstoneFiles(spark, paths(path).tombDir)
 
-  /** Anti-join `df` against a tombstone id set (no-op for None). */
+  /** Anti-join `df` against an extra id set (no-op for None). */
   private def dropIds(df: DataFrame, idCol: String,
                       ids: Option[DataFrame]): DataFrame =
     ids.fold(df)(t => df.join(t.toDF(idCol), Seq(idCol), "left_anti"))
@@ -558,8 +563,7 @@ object Bm25 {
       (if (old.exists(isLegacyStats)) legacyTombFiles(spark, path)
        else Seq.empty)
     val (b, segs) = IndexLayout.readLive(spark, docsBase, docsSegs)
-    val removed = dropIds((b ++ segs).reduce(_.unionByName(_)),
-      idCol, readTombIds(spark, listed))
+    val removed = IndexLayout.dropIdsIn(b.unionByName(segs), idCol, listed)
       .join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
       .distinct() // a crashed compaction can duplicate sidecar rows
       .cache()
@@ -673,14 +677,13 @@ object Bm25 {
     val tombDirs = statsRow.map(tombDirsOf).getOrElse(Seq.empty) ++
       legacyFiles
     if (segs.isEmpty) {
-      val tombIds = readTombIds(spark, tombDirs)
       val sharded =
         IndexLayout.partitionedLayout(spark, s"$path/postings", "shard")
       IndexLayout.rewriteInPlace(spark, s"$path/postings",
         if (sharded) Some("shard") else None,
-        df => reshard(dropIds(df, idCol, tombIds), reshardTo))
+        df => reshard(IndexLayout.dropIdsIn(df, idCol, tombDirs), reshardTo))
       IndexLayout.rewriteInPlace(spark, s"$path/docs", None,
-        dropIds(_, idCol, tombIds))
+        IndexLayout.dropIdsIn(_, idCol, tombDirs))
       // the shifted totals are already exact — the stats swap here only
       // retires the materialized batch list (skipped when there is
       // none); a legacy row swaps even with an empty list, migrating it
@@ -793,11 +796,12 @@ object Bm25 {
     */
   private def readStatsRows(spark: org.apache.spark.sql.SparkSession,
                             base: Option[String],
-                            segs: Seq[String]): Seq[org.apache.spark.sql.Row] = {
-    val (b, s) = IndexLayout.readLive(spark, base, segs)
-    (b ++ s).reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .fold(Seq.empty[org.apache.spark.sql.Row])(_.collect().toSeq)
-  }
+                            segs: Seq[String]): Seq[org.apache.spark.sql.Row] =
+    if (base.isEmpty && segs.isEmpty) Seq.empty
+    else {
+      val (b, s) = IndexLayout.readLive(spark, base, segs)
+      b.unionByName(s, allowMissingColumns = true).collect().toSeq
+    }
 
   /** Exact (n, avgdl) across per-layout stats rows: the integral n /
     * sum_len / n_len components ADD exactly in doubles, and the summed
@@ -822,19 +826,20 @@ object Bm25 {
     }
 
   /** [[topK]] over a [[writeIndex]] layout: the query terms' shards are
-    * computed driver-side and pushed as a partition filter, so the scan
-    * reads ~|query terms|/nShards of the index (pinned in Bm25Spec);
-    * within the read shards the term filter restricts to exactly the
-    * query terms, and scoring proceeds identically to [[topK]] (df for a
-    * query term is complete by construction — ALL its postings live in
-    * its shard). Row-identical to the scan path.
+    * computed driver-side and only their shard directories are listed
+    * and read, so the scan reads ~|query terms|/nShards of the index
+    * (pinned in Bm25Spec); within them a filter restricts to exactly
+    * the query terms, and scoring proceeds identically to [[topK]] (df
+    * for a query term is complete by construction — ALL its postings
+    * live in its shard). Row-identical to the scan path.
     *
     * Spans the base layout plus any streaming segments
     * ([[graft.streaming.StreamingOps.streamBm25Index]]): the base scan is
-    * partition-pruned, the one segment scan filters `shard` as data,
-    * stats sum exactly across the per-layout rows, and df/idf derive from
-    * the unioned postings at query time — so a streamed index retrieves
-    * row-identically to one rebuilt from scratch over everything.
+    * shard-pruned, the one segment scan is read whole (segments are
+    * micro-batch-sized), stats sum exactly across the per-layout rows,
+    * and df/idf derive from the unioned postings at query time — so a
+    * streamed index retrieves row-identically to one rebuilt from
+    * scratch over everything.
     */
   def topKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                   idCol: String, queries: Seq[(String, String)], k: Int,
@@ -876,6 +881,14 @@ object Bm25 {
     * resolve) and [[topKIndexedSnapshot]] (pinned snapshot): the base and
     * segment postings, stats rows and delete-set sources are explicit, so
     * the two entries differ ONLY in how the snapshot was acquired.
+    *
+    * One plan shape for every query and lifecycle state: base ∪
+    * segments (an absent part is a relation with no files), the query
+    * terms, DISTINCT, minus the delete set, and the stats as columns of
+    * the terms frame. Shards are pruned in the listing and terms by one
+    * array literal, not by IN-list literals, so neither
+    * the query nor the index state changes the generated code: a warm
+    * search compiles nothing.
     */
   private def topKOverLayouts(spark: org.apache.spark.sql.SparkSession,
                               base: Option[String], segs: Seq[String],
@@ -884,33 +897,27 @@ object Bm25 {
                               queries: Seq[(String, String)], k: Int,
                               k1: Double, b: Double, nShards: Int,
                               extraExclude: Option[DataFrame]): DataFrame = {
-    import spark.implicits._
-    val terms = queries.flatMap { case (qid, q) => queryTerms(q).map(qid -> _) }
-      .toDF("query_id", "term")
-    val termSet = queries.flatMap { case (_, q) => queryTerms(q) }.distinct
-    val shards = termSet.map(shardOf(_, nShards)).distinct
     val (nDocs, avgdl) = summedStats(statsRows)
-    val (baseRead, segRead) = IndexLayout.readLive(spark, base, segs)
-    val unioned = (baseRead ++ segRead).map { df =>
-      df.filter(col("shard").isin(shards.map(Integer.valueOf): _*))
-        .filter(col("term").isInCollection(termSet))
-        .drop("shard")
-    }.reduce(_.unionByName(_))
+    val terms = termsFrame(spark, queries, nDocs, avgdl)
+    val termSet = queries.flatMap { case (_, q) => queryTerms(q) }.distinct
+    val (baseRead, segRead) = IndexLayout.readLive(spark, base, segs,
+      Some(termSet.map(shardOf(_, nShards)).distinct))
+    // the terms as ONE array literal: generated code references it
+    // whatever its length, where an IN list inlines a test per term
+    val matching = baseRead.unionByName(segRead).drop("shard")
+      .filter(array_contains(typedLit(termSet), col("term")))
     // a crashed compaction can leave a segment both folded and present;
     // distinct over the query-restricted (matching docs × terms, never
-    // corpus-sized) union keeps scores exact in that window and is a
-    // no-op cost otherwise. Single-layout reads skip it entirely.
-    val deduped =
-      if (base.size + segs.size > 1) unioned.distinct() else unioned
-    // tombstoned docs (see [[removeFromIndex]]) drop BEFORE scoring, so
-    // df re-derives over live docs only; no-op when nothing was removed.
-    // The delete set comes from the SAME stats rows that supplied
-    // (n, avgdl) above — one resolved snapshot, so the filter and the
-    // stats can never be torn against each other.
+    // corpus-sized) union keeps scores exact in that window.
+    // Tombstoned docs (see [[removeFromIndex]]) drop BEFORE scoring, so
+    // df re-derives over live docs only. The delete set comes from the
+    // SAME stats rows that supplied (n, avgdl) above — one resolved
+    // snapshot, so the filter and the stats can never be torn against
+    // each other.
     val postings = dropIds(
-      dropIds(deduped, idCol, readTombIds(spark, tombSources)),
+      IndexLayout.dropIdsIn(matching.distinct(), idCol, tombSources),
       idCol, extraExclude)
-    scoreAndRank(postings, idCol, terms, nDocs, avgdl, k, k1, b)
+    scoreAndRank(postings, idCol, terms, k, k1, b)
   }
 
   /** Copy the LIVE postings (base + streaming segments, tombstoned docs
@@ -958,10 +965,10 @@ object Bm25 {
     try {
       val (b, segs) =
         IndexLayout.readLive(spark, Some(snap.base), snap.segPostings)
-      val unioned = (b ++ segs).reduce(_.unionByName(_))
+      val unioned = b.unionByName(segs)
       val deduped =
         if (snap.segPostings.nonEmpty) unioned.distinct() else unioned
-      dropIds(deduped, idCol, readTombIds(spark, snap.tombSources))
+      IndexLayout.dropIdsIn(deduped, idCol, snap.tombSources)
         // explicit count: exempt from AQE coalescing (see writeIndexBody)
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("shard"))

@@ -181,11 +181,16 @@ object BqIndex {
     * shuffle — never an unbounded broadcast, never a corpus distinct.
     */
   def readCodes(spark: SparkSession, path: String,
-                idCol: String): DataFrame = {
+                idCol: String): DataFrame =
+    readCodes(spark, path, idCol, IndexLayout.SegGuardBroadcastMaxBytes)
+
+  /** [[readCodes]] under an explicit segment-guard broadcast cap. */
+  private[graft] def readCodes(spark: SparkSession, path: String, idCol: String,
+                               segGuardMaxBytes: Long): DataFrame = {
     val (baseOpt, segParts) =
       IndexLayout.liveParts(spark, paths(path), "codes")
     IndexLayout.dropTombstoned(
-      mergedCodes(spark, baseOpt, segParts, idCol),
+      mergedCodes(spark, baseOpt, segParts, idCol, segGuardMaxBytes),
       idCol, paths(path).tombDir)
   }
 
@@ -194,15 +199,12 @@ object BqIndex {
     * paths instead of a fresh resolve.
     */
   private def mergedCodes(spark: SparkSession, baseOpt: Option[String],
-                          segParts: Seq[String], idCol: String): DataFrame = {
+                          segParts: Seq[String], idCol: String,
+                          segGuardMaxBytes: Long): DataFrame = {
     val (base, segs) = IndexLayout.readLive(spark, baseOpt, segParts)
-    val segments = segs.map(s => if (segParts.length > 1) s.distinct() else s)
-    (base, segments) match {
-      case (Some(b), Some(s)) =>
-        IndexLayout.segGuardedUnion(b, s, idCol,
-          IndexLayout.dirBytes(spark, segParts))
-      case (b, s) => b.orElse(s).get
-    }
+    IndexLayout.segGuardedUnion(base,
+      if (segParts.length > 1) segs.distinct() else segs, idCol,
+      IndexLayout.dirBytes(spark, segParts), segGuardMaxBytes)
   }
 
   /** One pinned, internally-validated read snapshot of a BQ layout: the
@@ -308,7 +310,8 @@ object BqIndex {
       : DataFrame =
     searchBatchOn(readModelAt(spark, snap.model),
       IndexLayout.dropTombstoned(
-        mergedCodes(spark, Some(snap.codes), snap.segCodes, idCol),
+        mergedCodes(spark, Some(snap.codes), snap.segCodes, idCol,
+          IndexLayout.SegGuardBroadcastMaxBytes),
         idCol, snap.tombDir),
       corpus, queries, idCol, qvCol, shortlist, topK, excludeSelf,
       extraExclude)

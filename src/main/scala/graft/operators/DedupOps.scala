@@ -796,20 +796,9 @@ object DedupOps {
   }
 
   /** The pruned index read inside [[dedupAgainstIndex]], exposed so the
-    * spec can pin its `PartitionFilters` shape (the operator's output is
-    * checkpointed by `materializeAndRelease`, which hides the scan).
-    * Spans the base layout plus any streaming segments
-    * ([[graft.streaming.StreamingOps.streamDedupIndex]]): the base scan is
-    * partition-pruned, the one segment scan filters `shard` as data. The
-    * union is NOT distinct-ed: segments are disjoint by the maintenance
-    * contract (new ids per batch, replays overwrite their own segment),
-    * and a probe batch's shard
-    * filter does not restrict CONTENT — a corpus-wide distinct here
-    * would put a full-width shuffle on every read (measured 22 s vs
-    * 5 s on q232's profile). The one state that could duplicate rows —
-    * a compaction crashed between its base swap and its segment
-    * cleanup — is repaired by re-running `compactDedupIndex` (the fold
-    * is distinct), which is where that cost belongs.
+    * spec can pin which shard directories it reads (the operator's
+    * output is checkpointed by `materializeAndRelease`, which hides the
+    * scan).
     */
   private[graft] def prunedShingleIndex(spark: org.apache.spark.sql.SparkSession,
                                         path: String, shNew: DataFrame,
@@ -818,15 +807,27 @@ object DedupOps {
         .javaHashMod(col("shingle"), nShards).as("shard"))
       .distinct().collect().map(_.getInt(0)).toSeq)
 
-  /** The live shingle postings (base + segments) of the given shards. */
+  /** The live shingle postings (base + segments) of the given shards:
+    * only their shard directories of the base are listed and read
+    * ([[IndexLayout.readLive]]); segments are read whole and keep every
+    * shard's rows, which the shingle match drops. Spans the base layout
+    * plus any streaming segments
+    * ([[graft.streaming.StreamingOps.streamDedupIndex]]). The union is
+    * NOT distinct-ed: segments are disjoint by the maintenance contract
+    * (new ids per batch, replays overwrite their own segment), and a
+    * probe batch's shard set does not restrict CONTENT — a corpus-wide
+    * distinct here would put a full-width shuffle on every read
+    * (measured 22 s vs 5 s on q232's profile). The one state that could
+    * duplicate rows — a compaction crashed between its base swap and its
+    * segment cleanup — is repaired by re-running `compactDedupIndex`
+    * (the fold is distinct), which is where that cost belongs.
+    */
   private def shardPrunedIndex(spark: org.apache.spark.sql.SparkSession,
                                path: String, shards: Seq[Int]): DataFrame = {
     val (base, segParts) =
       IndexLayout.liveParts(spark, paths(path), "shingles")
-    val (b, segs) = IndexLayout.readLive(spark, base, segParts)
-    (b ++ segs)
-      .map(_.filter(col("shard").isin(shards.map(Integer.valueOf): _*)))
-      .reduce(_.unionByName(_))
+    val (b, segs) = IndexLayout.readLive(spark, base, segParts, Some(shards))
+    b.unionByName(segs)
   }
 
   /** The live (id, __fp) fingerprint rows, tombstoned docs dropped. The
@@ -841,8 +842,9 @@ object DedupOps {
       IndexLayout.liveParts(spark, paths(path), "fingerprints")
     val (fpB, fpSegs) = IndexLayout.readLive(spark, fpBase, fpSegParts)
     IndexLayout.dropTombstoned(
-      (fpB ++ fpSegs).map(_.select(col(idCol), col("__fp")))
-        .reduce(_.unionByName(_)), idCol, paths(path).tombDir)
+      fpB.select(col(idCol), col("__fp"))
+        .unionByName(fpSegs.select(col(idCol), col("__fp"))),
+      idCol, paths(path).tombDir)
   }
 
   /** [[dedupAgainst]] over a [[writeDedupIndex]] layout, row-identical

@@ -11,24 +11,28 @@ import org.apache.spark.sql.functions._
 object GraphOps {
 
   /** Vertex-table row count at or under which the per-round loop joins
-    * (CC labels, pageRank ranks, kCore keep-sets via the edge-count
-    * dispatch below) run in the broadcast regime; past it, the shuffle
-    * fallback. System-property override so the regime-equality spec can
-    * force the fallback on a small graph.
+    * (CC labels, pageRank ranks) run in the broadcast regime; past it,
+    * the shuffle fallback. [[Regimes]] carries it, so the regime-equality
+    * spec can force the fallback on a small graph.
     */
-  private[graft] def BroadcastMaxRows: Long =
-    sys.props.get("graft.graph.broadcastMaxRows").map(_.toLong)
-      .getOrElse(5000000L)
+  private[graft] val BroadcastMaxRows: Long = 5000000L
 
   /** Edge count at or under which [[kCore]] peels with broadcast
     * semi-joins against the keep-set (vertices ≤ 2·edges, so the
     * keep-set is bounded by 2× this under [[BroadcastMaxRows]]'s cap);
     * past it, the shuffle peel that materializes the shrinking survivor
-    * graph. Same override hook as [[BroadcastMaxRows]].
+    * graph. Carried by [[Regimes]] like [[BroadcastMaxRows]].
     */
-  private[graft] def KCoreBroadcastMaxEdges: Long =
-    sys.props.get("graft.graph.kcoreBroadcastMaxEdges").map(_.toLong)
-      .getOrElse(2500000L)
+  private[graft] val KCoreBroadcastMaxEdges: Long = 2500000L
+
+  /** The regime caps of the graph loops, one field per switch. The public
+    * operators run under the defaults; a spec passes a zero to force the
+    * shuffle fallback and pins it row-identical to the broadcast regime
+    * (TemporalSpec).
+    */
+  private[graft] final case class Regimes(
+      broadcastMaxRows: Long = BroadcastMaxRows,
+      kcoreBroadcastMaxEdges: Long = KCoreBroadcastMaxEdges)
 
   /** Connected components by iterative min-label propagation: every node
     * starts labeled with itself; each round every node takes the minimum
@@ -46,7 +50,13 @@ object GraphOps {
     * Returns (id, component) for every node appearing in `edges`.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIters: Int = 20): DataFrame = {
+                          maxIters: Int = 20): DataFrame =
+    connectedComponents(edges, srcCol, dstCol, maxIters, Regimes())
+
+  /** [[connectedComponents]] under explicit regime caps. */
+  private[graft] def connectedComponents(edges: DataFrame, srcCol: String,
+                                         dstCol: String, maxIters: Int,
+                                         regimes: Regimes): DataFrame = {
     val spark = edges.sparkSession
     val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
@@ -57,7 +67,7 @@ object GraphOps {
     // fits a broadcast, ship labels to the (checkpointed, never
     // reshuffled) edge partitions instead of shuffling the edge list every
     // round; past the guard fall back to the shuffle join.
-    val broadcastLabels = labels.count() <= BroadcastMaxRows
+    val broadcastLabels = labels.count() <= regimes.broadcastMaxRows
     var converged = false
     var i = 0
     while (i < maxIters && !converged) {
@@ -105,7 +115,13 @@ object GraphOps {
     * roles (offset one side if the key spaces overlap).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85): DataFrame = {
+               iters: Int, damping: Double = 0.85): DataFrame =
+    pageRank(edges, srcCol, dstCol, iters, damping, Regimes())
+
+  /** [[pageRank]] under explicit regime caps. */
+  private[graft] def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
+                              iters: Int, damping: Double,
+                              regimes: Regimes): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().localCheckpoint()
     val nodes = e.select(col("src").as("id"))
@@ -118,7 +134,7 @@ object GraphOps {
     // edge partitions instead of shuffling the edge list every round. Past
     // the threshold, fall back to a shuffle join on src (edges would then
     // best be pre-partitioned by src upstream).
-    val broadcastRanks = nodes.count() <= BroadcastMaxRows
+    val broadcastRanks = nodes.count() <= regimes.broadcastMaxRows
     var ranks = nodes.select(col("id"), lit(1.0).as("rank"))
     (1 to iters).foreach { _ =>
       val r = ranks.withColumnRenamed("id", "src")
@@ -157,7 +173,12 @@ object GraphOps {
     * degree.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxIters: Int = 50): DataFrame = {
+            maxIters: Int = 50): DataFrame =
+    kCore(edges, srcCol, dstCol, k, maxIters, Regimes())
+
+  /** [[kCore]] under explicit regime caps. */
+  private[graft] def kCore(edges: DataFrame, srcCol: String, dstCol: String,
+                           k: Int, maxIters: Int, regimes: Regimes): DataFrame = {
     val edges0 = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -165,7 +186,7 @@ object GraphOps {
       .distinct()
       .localCheckpoint()
     val nEdges0 = edges0.count()
-    if (nEdges0 <= KCoreBroadcastMaxEdges) kCoreBroadcastPeel(edges0, nEdges0, k, maxIters)
+    if (nEdges0 <= regimes.kcoreBroadcastMaxEdges) kCoreBroadcastPeel(edges0, nEdges0, k, maxIters)
     else kCoreShufflePeel(edges0, nEdges0, k, maxIters)
   }
 

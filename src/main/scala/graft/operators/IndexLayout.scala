@@ -726,20 +726,22 @@ object IndexLayout {
     * deleted, it keeps filtering reads and the next compaction
     * materializes it.
     */
-  def tombstoneFiles(spark: SparkSession, tombDir: String): Seq[String] = {
+  def tombstoneFiles(spark: SparkSession, tombDir: String): Seq[String] =
+    tombstoneStatuses(spark, tombDir).map(_.getPath.toString)
+
+  private def tombstoneStatuses(spark: SparkSession,
+                                tombDir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(tombDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
   }
 
-  /** The tombstoned ids, or None when nothing was ever removed (the
-    * common case — readers skip the anti-join entirely, so an index
-    * with no deletes pays zero overhead for supporting them). A sidecar
-    * directory holding no data files (all tombstones materialized by a
-    * compaction that cleared exactly its snapshot) reads as None too.
+  /** The tombstoned ids, or None when nothing was ever removed. A
+    * sidecar directory holding no data files (all tombstones
+    * materialized by a compaction that cleared exactly its snapshot)
+    * reads as None too.
     */
   def readTombstones(spark: SparkSession,
                      tombDir: String): Option[DataFrame] = {
@@ -748,17 +750,12 @@ object IndexLayout {
   }
 
   /** Drop the ids held by an EXPLICIT tombstone-file snapshot from `df`
-    * (no-op for an empty snapshot) — what the compactors fold, so a
-    * tombstone file landing after the snapshot is untouched.
+    * — what the compactors fold, so a tombstone file landing after the
+    * snapshot is untouched.
     */
   def dropTombstonedFiles(df: DataFrame, idCol: String,
                           files: Seq[String]): DataFrame =
-    if (files.isEmpty) df
-    else {
-      val t = readParquet(df.sparkSession, files)
-      df.join(t.withColumnRenamed(t.columns.head, idCol), Seq(idCol),
-        "left_anti")
-    }
+    dropIdsIn(df, idCol, files)
 
   /** Delete EXACTLY the given tombstone files — the clear half of the
     * snapshot pair. The sidecar directory itself is left in place (a
@@ -771,15 +768,65 @@ object IndexLayout {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
     }
 
-  /** Drop tombstoned rows from `df` (no-op when no tombstones exist). */
+  /** Drop the rows of `df` whose id a live tombstone file of `tombDir`
+    * holds: one anti-join, whether or not anything was removed (see
+    * [[antiJoinIds]]).
+    */
   def dropTombstoned(df: DataFrame, idCol: String,
                      tombDir: String): DataFrame =
-    readTombstones(df.sparkSession, tombDir) match {
-      case Some(t) =>
-        df.join(t.withColumnRenamed(t.columns.head, idCol), Seq(idCol),
-          "left_anti")
-      case None => df
+    antiJoinIds(df, idCol, tombstoneStatuses(df.sparkSession, tombDir))
+
+  /** Drop the rows of `df` whose id the parquet data under `roots` holds:
+    * tombstone files or tombstone batch directories, listed on the
+    * driver. A root that does not exist fails with Spark's missing-path
+    * error, as reading it always did: a listed delete set that vanished
+    * must not read as "nothing removed".
+    */
+  def dropIdsIn(df: DataFrame, idCol: String, roots: Seq[String]): DataFrame = {
+    val spark = df.sparkSession
+    val listed = roots.map { r =>
+      val p = new org.apache.hadoop.fs.Path(r)
+      val fs = fsOf(spark, p)
+      statusOf(fs, p).map(walkFrom(fs, _, sparkVisible).filter(isDataFile).toSeq)
     }
+    val missing = roots.zip(listed).collect { case (r, None) => r }
+    if (missing.nonEmpty) readParquet(spark, missing) // Spark's missing-path error
+    antiJoinIds(df, idCol, listed.flatten.flatten)
+  }
+
+  /** `df` minus the ids in the parquet `files`, as ONE plan shape for
+    * every delete set, the empty one included: an anti-join on
+    * `struct(id, true)` against the files' ids and one
+    * `struct(null, false)` row. The extra row matches no id (its second
+    * field is false), and it keeps the join: with an empty right side,
+    * adaptive execution drops the anti-join at run time, so a read with
+    * no tombstones would compile different code from one with them.
+    * A plain null id would not do: the optimizer infers `id IS NOT NULL`
+    * on the right side of the join and folds such a row away. Null
+    * tombstone ids are filtered out, so they match nothing, as in a
+    * plain anti-join on the id.
+    */
+  private def antiJoinIds(df: DataFrame, idCol: String,
+                          files: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val spark = df.sparkSession
+    val idType = df.schema(idCol).dataType
+    val tombs = files.headOption.map(f => f -> footerSchemaOf(spark, f)) match {
+      case None               => relation(spark, StructType(Seq(StructField(idCol, idType))), None, Nil)
+      case Some((_, Some(s))) => relation(spark, s, None, leavesOf(files, None))
+      case Some((_, None))    => spark.read.parquet(files.map(_.getPath.toString): _*)
+    }
+    def key(id: org.apache.spark.sql.Column, live: Boolean) =
+      struct(id.as("id"), lit(live).as("live")).as("__tomb")
+    val none = spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(null)),
+      StructType(Seq(StructField(idCol, idType))))
+    val deleted = tombs.select(col(tombs.columns.head).cast(idType).as(idCol))
+      .filter(col(idCol).isNotNull).select(key(col(idCol), live = true))
+      .unionByName(none.select(key(col(idCol), live = false)))
+    df.withColumn("__tomb", key(col(idCol), live = true))
+      .join(deleted, Seq("__tomb"), "left_anti").drop("__tomb")
+  }
 
   /** Rewrite a parquet directory in place: read, `transform`, cluster by
     * `partCol` (when given) and write partitioned, then atomically swap
@@ -1212,31 +1259,202 @@ object IndexLayout {
     fsOf(spark, hp).exists(hp)
   }
 
-  /** The one live read of a base+segments layout: (the base read, ONE
-    * read over all segment parts). No other code reads segments.
+  /** The one live read of a base+segments table: (the base, ONE
+    * relation over all segment parts), both always present. No other
+    * code reads segments.
     *
-    *   - The base is read with partition discovery, so its `<key>=`
-    *     directories come back as the key column.
-    *   - All segments are one scan: N segments cost one listing, footer
-    *     and scan setup instead of N (the per-segment fixed cost was the
+    * Both are built from the driver's own listing ([[walkFiles]] with
+    * Spark's hidden-name rule), handed to Spark as a file index with
+    * its partitions, files and footer schema already known
+    * ([[relation]]): no read runs a partition-discovery or
+    * schema-inference job, and nothing is listed twice. (Spark's own
+    * discovery lists a 64-shard base with a 64-task job, as it goes
+    * parallel above 32 leaf dirs.)
+    *
+    *   - The base's `<key>=N` directories become the key column, typed
+    *     `int` and appended after the data columns, as discovery gives
+    *     them. `keys` keeps only the listed values: shard and cell
+    *     pruning happens in the listing, not in a filter literal. An
+    *     unpartitioned base (the readable-empty layout) is read whole.
+    *   - All segments are one relation: N segments cost one footer and
+    *     one scan setup instead of N (the per-segment fixed cost was the
     *     measured LSM read-amplification slope, PERF.md "Round 6:
-    *     streaming index segments"). Two or more
-    *     parts read with `recursiveFileLookup`: a multi-root read would
-    *     otherwise attempt partition discovery over the shared
-    *     `segments/batch=N` ancestors and fail with
-    *     CONFLICTING_DIRECTORY_STRUCTURES.
+    *     streaming index segments"). A segment is unpartitioned by
+    *     construction (the writers choose the layout from the target
+    *     path, [[isSegmentPath]]), so it carries its key as a data
+    *     column and `keys` does not apply to it.
+    *   - An absent part is a relation with no files and the other part's
+    *     columns, so the plan has one shape in every lifecycle state and
+    *     its generated code does not change as segments come and go.
     *
-    * Plain file listing is exact because a segment is unpartitioned by
-    * construction: the writers choose the layout from the target path
-    * ([[isSegmentPath]]), so a segment carries its key as a data column.
+    * A base the listing cannot read as such (a missing path, no data
+    * file, a non-integer key, a footer without Spark's schema) goes to
+    * [[readParquet]] unpruned, so Spark's own errors stay Spark's own.
     */
-  def readLive(spark: SparkSession, base: Option[String],
-               segParts: Seq[String]): (Option[DataFrame], Option[DataFrame]) =
-    (base.map(b => readParquet(spark, Seq(b))), segParts match {
-      case Seq()  => None
-      case Seq(s) => Some(readParquet(spark, Seq(s)))
-      case ss     => Some(readParquet(spark, ss, recursiveFileLookup = true))
+  def readLive(spark: SparkSession, base: Option[String], segParts: Seq[String],
+               keys: Option[Seq[Int]] = None): (DataFrame, DataFrame) = {
+    val b = base.map(path => path -> listBase(spark, path, keys.map(_.toSet)))
+    val s = listFlat(spark, segParts)
+    val segSchema = s.flatMap(_.schema)
+    val baseDf = b.map {
+      case (_, Some(l @ Listed(_, _, Some(data), _))) => relation(spark, data, l.partCol, l.leaves)
+      case (_, Some(l)) if !l.hasData && segSchema.isDefined =>
+        relation(spark, segSchema.get, None, Nil)
+      case (path, None) if segSchema.isDefined && !exists(spark, path) =>
+        relation(spark, segSchema.get, None, Nil)
+      case (path, _) => readParquet(spark, Seq(path))
+    }
+    val segDf = (s, segSchema) match {
+      case (Some(l), Some(data)) => relation(spark, data, None, l.leaves)
+      case (Some(l), None) if !l.hasData && baseDf.isDefined =>
+        relation(spark, baseDf.get.schema, None, Nil)
+      case (Some(l), None) if l.hasData =>
+        spark.read.parquet(l.leaves.flatMap(_.files).map(_.getPath.toString): _*)
+      case _ => readParquet(spark, segParts) // Spark's missing-path or inference error
+    }
+    (baseDf.getOrElse(relation(spark, segDf.schema, None, Nil)), segDf)
+  }
+
+  /** A listed leaf directory: its `<key>=N` value (None when
+    * unpartitioned) and the data files directly in it.
+    */
+  private final case class Leaf(dir: org.apache.hadoop.fs.Path, key: Option[Int],
+                                files: Array[org.apache.hadoop.fs.FileStatus])
+
+  /** One part of a live read as listed: its partition key, its kept
+    * leaves, whether it holds any data file, and the data schema from
+    * the footer of the file Spark's inference would open (None when
+    * there is no data file, or its footer has no Spark schema).
+    */
+  private final case class Listed(partCol: Option[String], leaves: Seq[Leaf],
+                                  schema: Option[org.apache.spark.sql.types.StructType],
+                                  hasData: Boolean)
+
+  private object Listed {
+    def apply(partCol: Option[String], leaves: Seq[Leaf], spark: SparkSession,
+              first: Option[org.apache.hadoop.fs.FileStatus]): Listed =
+      Listed(partCol, leaves, first.flatMap(footerSchemaOf(spark, _)), first.isDefined)
+  }
+
+  /** The base `dir`, listed: one `listStatus` of `dir`, then a walk of
+    * each kept `<key>=N` directory (or of the whole dir when it holds no
+    * key directories). The schema file is the first data file of the
+    * whole base in full-path order — the one inference over the unpruned
+    * base would open — so a pruned read has the unpruned read's columns;
+    * a pruned-away dir is walked only while no earlier dir has supplied
+    * it. None when `dir` does not exist or its key directories are not
+    * one integer key.
+    */
+  private def listBase(spark: SparkSession, dir: String,
+                       keys: Option[Set[Int]]): Option[Listed] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = fsOf(spark, p)
+    statusOf(fs, p).filter(_.isDirectory).flatMap { st =>
+      val keyed = fs.listStatus(st.getPath).toSeq
+        .filter(c => c.isDirectory && sparkVisible(c.getPath.getName) &&
+          c.getPath.getName.contains("="))
+        .sortBy(c => walkKey(c, c.getPath.getName))
+        .map(c => (c, c.getPath.getName.split("=", 2)))
+      def files(d: org.apache.hadoop.fs.FileStatus) =
+        walkFrom(fs, d, sparkVisible).filter(isDataFile).toSeq
+      if (keyed.isEmpty) {
+        val all = files(st)
+        Some(Listed(None, leavesOf(all, None), spark, all.headOption))
+      } else {
+        val name = keyed.head._2(0)
+        if (keyed.exists { case (_, kv) => kv(0) != name || kv(1).toIntOption.isEmpty }) None
+        else {
+          val dirs = keyed.map { case (d, kv) => d -> kv(1).toInt }
+          val kept = dirs.collect {
+            case (d, v) if keys.forall(_(v)) => v -> files(d)
+          }.toMap
+          val first = dirs.iterator
+            .flatMap { case (d, v) => kept.getOrElse(v, files(d)) }.nextOption()
+          Some(Listed(Some(name), dirs.flatMap { case (_, v) =>
+            kept.get(v).toSeq.flatMap(leavesOf(_, Some(v)))
+          }, spark, first))
+        }
+      }
+    }
+  }
+
+  /** Unpartitioned parts (segment dirs), listed and walked in full-path
+    * order; None when one of them does not exist.
+    */
+  private def listFlat(spark: SparkSession, parts: Seq[String]): Option[Listed] = {
+    val roots = parts.map { s =>
+      val p = new org.apache.hadoop.fs.Path(s)
+      val fs = fsOf(spark, p)
+      statusOf(fs, p).map(fs -> _)
+    }
+    if (roots.contains(None)) None
+    else {
+      val files = roots.flatten.sortBy { case (_, st) => walkKey(st, st.getPath.toString) }
+        .flatMap { case (fs, st) => walkFrom(fs, st, sparkVisible).filter(isDataFile) }
+      Some(Listed(None, leavesOf(files, None), spark, files.headOption))
+    }
+  }
+
+  private def isDataFile(st: org.apache.hadoop.fs.FileStatus): Boolean =
+    st.getPath.getName.endsWith(".parquet")
+
+  /** `files` grouped by their directory, in walk order. */
+  private def leavesOf(files: Seq[org.apache.hadoop.fs.FileStatus],
+                       key: Option[Int]): Seq[Leaf] = {
+    val byDir = scala.collection.mutable.LinkedHashMap
+      .empty[org.apache.hadoop.fs.Path, scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]]
+    files.foreach(f => byDir.getOrElseUpdate(f.getPath.getParent,
+      scala.collection.mutable.ArrayBuffer.empty) += f)
+    byDir.iterator.map { case (d, fs) => Leaf(d, key, fs.toArray) }.toSeq
+  }
+
+  /** A parquet relation over listed `leaves`: Spark's `InMemoryFileIndex`
+    * with the partition spec given and every leaf's files in its status
+    * cache, so building it lists nothing, infers nothing and starts no
+    * job. The data schema is made nullable, as every parquet read makes
+    * it; `partCol` is an `int` partition column, as discovery types a
+    * `<key>=N` directory. With no leaves it is a relation with no files:
+    * it reads no rows, yet the optimizer keeps it (it prunes only empty
+    * local relations), so the plan keeps its shape.
+    */
+  private def relation(spark: SparkSession, dataSchema: org.apache.spark.sql.types.StructType,
+                       partCol: Option[String], leaves: Seq[Leaf]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+      InMemoryFileIndex, PartitionPath, PartitionSpec}
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val partSchema = StructType(partCol.toSeq.map(StructField(_, IntegerType)))
+    val listed = leaves.map(l => l.dir -> l.files).toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: org.apache.hadoop.fs.Path) = listed.get(path)
+      override def putLeafFiles(path: org.apache.hadoop.fs.Path,
+                                files: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val spec = PartitionSpec(partSchema, if (partCol.isEmpty) Nil else leaves.map { l =>
+      PartitionPath(org.apache.spark.sql.catalyst.InternalRow(l.key.get), l.dir)
     })
+    val index = new InMemoryFileIndex(spark, leaves.map(_.dir), Map.empty, None, cache,
+      Some(spec), None)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      asNullable(dataSchema).asInstanceOf[StructType], None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(spark))
+  }
+
+  /** `t` with every field, element and value nullable, as a file read
+    * types its data schema.
+    */
+  private def asNullable(t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = asNullable(f.dataType), nullable = true)))
+      case a: ArrayType  => ArrayType(asNullable(a.elementType), containsNull = true)
+      case m: MapType    => MapType(asNullable(m.keyType), asNullable(m.valueType),
+        valueContainsNull = true)
+      case other         => other
+    }
+  }
 
   /** The offline fold input shared by the compactions, retrains and
     * audits: table `sub`'s [[liveParts]] over the segment snapshot
@@ -1251,8 +1469,7 @@ object IndexLayout {
                project: DataFrame => DataFrame = identity): DataFrame = {
     val (base, parts) = liveParts(spark, p, sub, Some(segs))
     val (b, s) = readLive(spark, base, parts)
-    dropTombstonedFiles(
-      (b ++ s).map(project).reduce(_.unionByName(_)).distinct(), idCol, tombs)
+    dropTombstonedFiles(project(b).unionByName(project(s)).distinct(), idCol, tombs)
   }
 
   /** The live rows of an index's data table — base ∪ live segments
@@ -1285,24 +1502,23 @@ object IndexLayout {
     * accumulates segments until an uncapped broadcast would hurt, and
     * this regime flip (never a corpus `distinct()`) absorbs that
     * instead. Same cap-with-fallback discipline as
-    * `DedupOps.ExactFpBroadcastMaxRows`; system-property override so the
-    * regime-equality specs can force the fallback on a small corpus.
+    * `DedupOps.ExactFpBroadcastMaxRows`; the readers' private[graft]
+    * overloads take the cap, so the regime-equality specs can force the
+    * fallback on a small corpus.
     */
-  private[graft] def SegGuardBroadcastMaxBytes: Long =
-    sys.props.get("graft.index.segGuardBroadcastMaxBytes").map(_.toLong)
-      .getOrElse(256L * 1024 * 1024)
+  private[graft] val SegGuardBroadcastMaxBytes: Long = 256L * 1024 * 1024
 
   /** The capped crash-duplicate guard shared by the segment-state reads:
-    * `base ANTI-JOIN segIds ∪ segments`, broadcast under
-    * [[SegGuardBroadcastMaxBytes]] of segment bytes, shuffle anti-join
-    * above it. `segBytes` is the [[dirBytes]] of the live segment dirs.
+    * `base ANTI-JOIN segIds ∪ segments`, broadcast while `segBytes` (the
+    * [[dirBytes]] of the live segment dirs) is at most `maxBytes`,
+    * shuffle anti-join above it.
     */
   private[operators] def segGuardedUnion(base: DataFrame, segments: DataFrame,
-                                         idCol: String,
-                                         segBytes: Long): DataFrame = {
+                                         idCol: String, segBytes: Long,
+                                         maxBytes: Long): DataFrame = {
     val segIds = segments.select(idCol)
     val guarded =
-      if (segBytes <= SegGuardBroadcastMaxBytes)
+      if (segBytes <= maxBytes)
         base.join(org.apache.spark.sql.functions.broadcast(segIds),
           Seq(idCol), "left_anti")
       else base.join(segIds, Seq(idCol), "left_anti")
@@ -1587,18 +1803,19 @@ object IndexLayout {
     */
   private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  /** The one parquet read of an index table: `spark.read.parquet(paths)`
-    * with the schema resolved on the driver, so the read launches no
+  /** A parquet read of whole index tables (stats rows, doc sidecars,
+    * tombstones, compaction inputs): `spark.read.parquet(paths)` with
+    * the schema resolved on the driver, so the read launches no
     * schema-inference job (a one-task Spark job per read without it:
-    * 17 of the 112 jobs of a 100-doc streamed ingest batch).
+    * 17 of the 112 jobs of a 100-doc streamed ingest batch). Live
+    * base+segment reads go through [[readLive]] instead.
     *
     * The schema is the Spark row schema stamped in the footer of the
     * file Spark's own inference would open ([[firstDataFile]]), read
     * through the parquet-hadoop API: the same file and the same schema,
     * so the frame is the one inference gives. Partition discovery still
-    * runs (a base keeps its `shard`/`cell` column, appended after the
-    * data columns as before); `recursiveFileLookup` is the multi-segment
-    * read ([[readLive]]). A read whose parts may differ in schema (a
+    * runs (a partitioned table keeps its `shard`/`cell` column, appended
+    * after the data columns). A read whose parts may differ in schema (a
     * legacy stats row, a base with a retired column) stays one call per
     * part, as before.
     *
@@ -1609,17 +1826,16 @@ object IndexLayout {
     * Inference here is Spark's default one-file inference: no session
     * in this engine turns `spark.sql.parquet.mergeSchema` on.
     */
-  def readParquet(spark: SparkSession, paths: Seq[String],
-                  recursiveFileLookup: Boolean = false): DataFrame = {
-    val reader =
-      if (recursiveFileLookup) spark.read.option("recursiveFileLookup", "true")
-      else spark.read
-    footerSchema(spark, paths).fold(reader)(reader.schema).parquet(paths: _*)
-  }
+  def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame =
+    firstDataFile(spark, paths).flatMap(footerSchemaOf(spark, _))
+      .fold(spark.read)(spark.read.schema).parquet(paths: _*)
 
-  private def footerSchema(spark: SparkSession,
-                           paths: Seq[String]): Option[org.apache.spark.sql.types.StructType] =
-    try firstDataFile(spark, paths).flatMap { st =>
+  /** The Spark row schema stamped in the footer of data file `st`, or
+    * None when the footer lacks the key or does not parse.
+    */
+  private def footerSchemaOf(spark: SparkSession, st: org.apache.hadoop.fs.FileStatus)
+      : Option[org.apache.spark.sql.types.StructType] =
+    try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromStatus(st, spark.sparkContext.hadoopConfiguration)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

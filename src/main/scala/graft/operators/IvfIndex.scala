@@ -421,7 +421,16 @@ object IvfIndex {
   def searchPruned(spark: org.apache.spark.sql.SparkSession,
                    indexPath: String, queries: DataFrame, idCol: String,
                    embCol: String, model: Model, nprobe: Int,
-                   topK: Int): DataFrame = {
+                   topK: Int): DataFrame =
+    searchPruned(spark, indexPath, queries, idCol, embCol, model, nprobe,
+      topK, IndexLayout.SegGuardBroadcastMaxBytes)
+
+  /** [[searchPruned]] under an explicit segment-guard broadcast cap. */
+  private[graft] def searchPruned(spark: org.apache.spark.sql.SparkSession,
+                                  indexPath: String, queries: DataFrame,
+                                  idCol: String, embCol: String, model: Model,
+                                  nprobe: Int, topK: Int,
+                                  segGuardMaxBytes: Long): DataFrame = {
     val probed = queries.select(col(embCol)).collect()
       .flatMap { r =>
         val v = r.getSeq[Any](0).map {
@@ -431,7 +440,7 @@ object IvfIndex {
         probeCellsLocal(v, model, nprobe)
       }.distinct.sorted
     val indexed = IndexLayout.dropTombstoned(
-      readCells(spark, indexPath, probed, idCol), idCol,
+      readCells(spark, indexPath, probed, idCol, segGuardMaxBytes), idCol,
       paths(indexPath).tombDir)
     searchIndexed(queries, indexed, idCol, embCol, model, nprobe, topK)
   }
@@ -457,21 +466,23 @@ object IvfIndex {
     * union is `distinct()`ed when ≥2 segments are live — the bounded
     * segment-side aggregate, never the base. The broadcast is capped
     * (`IndexLayout.SegGuardBroadcastMaxBytes` of segment bytes) with a
-    * shuffle anti-join fallback for an uncompacted segment pile.
+    * shuffle anti-join fallback for an uncompacted segment pile. Only the
+    * probed cells' directories of the base are listed and read
+    * ([[IndexLayout.readLive]]); the cell filter stays on the union for
+    * the segments, which carry `cell` as data.
     */
   private[operators] def readCells(spark: org.apache.spark.sql.SparkSession,
                                    indexPath: String, cells: Seq[Int],
-                                   idCol: String): DataFrame = {
+                                   idCol: String,
+                                   segGuardMaxBytes: Long): DataFrame = {
     val cellList = cells.map(Integer.valueOf)
     val (base0, segs) = IndexLayout.liveParts(spark, paths(indexPath), "")
-    val (baseRead, segRead) = IndexLayout.readLive(spark, base0, segs)
-    val base = baseRead.get.filter(col("cell").isin(cellList: _*))
-    segRead.fold(base) { s =>
-      val seg0 = s.filter(col("cell").isin(cellList: _*))
-        .select(base.columns.map(col).toIndexedSeq: _*)
-      val segDf = if (segs.length > 1) seg0.distinct() else seg0
-      IndexLayout.segGuardedUnion(base, segDf, idCol,
-        IndexLayout.dirBytes(spark, segs))
-    }
+    val (baseRead, segRead) = IndexLayout.readLive(spark, base0, segs, Some(cells))
+    val base = baseRead.filter(col("cell").isin(cellList: _*))
+    val seg0 = segRead.filter(col("cell").isin(cellList: _*))
+      .select(base.columns.map(col).toIndexedSeq: _*)
+    val segDf = if (segs.length > 1) seg0.distinct() else seg0
+    IndexLayout.segGuardedUnion(base, segDf, idCol,
+      IndexLayout.dirBytes(spark, segs), segGuardMaxBytes)
   }
 }

@@ -114,7 +114,8 @@ object IvfPq {
     }.toMap
     val allCells = cellsPer.values.flatten.toSeq.distinct.sorted
     val idx = IndexLayout.dropTombstoned(
-      IvfIndex.readCells(spark, indexPath, allCells, idCol), idCol,
+      IvfIndex.readCells(spark, indexPath, allCells, idCol,
+        IndexLayout.SegGuardBroadcastMaxBytes), idCol,
       IvfIndex.paths(indexPath).tombDir)
     val luts: Map[Long, Array[Array[Double]]] = qs.map { case (qid, v) =>
       qid -> Array.tabulate(model.pq.m) { s =>
@@ -313,7 +314,8 @@ object IvfPq {
                    topK: Int): DataFrame = {
     val cells = IvfIndex.probeCellsLocal(query, model.coarse, nprobe)
     val idx = IndexLayout.dropTombstoned(
-      IvfIndex.readCells(spark, indexPath, cells, idCol),
+      IvfIndex.readCells(spark, indexPath, cells, idCol,
+        IndexLayout.SegGuardBroadcastMaxBytes),
       idCol, IvfIndex.paths(indexPath).tombDir)
     val cand = PqIndex.adcTopK(idx, idCol, model.pq, query, shortlist)
     val exact = udf { v: Seq[Float] =>

@@ -63,11 +63,12 @@ class Bm25Spec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
     assert(rows(indexed) === rows(direct))
-    // the shard filter reaches the scan as a partition filter: at most
-    // 6 distinct query terms -> at most 6 of the 64 shard directories read
-    val plan = indexed.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[shard#\\d+ IN \\(".r.findFirstIn(plan).isDefined,
-      plan.take(3000))
+    // only the query terms' shard directories are listed and scanned: at
+    // most 6 distinct query terms -> at most 6 of the 64 shard directories
+    val scans = baseShardScans(indexed, "postings")
+    val want = bm25QueryShards(queries, 64)
+    assert(want.size <= 6 && scans.nonEmpty &&
+      scans.forall(r => r.nonEmpty && r.subsetOf(want)), (scans, want))
   }
 
   test("appendToIndex is row-identical to a from-scratch rebuild") {
@@ -249,20 +250,22 @@ class Bm25Spec extends SparkSpec {
       "doc_id", "text", fullDir, nShards = 64)
     val streamed = rows(dir)
     assert(streamed === rows(fullDir))
-    // plan pin: each use of the postings (scoring and df) is exactly two
-    // scans — the BASE partition-pruned (shard IN (...) as a
-    // PartitionFilter) and ONE scan over both unpartitioned segments
-    // (2 paths, shard a plain data filter)
-    val plan = Bm25.topKIndexed(spark, dir, "doc_id", queries, k = 10)
-      .queryExecution.executedPlan.toString
-    val scanPaths = "Location: InMemoryFileIndex\\((\\d+) paths\\)".r
-      .findAllMatchIn(plan).map(_.group(1).toInt).toSeq
-    assert(scanPaths.sorted == Seq(1, 1, 2, 2),
-      s"expected base + one segment scan per postings use in:\n${plan.take(3000)}")
-    val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(partFilters.count(_.matches("shard#\\d+ IN \\(.*")) == 2 &&
-      partFilters.count(_.isEmpty) == 2, plan.take(3000))
+    // plan pin: each use of the postings (scoring and df) reads only the
+    // query terms' shard directories of the BASE (pruned in the listing,
+    // so no partition filter is left to plan) and ONE relation over both
+    // unpartitioned segments' postings
+    val searched = Bm25.topKIndexed(spark, dir, "doc_id", queries, k = 10)
+    val postingsScans = scanRoots(searched).filter(_.exists(_.contains("/postings")))
+    val (segScans, baseScans) = postingsScans.partition(_.exists(_.contains("/segments/")))
+    val want = bm25QueryShards(queries, 64)
+    assert(baseScans.nonEmpty && baseScans.forall(_.forall(p =>
+      p.matches(".*/postings/shard=\\d+") && want(p.split("shard=").last.toInt))),
+      postingsScans)
+    assert(segScans.size == baseScans.size &&
+      segScans.forall(r => r.size == 2 && r.forall(_.matches(".*/segments/batch=\\d+/postings"))),
+      postingsScans)
+    val plan = searched.queryExecution.executedPlan.toString
+    assert(!plan.contains("PartitionFilters: [shard"), plan.take(3000))
     // a replayed batch overwrites its own segment — results converge
     Bm25.writeIndex(parts(1).toSeq.toDF("doc_id", "text"),
       "doc_id", "text", s"$dir/segments/batch=0", nShards = 64)
@@ -357,9 +360,9 @@ class Bm25Spec extends SparkSpec {
     assert(out.collect().map(_.toSeq).toSet
       === Bm25.topK(live, "doc_id", "text", queries, k = 10)
         .collect().map(_.toSeq).toSet)
-    val plan = out.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[shard#\\d+ IN \\(".r.findFirstIn(plan).isDefined,
-      plan.take(3000))
+    val scans = baseShardScans(out, "postings")
+    assert(scans.nonEmpty && scans.forall(r => r.nonEmpty &&
+      r.subsetOf(bm25QueryShards(queries, 64))), scans)
   }
 
   test("kill the compactor between new-layout-complete and the flip: reads serve the old version") {

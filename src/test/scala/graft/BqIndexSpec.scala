@@ -404,13 +404,12 @@ class BqIndexSpec extends SparkSpec {
     // a crashed fold's leftover: rows present in BOTH base and segment
     BqIndex.writeSegment(c.filter(col("vec_id") % 4 === 0), "vec_id", "qv",
       dir, batchId = 1L)
-    def live(): Seq[Seq[Any]] = BqIndex.readCodes(spark, dir, "vec_id")
-      .orderBy("vec_id").collect().map(_.toSeq).toSeq
+    def live(cap: Long = IndexLayout.SegGuardBroadcastMaxBytes): Seq[Seq[Any]] =
+      BqIndex.readCodes(spark, dir, "vec_id", cap)
+        .orderBy("vec_id").collect().map(_.toSeq).toSeq
     val want = live() // broadcast regime (tiny segments, default cap)
     assert(want.length == c.count())
-    sys.props("graft.index.segGuardBroadcastMaxBytes") = "0"
-    try assert(live() == want,
+    assert(live(cap = 0L) == want,
       "shuffle-fallback regime disagrees with the broadcast regime")
-    finally sys.props -= "graft.index.segGuardBroadcastMaxBytes"
   }
 }

@@ -309,21 +309,25 @@ class IndexLayoutSpec extends SparkSpec {
     Seq((1.0, 2.0)).toDF("n", "avgdl").write.parquet(ragged)
     Seq((1.0, 2.0, 3.0)).toDF("n", "avgdl", "sum_len")
       .write.mode("append").parquet(ragged)
-    def check(paths: Seq[String], recursive: Boolean = false): Unit = {
-      val (df, jobs) = jobsDuring(IndexLayout.readParquet(spark, paths, recursive))
+    def same(df: org.apache.spark.sql.DataFrame, jobs: Int,
+             ref: org.apache.spark.sql.DataFrame, paths: Seq[String]): Unit = {
       assert(jobs == 0, s"$jobs jobs to resolve $paths")
-      val reader =
-        if (recursive) spark.read.option("recursiveFileLookup", "true")
-        else spark.read
-      val ref = reader.parquet(paths: _*)
       assert(df.schema == ref.schema, paths)
       assert(df.collect().map(_.toSeq).toSet == ref.collect().map(_.toSeq).toSet)
+    }
+    def check(paths: Seq[String]): Unit = {
+      val (df, jobs) = jobsDuring(IndexLayout.readParquet(spark, paths))
+      same(df, jobs, spark.read.parquet(paths: _*), paths)
     }
     check(Seq(base))
     assert(IndexLayout.readParquet(spark, Seq(base)).columns.toSeq ==
       Seq("id", "v", "shard"), "partition discovery still appends the key")
     check(Seq(segs.head))
-    check(segs, recursive = true)
+    // several segments are one live relation, the rows a recursive
+    // file lookup over them reads
+    val (segRead, segJobs) = jobsDuring(IndexLayout.readLive(spark, None, segs)._2)
+    same(segRead, segJobs,
+      spark.read.option("recursiveFileLookup", "true").parquet(segs: _*), segs)
     check(IndexLayout.tombstoneFiles(spark, tomb))
     check(Seq(ragged))
     // what the driver cannot resolve is Spark's own error, unchanged
@@ -339,6 +343,95 @@ class IndexLayoutSpec extends SparkSpec {
     assert(new java.io.File(s"$bare/_temporary/0").mkdirs())
     assert(new java.io.File(s"$bare/_SUCCESS").createNewFile())
     sameError(bare)
+  }
+
+  test("a live read of a 64-shard base lists on the driver: no job, the discovered frame, hidden files skipped") {
+    val root = Scratch.dir("ixl_live64")
+    val base = s"$root/base"
+    (0L until 640L).toDF("id").withColumn("v", col("id") * 3)
+      .withColumn("shard", (col("id") % 64).cast("int"))
+      .repartition(4, col("shard"))
+      .write.partitionBy("shard").parquet(base)
+    // what committers, checksums and crashed tasks leave in a table:
+    // hidden files and dirs (one holding a real data file), an empty
+    // shard dir and a shard dir with no data file
+    val dataFile = new java.io.File(s"$base/shard=3").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    def touch(path: String): Unit = {
+      new java.io.File(path).getParentFile.mkdirs()
+      assert(new java.io.File(path).createNewFile() || new java.io.File(path).exists())
+    }
+    def plant(dir: String): Unit = {
+      assert(new java.io.File(dir).mkdirs())
+      java.nio.file.Files.copy(dataFile, java.nio.file.Paths.get(dir, "part-9.parquet"))
+    }
+    Seq(s"$base/_SUCCESS", s"$base/.hidden", s"$base/_committed_1",
+      s"$base/shard=3/_SUCCESS", s"$base/shard=3/.part-1.parquet.crc",
+      s"$base/shard=3/_part-2.parquet", s"$base/shard=71/_SUCCESS").foreach(touch)
+    plant(s"$base/_temporary/0/task")
+    plant(s"$base/shard=5/_temporary/0")
+    plant(s"$base/shard=7/.staging")
+    assert(new java.io.File(s"$base/shard=70").mkdirs())
+    val (live, jobs) = jobsDuring(IndexLayout.readLive(spark, Some(base), Nil)._1)
+    assert(jobs == 0, s"$jobs jobs to plan a 64-shard live read")
+    val discovered = spark.read.parquet(base)
+    assert(live.schema == discovered.schema)
+    assert(live.schema.fieldNames.toSeq == Seq("id", "v", "shard") &&
+      live.schema("shard").dataType == org.apache.spark.sql.types.IntegerType)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rowsOf(live) == rowsOf(discovered) && rowsOf(live).size == 640)
+    // pruned in the listing: only the kept shard dirs are scanned
+    val (pruned, prunedJobs) = jobsDuring(
+      IndexLayout.readLive(spark, Some(base), Nil, Some(Seq(3, 5, 70)))._1)
+    assert(prunedJobs == 0)
+    assert(rowsOf(pruned) == rowsOf(discovered.filter(col("shard").isin(3, 5))))
+    assert(scanRoots(pruned).map(_.map(_.split("/").last).toSet) ==
+      Seq(Set("shard=3", "shard=5")))
+  }
+
+  test("live reads compile nothing new across lifecycle states once the richest state ran") {
+    import graft.operators.{Bm25, DedupOps}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.DataFrame
+    val docs = Tables(spark, sf, "documents").select("doc_id", "text")
+    val base = docs.filter(col("doc_id") % 5 =!= 0)
+    val segs = (0 until 3).map(b => docs.filter(col("doc_id") % 5 === 0 &&
+      col("doc_id") % 3 === b))
+    val removals = Seq(docs.filter(col("doc_id") % 7 === 1).select("doc_id"),
+      docs.filter(col("doc_id") % 7 === 2).select("doc_id"))
+    val queries = Seq("s1" -> "fast hash join", "s2" -> "stream filter vector")
+    val probe = docs.filter(col("doc_id") < 30)
+      .select(col("doc_id") + 500000L as "doc_id", col("text"))
+    final case class Layout(name: String, build: (DataFrame, String) => Unit,
+                            segment: String => String, remove: (DataFrame, String) => Unit,
+                            read: String => Unit)
+    val layouts = Seq(
+      Layout("bm25", (df, d) => Bm25.writeIndex(df, "doc_id", "text", d),
+        d => s"$d/segments", (ids, d) => Bm25.removeFromIndex(ids, "doc_id", d),
+        d => Bm25.topKIndexed(spark, d, "doc_id", queries, k = 10).collect()),
+      Layout("dedup", (df, d) => DedupOps.writeDedupIndex(df, "doc_id", "text", 3, d),
+        d => s"$d/segments", (ids, d) => DedupOps.removeFromDedupIndex(ids, "doc_id", d),
+        d => DedupOps.dedupAgainstIndex(spark, d, probe, "doc_id", "text", 3, 0.5)
+          .collect()))
+    def state(l: Layout, nSegs: Int, nTombs: Int): String = {
+      val d = s"${Scratch.dir(s"ixl_shape_${l.name}")}/index"
+      l.build(base, d)
+      (0 until nSegs).foreach(b => l.build(segs(b), s"${l.segment(d)}/batch=$b"))
+      removals.take(nTombs).foreach(l.remove(_, d))
+      d
+    }
+    layouts.foreach { l =>
+      l.read(state(l, 3, 2)) // the richest state, warm
+      val states = for (nSegs <- Seq(0, 1, 3); nTombs <- Seq(0, 2))
+        yield (nSegs, nTombs, state(l, nSegs, nTombs))
+      states.foreach { case (nSegs, nTombs, d) =>
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        l.read(d)
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+        assert(compiled == 0,
+          s"${l.name}: $compiled compiles reading base + $nSegs segments, $nTombs tombstone batches")
+      }
+    }
   }
 
   test("kill before the flip: readers still answer from the old version") {

@@ -84,8 +84,9 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.removeFromIndex(embs.filter(col("vec_id") % 5 === 0)
       .select("vec_id"), "vec_id", dir)
     IvfIndex.writeIndex(live, "vec_id", "embedding", model, liveDir)
-    def res(d: String) = IvfIndex.searchPruned(spark, d, queries, "vec_id",
-        "embedding", model, nprobe = 3, topK = 5)
+    def res(d: String, cap: Long = IndexLayout.SegGuardBroadcastMaxBytes) =
+      IvfIndex.searchPruned(spark, d, queries, "vec_id", "embedding", model,
+        3, 5, cap)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 9), col("rank"))
       .collect().map(_.toSeq).toSet
     val tombstoned = res(dir)
@@ -139,8 +140,9 @@ class IvfIndexSpec extends SparkSpec {
     src.addData(parts(2).toSeq: _*)
     q.processAllAvailable()
     q.stop()
-    def res(d: String) = IvfIndex.searchPruned(spark, d, queries, "vec_id",
-        "embedding", model, nprobe = 3, topK = 5)
+    def res(d: String, cap: Long = IndexLayout.SegGuardBroadcastMaxBytes) =
+      IvfIndex.searchPruned(spark, d, queries, "vec_id", "embedding", model,
+        3, 5, cap)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 9), col("rank"))
       .collect().map(_.toSeq).toSet
     val fullDir = Scratch.dir("ivf_stream_full")
@@ -201,8 +203,9 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.compactIndexFolding(spark, dir, "vec_id", snapshot)
     val left = IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir))
     assert(left.size == 1 && left.head.endsWith("batch=1"))
-    def res(d: String) = IvfIndex.searchPruned(spark, d, queries, "vec_id",
-        "embedding", model, nprobe = 3, topK = 5)
+    def res(d: String, cap: Long = IndexLayout.SegGuardBroadcastMaxBytes) =
+      IvfIndex.searchPruned(spark, d, queries, "vec_id", "embedding", model,
+        3, 5, cap)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 9), col("rank"))
       .collect().map(_.toSeq).toSet
     val fullDir = Scratch.dir("ivf_race_full")
@@ -314,8 +317,9 @@ class IvfIndexSpec extends SparkSpec {
     // the segment-union distinct must absorb it
     IvfIndex.writeSegment(parts(1), "vec_id", "embedding", model, dir, 1L)
     assert(IndexLayout.segmentDirs(spark, IndexLayout.Paths.sibling(dir)).size == 2)
-    def res(d: String) = IvfIndex.searchPruned(spark, d, queries, "vec_id",
-        "embedding", model, nprobe = 3, topK = 5)
+    def res(d: String, cap: Long = IndexLayout.SegGuardBroadcastMaxBytes) =
+      IvfIndex.searchPruned(spark, d, queries, "vec_id", "embedding", model,
+        3, 5, cap)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 9), col("rank"))
       .collect().map(_.toSeq).toSet
     val fullDir = java.nio.file.Paths.get(Scratch.dir("ivf_redeliver_full"))
@@ -324,9 +328,7 @@ class IvfIndexSpec extends SparkSpec {
     val want = res(fullDir)
     assert(res(dir) === want)
     // forced past the cap: the shuffle anti-join fallback must agree
-    sys.props("graft.index.segGuardBroadcastMaxBytes") = "0"
-    try assert(res(dir) === want,
+    assert(res(dir, cap = 0L) === want,
       "shuffle-fallback regime disagrees with the broadcast regime")
-    finally sys.props -= "graft.index.segGuardBroadcastMaxBytes"
   }
 }

@@ -544,9 +544,11 @@ class PlanShapeSpec extends SparkSpec {
         "doc_id", "vec_id", "qv", kPerSide = 10, k = 5, shortlist = 50,
         rrfK = 60, nShards = 64)
       val p = fused.queryExecution.executedPlan.toString
-      // lexical leg: the query terms' shards prune the postings scan
-      assert("PartitionFilters: \\[shard#\\d+ IN \\(".r.findFirstIn(p)
-        .isDefined, p.take(4000))
+      // lexical leg: only the query terms' shard directories are listed
+      // and scanned
+      val scans = baseShardScans(fused, "postings")
+      assert(scans.nonEmpty && scans.forall(r => r.nonEmpty &&
+        r.subsetOf(bm25QueryShards(lexQs, 64))), scanRoots(fused))
       // dense leg: rank-limit pushdown below the query-keyed exchange,
       // over a scan that reads ONLY (id, code) — 8 B/vector
       assert(p.contains("WindowGroupLimit"), p.take(4000))

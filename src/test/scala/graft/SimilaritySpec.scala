@@ -116,9 +116,10 @@ class SimilaritySpec extends SparkSpec {
       .min(DedupOps.DefaultShingleShards.toLong)
     val pruned = DedupOps.prunedShingleIndex(spark, dir, micro,
       DedupOps.DefaultShingleShards)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[shard#\\d+ IN".r.findFirstIn(plan).isDefined,
-      plan.take(3000))
+    // only the batch's shard directories are listed and scanned
+    val scans = baseShardScans(pruned, "shingles")
+    assert(scans.size == 1 && scans.head.nonEmpty &&
+      scans.head.size <= nMicroShards, scanRoots(pruned))
     assert(pruned.select("shard").distinct().count() <= nMicroShards)
   }
 

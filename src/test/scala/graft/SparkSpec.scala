@@ -32,6 +32,32 @@ trait SparkSpec extends AnyFunSuite {
       (out, seen.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  /** The root paths of each file relation `df` reads, in plan order: the
+    * directories (or files) its file index was built over.
+    */
+  protected def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect {
+      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        r.location.rootPaths.map(_.toString)
+    }
+
+  /** The shard directories of the base postings scans in `df`, each scan's
+    * as one set of shard numbers (segment and tombstone reads excluded).
+    */
+  protected def baseShardScans(df: org.apache.spark.sql.DataFrame,
+                               table: String): Seq[Set[Int]] =
+    scanRoots(df).filter(r => r.nonEmpty && r.forall(_.matches(s".*/$table(\\.v\\d+)?/shard=\\d+")))
+      .map(_.map(_.split("shard=").last.toInt).toSet)
+
+  /** The shard of each BM25 query term at `nShards` (`String.hashCode`
+    * mod nShards, as the index writes it).
+    */
+  protected def bm25QueryShards(queries: Seq[(String, String)], nShards: Int): Set[Int] =
+    queries.flatMap(q => graft.operators.Bm25.queryTerms(q._2))
+      .map(t => math.floorMod(t.hashCode, nShards)).toSet
 }
 
 object SparkSpec {

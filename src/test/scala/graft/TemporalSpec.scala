@@ -118,16 +118,11 @@ class TemporalSpec extends SparkSpec {
     val ccB = rows(GraphOps.connectedComponents(edges, "a", "b"))
     val prB = rows(GraphOps.pageRank(edges, "a", "b", iters = 5))
     val kcB = rows(GraphOps.kCore(edges, "a", "b", k = 3))
-    System.setProperty("graft.graph.broadcastMaxRows", "0")
-    System.setProperty("graft.graph.kcoreBroadcastMaxEdges", "0")
-    try {
-      assert(rows(GraphOps.connectedComponents(edges, "a", "b")) === ccB)
-      assert(rows(GraphOps.pageRank(edges, "a", "b", iters = 5)) === prB)
-      assert(rows(GraphOps.kCore(edges, "a", "b", k = 3)) === kcB)
-    } finally {
-      System.clearProperty("graft.graph.broadcastMaxRows")
-      System.clearProperty("graft.graph.kcoreBroadcastMaxEdges")
-    }
+    val shuffle = GraphOps.Regimes(broadcastMaxRows = 0,
+      kcoreBroadcastMaxEdges = 0)
+    assert(rows(GraphOps.connectedComponents(edges, "a", "b", 20, shuffle)) === ccB)
+    assert(rows(GraphOps.pageRank(edges, "a", "b", 5, 0.85, shuffle)) === prB)
+    assert(rows(GraphOps.kCore(edges, "a", "b", 3, 50, shuffle)) === kcB)
   }
 
   test("asof join carries the matched right row wholesale, nulls included") {
