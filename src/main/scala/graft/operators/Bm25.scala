@@ -291,48 +291,9 @@ object Bm25 {
     readStatsRow(spark, IndexLayout.resolve(spark, s"$path/stats"))
       .map(tombDirsOf).getOrElse(Seq.empty)
 
-  /** The `tomb_dirs` list of a stats row (empty for the pre-list legacy
-    * schema and for segment stats rows, which never carry tombstones).
-    */
+  /** The `tomb_dirs` list of a current-format stats row. */
   private def tombDirsOf(r: org.apache.spark.sql.Row): Seq[String] =
-    if (r.schema == null) Seq.empty
-    else r.schema.fieldNames.indexOf("tomb_dirs") match {
-      case -1                 => Seq.empty
-      case i if r.isNullAt(i) => Seq.empty
-      case i                  => r.getSeq[String](i)
-    }
-
-  /** Whether a stats row PREDATES the `tomb_dirs` list — the pre-upgrade
-    * format whose removals appended LOOSE files under `$path/tombstones`
-    * instead of staged rm_* batch directories. Detected from the stats
-    * row every read already loads, so current-format indexes pay ZERO
-    * extra filesystem calls for the legacy support.
-    */
-  private def isLegacyStats(r: org.apache.spark.sql.Row): Boolean =
-    r.schema != null && (r.schema.fieldNames.indexOf("tomb_dirs") match {
-      case -1 => true
-      // a mergeSchema multi-layout read ([[readStatsRows]]) gives a
-      // legacy 2-field row a present-but-NULL tomb_dirs — the field
-      // exists in the MERGED schema, not in the row's file. New-format
-      // writers always stamp a non-null list (typedLit(Seq.empty)), so
-      // null ⇒ legacy; without this arm a legacy base + new segments
-      // read skipped [[legacyTombFiles]] and loose-tombstoned docs
-      // silently resurrected.
-      case i => r.isNullAt(i)
-    })
-
-  /** The pre-list-format loose tombstone FILES directly under the
-    * sidecar root (new-format batches are rm_* DIRECTORIES — their
-    * nested files are not top-level, so the two formats cannot mix).
-    * Consulted only when [[isLegacyStats]] says the index predates the
-    * list (reads, removals) or during compaction (one listing per
-    * compaction — which materializes and deletes them, completing the
-    * migration): without this, a pre-upgrade index's deleted docs would
-    * silently resurrect under the new reader.
-    */
-  private def legacyTombFiles(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Seq[String] =
-    IndexLayout.tombstoneFiles(spark, paths(path).tombDir)
+    r.getSeq[String](4)
 
   /** Anti-join `df` against an extra id set (no-op for None). */
   private def dropIds(df: DataFrame, idCol: String,
@@ -379,6 +340,9 @@ object Bm25 {
                                   textCol: String, path: String,
                                   nShards: Int): Unit = {
     val spark = docs.sparkSession
+    // the stats row first, so a retired format is refused before any
+    // file is appended
+    val old = readStatsRow(spark, IndexLayout.resolve(spark, s"$path/stats"))
     val shardCol = graft.functions.ShardExpr.javaHashMod(col("term"), nShards)
     // ONE doc-level tokenize pass, cached — feeds the stats delta, the
     // emptiness probe (sum_len == 0) and the sidecar append; the batch
@@ -422,66 +386,38 @@ object Bm25 {
     }
     IndexLayout.appendTo(spark, s"$path/docs")(
       dl.write.mode("append").parquet(_))
-    writeMergedStats(spark, path, delta, sign = 1.0)
+    IndexLayout.writeSwap(spark, s"$path/stats",
+      mergedStatsDf(spark, old, delta, sign = 1.0,
+        old.map(tombDirsOf).getOrElse(Seq.empty)),
+      None)
     } finally dl.unpersist()
   }
 
-  /** Shift the persisted stats by a (n, sum_len, n_len) delta row —
-    * +1 for appends, −1 for removals. The old row is collected BEFORE
-    * the rewrite, so re-deriving from the same table is safe. All three
+  /** The one-row stats frame after shifting the `old` row by a (n,
+    * sum_len, n_len) delta — +1 for appends, −1 for removals — carrying
+    * `tombDirs` as the new live tombstone-batch list. All three
     * components are integral-valued doubles: the shifted values are
-    * exact, and avgdl = sum_len/n_len matches a from-scratch avg bit
-    * for bit.
+    * exact, and avgdl = sum_len/n_len matches a from-scratch avg bit for
+    * bit. A missing old row merges against zeros — the base row an index
+    * that only ever saw streaming segments starts from.
     *
-    * The rewrite is a VERSION SWAP, not an in-place overwrite: stats are
-    * a one-row table every retrieval reads, and an in-place overwrite
-    * has a delete-then-write window in which a reader silently loses the
-    * base row (readStatsRow answers None and the layout sum is simply
-    * missing a term — wrong, not loud). Swapping makes every LIVE-index
-    * stats mutation atomic, the same discipline as postings/docs
-    * compaction; fresh builds keep the plain overwrite (a crash there is
-    * a broken build, not a serving index).
-    */
-  private def writeMergedStats(spark: org.apache.spark.sql.SparkSession,
-                               path: String, delta: org.apache.spark.sql.Row,
-                               sign: Double): Unit = {
-    val old = readStatsRow(spark, IndexLayout.resolve(spark, s"$path/stats"))
-    // a pre-sum_len (2-field) row cannot merge exactly — its token total
-    // is unrecoverable; loud here too, not just in stageRemoval (an
-    // append merging against oldSum=0 would serve garbage avgdl)
-    require(old.forall(r => r.length > 3),
-      s"$path/stats predates the exact (sum_len, n_len) totals — " +
-        "rebuild or compact the index before appends/removals")
-    // the merged row is ALWAYS list-format, so merging on a legacy index
-    // must ADOPT the loose tombstone files into the list — otherwise one
-    // append flips isLegacyStats off and the loose delete set silently
-    // stops being consulted (resurrection, then sweep deletes the files)
-    val tombDirs = old.map(tombDirsOf).getOrElse(Seq.empty) ++
-      (if (old.exists(isLegacyStats)) legacyTombFiles(spark, path)
-       else Seq.empty)
-    IndexLayout.writeSwap(spark, s"$path/stats",
-      mergedStatsDf(spark, old, delta, sign, tombDirs),
-      None)
-  }
-
-  /** The one-row stats frame after shifting by a (n, sum_len, n_len)
-    * delta, carrying `tombDirs` as the new live tombstone-batch list.
-    * A missing old row merges against zeros — the base row an index
-    * that only ever saw streaming segments starts from (its first
-    * materialization is this swap, which a stale stats manifest can
-    * never shadow because the swap goes through the manifest).
+    * Callers flip it in by a VERSION SWAP, not an in-place overwrite:
+    * stats are a one-row table every retrieval reads, and an in-place
+    * overwrite has a delete-then-write window in which a reader silently
+    * loses the base row (readStatsRow answers None and the layout sum is
+    * simply missing a term — wrong, not loud). Swapping makes every
+    * LIVE-index stats mutation atomic, the same discipline as
+    * postings/docs compaction, and a stale stats manifest can never
+    * shadow the first materialization; fresh builds keep the plain
+    * overwrite (a crash there is a broken build, not a serving index).
     */
   private def mergedStatsDf(spark: org.apache.spark.sql.SparkSession,
                             old: Option[org.apache.spark.sql.Row],
                             delta: org.apache.spark.sql.Row, sign: Double,
                             tombDirs: Seq[String]): DataFrame = {
     val (oldN, oldSum, oldNLen) = old match {
-      case Some(r) =>
-        (r.getDouble(0),
-          if (r.length > 2 && !r.isNullAt(2)) r.getDouble(2) else 0.0,
-          if (r.length > 3 && !r.isNullAt(3)) r.getDouble(3)
-          else r.getDouble(0))
-      case None => (0.0, 0.0, 0.0)
+      case Some(r) => (r.getDouble(0), r.getDouble(2), r.getDouble(3))
+      case None    => (0.0, 0.0, 0.0)
     }
     val n2 = oldN + sign * delta.getDouble(0)
     val s2 = oldSum + sign * delta.getDouble(1)
@@ -549,19 +485,7 @@ object Bm25 {
                                   path: String): Option[DataFrame] = {
     val (docsBase, docsSegs) = IndexLayout.liveParts(spark, paths(path), "docs")
     val old = readStatsRow(spark, IndexLayout.resolve(spark, s"$path/stats"))
-    // a pre-sum_len (2-field) stats row cannot shift exactly — its token
-    // total is unrecoverable (n·avgdl is already-rounded); loud, never a
-    // silently-wrong avgdl
-    require(old.forall(r => r.length > 3),
-      s"$path/stats predates the exact (sum_len, n_len) totals — " +
-        "rebuild or compact the index before removals")
-    // legacy loose files join the listed set here, which MIGRATES them:
-    // the swapped row lists them as ordinary batch entries (readable
-    // paths), the double-removal guard sees their ids, and the next
-    // compaction materializes them
-    val listed = old.map(tombDirsOf).getOrElse(Seq.empty) ++
-      (if (old.exists(isLegacyStats)) legacyTombFiles(spark, path)
-       else Seq.empty)
+    val listed = old.map(tombDirsOf).getOrElse(Seq.empty)
     val (b, segs) = IndexLayout.readLive(spark, docsBase, docsSegs)
     val removed = IndexLayout.dropIdsIn(b.unionByName(segs), idCol, listed)
       .join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
@@ -626,7 +550,8 @@ object Bm25 {
                    reshardTo: Option[Int] = None): Unit =
     IndexLayout.leasedFold(spark, paths(path), "Bm25.compactIndex",
         tombstones = false) {
-      (segs, _) => foldStatsListed(spark, path, idCol, segs, reshardTo)
+      (segs, _) => foldStatsListed(spark, path, idCol, segs, reshardTo,
+        tombstoneDirs(spark, path))
     }
 
   /** Recompute the shard column at a new shard count (identity when
@@ -651,31 +576,25 @@ object Bm25 {
       idCol: String, segs: Seq[String],
       reshardTo: Option[Int] = None): Unit =
     IndexLayout.foldSnapshot(spark, paths(path), segs, tombstones = false) {
-      (segs, _) => foldStatsListed(spark, path, idCol, segs, reshardTo)
+      (segs, _) => foldStatsListed(spark, path, idCol, segs, reshardTo,
+        tombstoneDirs(spark, path))
     }
 
+  /** The BM25 fold of segment snapshot `segs` and delete set `tombDirs`:
+    * a compaction passes the current stats row's batch list (the
+    * reader-visible delete set; under the maintenance lease no removal
+    * can extend it mid-fold), [[upgrade]] the loose tombstone files of
+    * the retired format. The fold drops exactly these ids, the post-fold
+    * stats row lists nothing, and batch directories are physically
+    * deleted only once no still-existing stats version lists them (N-1
+    * retention / pins for the delete set, mirroring the data dirs) — a
+    * reader mid-scan on the just-retired stats row keeps the batches its
+    * anti-join reads.
+    */
   private def foldStatsListed(spark: org.apache.spark.sql.SparkSession,
                               path: String, idCol: String, segs: Seq[String],
-                              reshardTo: Option[Int]): Unit = {
-    // the tombstone snapshot is the CURRENT stats row's batch list (the
-    // reader-visible delete set); under the maintenance lease no removal
-    // can extend it mid-fold. The fold drops exactly these ids, the
-    // post-fold stats row lists nothing, and batch directories are
-    // physically deleted only once no still-existing stats version lists
-    // them (N-1 retention / pins for the delete set, mirroring the data
-    // dirs) — a reader mid-scan on the just-retired stats row keeps the
-    // batches its anti-join reads. A pre-list-format stats row pulls the
-    // legacy loose tombstone files into the fold (and forces the stats
-    // swap below), which MIGRATES the index: the post-fold row is
-    // list-format, and the sweep retires the loose files once no
-    // still-existing legacy row implies them.
-    val statsRow =
-      readStatsRow(spark, IndexLayout.resolve(spark, s"$path/stats"))
-    val legacyFiles =
-      if (statsRow.exists(isLegacyStats)) legacyTombFiles(spark, path)
-      else Seq.empty
-    val tombDirs = statsRow.map(tombDirsOf).getOrElse(Seq.empty) ++
-      legacyFiles
+                              reshardTo: Option[Int],
+                              tombDirs: Seq[String]): Unit = {
     if (segs.isEmpty) {
       val sharded =
         IndexLayout.partitionedLayout(spark, s"$path/postings", "shard")
@@ -685,11 +604,8 @@ object Bm25 {
       IndexLayout.rewriteInPlace(spark, s"$path/docs", None,
         IndexLayout.dropIdsIn(_, idCol, tombDirs))
       // the shifted totals are already exact — the stats swap here only
-      // retires the materialized batch list (skipped when there is
-      // none); a legacy row swaps even with an empty list, migrating it
-      // to the list format
-      if (tombDirs.nonEmpty || statsRow.exists(isLegacyStats))
-        swapStatsFromDocs(spark, path)
+      // retires the materialized batch list (skipped when there is none)
+      if (tombDirs.nonEmpty) swapStatsFromDocs(spark, path)
     } else {
       def folded(sub: String): DataFrame =
         IndexLayout.foldLive(spark, paths(path), sub, segs, idCol, tombDirs)
@@ -722,6 +638,33 @@ object Bm25 {
         .withColumn("tomb_dirs", typedLit(Seq.empty[String])),
       None)
 
+  /** Migrate a [[writeIndex]] layout to the current on-disk format, once,
+    * under the maintenance lease: [[IndexLayout.upgrade]]'s version step,
+    * then the stats step when any live stats row is in a retired format.
+    * The retired formats are a row without the `tomb_dirs` list (or with
+    * a null one), whose removals were loose tombstone files directly
+    * under `tombstones/`, and the older 2-field (n, avgdl) row, whose
+    * token total is lost. The step folds the live segments and the loose
+    * tombstone files into the base, the way a compaction folds listed
+    * batches, and recomputes the stats row from the folded doc sidecar
+    * ([[swapStatsFromDocs]]); the fold's sweep then retires the loose
+    * files. Idempotent: a current index is left untouched.
+    */
+  def upgrade(spark: org.apache.spark.sql.SparkSession, path: String,
+              idCol: String = "doc_id"): Unit = {
+    val p = paths(path)
+    IndexLayout.upgradeWith(spark, p, "Bm25.upgrade") {
+      val (base, segs) = IndexLayout.liveParts(spark, p, "stats")
+      if ((base.toSeq ++ segs).flatMap(statsRowAt(spark, _)).exists(!_._2))
+        IndexLayout.foldSnapshot(spark, p, IndexLayout.segmentDirs(spark, p),
+            tombstones = false) { (segs, _) =>
+          val loose = IndexLayout.tombstoneFiles(spark, p.tombDir)
+          if (segs.isEmpty && loose.isEmpty) swapStatsFromDocs(spark, path)
+          else foldStatsListed(spark, path, idCol, segs, None, loose)
+        }
+    }
+  }
+
   /** Delete tombstone batch directories no STILL-EXISTING stats layout
     * (current version, N-1 retained version, pinned snapshots) lists —
     * folded batches whose referencing stats versions have been GC'd,
@@ -732,7 +675,12 @@ object Bm25 {
     * NEXT compaction — the delete set gets exactly the retention of the
     * data it filters. Batches are compared by their unique rm_<uuid>
     * leaf name, so stored-string vs fully-qualified path spellings
-    * cannot desync the sweep.
+    * cannot desync the sweep. A listed entry may also be a single
+    * parquet file (a loose tombstone file that an append adopted into
+    * the list while the retired format was still read); unlisted ones go
+    * the same way, which is how the loose files [[upgrade]] folded are
+    * retired. A stats layout in a retired format (the one N-1 retention
+    * keeps for a swap after [[upgrade]]) lists nothing.
     */
   private def sweepTombstoneBatches(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
@@ -744,55 +692,66 @@ object Bm25 {
       val n = st.getPath.getName
       st.isDirectory && (n == "stats" || n.matches("stats\\.v\\d+"))
     }.map(_.getPath.toString)
-    val rows = statsLayouts.flatMap(readStatsRow(spark, _))
-    val keep: Set[String] = rows.flatMap(tombDirsOf)
+    val keep: Set[String] = statsLayouts.flatMap(statsRowAt(spark, _))
+      .collect { case (r, true) => tombDirsOf(r) }.flatten
       .map(d => d.substring(d.lastIndexOf('/') + 1)).toSet
-    // a still-existing LEGACY stats layout (pre-list format, retained by
-    // N-1 or a pin) implies EVERY loose file as its delete set — loose
-    // files retire only once no such layout remains, the same retention
-    // the listed batches get. (A legacy plain stats dir that is never
-    // swapped again keeps its loose files on disk indefinitely — an
-    // unlisted, never-read orphan, bounded by the pre-migration delete
-    // volume; any later removal or fold retires it.)
-    val keepAllLoose = rows.exists(isLegacyStats)
     val root = new org.apache.hadoop.fs.Path(paths(path).tombDir)
-    if (fs.exists(root)) {
-      val entries = fs.listStatus(root).toSeq // one listing serves both
-      entries
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("rm_")
-          && !keep(st.getPath.getName))
-        .foreach(st => fs.delete(st.getPath, true))
-      if (!keepAllLoose) {
-        entries
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")
-            && !keep(st.getPath.getName))
-          .foreach(st => fs.delete(st.getPath, false))
-      }
-    }
+    if (fs.exists(root))
+      fs.listStatus(root).toSeq.filter { st =>
+        val n = st.getPath.getName
+        !keep(n) && (n.startsWith("rm_") || n.endsWith(".parquet"))
+      }.foreach(st => fs.delete(st.getPath, true))
   }
 
-  /** The one stats row of a stats layout, or None when the layout is
-    * absent or holds no data file (an index that only ever saw streaming
-    * segments, an orphan version dir from a crashed swap). Any other
-    * failure propagates: a stats row read as missing would merge the
-    * next append or removal against zeros and drop the base's (n,
-    * avgdl) and its `tomb_dirs` delete set.
+  /** The stats columns of the current on-disk format. */
+  private val StatsColumns = Seq("n", "avgdl", "sum_len", "n_len", "tomb_dirs")
+
+  /** Whether stats `rows`, read from frames `dfs`, are in the current
+    * format: the five [[StatsColumns]], and a `tomb_dirs` list, which
+    * every writer stamps non-null. `rows` is only read when the columns
+    * match.
     */
+  private def isCurrent(dfs: Seq[DataFrame],
+                        rows: => Seq[org.apache.spark.sql.Row]): Boolean =
+    dfs.forall(_.columns.toSeq == StatsColumns) && !rows.exists(_.isNullAt(4))
+
+  /** The refusal of stats in a retired format, naming [[upgrade]]. */
+  private def retiredStats(where: String): String =
+    s"$where holds BM25 stats in a retired on-disk format: run " +
+      "Bm25.upgrade(spark, <index path>) once to migrate the index"
+
+  /** The one stats row of a stats layout, with whether it is in the
+    * current format, or None when the layout is absent or holds no data
+    * file (an index that only ever saw streaming segments, an orphan
+    * version dir from a crashed swap). Any other failure propagates: a
+    * stats row read as missing would merge the next append or removal
+    * against zeros and drop the base's (n, avgdl) and its `tomb_dirs`
+    * delete set.
+    */
+  private def statsRowAt(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): Option[(org.apache.spark.sql.Row, Boolean)] =
+    if (!IndexLayout.holdsData(spark, dir)) None
+    else {
+      val df = IndexLayout.readParquet(spark, Seq(dir))
+      val r = df.head()
+      Some((r, isCurrent(Seq(df), Seq(r))))
+    }
+
+  /** [[statsRowAt]], refusing a retired format. */
   private def readStatsRow(spark: org.apache.spark.sql.SparkSession,
                            dir: String): Option[org.apache.spark.sql.Row] =
-    if (!IndexLayout.holdsData(spark, dir)) None
-    else Some(IndexLayout.readParquet(spark, Seq(dir)).head())
+    statsRowAt(spark, dir).map { case (r, current) =>
+      require(current, retiredStats(dir))
+      r
+    }
 
   /** All per-layout stats rows in ONE job instead of a head() job per
     * layout — a streamed index holds base + one stats row per live
     * segment, and the per-layout heads were the measured fixed cost of
-    * every indexed retrieval (guide §1: fewer actions). The
-    * [[IndexLayout.readLive]] base and segment reads union by name with
-    * missing columns null, so a legacy (pre-list) base row next to
-    * list-format segment rows comes back in the canonical column order
-    * — legacy columns first, then (sum_len, n_len, tomb_dirs) — and the
-    * positional reads in [[summedStats]]/[[tombDirsOf]] hold. Segment
-    * rows all come from the current writer, so one schema covers them.
+    * every indexed retrieval (guide §1: fewer actions). Both parts
+    * must be in the current format (checked on the footer schemas before
+    * the union, and on the rows), so the positional reads in
+    * [[summedStats]]/[[tombDirsOf]] hold.
     */
   private def readStatsRows(spark: org.apache.spark.sql.SparkSession,
                             base: Option[String],
@@ -800,30 +759,24 @@ object Bm25 {
     if (base.isEmpty && segs.isEmpty) Seq.empty
     else {
       val (b, s) = IndexLayout.readLive(spark, base, segs)
-      b.unionByName(s, allowMissingColumns = true).collect().toSeq
+      lazy val rows = b.unionByName(s).collect().toSeq
+      require(isCurrent(Seq(b, s), rows),
+        retiredStats((base.toSeq ++ segs).mkString(", ")))
+      rows
     }
 
   /** Exact (n, avgdl) across per-layout stats rows: the integral n /
     * sum_len / n_len components ADD exactly in doubles, and the summed
     * avgdl divides the same two exact operands a from-scratch avg over
     * the union would — bit-identical to a rebuild, which is what lets
-    * the streamed index share the batch oracle. A legacy 2-field row
-    * (single-layout only) falls back to its persisted avgdl.
+    * the streamed index share the batch oracle.
     */
-  private def summedStats(rows: Seq[org.apache.spark.sql.Row]): (Double, Double) =
-    if (rows.isEmpty) (0.0, 1.0)
-    else if (rows.length == 1 && rows.head.length < 3) {
-      val r = rows.head
-      (r.getDouble(0), if (r.isNullAt(1)) 1.0 else r.getDouble(1))
-    } else {
-      val n = rows.map(_.getDouble(0)).sum
-      val sumLen = rows.map(r =>
-        if (r.length > 2 && !r.isNullAt(2)) r.getDouble(2) else 0.0).sum
-      val nLen = rows.map(r =>
-        if (r.length > 3 && !r.isNullAt(3)) r.getDouble(3)
-        else r.getDouble(0)).sum
-      (n, if (nLen == 0.0) 1.0 else sumLen / nLen)
-    }
+  private def summedStats(rows: Seq[org.apache.spark.sql.Row]): (Double, Double) = {
+    val n = rows.map(_.getDouble(0)).sum
+    val sumLen = rows.map(_.getDouble(2)).sum
+    val nLen = rows.map(_.getDouble(3)).sum
+    (n, if (nLen == 0.0) 1.0 else sumLen / nLen)
+  }
 
   /** [[topK]] over a [[writeIndex]] layout: the query terms' shards are
     * computed driver-side and only their shard directories are listed
@@ -849,14 +802,9 @@ object Bm25 {
       IndexLayout.liveParts(spark, paths(path), "stats")
     val statsRows = readStatsRows(spark, statsBase, statsSegs)
     val (base, segs) = IndexLayout.liveParts(spark, paths(path), "postings")
-    // a pre-list-format stats row additionally pulls the legacy loose
-    // tombstone files (one listing, only for unmigrated indexes)
-    val legacy =
-      if (statsRows.exists(isLegacyStats)) legacyTombFiles(spark, path)
-      else Seq.empty
     topKOverLayouts(spark, base, segs, statsRows,
-      statsRows.flatMap(tombDirsOf).distinct ++ legacy, idCol, queries, k,
-      k1, b, nShards, None)
+      statsRows.flatMap(tombDirsOf).distinct, idCol, queries, k, k1, b,
+      nShards, None)
   }
 
   /** [[topKIndexed]] over an already-acquired [[Snapshot]] — the entry
@@ -1022,13 +970,10 @@ object Bm25 {
       IndexLayout.acquirePinned(spark, p, PinnedTables) { (pinned, segRoots) =>
         val statsBase = Some(pinned(1)).filter(IndexLayout.exists(spark, _))
         val statsSegs = IndexLayout.segmentParts(spark, p, "stats", segRoots)
-        val statsRows = readStatsRows(spark, statsBase, statsSegs)
-        val legacy =
-          if (statsRows.exists(isLegacyStats)) legacyTombFiles(spark, path)
-          else Seq.empty
         (statsBase, statsSegs,
           IndexLayout.segmentParts(spark, p, "postings", segRoots),
-          statsRows.flatMap(tombDirsOf).distinct ++ legacy)
+          readStatsRows(spark, statsBase, statsSegs).flatMap(tombDirsOf)
+            .distinct)
       }
     Snapshot(pins(0)._1, pins(0)._2, pins(1)._2, statsBase, statsSegs, segs,
       tombSources)

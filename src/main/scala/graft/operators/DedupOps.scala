@@ -766,33 +766,76 @@ object DedupOps {
                            path: String, idCol: String,
                            reshardTo: Option[Int])
                           (segs: Seq[String], tombFiles: Seq[String]): Unit = {
+    // the fingerprints are read first, so a retired format is refused
+    // before anything is written
     if (segs.isEmpty) {
+      IndexLayout.rewriteInPlace(spark, s"$path/fingerprints", None,
+        df => IndexLayout.dropIdsIn(currentFingerprints(df, path), idCol,
+          tombFiles))
       val sharded =
         IndexLayout.partitionedLayout(spark, s"$path/shingles", "shard")
       IndexLayout.rewriteInPlace(spark, s"$path/shingles",
         if (sharded) Some("shard") else None,
-        df => reshardShingles(
-          IndexLayout.dropTombstonedFiles(df, idCol, tombFiles),
+        df => reshardShingles(IndexLayout.dropIdsIn(df, idCol, tombFiles),
           reshardTo))
-      // projection keeps the canonical (id, __fp) shape — an interim
-      // round-11 table carrying a (now-retired) fpshard column folds
-      // back to it here
-      IndexLayout.rewriteInPlace(spark, s"$path/fingerprints", None,
-        df => IndexLayout.dropTombstonedFiles(df, idCol, tombFiles)
-          .select(col(idCol), col("__fp")))
     } else {
+      val (fpB, fpSegs) = fingerprintParts(spark, path, Some(segs))
       IndexLayout.writeSwap(spark, s"$path/shingles",
         reshardShingles(IndexLayout.foldLive(spark, paths(path),
           "shingles", segs, idCol, tombFiles), reshardTo), Some("shard"))
-      // per-part projection BEFORE the union: ragged schemas (an interim
-      // fpshard column in the base) would fail unionByName
       IndexLayout.writeSwap(spark, s"$path/fingerprints",
-        IndexLayout.foldLive(spark, paths(path), "fingerprints", segs,
-          idCol, tombFiles, _.select(col(idCol), col("__fp"))), None)
+        IndexLayout.dropIdsIn(fpB.unionByName(fpSegs).distinct(), idCol,
+          tombFiles), None)
     }
     // a re-sharding compaction changes the layout's modulus — record it
     reshardTo.foreach(n =>
       IndexLayout.writeShardCountMarker(spark, path, n))
+  }
+
+  /** Migrate a [[writeDedupIndex]] layout to the current on-disk format
+    * ([[IndexLayout.upgrade]]'s version step, then the fingerprint step),
+    * once, under the maintenance lease. The round-11 interim format
+    * carried a third `fpshard` column in the fingerprint base (a
+    * fingerprint-sharded layout, measured and rejected); the base is
+    * rewritten to the current (id, __fp) shape. Idempotent: a current
+    * index is left untouched.
+    */
+  def upgrade(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    IndexLayout.upgradeWith(spark, paths(path), "DedupOps.upgrade") {
+      val fp = s"$path/fingerprints"
+      val dir = IndexLayout.resolve(spark, fp)
+      if (IndexLayout.holdsData(spark, dir)) {
+        val base = IndexLayout.readParquet(spark, Seq(dir))
+        if (base.columns.length > 2)
+          IndexLayout.writeSwap(spark, fp,
+            base.select(col(base.columns.head), col("__fp")), None)
+      }
+    }
+
+  /** The fingerprint table's live parts (base, one relation over the
+    * segments, [[IndexLayout.readLive]]) over the segment snapshot `segs`
+    * (default: the live segments); a base in a retired format is
+    * refused ([[currentFingerprints]]).
+    */
+  private def fingerprintParts(spark: org.apache.spark.sql.SparkSession,
+                               path: String,
+                               segs: Option[Seq[String]] = None): (DataFrame, DataFrame) = {
+    val (base, parts) =
+      IndexLayout.liveParts(spark, paths(path), "fingerprints", segs)
+    val (b, s) = IndexLayout.readLive(spark, base, parts)
+    (currentFingerprints(b, path), s)
+  }
+
+  /** `base`, a read of the fingerprint base, if it has the two
+    * (id, __fp) columns every writer emits; a retired format is refused,
+    * naming [[upgrade]].
+    */
+  private def currentFingerprints(base: DataFrame, path: String): DataFrame = {
+    require(base.columns.length == 2,
+      s"$path/fingerprints is in a retired on-disk format (columns " +
+        s"${base.columns.mkString(", ")}): run DedupOps.upgrade(spark, " +
+        s"\"$path\") once to migrate the index")
+    base
   }
 
   /** The pruned index read inside [[dedupAgainstIndex]], exposed so the
@@ -832,19 +875,13 @@ object DedupOps {
 
   /** The live (id, __fp) fingerprint rows, tombstoned docs dropped. The
     * fingerprint side spans base + streaming segments (duplicate rows are
-    * harmless — every regime tolerates them); the per-part projection
-    * before the union keeps ragged schemas unionable (an interim
-    * round-11 base may still carry the retired fpshard column).
+    * harmless — every regime tolerates them).
     */
   private def liveFingerprints(spark: org.apache.spark.sql.SparkSession,
                                path: String, idCol: String): DataFrame = {
-    val (fpBase, fpSegParts) =
-      IndexLayout.liveParts(spark, paths(path), "fingerprints")
-    val (fpB, fpSegs) = IndexLayout.readLive(spark, fpBase, fpSegParts)
-    IndexLayout.dropTombstoned(
-      fpB.select(col(idCol), col("__fp"))
-        .unionByName(fpSegs.select(col(idCol), col("__fp"))),
-      idCol, paths(path).tombDir)
+    val (fpB, fpSegs) = fingerprintParts(spark, path)
+    IndexLayout.dropTombstoned(fpB.unionByName(fpSegs), idCol,
+      paths(path).tombDir)
   }
 
   /** [[dedupAgainst]] over a [[writeDedupIndex]] layout, row-identical

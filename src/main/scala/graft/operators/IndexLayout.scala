@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   *   - FOLD:    a leased fold ([[leasedFold]]) snapshots the live
   *              segments and tombstones, version-swaps the merged base
   *              and retires exactly that snapshot with one fold of grace;
-  *   - MAINTAIN: [[cycle]] acts on a threshold-gated [[maintenancePlan]].
+  *   - MAINTAIN: [[cycle]] acts on a threshold-gated [[maintenancePlan]];
+  *   - UPGRADE: [[upgrade]] (and the BM25 and dedup steps on it) migrates
+  *              an index written in a retired on-disk format, once.
   *
   * Every path comes from one [[Paths]] value, in one of two conventions:
   * `nested` (`$root/<table>`, `$root/segments`, `$root/tombstones`;
@@ -141,7 +143,10 @@ object IndexLayout {
           val vs = committedVersionDirs(spark, dir)
           require(vs.nonEmpty,
             s"$dir is marked versioned but has no manifest and no " +
-              "complete version directories — corrupt layout")
+              "complete version directories — corrupt layout, or version " +
+              "directories that predate the completion marker: run the " +
+              "index's upgrade (IndexLayout.upgrade) once while its " +
+              "manifest is intact")
           Some(vs.map(_._1).max)
       }
     }
@@ -579,25 +584,34 @@ object IndexLayout {
     }
   }
 
-  /** Operator migration tool: stamp the [[CommittedMarker]] onto version
-    * directories that predate it. Version dirs written before the marker
-    * existed are complete (every completed swap was) but indistinguishable
-    * from a crashed-prepare partial, so [[effectiveVersion]]'s
-    * manifest-loss fallback refuses to serve them — correct for new dirs,
-    * overcautious for legacy ones. Running this once per pre-marker index
-    * restores the fallback (and flip-GC sparing) for its existing
-    * versions. ONLY the version the manifest currently points at is
-    * stamped — it is current, therefore complete; siblings stay
-    * unstamped because for THEM completeness genuinely is unknowable
-    * (any of them may be a crashed prepare). No-op when there is no
-    * manifest or the current version already carries the marker.
+  /** Migrate the index at `p` to the current on-disk format, once, under
+    * the maintenance lease. The version step stamps the
+    * [[CommittedMarker]] onto each table's manifest-current version
+    * directory: one written before the marker existed is complete (it is
+    * current) but looks like a crashed prepare, so the manifest-loss
+    * fallback would refuse it. Only the current version is stamped; for
+    * its siblings completeness is unknowable. Idempotent: an index
+    * already in the current format is left untouched. The BM25 and dedup
+    * layouts add their own steps (`Bm25.upgrade`, `DedupOps.upgrade`).
     */
-  def adoptLegacyVersion(spark: SparkSession, dir: String): Unit =
-    currentVersion(spark, dir).foreach { n =>
-      val done = new org.apache.hadoop.fs.Path(s"$dir.v$n/$CommittedMarker")
-      val fs = fsOf(spark, done)
-      if (fs.exists(done.getParent) && !fs.exists(done))
-        fs.create(done, true).close()
+  def upgrade(spark: SparkSession, p: Paths): Unit =
+    upgradeWith(spark, p, "IndexLayout.upgrade")(())
+
+  /** [[upgrade]]'s version step, then a layout's own `step`, under one
+    * lease.
+    */
+  private[operators] def upgradeWith(spark: SparkSession, p: Paths, op: String)
+                                    (step: => Unit): Unit =
+    withLease(spark, p.root, op) {
+      p.tableDirs.foreach { dir =>
+        currentVersion(spark, dir).foreach { n =>
+          val done = new org.apache.hadoop.fs.Path(s"$dir.v$n/$CommittedMarker")
+          val fs = fsOf(spark, done)
+          if (fs.exists(done.getParent) && !fs.exists(done))
+            fs.create(done, true).close()
+        }
+      }
+      step
     }
 
   /** Reset a table to the plain (unversioned) layout: drop the manifest
@@ -748,25 +762,6 @@ object IndexLayout {
     val files = tombstoneFiles(spark, tombDir)
     if (files.isEmpty) None else Some(readParquet(spark, files))
   }
-
-  /** Drop the ids held by an EXPLICIT tombstone-file snapshot from `df`
-    * — what the compactors fold, so a tombstone file landing after the
-    * snapshot is untouched.
-    */
-  def dropTombstonedFiles(df: DataFrame, idCol: String,
-                          files: Seq[String]): DataFrame =
-    dropIdsIn(df, idCol, files)
-
-  /** Delete EXACTLY the given tombstone files — the clear half of the
-    * snapshot pair. The sidecar directory itself is left in place (a
-    * later-arrived file may live there); [[readTombstones]] treats a
-    * data-file-less directory as no tombstones.
-    */
-  def clearTombstoneFiles(spark: SparkSession, files: Seq[String]): Unit =
-    files.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
-    }
 
   /** Drop the rows of `df` whose id a live tombstone file of `tombDir`
     * holds: one anti-join, whether or not anything was removed (see
@@ -1458,18 +1453,16 @@ object IndexLayout {
 
   /** The offline fold input shared by the compactions, retrains and
     * audits: table `sub`'s [[liveParts]] over the segment snapshot
-    * `segs`, read by [[readLive]] (each read shaped by `project` first,
-    * for ragged legacy schemas), DISTINCT, minus the ids of an explicit
-    * tombstone snapshot ([[dropTombstonedFiles]]). The distinct is what
+    * `segs`, read by [[readLive]], DISTINCT, minus the ids of an
+    * explicit tombstone snapshot ([[dropIdsIn]]). The distinct is what
     * makes a crashed fold converge: a segment left both folded and
     * present collapses into the identical base rows.
     */
   def foldLive(spark: SparkSession, p: Paths, sub: String,
-               segs: Seq[String], idCol: String, tombs: Seq[String],
-               project: DataFrame => DataFrame = identity): DataFrame = {
+               segs: Seq[String], idCol: String, tombs: Seq[String]): DataFrame = {
     val (base, parts) = liveParts(spark, p, sub, Some(segs))
     val (b, s) = readLive(spark, base, parts)
-    dropTombstonedFiles(project(b).unionByName(project(s)).distinct(), idCol, tombs)
+    dropIdsIn(b.unionByName(s).distinct(), idCol, tombs)
   }
 
   /** The live rows of an index's data table — base ∪ live segments
@@ -1815,9 +1808,7 @@ object IndexLayout {
     * through the parquet-hadoop API: the same file and the same schema,
     * so the frame is the one inference gives. Partition discovery still
     * runs (a partitioned table keeps its `shard`/`cell` column, appended
-    * after the data columns). A read whose parts may differ in schema (a
-    * legacy stats row, a base with a retired column) stays one call per
-    * part, as before.
+    * after the data columns).
     *
     * Whatever the driver cannot resolve — a missing path, no data file,
     * a footer without the key or one that does not parse — goes to

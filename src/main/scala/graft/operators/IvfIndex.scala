@@ -266,7 +266,7 @@ object IvfIndex {
       IndexLayout.rewriteInPlace(spark, path,
         if (IndexLayout.partitionedLayout(spark, path, "cell")) Some("cell")
         else None,
-        IndexLayout.dropTombstonedFiles(_, idCol, tombFiles))
+        IndexLayout.dropIdsIn(_, idCol, tombFiles))
     else
       IndexLayout.writeSwap(spark, path,
         IndexLayout.foldLive(spark, paths(path), "", segs, idCol, tombFiles),

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Bm25, IndexLayout}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class Bm25Spec extends SparkSpec {
   import spark.implicits._
@@ -10,6 +11,25 @@ class Bm25Spec extends SparkSpec {
     (1L, "apple banana apple"),
     (2L, "apple cherry"),
     (3L, "banana banana banana cherry")).toDF("doc_id", "text")
+
+  /** Every file under `dir` with its modification time. */
+  private def fileTimes(dir: String): Map[String, Long] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => p.toString -> java.nio.file.Files.getLastModifiedTime(p).toMillis)
+      .toMap
+    finally walk.close()
+  }
+
+  /** The live stats row of `docs` as the retired formats stored it:
+    * (n, avgdl, sum_len, n_len), totals over `docs`.
+    */
+  private def statsOf(docs: org.apache.spark.sql.DataFrame) = {
+    val toks = size(graft.functions.TextFns.words(col("text")))
+    docs.agg(count(lit(1)).cast("double").as("n"), avg(toks).as("avgdl"),
+      sum(toks).cast("double").as("sum_len"),
+      count(lit(1)).cast("double").as("n_len"))
+  }
 
   test("bm25 matches a hand-computed score on a 3-doc corpus") {
     val out = Bm25.topK(embDocs, "doc_id", "text", Seq("q" -> "apple"), k = 3)
@@ -535,7 +555,7 @@ class Bm25Spec extends SparkSpec {
     assert(out.collect().map(_.toSeq).toSet === direct.collect().map(_.toSeq).toSet)
   }
 
-  test("legacy loose tombstone files are honored, adopted by removal, materialized by compaction") {
+  test("legacy loose tombstone files are folded by upgrade; appends, removals and compaction then match a rebuild") {
     val docs = Seq(
       (1L, "alpha beta gamma"),
       (2L, "alpha delta"),
@@ -570,47 +590,54 @@ class Bm25Spec extends SparkSpec {
       Bm25.writeIndex(ds, "doc_id", "text", d, nShards = 8)
       d
     }
-    // the new reader honors the legacy delete set (doc 1 stays dead)
+    // readers, appends and removals refuse the retired format, naming
+    // the migration, and write nothing
+    val before = fileTimes(dir)
+    for (op <- Seq[() => Any](() => rows(dir),
+        () => Bm25.appendToIndex(Seq((5L, "epsilon alpha")).toDF("doc_id",
+          "text"), "doc_id", "text", dir, nShards = 8),
+        () => Bm25.removeFromIndex(Seq(2L).toDF("doc_id"), "doc_id", dir))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("Bm25.upgrade"), e.getMessage)
+    }
+    assert(fileTimes(dir) == before)
+    // upgrade folds the loose delete set into the base (doc 1 stays
+    // dead) and retires the loose file in the same step
+    Bm25.upgrade(spark, dir)
     assert(rows(dir) === rows(rebuild(live3)))
-    // an APPEND must adopt too: its merged stats row is always
-    // list-format, so without adoption one append would flip
-    // isLegacyStats off and the loose delete set would silently stop
-    // being consulted (doc 1 resurrects; the sweep later deletes the
-    // files — irreversible)
+    def looseFiles = Option(new java.io.File(s"$dir/tombstones").listFiles())
+      .toSeq.flatten.filter(_.getName.endsWith(".parquet"))
+    assert(looseFiles.isEmpty)
     Bm25.appendToIndex(Seq((5L, "epsilon alpha")).toDF("doc_id", "text"),
       "doc_id", "text", dir, nShards = 8)
     val live4 = live3.unionByName(
       Seq((5L, "epsilon alpha")).toDF("doc_id", "text"))
     assert(rows(dir) === rows(rebuild(live4)))
-    // a removal ADOPTS the loose file into the listed set: removing
-    // doc 1 again is a no-op (no double-shift), removing doc 2 shifts
-    // exactly doc 2
+    // removing doc 1 again is a no-op (no double-shift), removing doc 2
+    // shifts exactly doc 2
     Bm25.removeFromIndex(Seq(1L).toDF("doc_id"), "doc_id", dir)
     Bm25.removeFromIndex(Seq(2L).toDF("doc_id"), "doc_id", dir)
     val live2 = docs.filter(col("doc_id") > 2L).unionByName(
       Seq((5L, "epsilon alpha")).toDF("doc_id", "text"))
     assert(rows(dir) === rows(rebuild(live2)))
-    // compaction materializes BOTH formats' removals...
+    // compaction materializes both the folded and the listed removals...
     Bm25.compactIndex(spark, dir)
     assert(rows(dir) === rows(rebuild(live2)))
     assert(spark.read
       .parquet(IndexLayout.resolve(spark, s"$dir/postings"))
       .filter(col("doc_id") <= 2L).count() == 0)
-    // ...and the loose file retires once no still-existing stats layout
-    // implies it (same N-1 retention as listed batches: the next cycle)
+    // ...and no loose file comes back over later cycles
     Bm25.removeFromIndex(Seq(3L).toDF("doc_id"), "doc_id", dir)
     Bm25.compactIndex(spark, dir)
-    val loose = new java.io.File(s"$dir/tombstones")
-    assert(!loose.exists() ||
-      loose.listFiles().forall(f => !f.getName.endsWith(".parquet")))
+    assert(looseFiles.isEmpty)
   }
 
   test("a legacy base plus streaming segments still honors loose tombstones") {
-    // the mixed-layout regression: readStatsRows merges base + segment
-    // stats with mergeSchema, which gives the legacy 2-field base row a
-    // present-but-NULL tomb_dirs — isLegacyStats must treat that as
-    // legacy (new writers always stamp a non-null list) or the loose
-    // delete set is skipped and removed docs resurrect
+    // the mixed-layout regression: a merged read of the legacy base and
+    // the segment stats gave the base row a present-but-NULL tomb_dirs,
+    // the loose delete set was skipped and removed docs resurrected.
+    // The reader now refuses the mix; upgrade folds base, segment and
+    // loose tombstones together
     val docs = Seq(
       (1L, "alpha beta gamma"),
       (2L, "alpha delta"),
@@ -630,14 +657,16 @@ class Bm25Spec extends SparkSpec {
       .write.mode("overwrite")
       .parquet(IndexLayout.resolve(spark, s"$dir/stats"))
     // a streaming segment lands next to the legacy base (new-format
-    // stats row with a non-null tomb_dirs) — the reader's stats read is
-    // now the multi-dir mergeSchema path
+    // stats row with a non-null tomb_dirs)
     val segDocs = Seq((4L, "epsilon alpha")).toDF("doc_id", "text")
     Bm25.writeIndex(segDocs, "doc_id", "text",
       s"$dir/segments/batch=0", nShards = 8)
     val queries = Seq("q" -> "alpha beta gamma delta epsilon")
-    val got = Bm25.topKIndexed(spark, dir, "doc_id", queries, k = 10,
+    def got = Bm25.topKIndexed(spark, dir, "doc_id", queries, k = 10,
       nShards = 8).collect().map(_.toSeq).toSet
+    val e = intercept[IllegalArgumentException](got)
+    assert(e.getMessage.contains("Bm25.upgrade"), e.getMessage)
+    Bm25.upgrade(spark, dir)
     val refDir = Scratch.dir("bm25_lsref")
     Bm25.writeIndex(live.unionByName(segDocs), "doc_id", "text", refDir,
       nShards = 8)
@@ -789,11 +818,102 @@ class Bm25Spec extends SparkSpec {
       .select("n", "avgdl").collect() // materialize before overwrite
     Seq((1.0, 2.0)).toDF("n", "avgdl").write.mode("overwrite")
       .parquet(IndexLayout.resolve(spark, s"$dir/stats"))
-    val e = intercept[IllegalArgumentException] {
-      Bm25.appendToIndex(Seq((2L, "gamma")).toDF("doc_id", "text"),
-        "doc_id", "text", dir, nShards = 8)
+    def append() = Bm25.appendToIndex(Seq((2L, "gamma")).toDF("doc_id",
+      "text"), "doc_id", "text", dir, nShards = 8)
+    val e = intercept[IllegalArgumentException](append())
+    assert(e.getMessage.contains("Bm25.upgrade"), e.getMessage)
+    // upgrade recomputes the exact totals from the doc sidecar; the
+    // append then merges exactly
+    Bm25.upgrade(spark, dir)
+    append()
+    val refDir = Scratch.dir("bm25_2fR")
+    Bm25.writeIndex(Seq((1L, "alpha beta"), (2L, "gamma")).toDF("doc_id",
+      "text"), "doc_id", "text", refDir, nShards = 8)
+    def rows(d: String) = Bm25.topKIndexed(spark, d, "doc_id",
+        Seq("q" -> "alpha gamma"), k = 10, nShards = 8)
+      .collect().map(_.toSeq).toSet
+    assert(rows(dir) === rows(refDir))
+  }
+
+  test("upgrade crashed after its first table swap: readers refuse, a re-run converges, a second run writes nothing") {
+    val docs = Seq(
+      (1L, "alpha beta gamma"),
+      (2L, "alpha delta"),
+      (3L, "beta gamma delta")).toDF("doc_id", "text")
+    val dir = Scratch.dir("bm25_upgrade_crash")
+    Bm25.writeIndex(docs, "doc_id", "text", dir, nShards = 8)
+    // the retired format: doc 1 removed as a loose tombstone file, and a
+    // stats row whose tomb_dirs list is null, totals already shifted
+    IndexLayout.appendTombstones(Seq(1L).toDF("doc_id"), "doc_id",
+      s"$dir/tombstones")
+    val live = docs.filter(col("doc_id") =!= 1L)
+    statsOf(live).withColumn("tomb_dirs", lit(null).cast("array<string>"))
+      .write.mode("overwrite")
+      .parquet(IndexLayout.resolve(spark, s"$dir/stats"))
+    val queries = Seq("q" -> "alpha beta gamma delta")
+    def rows(d: String) =
+      Bm25.topKIndexed(spark, d, "doc_id", queries, k = 10, nShards = 8)
+        .collect().map(_.toSeq).toSet
+    def refused(): Unit = {
+      val e = intercept[IllegalArgumentException](rows(dir))
+      assert(e.getMessage.contains("Bm25.upgrade"), e.getMessage)
     }
-    assert(e.getMessage.contains("sum_len"))
+    refused()
+    // the crash: the docs table's version write fails after the
+    // postings swap landed
+    val key = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(key, classOf[CrashOnDocsVersionCommitter].getName)
+    try intercept[Exception](Bm25.upgrade(spark, dir))
+    finally spark.conf.unset(key)
+    assert(IndexLayout.currentVersion(spark, s"$dir/postings").isDefined)
+    assert(IndexLayout.currentVersion(spark, s"$dir/docs").isEmpty)
+    assert(IndexLayout.leaseHolder(spark, dir).isEmpty, "lease released")
+    // in between, the stats are still retired: readers refuse, never
+    // serve folded postings against the old stats
+    refused()
+    Bm25.upgrade(spark, dir)
+    val refDir = Scratch.dir("bm25_upref")
+    Bm25.writeIndex(live, "doc_id", "text", refDir, nShards = 8)
+    assert(rows(dir) === rows(refDir))
+    // N-1 retention keeps the retired stats layout for one more swap;
+    // the sweeps of upgrade and of a later compaction read past it
+    assert(new java.io.File(s"$dir/stats").isDirectory)
+    val before = fileTimes(dir)
+    Bm25.upgrade(spark, dir)
+    assert(fileTimes(dir) == before, "a second upgrade writes nothing")
+    Bm25.compactIndex(spark, dir)
+    assert(rows(dir) === rows(refDir))
+  }
+
+  test("a delete set listing a loose tombstone file reads, compacts and retires it without upgrade") {
+    // the current format as the previous release left it when an append
+    // adopted a loose tombstone file: tomb_dirs lists the file itself
+    val docs = Seq(
+      (1L, "alpha beta gamma"),
+      (2L, "alpha delta"),
+      (3L, "beta gamma delta")).toDF("doc_id", "text")
+    val dir = Scratch.dir("bm25_adopted")
+    Bm25.writeIndex(docs, "doc_id", "text", dir, nShards = 8)
+    IndexLayout.appendTombstones(Seq(1L).toDF("doc_id"), "doc_id",
+      s"$dir/tombstones")
+    val loose = IndexLayout.tombstoneFiles(spark, s"$dir/tombstones")
+    val live = docs.filter(col("doc_id") =!= 1L)
+    statsOf(live).withColumn("tomb_dirs", typedLit(loose))
+      .write.mode("overwrite")
+      .parquet(IndexLayout.resolve(spark, s"$dir/stats"))
+    val queries = Seq("q" -> "alpha beta gamma delta")
+    def rows(d: String) =
+      Bm25.topKIndexed(spark, d, "doc_id", queries, k = 10, nShards = 8)
+        .collect().map(_.toSeq).toSet
+    val refDir = Scratch.dir("bm25_adoptedR")
+    Bm25.writeIndex(live, "doc_id", "text", refDir, nShards = 8)
+    assert(rows(dir) === rows(refDir))
+    Bm25.compactIndex(spark, dir)
+    assert(rows(dir) === rows(refDir))
+    // the file is unlisted now; the sweep after the next swap retires it
+    Bm25.removeFromIndex(Seq(2L).toDF("doc_id"), "doc_id", dir)
+    Bm25.compactIndex(spark, dir)
+    assert(loose.forall(f => !new java.io.File(new java.net.URI(f)).exists()))
   }
 
   test("exportLivePostings is lease-free: it runs while maintenance holds the lease") {
@@ -852,5 +972,21 @@ class Bm25Spec extends SparkSpec {
     assert(r.getAs[Long]("n_relevant") == 1)
     assert(r.getAs[Long]("n_retrieved_relevant") == 1)
     assert(r.getAs[Long]("recall_x1e6") == 1000000L)
+  }
+}
+
+/** Fails the commit of a `docs.v<n>` version write under a
+  * `bm25_upgrade_crash` index, after its files landed: the crash of an
+  * upgrade between its postings swap and its docs swap.
+  */
+class CrashOnDocsVersionCommitter(
+    out: org.apache.hadoop.fs.Path,
+    ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+    extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    super.commitJob(job)
+    if (out.getName.matches("docs\\.v\\d+") &&
+        out.toString.contains("bm25_upgrade_crash"))
+      throw new java.io.IOException("injected crash after the postings swap")
   }
 }

@@ -497,26 +497,30 @@ class IndexLayoutSpec extends SparkSpec {
     val base = Scratch.dir("ixl_tomb")
     val tomb = s"$base/tombstones"
     IndexLayout.appendTombstones(Seq(1L).toDF("id"), "id", tomb)
-    // the compactor snapshots the sidecar's files...
-    val snapshot = IndexLayout.tombstoneFiles(spark, tomb)
+    // the compactor snapshots the sidecar's live files...
+    val snapshot = IndexLayout.liveTombstoneFiles(spark, tomb)
     assert(snapshot.nonEmpty)
     // ...then a removal lands while it folds
     IndexLayout.appendTombstones(Seq(2L).toDF("id"), "id", tomb)
-    // the fold materializes EXACTLY the snapshot and clears exactly it
+    // the fold materializes EXACTLY the snapshot and retires exactly it
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).toSet
     val data = Seq(1L, 2L, 3L).toDF("id")
-    val folded = IndexLayout.dropTombstonedFiles(data, "id", snapshot)
-      .select("id").collect().map(_.getLong(0)).toSet
+    val folded = ids(IndexLayout.dropIdsIn(data, "id", snapshot))
     assert(folded == Set(2L, 3L), "snapshot fold drops only id 1")
-    IndexLayout.clearTombstoneFiles(spark, snapshot)
-    // the late tombstone survives the clear and still filters reads
-    assert(IndexLayout.tombstoneFiles(spark, tomb).nonEmpty)
-    val after = IndexLayout.dropTombstoned(data, "id", tomb)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(after == Set(1L, 3L), "late tombstone (id 2) must keep filtering")
-    // a sidecar whose files were all cleared reads as no tombstones even
-    // though the directory remains
-    IndexLayout.clearTombstoneFiles(spark,
-      IndexLayout.tombstoneFiles(spark, tomb))
+    IndexLayout.retireTombstoneFiles(spark, tomb, snapshot)
+    // the late tombstone survives the retire and still filters reads of
+    // the folded base
+    assert(IndexLayout.liveTombstoneFiles(spark, tomb).size == 1)
+    assert(ids(IndexLayout.dropTombstoned(folded.toSeq.toDF("id"), "id",
+      tomb)) == Set(3L), "late tombstone (id 2) must keep filtering")
+    // a sidecar whose files were all retired (the next fold deletes what
+    // the previous one marked) reads as no tombstones even though the
+    // directory remains
+    IndexLayout.retireTombstoneFiles(spark, tomb,
+      IndexLayout.liveTombstoneFiles(spark, tomb))
+    IndexLayout.retireTombstoneFiles(spark, tomb, Nil)
+    assert(new java.io.File(tomb).isDirectory)
     assert(IndexLayout.readTombstones(spark, tomb).isEmpty)
     assert(IndexLayout.dropTombstoned(data, "id", tomb)
       .count() == 3)
@@ -731,7 +735,7 @@ class IndexLayoutSpec extends SparkSpec {
     assert(!IndexLayout.isSegmentPath("/idx/segments"))
   }
 
-  test("adoptLegacyVersion restores manifest-loss fallback for pre-marker version dirs") {
+  test("upgrade stamps pre-marker version dirs, restoring the manifest-loss fallback") {
     val base = Scratch.dir("ixl_adopt")
     val dir = s"$base/t"
     Seq(1L).toDF("v").write.parquet(dir)
@@ -743,15 +747,29 @@ class IndexLayoutSpec extends SparkSpec {
     // existed: strip v2's marker
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$dir.v2/${IndexLayout.CommittedMarker}"), false)
-    // adoption stamps ONLY the manifest-current version (known complete)
-    IndexLayout.adoptLegacyVersion(spark, dir)
+    // upgrade stamps ONLY the manifest-current version (known complete)
+    IndexLayout.upgrade(spark, IndexLayout.Paths.nested(base, "t"))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir.v2/${IndexLayout.CommittedMarker}")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(base + "._LEASE")))
     // manifest loss after adoption: fallback serves v2, not the stale v1
     fs.delete(new org.apache.hadoop.fs.Path(dir + "._CURRENT"), false)
     assert(IndexLayout.resolve(spark, dir) == s"$dir.v2")
     assert(spark.read.parquet(IndexLayout.resolve(spark, dir))
       .head().getLong(0) == 3L)
+  }
+
+  test("manifest loss over only pre-marker version dirs is refused, naming upgrade") {
+    val dir = s"${Scratch.dir("ixl_premarker")}/t"
+    Seq(1L).toDF("v").write.parquet(dir)
+    IndexLayout.writeSwap(spark, dir, Seq(2L).toDF("v"), None)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(
+      s"$dir.v1/${IndexLayout.CommittedMarker}"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(dir + "._CURRENT"), false)
+    val e = intercept[IllegalArgumentException](IndexLayout.resolve(spark, dir))
+    assert(e.getMessage.contains("IndexLayout.upgrade"), e.getMessage)
   }
 
   test("all five layouts: default-argument segment writes are unpartitioned; live read equals a rebuild") {

@@ -367,10 +367,11 @@ class SimilaritySpec extends SparkSpec {
       == Set(multiset(marks(batch, distributed))))
   }
 
-  test("fingerprint tables with a stray extra column read and compact back to the canonical shape") {
+  test("fingerprint tables with a stray extra column are refused until upgrade restores the canonical shape") {
     // the round-11 interim format carried an fpshard column (the sharded
-    // layout was measured and rejected) — reads must project it away and
-    // a compaction must fold such a table back to (id, __fp)
+    // layout was measured and rejected) — reads and compactions refuse
+    // it, naming the migration; upgrade folds the table back to
+    // (id, __fp)
     val corpus = docs
     val probe = corpus.filter(col("doc_id") < 25)
       .select(col("doc_id") + 400000L as "doc_id", col("text"))
@@ -390,12 +391,18 @@ class SimilaritySpec extends SparkSpec {
       "doc_id", "text", 3, 0.5).collect().map(_.toSeq).toSet
     val want = DedupOps.dedupAgainst(probe, corpus, "doc_id", "text", 3, 0.5)
       .collect().map(_.toSeq).toSet
-    assert(rows(dir) == want, "extra-column table must read exact")
-    DedupOps.compactDedupIndex(spark, dir, "doc_id")
+    for (op <- Seq[() => Any](() => rows(dir),
+        () => DedupOps.compactDedupIndex(spark, dir, "doc_id"))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("DedupOps.upgrade"), e.getMessage)
+    }
+    DedupOps.upgrade(spark, dir)
     assert(!spark.read.parquet(
         graft.operators.IndexLayout.resolve(spark, fpDir))
       .columns.contains("fpshard"),
-      "compaction must restore the canonical (id, __fp) shape")
+      "upgrade must restore the canonical (id, __fp) shape")
+    assert(rows(dir) == want, "upgraded table must read exact")
+    DedupOps.compactDedupIndex(spark, dir, "doc_id")
     assert(rows(dir) == want, "compacted table must read exact")
   }
 
