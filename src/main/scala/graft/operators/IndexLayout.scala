@@ -1410,12 +1410,13 @@ object IndexLayout {
     * it; `partCol` is an `int` partition column, as discovery types a
     * `<key>=N` directory. With no leaves it is a relation with no files:
     * it reads no rows, yet the optimizer keeps it (it prunes only empty
-    * local relations), so the plan keeps its shape.
+    * local relations), so the plan keeps its shape. Two such relations
+    * are equal only when they list the same files ([[ListedFileIndex]]).
     */
   private def relation(spark: SparkSession, dataSchema: org.apache.spark.sql.types.StructType,
                        partCol: Option[String], leaves: Seq[Leaf]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
-      InMemoryFileIndex, PartitionPath, PartitionSpec}
+      PartitionPath, PartitionSpec}
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val partSchema = StructType(partCol.toSeq.map(StructField(_, IntegerType)))
     val listed = leaves.map(l => l.dir -> l.files).toMap
@@ -1428,12 +1429,33 @@ object IndexLayout {
     val spec = PartitionSpec(partSchema, if (partCol.isEmpty) Nil else leaves.map { l =>
       PartitionPath(org.apache.spark.sql.catalyst.InternalRow(l.key.get), l.dir)
     })
-    val index = new InMemoryFileIndex(spark, leaves.map(_.dir), Map.empty, None, cache,
-      Some(spec), None)
+    val index = new ListedFileIndex(spark, leaves, cache, spec)
     spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
       asNullable(dataSchema).asInstanceOf[StructType], None,
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
       Map.empty)(spark))
+  }
+
+  /** The file index of a [[relation]]: Spark's `InMemoryFileIndex`,
+    * whose equality compares root paths alone, made equal only when the
+    * listed files are equal too. Without that, two reads of one
+    * directory with different file lists (a tombstone snapshot and the
+    * live files after a later removal) count as one relation in a plan,
+    * and a reused exchange serves the first list to both.
+    */
+  private final class ListedFileIndex(
+      spark: SparkSession, leaves: Seq[Leaf],
+      cache: org.apache.spark.sql.execution.datasources.FileStatusCache,
+      spec: org.apache.spark.sql.execution.datasources.PartitionSpec)
+      extends org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+        spark, leaves.map(_.dir), Map.empty, None, cache, Some(spec), None) {
+    private val listed = leaves.flatMap(_.files.map(f =>
+      (f.getPath, f.getLen, f.getModificationTime))).toSet
+    override def equals(other: Any): Boolean = other match {
+      case o: ListedFileIndex => super.equals(o) && listed == o.listed
+      case _ => false
+    }
+    override def hashCode(): Int = (super.hashCode(), listed).hashCode()
   }
 
   /** `t` with every field, element and value nullable, as a file read
@@ -1491,7 +1513,7 @@ object IndexLayout {
     * broadcast anti-join on the segment id set to a shuffle anti-join.
     * The broadcast regime is the steady streaming state (segments are
     * micro-batch-sized); the cap makes the guard CODE-bounded, not
-    * policy-bounded — a `streamBqIndex` caller who never compacts
+    * policy-bounded — a BQ `streamIndex` caller who never compacts
     * accumulates segments until an uncapped broadcast would hurt, and
     * this regime flip (never a corpus `distinct()`) absorbs that
     * instead. Same cap-with-fallback discipline as

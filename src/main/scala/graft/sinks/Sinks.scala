@@ -1,8 +1,9 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
+import graft.operators.IndexLayout
 
 /** Sink layer (SURVEY.md §2.2).
   *
@@ -259,6 +260,19 @@ object Sinks {
     */
   def idempotentBatchAppend(df: DataFrame, dir: String, batchId: Long): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(s"$dir/batch=$batchId")
+
+  /** The read half of [[idempotentBatchAppend]]: every batch written to
+    * `dir` except `batchId` itself, whose own earlier (possibly partial)
+    * write a replayed batch must not see. The read goes through
+    * [[graft.operators.IndexLayout.readParquet]], so building the frame
+    * starts no schema-inference job. None only when `dir` holds no data
+    * file, i.e. nothing was written yet; every other failure propagates,
+    * so a history that lacks a column its reader selects fails the batch
+    * instead of reading as empty and admitting every row.
+    */
+  def priorBatches(spark: SparkSession, dir: String, batchId: Long): Option[DataFrame] =
+    if (!IndexLayout.holdsData(spark, dir)) None
+    else Some(IndexLayout.readParquet(spark, Seq(dir)).filter(col("batch") =!= batchId))
 
   /** Compact a parquet directory's small files to ~`targetBytes` outputs:
     * streaming appends and per-batch incremental writes leave thousands of

@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampNTZType, TimestampType}
-import org.apache.spark.Partition
-import graft.operators.{Bm25, BqIndex, DedupOps, IndexLayout, IvfIndex, IvfPq}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import graft.operators.{Bm25, DedupOps, IndexLayout}
+import graft.sinks.Sinks
 
 /** Structured Streaming re-expression of the reference's incremental
   * semantics (SURVEY.md §2.10):
@@ -281,34 +281,19 @@ object StreamingOps {
   def incrementalDedup(docs: DataFrame, idCol: String, textCol: String,
                        indexDir: String, outDir: String,
                        checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val withFp = batch.withColumn("fp",
-          graft.functions.TextFns.fingerprint(col(textCol)))
-        val local = graft.operators.Relational
-          .dedupKeepFirst(withFp, Seq("fp"), Seq(col(idCol)))
-        // exclude THIS batch's partition: a retried batch must not see its
-        // own prior (possibly partial) index write, or the anti-join would
-        // empty the batch and the overwrite would erase its earlier output
-        val known =
-          try spark.read.parquet(indexDir)
-            .filter(col("batch") =!= batchId).select("fp")
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            local.select("fp").limit(0)
-          }
-        val fresh = local.join(known, Seq("fp"), "left_anti")
-          .persist() // two sinks below — don't recompute the anti-join
-        // batch=<id> overwrite semantics: a retried batch REPLACES its own
-        // prior partial output (out first, then index — a crash between
-        // the two replays with the index unchanged and converges)
-        graft.sinks.Sinks.idempotentBatchAppend(fresh.drop("fp"), outDir, batchId)
-        graft.sinks.Sinks.idempotentBatchAppend(fresh.select("fp"), indexDir, batchId)
-        fresh.unpersist()
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val withFp = batch.withColumn("fp",
+        graft.functions.TextFns.fingerprint(col(textCol)))
+      val local = graft.operators.Relational
+        .dedupKeepFirst(withFp, Seq("fp"), Seq(col(idCol)))
+      val known = Sinks.priorBatches(batch.sparkSession, indexDir, batchId)
+        .fold(local.select("fp").limit(0))(_.select("fp"))
+      val fresh = local.join(known, Seq("fp"), "left_anti")
+        .persist() // two sinks below — don't recompute the anti-join
+      Sinks.idempotentBatchAppend(fresh.drop("fp"), outDir, batchId)
+      Sinks.idempotentBatchAppend(fresh.select("fp"), indexDir, batchId)
+      fresh.unpersist()
+    }
 
   /** Continuous-ingestion NEAR-dup dedup: the minhash-LSH ladder run
     * incrementally. Each micro-batch computes one-pass minhash signatures,
@@ -337,71 +322,57 @@ object StreamingOps {
       if (a == null || b == null) 0.0
       else a.iterator.zip(b.iterator).count { case (x, y) => x == y }.toDouble / k
     }
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val sigs = graft.operators.DedupOps
-          .minhashSignaturesOnePass(batch, idCol, textCol, n, k)
-          .select(col(idCol),
-            array((0 until k).map(i => col(s"mh_$i")): _*).as("sig"))
-          .persist()
-        def bandKeys(d: DataFrame) = d.select(col(idCol), col("sig"),
-            explode(array((0 until bands).map { b =>
-              struct(lit(b).as("band"),
-                hash((b * rpb until (b + 1) * rpb).map(col("sig")(_)): _*)
-                  .as("key"))
-            }: _*)).as("bk"))
-          .select(col(idCol), col("sig"),
-            col("bk.band").as("band"), col("bk.key").as("key"))
-        val newBands = bandKeys(sigs).persist()
-        // single-directory index: only signatures persist; band keys are a
-        // deterministic function of the signature and are recomputed on
-        // read. Two separate index files could go out of sync on a
-        // mid-batch crash (bands written, sigs not) and silently disable
-        // dedup against all prior history.
-        // exclude THIS batch's partition (same retry hazard as
-        // incrementalDedup: a replayed batch must not match its own sigs)
-        val oldSigs =
-          try spark.read.parquet(s"$indexDir/sigs")
-            .filter(col("batch") =!= batchId).select(col(idCol), col("sig"))
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            sigs.limit(0)
-          }
-        // vs the index: any band collision -> estimated-Jaccard confirm.
-        // The probe join ships only (id, band, key) int rows; the k-long
-        // signatures are re-joined for the (few) matched candidates only —
-        // carrying signatures through the banded shuffle would grow every
-        // batch's shuffle with the full index size.
-        val candOld = newBands.select(col(idCol), col("band"), col("key"))
-          .join(bandKeys(oldSigs).select(col(idCol).as("__old"),
-            col("band"), col("key")), Seq("band", "key"))
-          .filter(col(idCol) =!= col("__old")) // a doc is never its own dup
-          .select(col(idCol), col("__old")).distinct()
-        val vsIndex = candOld
-          .join(sigs, Seq(idCol))
-          .join(oldSigs.select(col(idCol).as("__old"), col("sig").as("__osig")),
-            Seq("__old"))
-          .filter(simEst(col("sig"), col("__osig")) >= threshold)
-          .select(col(idCol))
-        // batch-local: keep the smaller id of each confirmed colliding pair
-        val local = newBands.select(col(idCol).as("__a"), col("sig").as("__asig"),
-            col("band"), col("key"))
-          .join(newBands.select(col(idCol).as("__b"), col("sig").as("__bsig"),
-            col("band"), col("key")), Seq("band", "key"))
-          .filter(col("__a") < col("__b"))
-          .select(col("__a"), col("__b"), col("__asig"), col("__bsig")).distinct()
-          .filter(simEst(col("__asig"), col("__bsig")) >= threshold)
-          .select(col("__b").as(idCol))
-        val dropIds = vsIndex.union(local).distinct().persist()
-        val survivors = batch.join(dropIds, Seq(idCol), "left_anti").persist()
-        graft.sinks.Sinks.idempotentBatchAppend(survivors, outDir, batchId)
-        val keptSigs = sigs.join(survivors.select(idCol), Seq(idCol), "left_semi")
-        graft.sinks.Sinks.idempotentBatchAppend(keptSigs, s"$indexDir/sigs", batchId)
-        Seq(sigs, newBands, dropIds, survivors).foreach(_.unpersist())
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val sigs = graft.operators.DedupOps
+        .minhashSignaturesOnePass(batch, idCol, textCol, n, k)
+        .select(col(idCol),
+          array((0 until k).map(i => col(s"mh_$i")): _*).as("sig"))
+        .persist()
+      def bandKeys(d: DataFrame) = d.select(col(idCol), col("sig"),
+          explode(array((0 until bands).map { b =>
+            struct(lit(b).as("band"),
+              hash((b * rpb until (b + 1) * rpb).map(col("sig")(_)): _*)
+                .as("key"))
+          }: _*)).as("bk"))
+        .select(col(idCol), col("sig"),
+          col("bk.band").as("band"), col("bk.key").as("key"))
+      val newBands = bandKeys(sigs).persist()
+      // single-directory index: only signatures persist; band keys are a
+      // deterministic function of the signature and are recomputed on
+      // read. Two separate index files could go out of sync on a
+      // mid-batch crash (bands written, sigs not) and silently disable
+      // dedup against all prior history.
+      val oldSigs = Sinks.priorBatches(batch.sparkSession, s"$indexDir/sigs", batchId)
+        .fold(sigs.limit(0))(_.select(col(idCol), col("sig")))
+      // vs the index: any band collision -> estimated-Jaccard confirm.
+      // The probe join ships only (id, band, key) int rows; the k-long
+      // signatures are re-joined for the (few) matched candidates only —
+      // carrying signatures through the banded shuffle would grow every
+      // batch's shuffle with the full index size.
+      val candOld = newBands.select(col(idCol), col("band"), col("key"))
+        .join(bandKeys(oldSigs).select(col(idCol).as("__old"),
+          col("band"), col("key")), Seq("band", "key"))
+        .filter(col(idCol) =!= col("__old")) // a doc is never its own dup
+        .select(col(idCol), col("__old")).distinct()
+      val vsIndex = candOld
+        .join(sigs, Seq(idCol))
+        .join(oldSigs.select(col(idCol).as("__old"), col("sig").as("__osig")),
+          Seq("__old"))
+        .filter(simEst(col("sig"), col("__osig")) >= threshold)
+        .select(col(idCol))
+      // batch-local: keep the smaller id of each confirmed colliding pair
+      val local = newBands.select(col(idCol).as("__a"), col("sig").as("__asig"),
+          col("band"), col("key"))
+        .join(newBands.select(col(idCol).as("__b"), col("sig").as("__bsig"),
+          col("band"), col("key")), Seq("band", "key"))
+        .filter(col("__a") < col("__b"))
+        .select(col("__a"), col("__b"), col("__asig"), col("__bsig")).distinct()
+        .filter(simEst(col("__asig"), col("__bsig")) >= threshold)
+        .select(col("__b").as(idCol))
+      val survivors = keepSurvivors(batch, vsIndex.union(local).distinct(), idCol,
+        sigs, outDir, s"$indexDir/sigs", batchId)
+      Seq(sigs, newBands, survivors).foreach(_.unpersist())
+    }
   }
 
   /** Continuous-ingestion winnowing dedup: [[incrementalNearDedup]]'s
@@ -421,43 +392,10 @@ object StreamingOps {
                              indexDir: String, outDir: String,
                              checkpointDir: String, k: Int = 3, w: Int = 4,
                              minShared: Long = 5L): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fp = graft.operators.DedupOps
-          .winnowingFingerprints(batch, idCol, textCol, k, w).persist()
-        val oldFp =
-          try spark.read.parquet(s"$indexDir/fps")
-            .filter(col("batch") =!= batchId)
-            .select(col(idCol), col("fingerprint"))
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            fp.limit(0)
-          }
-        val vsIndex = fp
-          .join(oldFp.select(col(idCol).as("__old"), col("fingerprint")),
-            Seq("fingerprint"))
-          .groupBy(col(idCol), col("__old"))
-          .agg(count(lit(1)).as("shared"))
-          .filter(col("shared") >= minShared)
-          .select(col(idCol))
-        val local = fp.select(col(idCol).as("__a"), col("fingerprint"))
-          .join(fp.select(col(idCol).as("__b"), col("fingerprint")),
-            Seq("fingerprint"))
-          .filter(col("__a") < col("__b"))
-          .groupBy(col("__a"), col("__b"))
-          .agg(count(lit(1)).as("shared"))
-          .filter(col("shared") >= minShared)
-          .select(col("__b").as(idCol))
-        val dropIds = vsIndex.union(local).distinct().persist()
-        val survivors = batch.join(dropIds, Seq(idCol), "left_anti").persist()
-        graft.sinks.Sinks.idempotentBatchAppend(survivors, outDir, batchId)
-        val keptFp = fp.join(survivors.select(idCol), Seq(idCol), "left_semi")
-        graft.sinks.Sinks.idempotentBatchAppend(keptFp, s"$indexDir/fps", batchId)
-        Seq(fp, dropIds, survivors).foreach(_.unpersist())
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      winnowSurvivors(batch, idCol, textCol, k, w, minShared, indexDir, outDir,
+        batchId).unpersist()
+    }
 
   /** Continuous-ingestion CHAR-level dedup: the streaming twin of
     * [[graft.operators.DedupOps.cdcDupProfile]], completing the
@@ -481,53 +419,40 @@ object StreamingOps {
                           checkpointDir: String, w: Int = 8,
                           modulus: Int = 64,
                           maxDupFrac: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // distinct chunk content per doc, char-weighted
-        val ch = graft.operators.DedupOps
-          .cdcChunks(batch, idCol, textCol, w, modulus)
-          .select(col(idCol), md5(col("chunk")).as("h"),
-            length(col("chunk")).cast("long").as("len"))
-          .distinct().persist()
-        val tot = ch.groupBy(col(idCol)).agg(sum(col("len")).as("__tot"))
-        val oldCh =
-          try spark.read.parquet(s"$indexDir/chunks")
-            .filter(col("batch") =!= batchId)
-            .select(col("h")).distinct()
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            ch.select(col("h")).limit(0)
-          }
-        val vsIndex = ch.join(oldCh, Seq("h"))
-          .groupBy(col(idCol)).agg(sum(col("len")).as("__shared"))
-          .join(tot, Seq(idCol))
-          .filter(col("__shared") >= lit(maxDupFrac) * col("__tot"))
-          .select(col(idCol))
-        val local = ch.select(col(idCol).as("__a"), col("h"))
-          .join(ch.select(col(idCol).as("__b"), col("h"),
-            col("len")), Seq("h"))
-          .filter(col("__a") < col("__b"))
-          .groupBy(col("__a"), col("__b")).agg(sum(col("len")).as("__shared"))
-          .join(tot.select(col(idCol).as("__b"), col("__tot")), Seq("__b"))
-          .filter(col("__shared") >= lit(maxDupFrac) * col("__tot"))
-          .select(col("__b").as(idCol))
-        val dropIds = vsIndex.union(local).distinct().persist()
-        val survivors = batch.join(dropIds, Seq(idCol), "left_anti").persist()
-        graft.sinks.Sinks.idempotentBatchAppend(survivors, outDir, batchId)
-        val keptCh = ch.join(survivors.select(idCol), Seq(idCol), "left_semi")
-        graft.sinks.Sinks.idempotentBatchAppend(keptCh, s"$indexDir/chunks", batchId)
-        Seq(ch, dropIds, survivors).foreach(_.unpersist())
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      // distinct chunk content per doc, char-weighted
+      val ch = graft.operators.DedupOps
+        .cdcChunks(batch, idCol, textCol, w, modulus)
+        .select(col(idCol), md5(col("chunk")).as("h"),
+          length(col("chunk")).cast("long").as("len"))
+        .distinct().persist()
+      val tot = ch.groupBy(col(idCol)).agg(sum(col("len")).as("__tot"))
+      val oldCh = Sinks.priorBatches(batch.sparkSession, s"$indexDir/chunks", batchId)
+        .fold(ch.select(col("h")).limit(0))(_.select(col("h")).distinct())
+      val vsIndex = ch.join(oldCh, Seq("h"))
+        .groupBy(col(idCol)).agg(sum(col("len")).as("__shared"))
+        .join(tot, Seq(idCol))
+        .filter(col("__shared") >= lit(maxDupFrac) * col("__tot"))
+        .select(col(idCol))
+      val local = ch.select(col(idCol).as("__a"), col("h"))
+        .join(ch.select(col(idCol).as("__b"), col("h"),
+          col("len")), Seq("h"))
+        .filter(col("__a") < col("__b"))
+        .groupBy(col("__a"), col("__b")).agg(sum(col("len")).as("__shared"))
+        .join(tot.select(col(idCol).as("__b"), col("__tot")), Seq("__b"))
+        .filter(col("__shared") >= lit(maxDupFrac) * col("__tot"))
+        .select(col("__b").as(idCol))
+      val survivors = keepSurvivors(batch, vsIndex.union(local).distinct(), idCol,
+        ch, outDir, s"$indexDir/chunks", batchId)
+      Seq(ch, survivors).foreach(_.unpersist())
+    }
 
   /** Continuous-ingestion benchmark decontamination: the streaming twin of
     * [[graft.operators.DedupOps.decontaminate]]. Each micro-batch shingles
-    * its documents (one narrow pass), counts distinct n-grams shared with
-    * the FIXED benchmark gram set, and keeps only documents at or below
-    * `maxSharedGrams`; survivors append with the same batch=<id>-overwrite
-    * exactly-once path as the dedup sinks.
+    * its documents (one narrow pass), drops those sharing more than
+    * `maxSharedGrams` n-grams with the FIXED benchmark gram set
+    * ([[contaminated]]), and appends the rest with the same
+    * batch=<id>-overwrite exactly-once path as the dedup sinks.
     *
     * State never grows with the stream: the benchmark gram set is static
     * (persisted once by the caller, broadcast per batch while small). No
@@ -539,22 +464,11 @@ object StreamingOps {
                           maxSharedGrams: Long, outDir: String,
                           checkpointDir: String): StreamingQuery = {
     val bench = benchGrams.select(col("shingle")).distinct().persist()
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val grams = graft.operators.DedupOps
-          .shingles(batch, idCol, textCol, n)
-        val contaminated = grams
-          .join(broadcast(bench), Seq("shingle"))
-          .groupBy(col(idCol))
-          .agg(count(lit(1)).as("n_shared"))
-          .filter(col("n_shared") > maxSharedGrams)
-          .select(col(idCol))
-        val keep = batch.join(contaminated, Seq(idCol), "left_anti")
-        graft.sinks.Sinks.idempotentBatchAppend(keep, outDir, batchId)
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val keep = batch.join(
+        contaminated(batch, idCol, textCol, n, bench, maxSharedGrams), Seq(idCol), "left_anti")
+      Sinks.idempotentBatchAppend(keep, outDir, batchId)
+    }
   }
 
   /** Continuous-ingestion SPAN excision: the streaming twin of
@@ -574,15 +488,10 @@ object StreamingOps {
                    benchGrams: DataFrame, n: Int, outDir: String,
                    checkpointDir: String): StreamingQuery = {
     val bench = benchGrams.select(col("shingle")).distinct().persist()
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = graft.operators.DedupOps
-          .exciseAgainst(batch, idCol, textCol, n, bench)
-        graft.sinks.Sinks.idempotentBatchAppend(out, outDir, batchId)
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      Sinks.idempotentBatchAppend(graft.operators.DedupOps
+        .exciseAgainst(batch, idCol, textCol, n, bench), outDir, batchId)
+    }
   }
 
   /** Continuous-ingestion curation spine — the streaming twin of the
@@ -613,62 +522,89 @@ object StreamingOps {
                      k: Int = 3, w: Int = 4,
                      minShared: Long = 5L): StreamingQuery = {
     val bench = benchGrams.select(col("shingle")).distinct().persist()
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val nIn = batch.count()
-        val q = batch.filter(
-          graft.functions.TextFns.qualityScore(col(textCol)) >= minQuality)
-          .persist()
-        val nQ = q.count()
-        val grams = graft.operators.DedupOps.shingles(q, idCol, textCol, n)
-        val contaminated = grams.join(broadcast(bench), Seq("shingle"))
-          .groupBy(col(idCol)).agg(count(lit(1)).as("__ns"))
-          .filter(col("__ns") > maxSharedGrams)
-          .select(col(idCol))
-        val clean = q.join(contaminated, Seq(idCol), "left_anti").persist()
-        val nClean = clean.count()
-        val fp = graft.operators.DedupOps
-          .winnowingFingerprints(clean, idCol, textCol, k, w).persist()
-        val oldFp =
-          try spark.read.parquet(s"$indexDir/fps")
-            .filter(col("batch") =!= batchId)
-            .select(col(idCol), col("fingerprint"))
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            fp.limit(0)
-          }
-        val vsIndex = fp
-          .join(oldFp.select(col(idCol).as("__old"), col("fingerprint")),
-            Seq("fingerprint"))
-          .groupBy(col(idCol), col("__old"))
-          .agg(count(lit(1)).as("shared"))
-          .filter(col("shared") >= minShared)
-          .select(col(idCol))
-        val local = fp.select(col(idCol).as("__a"), col("fingerprint"))
-          .join(fp.select(col(idCol).as("__b"), col("fingerprint")),
-            Seq("fingerprint"))
-          .filter(col("__a") < col("__b"))
-          .groupBy(col("__a"), col("__b"))
-          .agg(count(lit(1)).as("shared"))
-          .filter(col("shared") >= minShared)
-          .select(col("__b").as(idCol))
-        val dropIds = vsIndex.union(local).distinct()
-        val out = clean.join(dropIds, Seq(idCol), "left_anti").persist()
-        val nOut = out.count()
-        graft.sinks.Sinks.idempotentBatchAppend(out, outDir, batchId)
-        val keptFp = fp.join(out.select(idCol), Seq(idCol), "left_semi")
-        graft.sinks.Sinks.idempotentBatchAppend(keptFp, s"$indexDir/fps", batchId)
-        import spark.implicits._
-        val stats = Seq((batchId, nIn, nIn - nQ, nQ - nClean,
-            nClean - nOut, nOut))
-          .toDF("batch_id", "n_in", "n_quality_drop", "n_contaminated",
-            "n_dup", "n_out")
-        graft.sinks.Sinks.idempotentBatchAppend(stats, statsDir, batchId)
-        Seq(q, clean, fp, out).foreach(_.unpersist())
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val nIn = batch.count()
+      val q = batch.filter(
+        graft.functions.TextFns.qualityScore(col(textCol)) >= minQuality)
+        .persist()
+      val nQ = q.count()
+      val clean = q.join(contaminated(q, idCol, textCol, n, bench, maxSharedGrams),
+        Seq(idCol), "left_anti").persist()
+      val nClean = clean.count()
+      val out = winnowSurvivors(clean, idCol, textCol, k, w, minShared, indexDir,
+        outDir, batchId)
+      val nOut = out.count()
+      import spark.implicits._
+      val stats = Seq((batchId, nIn, nIn - nQ, nQ - nClean,
+          nClean - nOut, nOut))
+        .toDF("batch_id", "n_in", "n_quality_drop", "n_contaminated",
+          "n_dup", "n_out")
+      Sinks.idempotentBatchAppend(stats, statsDir, batchId)
+      Seq(q, clean, out).foreach(_.unpersist())
+    }
+  }
+
+  /** The benchmark-contamination rule: ids of `docs` sharing more than
+    * `maxSharedGrams` `n`-gram shingles with the gram set `bench`
+    * (broadcast: it is benchmark-sized).
+    */
+  private def contaminated(docs: DataFrame, idCol: String, textCol: String, n: Int,
+                           bench: DataFrame, maxSharedGrams: Long): DataFrame =
+    graft.operators.DedupOps.shingles(docs, idCol, textCol, n)
+      .join(broadcast(bench), Seq("shingle"))
+      .groupBy(col(idCol)).agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") > maxSharedGrams)
+      .select(col(idCol))
+
+  /** The winnowing rule of [[incrementalWinnowDedup]] and
+    * [[curationStream]]: a doc of `rows` is dropped when its winnowing
+    * fingerprints share ≥ `minShared` with one doc of the prior batches
+    * in `$indexDir/fps`, or with a lower-id doc of this batch. The rest
+    * go through [[keepSurvivors]], their fingerprints to the index.
+    */
+  private def winnowSurvivors(rows: DataFrame, idCol: String, textCol: String,
+                              k: Int, w: Int, minShared: Long, indexDir: String,
+                              outDir: String, batchId: Long): DataFrame = {
+    val fp = graft.operators.DedupOps
+      .winnowingFingerprints(rows, idCol, textCol, k, w).persist()
+    val oldFp = Sinks.priorBatches(rows.sparkSession, s"$indexDir/fps", batchId)
+      .fold(fp.limit(0))(_.select(col(idCol), col("fingerprint")))
+    val vsIndex = fp
+      .join(oldFp.select(col(idCol).as("__old"), col("fingerprint")),
+        Seq("fingerprint"))
+      .groupBy(col(idCol), col("__old"))
+      .agg(count(lit(1)).as("shared"))
+      .filter(col("shared") >= minShared)
+      .select(col(idCol))
+    val local = fp.select(col(idCol).as("__a"), col("fingerprint"))
+      .join(fp.select(col(idCol).as("__b"), col("fingerprint")),
+        Seq("fingerprint"))
+      .filter(col("__a") < col("__b"))
+      .groupBy(col("__a"), col("__b"))
+      .agg(count(lit(1)).as("shared"))
+      .filter(col("shared") >= minShared)
+      .select(col("__b").as(idCol))
+    val survivors = keepSurvivors(rows, vsIndex.union(local).distinct(), idCol, fp,
+      outDir, s"$indexDir/fps", batchId)
+    fp.unpersist()
+    survivors
+  }
+
+  /** The incremental dedup sinks' tail: `rows` minus `dropIds` to
+    * `outDir`, then the survivors' rows of `state` to `stateDir`, both as
+    * batch `batchId` (out before state: a crash between the two replays
+    * with the state unchanged and converges). Returns the survivors,
+    * persisted; the caller unpersists them.
+    */
+  private def keepSurvivors(rows: DataFrame, dropIds: DataFrame, idCol: String,
+                            state: DataFrame, outDir: String, stateDir: String,
+                            batchId: Long): DataFrame = {
+    val survivors = rows.join(dropIds, Seq(idCol), "left_anti").persist()
+    Sinks.idempotentBatchAppend(survivors, outDir, batchId)
+    Sinks.idempotentBatchAppend(
+      state.join(survivors.select(idCol), Seq(idCol), "left_semi"), stateDir, batchId)
+    survivors
   }
 
   /** Streaming DSIR scoring: the stream-static form of
@@ -684,15 +620,10 @@ object StreamingOps {
   def streamDsirScore(docs: DataFrame, idCol: String, textCol: String,
                       ratio: DataFrame, outDir: String,
                       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val scored = graft.operators.DataSelection
-          .scoreWith(ratio, batch, idCol, textCol)
-        graft.sinks.Sinks.idempotentBatchAppend(scored, outDir, batchId)
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      Sinks.idempotentBatchAppend(graft.operators.DataSelection
+        .scoreWith(ratio, batch, idCol, textCol), outDir, batchId)
+    }
 
   /** Streaming k-means assignment: the stream-static form of
     * [[graft.operators.KMeansOps.assignWith]] — each micro-batch of
@@ -704,19 +635,11 @@ object StreamingOps {
   def streamKMeansAssign(rows: DataFrame, idCol: String, vecCol: String,
                          model: Array[Array[Double]], outDir: String,
                          checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val assigned = graft.operators.KMeansOps
-          .assignWith(model, batch, idCol, vecCol)
-        graft.sinks.Sinks.idempotentBatchAppend(assigned, outDir, batchId)
-        ()
-      }
-      .start()
+    eachBatch(rows, checkpointDir) { (batch, batchId) =>
+      Sinks.idempotentBatchAppend(graft.operators.KMeansOps
+        .assignWith(model, batch, idCol, vecCol), outDir, batchId)
+    }
 
-  /** Drain a streaming query into an in-memory table and stop (test/dev
-    * harness — production sinks write parquet with checkpointing).
-    */
   /** One doc entering the seeded packing scan: the q184 fields plus the
     * shard's carried window state from the previous batches.
     */
@@ -743,78 +666,68 @@ object StreamingOps {
   def incrementalPack(docs: DataFrame, idCol: String, textCol: String,
                       budget: Long, nShards: Int, stateDir: String,
                       outDir: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val h = md5(col(idCol).cast("string"))
-        val tok = batch.select(
-          (conv(substring(h, 1, 4), 16, 10).cast("int") % nShards)
-            .cast("long").as("shard"),
-          h.as("ord"), col(idCol).cast("long").as("id"),
-          graft.functions.TextFns.tokenCount(col(textCol)).as("nTok"))
-        // latest surviving state per shard, excluding this batch's own
-        // (possibly partial) prior write
-        val state =
-          try {
-            val all = spark.read.parquet(stateDir)
-              .filter(col("batch") =!= batchId)
-            graft.operators.Relational.dedupKeepFirst(
-                all, Seq("shard"), Seq(col("batch").desc))
-              .select(col("shard"), col("bin").as("startBin"),
-                col("fill").as("startFill"))
-          } catch { case _: org.apache.spark.sql.AnalysisException =>
-            Seq.empty[(Long, Long, Long)]
-              .toDF("shard", "startBin", "startFill")
-          }
-        val seeded = tok.join(broadcast(state), Seq("shard"), "left")
-          .select(col("shard"), col("ord"), col("id"), col("nTok"),
-            coalesce(col("startBin"), lit(-1L)).as("startBin"),
-            coalesce(col("startFill"), lit(0L)).as("startFill"))
-        val assigns = seeded.as[PackSeedIn]
-          // explicit count: exempt from AQE coalescing (see Bm25)
-          .repartition(
-            spark.sessionState.conf.numShufflePartitions, col("shard"))
-          .sortWithinPartitions("shard", "ord", "id")
-          .mapPartitions { it =>
-            var cur = Long.MinValue; var bin = -1L; var fill = 0L
-            it.map { r =>
-              if (r.shard != cur) {
-                cur = r.shard; bin = r.startBin; fill = r.startFill
-              }
-              if (r.nTok > budget)
-                graft.operators.DataSelection.PackAssign(r.shard, r.id, -1L, r.nTok)
-              else {
-                if (bin < 0L || fill + r.nTok > budget) { bin += 1L; fill = 0L }
-                fill += r.nTok
-                graft.operators.DataSelection.PackAssign(r.shard, r.id, bin, r.nTok)
-              }
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val h = md5(col(idCol).cast("string"))
+      val tok = batch.select(
+        (conv(substring(h, 1, 4), 16, 10).cast("int") % nShards)
+          .cast("long").as("shard"),
+        h.as("ord"), col(idCol).cast("long").as("id"),
+        graft.functions.TextFns.tokenCount(col(textCol)).as("nTok"))
+      // latest surviving state per shard
+      val state = Sinks.priorBatches(spark, stateDir, batchId).fold(
+          Seq.empty[(Long, Long, Long)].toDF("shard", "startBin", "startFill")) { all =>
+        graft.operators.Relational.dedupKeepFirst(
+            all, Seq("shard"), Seq(col("batch").desc))
+          .select(col("shard"), col("bin").as("startBin"),
+            col("fill").as("startFill"))
+      }
+      val seeded = tok.join(broadcast(state), Seq("shard"), "left")
+        .select(col("shard"), col("ord"), col("id"), col("nTok"),
+          coalesce(col("startBin"), lit(-1L)).as("startBin"),
+          coalesce(col("startFill"), lit(0L)).as("startFill"))
+      val assigns = seeded.as[PackSeedIn]
+        // explicit count: exempt from AQE coalescing (see Bm25)
+        .repartition(
+          spark.sessionState.conf.numShufflePartitions, col("shard"))
+        .sortWithinPartitions("shard", "ord", "id")
+        .mapPartitions { it =>
+          var cur = Long.MinValue; var bin = -1L; var fill = 0L
+          it.map { r =>
+            if (r.shard != cur) {
+              cur = r.shard; bin = r.startBin; fill = r.startFill
+            }
+            if (r.nTok > budget)
+              graft.operators.DataSelection.PackAssign(r.shard, r.id, -1L, r.nTok)
+            else {
+              if (bin < 0L || fill + r.nTok > budget) { bin += 1L; fill = 0L }
+              fill += r.nTok
+              graft.operators.DataSelection.PackAssign(r.shard, r.id, bin, r.nTok)
             }
           }
-          .toDF().persist()
-        graft.sinks.Sinks.idempotentBatchAppend(assigns, outDir, batchId)
-        // new cursor per shard touched this batch: the last open window
-        // and its fill (tokens this batch landed in it, plus the carried
-        // fill iff the batch never advanced past the seeded window)
-        val packed = assigns.filter(col("bin") >= 0L)
-        val lastBin = packed.groupBy(col("shard")).agg(max(col("bin")).as("bin"))
-        val newState = packed.join(lastBin, Seq("shard", "bin"))
-          .groupBy(col("shard"), col("bin"))
-          .agg(sum(col("nTok")).cast("long").as("__batchFill"))
-          .join(state, Seq("shard"), "left")
-          .select(col("shard"), col("bin"),
-            (col("__batchFill") + when(col("bin") === col("startBin"),
-              coalesce(col("startFill"), lit(0L))).otherwise(lit(0L)))
-              .cast("long").as("fill"))
-        graft.sinks.Sinks.idempotentBatchAppend(newState, stateDir, batchId)
-        assigns.unpersist()
-        ()
-      }
-      .start()
+        }
+        .toDF().persist()
+      Sinks.idempotentBatchAppend(assigns, outDir, batchId)
+      // new cursor per shard touched this batch: the last open window
+      // and its fill (tokens this batch landed in it, plus the carried
+      // fill iff the batch never advanced past the seeded window)
+      val packed = assigns.filter(col("bin") >= 0L)
+      val lastBin = packed.groupBy(col("shard")).agg(max(col("bin")).as("bin"))
+      val newState = packed.join(lastBin, Seq("shard", "bin"))
+        .groupBy(col("shard"), col("bin"))
+        .agg(sum(col("nTok")).cast("long").as("__batchFill"))
+        .join(state, Seq("shard"), "left")
+        .select(col("shard"), col("bin"),
+          (col("__batchFill") + when(col("bin") === col("startBin"),
+            coalesce(col("startFill"), lit(0L))).otherwise(lit(0L)))
+            .cast("long").as("fill"))
+      Sinks.idempotentBatchAppend(newState, stateDir, batchId)
+      assigns.unpersist()
+    }
 
   /** Continuous maintenance of a persisted BM25 index
-    * (`Bm25.writeIndex` layout) through [[segmentSink]]: each micro-batch
+    * (`Bm25.writeIndex` layout) through [[streamIndex]]: each micro-batch
     * becomes an immutable mini-index segment. `Bm25.topKIndexed` reads
     * base + segments (summing the exact per-layout stats rows, so
     * retrieval is row-identical to a from-scratch rebuild over
@@ -823,11 +736,11 @@ object StreamingOps {
   def streamBm25Index(docs: DataFrame, idCol: String, textCol: String,
                       indexDir: String, checkpointDir: String,
                       nShards: Int = 64): StreamingQuery =
-    segmentSink(docs, checkpointDir, (b, id) => Bm25.writeIndex(b, idCol,
+    streamIndex(docs, checkpointDir, (b, id) => Bm25.writeIndex(b, idCol,
       textCol, Bm25.paths(indexDir).segment(id), nShards))
 
   /** Continuous maintenance of a persisted dedup index
-    * (`DedupOps.writeDedupIndex` layout) through [[segmentSink]].
+    * (`DedupOps.writeDedupIndex` layout) through [[streamIndex]].
     * `DedupOps.dedupAgainstIndex` spans base + segments with the base
     * partition-pruned, so an increment checked against the streamed index
     * gets the identical exact answer a from-scratch build gives.
@@ -835,47 +748,11 @@ object StreamingOps {
   def streamDedupIndex(docs: DataFrame, idCol: String, textCol: String,
                        n: Int, indexDir: String, checkpointDir: String,
                        nShards: Int = DedupOps.DefaultShingleShards): StreamingQuery =
-    segmentSink(docs, checkpointDir, (b, id) => DedupOps.writeDedupIndex(b,
+    streamIndex(docs, checkpointDir, (b, id) => DedupOps.writeDedupIndex(b,
       idCol, textCol, n, DedupOps.paths(indexDir).segment(id), nShards))
 
-  /** Continuous maintenance of a persisted IVF index
-    * (`IvfIndex.writeIndex` layout, which must exist — the centroid model
-    * is trained offline) through [[segmentSink]]: each micro-batch is
-    * assigned to the EXISTING centroids (`IvfIndex.writeSegment`);
-    * centroids drift only at retrain.
-    */
-  def streamIvfIndex(rows: DataFrame, idCol: String, embCol: String,
-                     model: IvfIndex.Model,
-                     indexDir: String, checkpointDir: String): StreamingQuery =
-    segmentSink(rows, checkpointDir, (b, id) =>
-      IvfIndex.writeSegment(b, idCol, embCol, model, indexDir, id))
-
-  /** Continuous maintenance of a persisted IVF-PQ index
-    * (`IvfPq.writeIndex` layout, which must exist — both quantizers are
-    * trained offline) through [[segmentSink]]: each micro-batch is
-    * assigned and encoded with the EXISTING quantizers
-    * (`IvfPq.writeSegment`).
-    */
-  def streamIvfPqIndex(rows: DataFrame, idCol: String, embCol: String,
-                       model: IvfPq.Model,
-                       indexDir: String,
-                       checkpointDir: String): StreamingQuery =
-    segmentSink(rows, checkpointDir, (b, id) =>
-      IvfPq.writeSegment(b, idCol, embCol, model, indexDir, id))
-
-  /** Continuous maintenance of a persisted binary-quantization index
-    * (`BqIndex.writeIndex` layout, which must exist — the threshold
-    * model is trained at build time) through [[segmentSink]]: each
-    * micro-batch is encoded against the PERSISTED model
-    * (`BqIndex.writeSegment`); thresholds drift only at rebuild.
-    */
-  def streamBqIndex(rows: DataFrame, idCol: String, qvCol: String,
-                    indexDir: String, checkpointDir: String): StreamingQuery =
-    segmentSink(rows, checkpointDir, (b, id) =>
-      BqIndex.writeSegment(b, idCol, qvCol, indexDir, id))
-
   /** SELF-MAINTAINING [[streamDedupIndex]]: after each segment, a
-    * planner-gated fold ([[segmentSink]]'s maintenance cycle), so read
+    * planner-gated fold ([[streamIndex]]'s maintenance cycle), so read
     * amplification is BOUNDED BY POLICY, not by an operator remembering
     * to compact.
     */
@@ -885,21 +762,10 @@ object StreamingOps {
       nShards: Int = DedupOps.DefaultShingleShards,
       thresholds: IndexLayout.MaintenanceThresholds =
         IndexLayout.MaintenanceThresholds()): StreamingQuery =
-    segmentSink(docs, checkpointDir, (b, id) => DedupOps.writeDedupIndex(b,
-        idCol, textCol, n, DedupOps.paths(indexDir).segment(id), nShards),
+    streamIndex(docs, checkpointDir, (b, id) => DedupOps.writeDedupIndex(b,
+      idCol, textCol, n, DedupOps.paths(indexDir).segment(id), nShards),
       Some((DedupOps.maintenancePlan(_, indexDir, thresholds),
         DedupOps.compactDedupIndex(_, indexDir, idCol))))
-
-  /** SELF-MAINTAINING [[streamBqIndex]]. */
-  def streamBqIndexMaintained(
-      rows: DataFrame, idCol: String, qvCol: String,
-      indexDir: String, checkpointDir: String,
-      thresholds: IndexLayout.MaintenanceThresholds =
-        IndexLayout.MaintenanceThresholds()): StreamingQuery =
-    segmentSink(rows, checkpointDir, (b, id) =>
-        BqIndex.writeSegment(b, idCol, qvCol, indexDir, id),
-      Some((BqIndex.maintenancePlan(_, indexDir, thresholds),
-        BqIndex.compactIndex(_, indexDir, idCol))))
 
   /** SELF-MAINTAINING [[streamBm25Index]]. The fold is `Bm25.compactIndex`,
     * which snapshots the CURRENT stats row's delete-batch list under the
@@ -912,53 +778,26 @@ object StreamingOps {
       indexDir: String, checkpointDir: String, nShards: Int = 64,
       thresholds: IndexLayout.MaintenanceThresholds =
         IndexLayout.MaintenanceThresholds()): StreamingQuery =
-    segmentSink(docs, checkpointDir, (b, id) => Bm25.writeIndex(b, idCol,
-        textCol, Bm25.paths(indexDir).segment(id), nShards),
+    streamIndex(docs, checkpointDir, (b, id) => Bm25.writeIndex(b, idCol,
+      textCol, Bm25.paths(indexDir).segment(id), nShards),
       Some((Bm25.maintenancePlan(_, indexDir, thresholds),
         Bm25.compactIndex(_, indexDir, idCol))))
 
-  /** SELF-MAINTAINING [[streamIvfIndex]]. The fold
-    * (`IvfIndex.compactIndex`) is model-preserving, so the caller's
-    * search model stays valid; RETRAIN stays a measured offline decision
-    * (`IvfIndex.maintain`).
-    */
-  def streamIvfIndexMaintained(
-      rows: DataFrame, idCol: String, embCol: String,
-      model: IvfIndex.Model,
-      indexDir: String, checkpointDir: String,
-      thresholds: IndexLayout.MaintenanceThresholds =
-        IndexLayout.MaintenanceThresholds()): StreamingQuery =
-    segmentSink(rows, checkpointDir, (b, id) =>
-        IvfIndex.writeSegment(b, idCol, embCol, model, indexDir, id),
-      Some((IvfIndex.maintenancePlan(_, indexDir, thresholds),
-        IvfIndex.compactIndex(_, indexDir, idCol))))
-
-  /** SELF-MAINTAINING [[streamIvfPqIndex]] (IvfIndex's planner and fold:
-    * the layouts share path conventions and the (cell, id, …) shape).
-    */
-  def streamIvfPqIndexMaintained(
-      rows: DataFrame, idCol: String, embCol: String,
-      model: IvfPq.Model,
-      indexDir: String, checkpointDir: String,
-      thresholds: IndexLayout.MaintenanceThresholds =
-        IndexLayout.MaintenanceThresholds()): StreamingQuery =
-    segmentSink(rows, checkpointDir, (b, id) =>
-        IvfPq.writeSegment(b, idCol, embCol, model, indexDir, id),
-      Some((IvfIndex.maintenancePlan(_, indexDir, thresholds),
-        IvfIndex.compactIndex(_, indexDir, idCol))))
-
-  /** The one index sink behind the `stream*Index` functions. Each
+  /** Continuous maintenance of any persisted index layout: each
     * micro-batch is spread to full parallelism (the often single-file
     * batch would otherwise run the encoder in one task) and handed to
-    * the layout's segment `write` with its batch id: an immutable,
+    * the layout's `writeSegment` with its batch id: an immutable,
     * unpartitioned `batch=<id>` segment written with per-batch
     * OVERWRITE, so a replayed batch replaces its own prior (possibly
     * partial) segment and the index converges — exactly-once for
     * replayable sources. No history is read or rewritten: a batch costs
     * O(batch), independent of the accumulated index (the Lucene
-    * ingestion model).
+    * ingestion model). The vector layouts pass their own `writeSegment`
+    * (`IvfIndex`, `IvfPq`, `BqIndex`), which encodes with the index's
+    * EXISTING model: it must have been built first, and the model
+    * changes only at an offline retrain or rebuild.
     *
-    * With `fold` = (plan, compact), each batch then runs one
+    * With `maintenance` = (plan, compact), each batch then runs one
     * [[IndexLayout.cycle]] on a plan computed WITHOUT an audit, so a
     * stream never retrains, and folds when the plan asks — unless
     * another maintainer holds the lease: then the batch skips the fold
@@ -969,23 +808,37 @@ object StreamingOps {
     * the stream for its duration (the LSM ingestion trade, bounded by
     * the thresholds).
     */
-  private def segmentSink(
+  def streamIndex(
       rows: DataFrame, checkpointDir: String,
-      write: (DataFrame, Long) => Unit,
-      fold: Option[(SparkSession => IndexLayout.MaintenancePlan,
-                    SparkSession => Unit)] = None): StreamingQuery =
+      writeSegment: (DataFrame, Long) => Unit,
+      maintenance: Option[(SparkSession => IndexLayout.MaintenancePlan,
+                           SparkSession => Unit)] = None): StreamingQuery =
+    eachBatch(rows, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      writeSegment(batch.repartition(spark.sparkContext.defaultParallelism), batchId)
+      maintenance.foreach { case (plan, compact) =>
+        IndexLayout.cycle(plan(spark), (), () => compact(spark))
+      }
+    }
+
+  /** The one exactly-once micro-batch skeleton behind every sink above:
+    * `body` runs on each micro-batch with its id, under the default
+    * trigger, with progress in `checkpointDir`. A batch replayed after a
+    * crash arrives with its old id, so a body that writes only through
+    * [[graft.sinks.Sinks.idempotentBatchAppend]] (or a `batch=<id>`
+    * segment) and reads its own history only through
+    * [[graft.sinks.Sinks.priorBatches]] converges.
+    */
+  private def eachBatch(rows: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
     rows.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        write(batch.repartition(spark.sparkContext.defaultParallelism), batchId)
-        fold.foreach { case (plan, compact) =>
-          IndexLayout.cycle(plan(spark), (), () => compact(spark))
-        }
-        ()
-      }
+      .foreachBatch(body)
       .start()
 
+  /** Drain a streaming query into an in-memory table and stop (test/dev
+    * harness — production sinks write parquet with checkpointing).
+    */
   def runToMemory(df: DataFrame, name: String, outputMode: String): DataFrame = {
     val q = df.writeStream
       .format("memory")

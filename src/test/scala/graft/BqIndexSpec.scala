@@ -234,9 +234,9 @@ class BqIndexSpec extends SparkSpec {
     val base = c.filter(col("vec_id") % 2 === 0)
     BqIndex.writeIndex(base, "vec_id", "qv", dir)
     val src = MemoryStream[(Long, Array[Long])]
-    val q = graft.streaming.StreamingOps.streamBqIndex(
-      src.toDF().toDF("vec_id", "qv"), "vec_id", "qv", dir,
-      s"${tmp("stream_ckpt")}/c1")
+    val q = graft.streaming.StreamingOps.streamIndex(
+      src.toDF().toDF("vec_id", "qv"), s"${tmp("stream_ckpt")}/c1",
+      (b, id) => BqIndex.writeSegment(b, "vec_id", "qv", dir, id))
     val b1 = c.filter(col("vec_id") % 4 === 1)
     src.addData(b1.as[(Long, Array[Long])].collect().toSeq: _*)
     q.processAllAvailable()
@@ -270,9 +270,10 @@ class BqIndexSpec extends SparkSpec {
     BqIndex.writeIndex(base, "vec_id", "qv", dir)
     val t = IndexLayout.MaintenanceThresholds(maxLiveSegments = 1)
     val src = MemoryStream[(Long, Array[Long])]
-    val q = graft.streaming.StreamingOps.streamBqIndexMaintained(
-      src.toDF().toDF("vec_id", "qv"), "vec_id", "qv", dir,
-      s"${tmp("selfmaint_ckpt")}/c1", thresholds = t)
+    val q = graft.streaming.StreamingOps.streamIndex(
+      src.toDF().toDF("vec_id", "qv"), s"${tmp("selfmaint_ckpt")}/c1",
+      (b, id) => BqIndex.writeSegment(b, "vec_id", "qv", dir, id),
+      Some((BqIndex.maintenancePlan(_, dir, t), BqIndex.compactIndex(_, dir, "vec_id"))))
     (1L to 3L).foreach { m =>
       val b = c.filter(col("vec_id") % 4 === m)
       src.addData(b.as[(Long, Array[Long])].collect().toSeq: _*)

@@ -514,6 +514,11 @@ class IndexLayoutSpec extends SparkSpec {
     assert(IndexLayout.liveTombstoneFiles(spark, tomb).size == 1)
     assert(ids(IndexLayout.dropTombstoned(folded.toSeq.toDF("id"), "id",
       tomb)) == Set(3L), "late tombstone (id 2) must keep filtering")
+    // the same, with the snapshot fold in one plan with the live read of
+    // the same tombstone dir: two reads of one directory over different
+    // file lists must stay two relations
+    assert(ids(IndexLayout.dropTombstoned(IndexLayout.dropIdsIn(data, "id", snapshot),
+      "id", tomb)) == Set(3L), "snapshot and live tombstone reads in one plan")
     // a sidecar whose files were all retired (the next fold deletes what
     // the previous one marked) reads as no tombstones even though the
     // directory remains

@@ -132,9 +132,8 @@ class IvfIndexSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding")),
       "vec_id", "embedding", model, dir)
     val src = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.streamIvfIndex(
-      src.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      model, dir, ckpt)
+    val q = StreamingOps.streamIndex(src.toDF().toDF("vec_id", "embedding"), ckpt,
+      (b, id) => IvfIndex.writeSegment(b, "vec_id", "embedding", model, dir, id))
     src.addData(parts(1).toSeq: _*)
     q.processAllAvailable()
     src.addData(parts(2).toSeq: _*)

@@ -366,9 +366,9 @@ class LifecycleSoakSpec extends SparkSpec {
     assert(pruned(dir, model) == oracle(live, model), "after base build")
 
     val src = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.streamIvfIndex(
-      src.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      model, dir, s"${tmp("soak_ivf_ckpt")}/c1")
+    val q = StreamingOps.streamIndex(
+      src.toDF().toDF("vec_id", "embedding"), s"${tmp("soak_ivf_ckpt")}/c1",
+      (b, id) => IvfIndex.writeSegment(b, "vec_id", "embedding", model, dir, id))
     src.addData(b1.select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq: _*)
     q.processAllAvailable()
@@ -521,9 +521,10 @@ class LifecycleSoakSpec extends SparkSpec {
 
     val t = IndexLayout.MaintenanceThresholds(maxLiveSegments = 2)
     val src = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.streamIvfIndexMaintained(
-      src.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      model, dir, s"${tmp("soak_ivf_maint_ckpt")}/c1", thresholds = t)
+    val q = StreamingOps.streamIndex(
+      src.toDF().toDF("vec_id", "embedding"), s"${tmp("soak_ivf_maint_ckpt")}/c1",
+      (b, id) => IvfIndex.writeSegment(b, "vec_id", "embedding", model, dir, id),
+      Some((IvfIndex.maintenancePlan(_, dir, t), IvfIndex.compactIndex(_, dir, "vec_id"))))
     (1L to 5L).foreach { m =>
       val batch = vecs.filter(col("vec_id") % 6 === m)
       src.addData(batch.as[(Long, Array[Float])].collect().toSeq: _*)
@@ -566,9 +567,10 @@ class LifecycleSoakSpec extends SparkSpec {
 
     val t = IndexLayout.MaintenanceThresholds(maxLiveSegments = 2)
     val src = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.streamIvfPqIndexMaintained(
-      src.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      model, dir, s"${tmp("soak_ivfpq_maint_ckpt")}/c1", thresholds = t)
+    val q = StreamingOps.streamIndex(
+      src.toDF().toDF("vec_id", "embedding"), s"${tmp("soak_ivfpq_maint_ckpt")}/c1",
+      (b, id) => IvfPq.writeSegment(b, "vec_id", "embedding", model, dir, id),
+      Some((IvfIndex.maintenancePlan(_, dir, t), IvfIndex.compactIndex(_, dir, "vec_id"))))
     (1L to 4L).foreach { m =>
       val batch = vecs.filter(col("vec_id") % 5 === m)
       src.addData(batch.as[(Long, Array[Float])].collect().toSeq: _*)

@@ -454,6 +454,57 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/sigs").count() == 3)
   }
 
+  test("incremental NEAR-dedup fails a batch whose history lacks its id column instead of admitting it") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val base = Scratch.dir("graft-incnear-idcol")
+    val idx = s"$base/index"
+    val text = "the quick brown fox jumps over the lazy dog while seven " +
+      "wizards brew strong coffee near the river bank under bright light"
+    // history written by a stream keyed on doc_id
+    val src1 = MemoryStream[(Long, String)]
+    val q1 = StreamingOps.incrementalNearDedup(src1.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", idx, s"$base/out1", s"$base/ckpt1")
+    src1.addData((1L, text))
+    q1.processAllAvailable()
+    q1.stop()
+    // the same index, restarted under another id column, gets a duplicate
+    val src2 = MemoryStream[(Long, String)]
+    val q2 = StreamingOps.incrementalNearDedup(src2.toDF().toDF("paper_id", "text"),
+      "paper_id", "text", idx, s"$base/out2", s"$base/ckpt2")
+    src2.addData((2L, text))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q2.processAllAvailable()
+    }
+    q2.stop()
+    val unresolved = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists {
+        case a: org.apache.spark.sql.AnalysisException =>
+          a.getCondition.startsWith("UNRESOLVED_COLUMN")
+        case _ => false
+      }
+    assert(unresolved, e.getMessage)
+    assert(!new java.io.File(s"$base/out2").exists(), "the duplicate was admitted")
+  }
+
+  test("the prior-batch read builds its history frame without a Spark job") {
+    import spark.implicits._
+    val dir = s"${Scratch.dir("graft-prior")}/index"
+    (0L to 2L).foreach { b =>
+      Seq(10 * b, 10 * b + 1).toDF("fp").write.parquet(s"$dir/batch=$b")
+    }
+    val (prior, jobs) = jobsDuring(graft.sinks.Sinks.priorBatches(spark, dir, 1L))
+    assert(jobs == 0)
+    assert(prior.get.select("fp").as[Long].collect().sorted.toSeq ==
+      Seq(0L, 1L, 20L, 21L))
+    // nothing written yet: no dir, or a dir that holds no data file
+    assert(graft.sinks.Sinks.priorBatches(spark, s"$dir-absent", 0L).isEmpty)
+    new java.io.File(s"$dir-empty").mkdirs()
+    new java.io.File(s"$dir-empty/_SUCCESS").createNewFile()
+    assert(graft.sinks.Sinks.priorBatches(spark, s"$dir-empty", 0L).isEmpty)
+  }
+
   test("incremental winnowing dedup drops shared-run docs deterministically") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
